@@ -1167,19 +1167,15 @@ def _tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bloom_ngram_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build Bloom over 3-grams per source; self-probe each doc."""
-    import pandas as pd
-
-    from marker_spark.agg import collect_sketches, sketch_agg
-    from marker_spark.kernels import bloom_factory, bloom_ngram_updater, make_ngram_membership_udf
+    from marker_spark.agg import collect_sketch
+    from marker_spark.api import bloom_agg
+    from marker_spark.kernels import make_ngram_membership_udf
     from marker_spark.sketches.bloom import BloomSketch
 
     from marker_spark.cacheutil import register
 
     tok = register(_tokenized_docs(spark, sf_dir).cache())
-    factory = bloom_factory(capacity=2_000_000, fp=0.001)
-    result = sketch_agg(tok, factory, bloom_ngram_updater(3), BloomSketch)
-    sketches = collect_sketches(result, BloomSketch, [])
-    sk = next(iter(sketches.values())) if isinstance(sketches, dict) else sketches
+    sk = collect_sketch(bloom_agg(tok, capacity=2_000_000, fp=0.001, ngram=3), BloomSketch)
     udf = make_ngram_membership_udf(sk.to_bytes(), 3)
     out = (
         tok.withColumn("hit", udf("tokens"))
@@ -1192,22 +1188,11 @@ def q_bloom_ngram_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hll_distinct_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source distinct 3-gram estimates, finalized in the merge
     task (no sketch-state collect to the driver)."""
-    from marker_spark.agg import sketch_agg
-    from marker_spark.ngrams import list_column_to_flat, ngram_bytes
-    from marker_spark.sketches.hll import HllSketch
-
-    def factory():
-        return HllSketch(p=14)
-
-    def update(sk, pdf):
-        flat, offsets = list_column_to_flat(pdf["tokens"])
-        mat, _ = ngram_bytes(flat, offsets, 3)
-        if len(mat):
-            sk.update_fixed_width(mat)
+    from marker_spark.api import hll_agg
 
     tok = _tokenized_docs(spark, sf_dir)
-    return sketch_agg(
-        tok, factory, update, HllSketch, group_cols=["source"],
+    return hll_agg(
+        tok, group_cols=["source"], precision=14, ngram=3,
         finalize=lambda sk: {"est_distinct_ngrams": int(round(sk.estimate()))},
         finalize_schema="est_distinct_ngrams long",
     ).orderBy("source")
@@ -1221,18 +1206,7 @@ def q_cms_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver)."""
     import numpy as np
 
-    from marker_spark.agg import sketch_agg
-    from marker_spark.ngrams import list_column_to_flat
-    from marker_spark.sketches.cms import CmsSketch
-
-    def factory():
-        return CmsSketch(d=5, w=1 << 15)
-
-    def update(sk, pdf):
-        flat, _ = list_column_to_flat(pdf["tokens"])
-        if len(flat):
-            mat = flat.astype("<i4").reshape(-1, 1).view(np.uint8).reshape(-1, 4)
-            sk.update_fixed_width(mat)
+    from marker_spark.api import cms_agg
 
     from marker_spark.cacheutil import register
 
@@ -1247,8 +1221,8 @@ def q_cms_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     def finalize(sk):
         return {"cms_cnt": [int(c) for c in sk.query_fixed_width(probe)]}
 
-    res = sketch_agg(
-        tok, factory, update, CmsSketch,
+    res = cms_agg(
+        tok, depth=5, width=1 << 15, ngram=1,
         finalize=finalize, finalize_schema="cms_cnt array<long>",
     )
     tok_arr = F.array(*[F.lit(int(t)) for t in top["token"]])
@@ -1270,16 +1244,9 @@ def q_kll_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile vector is emitted as array columns and exploded to rows —
     no KLL state is ever deserialized on the driver (r2 used
     collect_sketch)."""
-    from marker_spark.agg import sketch_agg
-    from marker_spark.sketches.kll import KllSketch
+    from marker_spark.api import kll_agg
 
     qs = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
-
-    def factory():
-        return KllSketch(k=256)
-
-    def update(sk, pdf):
-        sk.update(pdf["n_tok"].to_numpy(dtype="float64"))
 
     def finalize(sk):
         return {
@@ -1288,8 +1255,8 @@ def q_kll_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
 
     tok = _tokenized_docs(spark, sf_dir)
-    res = sketch_agg(
-        tok, factory, update, KllSketch,
+    res = kll_agg(
+        tok, "n_tok", k=256,
         finalize=finalize, finalize_schema="q array<double>, est_n_tok array<double>",
     )
     return res.select(F.explode(F.arrays_zip("q", "est_n_tok")).alias("z")).select(
@@ -1300,18 +1267,11 @@ def q_kll_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tdigest_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type t-digest quantiles, finalized in the merge task
     (no sketch-state collect to the driver)."""
-    from marker_spark.agg import sketch_agg
-    from marker_spark.sketches.tdigest import TDigestSketch
-
-    def factory():
-        return TDigestSketch(delta=200)
-
-    def update(sk, pdf):
-        sk.update(pdf["value"].to_numpy(dtype="float64"))
+    from marker_spark.api import tdigest_agg
 
     ev = _read(spark, sf_dir, "events")
-    return sketch_agg(
-        ev, factory, update, TDigestSketch, group_cols=["event_type"],
+    return tdigest_agg(
+        ev, "value", group_cols=["event_type"], delta=200,
         finalize=lambda sk: {
             "p50_est": round(float(sk.quantile(0.5)), 2),
             "p90_est": round(float(sk.quantile(0.9)), 2),
@@ -1329,7 +1289,8 @@ def q_mg_heavy_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale the exact pass scans once with a tiny broadcast
     filter; the naive alternative (exact groupBy over ALL words) pays a
     full-vocabulary shuffle."""
-    from marker_spark.agg import collect_sketch, sketch_agg
+    from marker_spark.agg import collect_sketch
+    from marker_spark.api import mg_agg
     from marker_spark.ops.text import words_col
     from marker_spark.sketches.misra_gries import MisraGriesSketch
 
@@ -1344,13 +1305,7 @@ def q_mg_heavy_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register(words)
 
-    def update(sk, pdf):
-        sk.update(pdf["wid"].to_numpy(dtype="int64"))
-
-    mg = collect_sketch(
-        sketch_agg(words, lambda: MisraGriesSketch(k=256), update, MisraGriesSketch),
-        MisraGriesSketch,
-    )
+    mg = collect_sketch(mg_agg(words, "wid", k=256), MisraGriesSketch)
     cand = [int(x) for x in mg.items]
     ranked = (
         words.where(F.col("wid").isin(cand))
@@ -2279,21 +2234,12 @@ def q_minhash_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-corpus similarity primitive)."""
     import pandas as pd
 
-    from marker_spark.agg import collect_sketches, sketch_agg
-    from marker_spark.ngrams import list_column_to_flat, ngram_bytes
+    from marker_spark.agg import collect_sketches
+    from marker_spark.api import minhash_agg
     from marker_spark.sketches.minhash import MinHashSketch
 
-    def factory():
-        return MinHashSketch(num_perm=128)
-
-    def update(sk, pdf):
-        flat, offsets = list_column_to_flat(pdf["tokens"])
-        mat, _ = ngram_bytes(flat, offsets, 3)
-        if len(mat):
-            sk.update_fixed_width(mat)
-
     tok = _tokenized_docs(spark, sf_dir)
-    result = sketch_agg(tok, factory, update, MinHashSketch, group_cols=["source"])
+    result = minhash_agg(tok, group_cols=["source"], num_perm=128, ngram=3)
     sketches = collect_sketches(result, MinHashSketch, ["source"])
     names = sorted(sketches)
     rows = [

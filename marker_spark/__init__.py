@@ -5,9 +5,7 @@ SURVEY.md for the reference analysis this engine derives from.
 """
 
 from .agg import (  # noqa: F401
-    build_partials,
     build_partials_arrow,
-    build_partials_shuffled,
     collect_sketch,
     collect_sketches,
     merge_partials,
@@ -37,9 +35,7 @@ __all__ = [
     "MisraGriesSketch",
     "TDigestSketch",
     "ThetaSketch",
-    "build_partials",
     "build_partials_arrow",
-    "build_partials_shuffled",
     "collect_sketch",
     "collect_sketches",
     "merge_partials",

@@ -3,25 +3,27 @@
 The reference is single-process: one writer updates one filter in
 shared memory (/root/reference/markercache.cpp:197-201).  At cluster
 scale the same computation becomes a classic partial+final aggregation,
-which Catalyst does NOT auto-split for pandas UDAFs — so the two-phase
+which Catalyst does NOT auto-split for Python UDAFs — so the two-phase
 shape is explicit here:
 
-  1. **Partial build** (``build_partials``): ``mapInPandas`` over the
-     input — each task streams its partition's Arrow batches through a
-     vectorized update kernel, accumulating one sketch per group key
-     *per partition* (a hand-rolled map-side combine).  Raw rows are
-     never shuffled; only the small serialized sketch states are.
-  2. **Merge** (``merge_partials``): groupBy(group) + ``applyInPandas``
-     combining states with the sketch's associative merge.  When the
-     number of partials per group is large (wide clusters) an optional
-     intermediate tree round caps per-task merge fan-in so no single
-     reducer ORs thousands of multi-MB bitmaps.
+  1. **Partial build** (``build_partials_arrow``): ``mapInArrow`` over
+     the input — each task streams its partition's Arrow RecordBatches
+     through a vectorized update kernel, accumulating one sketch per
+     group key *per partition* (a hand-rolled map-side combine).  Raw
+     rows are never shuffled; only the small serialized sketch states
+     are.
+  2. **Merge** (``merge_partials``): groupBy(group) + ``applyInArrow``
+     combining states with the sketch's associative merge.
+
+``sketch_agg`` composes the two for a per-group ``factory`` and an
+``update(sketch, batch_slice)`` kernel: each batch is split by the
+group columns with one stable sort, one ``take`` and zero-copy slices.
 
 Skew note: because partials are keyed per-partition *inside* the map
 task, a hot group key (zipf ``source``) costs nothing extra at build
 time — the shuffle moves one sketch row per (partition, group), not the
-raw rows.  Salting is therefore only needed on the merge side, which
-``tree_rounds`` provides deterministically (no rand()).
+raw rows.  Where a hot group's state must be split across tasks,
+``salted_repartition`` spreads its rows deterministically (no rand()).
 """
 
 from __future__ import annotations
@@ -30,16 +32,17 @@ import zlib
 from collections.abc import Callable, Iterator
 from typing import Any
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .kernels import arrow_str_codes
 
 SKETCH_COL = "sketch"
 # Sentinel group for null keys.  Caveat: a REAL group value literally
 # equal to "__null__" would merge with null-keyed rows — if your data
 # uses this placeholder, rename the sentinel before building.
 NULL_KEY = "__null__"
-_GROUP_NONE = "__all__"
 _ZMAGIC = b"MSKZ"
 _RMAGIC = b"MSKR"  # uncompressed payload (dense state; zlib would not pay)
 
@@ -75,76 +78,10 @@ def unpack_state(sketch_cls: type, buf: bytes) -> Any:
     return sketch_cls.from_bytes(buf)
 
 
-def _call_factory(factory: Callable, key: tuple | None) -> Any:
-    """Factories may be group-aware (factory(key) sizes state per group,
-    e.g. per-source Bloom capacity) or zero-arg.  Dispatch by signature
-    inspection, NOT try/except TypeError — catching TypeError would
-    swallow a genuine bug inside a group-aware factory and silently
-    retry it zero-arg with default sizing."""
-    import inspect
-
-    try:
-        takes_key = len(inspect.signature(factory).parameters) >= 1
-    except (TypeError, ValueError):  # builtins without inspectable signatures
-        try:
-            return factory(key)
-        except TypeError:
-            return factory()
-    if takes_key:
-        return factory(key)
-    return factory()
-
-
-def build_partials(
-    df: DataFrame,
-    factory: Callable[[], Any],
-    update: Callable[[Any, pd.DataFrame], None],
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Map-side partial sketches: one row (group..., sketch) per
-    (input partition, group key)."""
-    group_cols = list(group_cols or [])
-    out_fields = [f"`{c}` string" for c in group_cols]
-    schema = ", ".join(out_fields + [f"{SKETCH_COL} binary"])
-
-    def partition_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, Any] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if group_cols:
-                # dropna=False: rows with a null group key must reach a
-                # sketch (pandas' default silently drops them); nulls map
-                # to a sentinel group so the emitted key column is a
-                # stable string.
-                for key, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                    if not isinstance(key, tuple):
-                        key = (key,)
-                    key = tuple(NULL_KEY if pd.isna(k) else k for k in key)
-                    sk = states.get(key)
-                    if sk is None:
-                        sk = states[key] = _call_factory(factory, key)
-                    update(sk, sub)
-            else:
-                sk = states.get((_GROUP_NONE,))
-                if sk is None:
-                    sk = states[(_GROUP_NONE,)] = _call_factory(factory, None)
-                update(sk, pdf)
-        if states:
-            rows = {
-                c: [str(k[i]) for k in states] for i, c in enumerate(group_cols)
-            }
-            rows[SKETCH_COL] = [pack_state(s) for s in states.values()]
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(partition_fn, schema=schema)
-
-
 def merge_partials(
     partials: DataFrame,
     sketch_cls: type,
     group_cols: list[str] | None = None,
-    tree_fanin: int = 0,
     finalize: Callable[[Any], dict] | None = None,
     finalize_schema: str | None = None,
 ) -> DataFrame:
@@ -153,13 +90,6 @@ def merge_partials(
     Runs as ``applyInArrow`` — sketch payloads stay Arrow buffers end
     to end instead of being copied into pandas object cells (states can
     be tens of MB; the per-byte path is the cost here, not the OR).
-
-    ``tree_fanin > 0`` inserts one deterministic intermediate round:
-    partials are sharded by ``monotonically_increasing_id() % fanin``
-    within each group, merged per shard, then the (at most ``fanin``)
-    shard sketches merge in the final task — bounding any single task's
-    input to ~fanin states.  Merge associativity (exact for
-    Bloom/HLL/CMS) makes the tree shape irrelevant to the result.
 
     ``finalize`` (with ``finalize_schema``, e.g. ``"n long, err double"``)
     makes the final merge task emit metadata columns computed from the
@@ -205,15 +135,12 @@ def merge_partials(
                 acc = _fold(acc, pending.popleft())
         return acc
 
-    def _group_arrays(table: "pa.Table", extra_cols: list[str]):
-        arrays, names = [], []
-        for c in extra_cols:
-            arrays.append(pa.array([table.column(c)[0].as_py()], type=pa.string()))
-            names.append(c)
-        return arrays, names
+    def _group_arrays(table: "pa.Table"):
+        arrays = [pa.array([table.column(c)[0].as_py()], type=pa.string()) for c in group_cols]
+        return arrays, list(group_cols)
 
-    def _merge_table(table: "pa.Table", extra_cols: list[str]) -> "pa.Table":
-        arrays, names = _group_arrays(table, extra_cols)
+    def _merge_table(table: "pa.Table") -> "pa.Table":
+        arrays, names = _group_arrays(table)
         if table.num_rows == 1:
             # single partial: the merged state IS the partial, and
             # pack(unpack(x)) == x byte-for-byte (deterministic zlib,
@@ -231,7 +158,7 @@ def merge_partials(
 
     def _finalize_table(table: "pa.Table") -> "pa.Table":
         acc = _merge_acc(table)
-        arrays, names = _group_arrays(table, group_cols)
+        arrays, names = _group_arrays(table)
         for name, value in finalize(acc).items():
             arrays.append(pa.array([value]))
             names.append(name)
@@ -240,26 +167,13 @@ def merge_partials(
     out_fields = [f"`{c}` string" for c in group_cols]
     schema = ", ".join(out_fields + [f"{SKETCH_COL} binary"])
 
-    df = partials
-    if tree_fanin > 0:
-        shard = (F.monotonically_increasing_id() % tree_fanin).cast("string")
-        df = df.withColumn("__shard", shard)
-        shard_schema = ", ".join(out_fields + ["`__shard` string", f"{SKETCH_COL} binary"])
-        df = df.groupBy(*(group_cols + ["__shard"])).applyInArrow(
-            lambda t: _merge_table(t, group_cols + ["__shard"]), schema=shard_schema
-        )
-        df = df.drop("__shard")
-
+    merge_fn = _merge_table
     if finalize is not None:
         if finalize_schema is None:
             raise ValueError("finalize requires finalize_schema")
         schema = ", ".join(out_fields + [finalize_schema])
         merge_fn = _finalize_table
-    else:
-        merge_fn = lambda t: _merge_table(t, group_cols)  # noqa: E731
-    if group_cols:
-        return df.groupBy(*group_cols).applyInArrow(merge_fn, schema=schema)
-    return df.groupBy().applyInArrow(merge_fn, schema=schema)
+    return partials.groupBy(*group_cols).applyInArrow(merge_fn, schema=schema)
 
 
 def build_partials_arrow(
@@ -274,8 +188,8 @@ def build_partials_arrow(
     slice per group, instead of paying an Arrow->pandas conversion
     that materializes one Python object per list-typed row).
 
-    ``states`` maps group tuple -> sketch; emission serializes with
-    :func:`pack_state` like the pandas path.
+    ``states`` maps group tuple -> sketch; emission serializes each
+    state with :func:`pack_state`.
 
     ``ckpt_dir`` enables per-partition checkpoints (north_rule
     resumability): each task writes its result batch as Arrow IPC to
@@ -376,63 +290,64 @@ def salted_repartition(
     return salted.repartition(parallelism * 4, group_col, "__salt").drop("__salt")
 
 
-def build_partials_shuffled(
-    df: DataFrame,
-    factory: Callable[[], Any],
-    update: Callable[[Any, pd.DataFrame], None],
-    group_cols: list[str] | None = None,
-    salt: int = 8,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Shuffle-first partial build for LARGE sketch states.
+def _split_groups(batch, group_cols: list[str]) -> Iterator[tuple[tuple, Any]]:
+    """(key tuple, RecordBatch slice) per distinct group of ``batch``;
+    null keys map to ``NULL_KEY`` (via ``arrow_str_codes``).  The sort
+    is stable, so every group keeps its rows in input order — what
+    keeps order-sensitive states (KLL, t-digest, Misra-Gries)
+    identical however a partition's rows interleave groups.  One
+    ``take`` reorders the batch; the per-group slices are zero-copy."""
+    if not group_cols:
+        yield (), batch
+        return
+    import pyarrow as pa
 
-    The map-side combine of :func:`build_partials` creates one state per
-    (input partition, group) — perfect for small states (HLL registers,
-    CMS grids), but for a multi-MB Bloom bitmap P*G states can dwarf the
-    raw data.  Here we repartition the raw rows by (group, salt) first:
-    at most ~G*salt states exist in total, and the shuffle moves rows
-    (cheap) instead of bitmaps (expensive).  The salt column defuses
-    group-key skew (a zipf-hot `source` is spread over `salt` tasks) —
-    the explicit skew handling the north_rule requires; correctness is
-    unaffected because the merge is associative.
-    """
-    group_cols = list(group_cols or [])
-    salted = df.withColumn("__salt", (F.monotonically_increasing_id() % salt).cast("int"))
-    nparts = partitions or max(salt * max(len(group_cols), 1) * 4, salt)
-    if group_cols:
-        salted = salted.repartition(nparts, *(group_cols + ["__salt"]))
-    else:
-        salted = salted.repartition(nparts, "__salt")
-    return build_partials(salted, factory, update, group_cols)
+    coded = [arrow_str_codes(batch, c) for c in group_cols]
+    codes = np.stack([c for c, _ in coded])
+    order = np.lexsort(codes)
+    codes = codes[:, order]
+    starts = np.flatnonzero(
+        np.concatenate(([True], (codes[:, 1:] != codes[:, :-1]).any(axis=0)))
+    )
+    if len(starts) > 1:
+        batch = batch.take(pa.array(order))
+    ends = np.append(starts[1:], batch.num_rows)
+    for lo, hi in zip(starts.tolist(), ends.tolist()):
+        key = tuple(u[i] for (_, u), i in zip(coded, codes[:, lo].tolist()))
+        yield key, batch.slice(lo, hi - lo)
 
 
 def sketch_agg(
     df: DataFrame,
-    factory: Callable[[], Any],
-    update: Callable[[Any, pd.DataFrame], None],
+    factory: Callable[[tuple], Any],
+    update: Callable[[Any, Any], None],
     sketch_cls: type,
     group_cols: list[str] | None = None,
-    tree_fanin: int = 0,
-    mode: str = "mapside",
-    salt: int = 8,
     finalize: Callable[[Any], dict] | None = None,
     finalize_schema: str | None = None,
 ) -> DataFrame:
     """Partial build + merge in one call → DataFrame (group..., sketch),
     or (group..., finalize columns) when ``finalize`` is given.
 
-    mode="mapside" (default): combine inside each input partition; best
-    when the sketch state is small relative to the partition's rows.
-    mode="shuffle": repartition rows by (group, salt) first; best when
-    the state is large (big Bloom filters) — bounds total partial-state
-    volume at ~G*salt states regardless of input partition count.
+    ``factory(key)`` creates the empty sketch for a group-key tuple
+    (``()`` without ``group_cols``; a group-aware factory can size the
+    state per group).  ``update(sk, batch)`` folds a ``pa.RecordBatch``
+    holding only that group's rows into the sketch.
     """
-    if mode == "shuffle":
-        partials = build_partials_shuffled(df, factory, update, group_cols, salt=salt)
-    else:
-        partials = build_partials(df, factory, update, group_cols)
+    group_cols = list(group_cols or [])
+    missing = [c for c in group_cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"group_cols not in DataFrame: {missing}")
+
+    def batch_update(states: dict, batch) -> None:
+        for key, part in _split_groups(batch, group_cols):
+            sk = states.get(key)
+            if sk is None:
+                sk = states[key] = factory(key)
+            update(sk, part)
+
     return merge_partials(
-        partials, sketch_cls, group_cols, tree_fanin,
+        build_partials_arrow(df, batch_update, group_cols), sketch_cls, group_cols,
         finalize=finalize, finalize_schema=finalize_schema,
     )
 

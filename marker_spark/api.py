@@ -17,14 +17,10 @@ Column semantics:
 
 from __future__ import annotations
 
-from typing import Any, Callable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .agg import sketch_agg
-from .kernels import bloom_binary_updater, bloom_ngram_updater
-from .ngrams import list_column_to_flat, ngram_bytes
+from .kernels import bloom_binary_updater, bloom_ngram_updater, ngram_updater
 from .params import BloomParams
 from .sketches.bloom import BloomSketch
 from .sketches.cms import CmsSketch
@@ -36,15 +32,20 @@ from .sketches.tdigest import TDigestSketch
 from .sketches.theta import ThetaSketch
 
 
-def _ngram_updater(update_hashes: Callable[[Any, Any, Any], None], n: int, token_col: str):
-    def update(sk, pdf: pd.DataFrame) -> None:
-        from .hashing import mmh3_fixed_width
+def _h1(sk, h1, h2) -> None:
+    sk.update_hashes(h1)
 
-        flat, offsets = list_column_to_flat(pdf[token_col])
-        mat, _ = ngram_bytes(flat, offsets, n)
-        if len(mat):
-            h1, h2 = mmh3_fixed_width(mat)
-            update_hashes(sk, h1, h2)
+
+def _h1_h2(sk, h1, h2) -> None:
+    sk.update_hashes(h1, h2)
+
+
+def _values_updater(value_col: str):
+    """update(sk, batch) passing a numeric column to ``sk.update`` as a
+    numpy array (a nullable column's nulls arrive as NaN)."""
+
+    def update(sk, batch) -> None:
+        sk.update(batch.column(value_col).to_numpy(zero_copy_only=False))
 
     return update
 
@@ -61,7 +62,7 @@ def bloom_agg(
 ) -> DataFrame:
     """Bloom filter over token n-grams (or raw byte markers) per group."""
     params = BloomParams.solve(capacity, fp)
-    factory = lambda: BloomSketch(params.m, params.k)  # noqa: E731
+    factory = lambda _key: BloomSketch(params.m, params.k)  # noqa: E731
     if marker_col is not None:
         update = bloom_binary_updater(marker_col)
     else:
@@ -78,8 +79,8 @@ def hll_agg(
     **agg_kw,
 ) -> DataFrame:
     """HyperLogLog distinct-n-gram counter per group."""
-    factory = lambda: HllSketch(p=precision)  # noqa: E731
-    update = _ngram_updater(lambda sk, h1, h2: sk.update_hashes(h1), ngram, token_col)
+    factory = lambda _key: HllSketch(p=precision)  # noqa: E731
+    update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, HllSketch, group_cols, **agg_kw)
 
 
@@ -93,8 +94,8 @@ def cms_agg(
     **agg_kw,
 ) -> DataFrame:
     """Count-min frequency sketch over n-grams (default unigrams)."""
-    factory = lambda: CmsSketch(d=depth, w=width)  # noqa: E731
-    update = _ngram_updater(lambda sk, h1, h2: sk.update_hashes(h1, h2), ngram, token_col)
+    factory = lambda _key: CmsSketch(d=depth, w=width)  # noqa: E731
+    update = ngram_updater(ngram, token_col, _h1_h2)
     return sketch_agg(df, factory, update, CmsSketch, group_cols, **agg_kw)
 
 
@@ -108,8 +109,8 @@ def minhash_agg(
     **agg_kw,
 ) -> DataFrame:
     """MinHash signature per group (cross-group Jaccard estimation)."""
-    factory = lambda: MinHashSketch(num_perm=num_perm, seed=seed)  # noqa: E731
-    update = _ngram_updater(lambda sk, h1, h2: sk.update_hashes(h1), ngram, token_col)
+    factory = lambda _key: MinHashSketch(num_perm=num_perm, seed=seed)  # noqa: E731
+    update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, MinHashSketch, group_cols, **agg_kw)
 
 
@@ -121,11 +122,8 @@ def kll_agg(
     **agg_kw,
 ) -> DataFrame:
     """KLL quantile sketch over a numeric column per group."""
-    factory = lambda: KllSketch(k=k)  # noqa: E731
-
-    def update(sk, pdf: pd.DataFrame) -> None:
-        sk.update(pdf[value_col].to_numpy(dtype="float64"))
-
+    factory = lambda _key: KllSketch(k=k)  # noqa: E731
+    update = _values_updater(value_col)
     return sketch_agg(df, factory, update, KllSketch, group_cols, **agg_kw)
 
 
@@ -137,11 +135,8 @@ def tdigest_agg(
     **agg_kw,
 ) -> DataFrame:
     """t-digest quantile sketch over a numeric column per group."""
-    factory = lambda: TDigestSketch(delta=delta)  # noqa: E731
-
-    def update(sk, pdf: pd.DataFrame) -> None:
-        sk.update(pdf[value_col].to_numpy(dtype="float64"))
-
+    factory = lambda _key: TDigestSketch(delta=delta)  # noqa: E731
+    update = _values_updater(value_col)
     return sketch_agg(df, factory, update, TDigestSketch, group_cols, **agg_kw)
 
 
@@ -155,8 +150,8 @@ def theta_agg(
 ) -> DataFrame:
     """Theta/KMV sketch per group — distinct counts plus set-operation
     (intersection/difference) estimates between groups."""
-    factory = lambda: ThetaSketch(k=k)  # noqa: E731
-    update = _ngram_updater(lambda sk, h1, h2: sk.update_hashes(h1), ngram, token_col)
+    factory = lambda _key: ThetaSketch(k=k)  # noqa: E731
+    update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, ThetaSketch, group_cols, **agg_kw)
 
 
@@ -169,19 +164,14 @@ def mg_agg(
 ) -> DataFrame:
     """Misra-Gries heavy-hitters summary over an int64 item column per
     group — frequent items WITHOUT a known candidate set (count-min's
-    complement), bounded O(k) state.
+    complement), bounded O(k) state.  Null items are dropped."""
+    factory = lambda _key: MisraGriesSketch(k=k)  # noqa: E731
 
-    Null items are dropped (a nullable long column reaches pandas as
-    float64, where a blind int64 cast turns NaN into INT64_MIN — a
-    garbage heavy hitter).  Caveat that comes with that pandas float64
-    detour: if the column CONTAINS nulls, non-null ids above 2^53 lose
-    precision in transit — coalesce/filter upstream when ids are that
-    large."""
-    factory = lambda: MisraGriesSketch(k=k)  # noqa: E731
+    def update(sk, batch) -> None:
+        import pyarrow.compute as pc
 
-    def update(sk, pdf: pd.DataFrame) -> None:
-        vals = pdf[item_col].dropna()
+        vals = pc.drop_null(batch.column(item_col))
         if len(vals):
-            sk.update(vals.to_numpy(dtype="int64"))
+            sk.update(vals.to_numpy())
 
     return sketch_agg(df, factory, update, MisraGriesSketch, group_cols, **agg_kw)

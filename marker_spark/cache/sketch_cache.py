@@ -130,7 +130,7 @@ class SketchCache:
         else:
             raise ValueError("need marker_col or token_col")
         bp = self.params.bloom_params()
-        factory = lambda: BloomSketch(bp.m, bp.k)  # noqa: E731
+        factory = lambda _key: BloomSketch(bp.m, bp.k)  # noqa: E731
         result = sketch_agg(with_bucket, factory, update, BloomSketch, group_cols=["__bucket"])
         built = collect_sketches(result, BloomSketch, ["__bucket"])
         # one Spark job built every bucket; attribute its wall time

@@ -2,8 +2,9 @@
 schema (doc_id string, tokens array<int32>, n_tok int32, source string),
 plus probe-side pandas UDF builders.
 
-Every kernel consumes a whole pandas/Arrow batch and runs numpy-only
-math — no per-row Python in the hot path (BASELINE.json:input_hint).
+Every update kernel consumes a whole Arrow RecordBatch (a probe UDF a
+pandas batch) and runs numpy-only math — no per-row Python in the hot
+path (BASELINE.json:input_hint).
 """
 
 from __future__ import annotations
@@ -13,8 +14,8 @@ from typing import Any, Callable
 import numpy as np
 import pandas as pd
 
-from .hashing import mmh3_fixed_width, mmh3_offsets
-from .ngrams import list_column_to_flat, ngram_bytes
+from .hashing import mmh3_ngram_i32
+from .ngrams import list_column_to_flat, ngram_bytes, ngram_starts
 from .params import BloomParams
 from .sketches.bloom import BloomSketch
 
@@ -22,17 +23,20 @@ from .sketches.bloom import BloomSketch
 # --- Arrow-native batch access ------------------------------------------------
 
 def arrow_tokens_view(batch, token_col: str = "tokens"):
-    """Zero-copy-ish view of a RecordBatch's token column:
-    (flat int32 values, int64 offsets).  No per-row Python objects."""
+    """Zero-copy view of a RecordBatch's token column: (flat int32
+    values, int64 offsets from 0).  No per-row Python objects.  On a
+    sliced batch ``flat`` holds only the slice's own tokens."""
     import pyarrow as pa
 
     col = batch.column(batch.schema.get_field_index(token_col))
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
-    # Slice offsets are relative to the values buffer of the parent.
+    # A slice's offsets index into the parent's whole values buffer:
+    # cut that buffer to the slice's span and rebase the offsets to 0.
     offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    flat = col.values.to_numpy(zero_copy_only=False)
-    return flat.astype(np.int32, copy=False), offsets
+    lo, hi = (int(offsets[0]), int(offsets[-1])) if len(offsets) else (0, 0)
+    flat = col.values.slice(lo, hi - lo).to_numpy(zero_copy_only=False)
+    return flat.astype(np.int32, copy=False), offsets - lo
 
 
 def arrow_str_codes(batch, col_name: str):
@@ -95,30 +99,42 @@ def encode_series(s: pd.Series) -> list[bytes]:
     ]
 
 
-def bloom_ngram_updater(n: int, token_col: str = "tokens") -> Callable[[Any, pd.DataFrame], None]:
-    """Insert every token n-gram of each row into a Bloom sketch."""
+def ngram_updater(
+    n: int, token_col: str, insert: Callable[[Any, np.ndarray, np.ndarray], None]
+) -> Callable[[Any, Any], None]:
+    """``update(sk, batch)`` that hashes every token n-gram of the
+    batch's rows — MurmurHash3_x64_128 of the little-endian int32
+    n-gram bytes, fused straight off the Arrow buffer — and hands the
+    (h1, h2) vectors to ``insert(sk, h1, h2)``.  A batch without a
+    single n-gram never reaches ``insert``."""
 
-    def update(sk: BloomSketch, pdf: pd.DataFrame) -> None:
-        flat, offsets = list_column_to_flat(pdf[token_col])
-        mat, _ = ngram_bytes(flat, offsets, n)
-        if len(mat):
-            sk.insert_fixed_width(mat)
+    def update(sk, batch) -> None:
+        flat, offsets = arrow_tokens_view(batch, token_col)
+        starts, _ = ngram_starts(offsets, n)
+        if len(starts):
+            insert(sk, *mmh3_ngram_i32(flat, starts, n))
 
     return update
 
 
-def bloom_binary_updater(col: str) -> Callable[[Any, pd.DataFrame], None]:
+def bloom_ngram_updater(n: int, token_col: str = "tokens") -> Callable[[Any, Any], None]:
+    """Insert every token n-gram of each row into a Bloom sketch."""
+    return ngram_updater(n, token_col, lambda sk, h1, h2: sk.insert_hashes(h1, h2))
+
+
+def bloom_binary_updater(col: str) -> Callable[[Any, Any], None]:
     """Insert a binary/string column's byte values (reference marker path)."""
 
-    def update(sk: BloomSketch, pdf: pd.DataFrame) -> None:
-        sk.insert(encode_series(pdf[col]))
+    def update(sk: BloomSketch, batch) -> None:
+        sk.insert(encode_series(batch.column(col).to_pandas()))
 
     return update
 
 
-def bloom_factory(capacity: int, fp: float) -> Callable[[], BloomSketch]:
+def bloom_factory(capacity: int, fp: float) -> Callable[..., BloomSketch]:
+    """Fixed-size Bloom factory; callable with a group key or without."""
     params = BloomParams.solve(capacity, fp)
-    return lambda: BloomSketch(params.m, params.k)
+    return lambda key=None: BloomSketch(params.m, params.k)
 
 
 # --- probe-side pandas UDFs ---------------------------------------------------

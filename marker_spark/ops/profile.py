@@ -35,7 +35,7 @@ COUNT(DISTINCT) at the HLL ±1.04/sqrt(2^p) error.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
@@ -204,18 +204,20 @@ def profile_table(
     #    numeric values, ONE composite sketch pass ----------------------
     melted = register(_melt(df, columns, numeric).persist())
 
-    def update(sk, pdf: pd.DataFrame) -> None:
-        vals = pdf["h"].dropna()
-        if len(vals):
-            sk.update_hashes(vals.to_numpy(dtype="int64"))
-        nums = pdf["num"].dropna()
+    def update(sk, batch) -> None:
+        # h is never null (the melt drops null values); num is null
+        # for every non-numeric column
+        hashes = batch.column("h").to_numpy()
+        if len(hashes):
+            sk.update_hashes(hashes)
+        nums = pc.drop_null(batch.column("num")).to_numpy()
         if len(nums):
-            sk.update_numeric(nums.to_numpy(dtype="float64"))
+            sk.update_numeric(nums)
 
     profs = collect_sketches(
         sketch_agg(
             melted,
-            lambda: _ProfileSketch(
+            lambda _key: _ProfileSketch(
                 HllSketch(p=hll_p), MisraGriesSketch(k=mg_k), KllSketch(k=kll_k)
             ),
             update,

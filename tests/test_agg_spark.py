@@ -54,7 +54,7 @@ def test_partition_count_invariance(spark, tokseq_df):
     update = bloom_ngram_updater(NGRAM)
     a = collect_sketch(sketch_agg(tokseq_df.repartition(2), factory, update, BloomSketch), BloomSketch)
     b = collect_sketch(
-        sketch_agg(tokseq_df.repartition(13), factory, update, BloomSketch, tree_fanin=4),
+        sketch_agg(tokseq_df.repartition(13), factory, update, BloomSketch),
         BloomSketch,
     )
     np.testing.assert_array_equal(a.blocks, b.blocks)
@@ -121,32 +121,19 @@ def test_membership_udf_fp_bounded(spark):
     assert np.array_equal(got, local_any)
 
 
-def test_shuffle_mode_matches_mapside(spark, tokseq_df):
-    """mode='shuffle' (salted raw-row repartition) must produce the
-    exact same state as the map-side combine path."""
-    factory = bloom_factory(capacity=300_000, fp=0.001)
-    update = bloom_ngram_updater(NGRAM)
-    a = collect_sketch(
-        sketch_agg(tokseq_df, factory, update, BloomSketch, mode="mapside"), BloomSketch
-    )
-    b = collect_sketch(
-        sketch_agg(tokseq_df, factory, update, BloomSketch, mode="shuffle", salt=4), BloomSketch
-    )
-    np.testing.assert_array_equal(a.blocks, b.blocks)
-    assert a.n_inserted == b.n_inserted
-
-
 def test_null_group_keys_reach_a_sketch(spark):
     """Rows with a null group key must be sketched under the sentinel
-    group, not silently dropped (ADVICE: pandas groupby dropna)."""
+    group, not silently dropped (ADVICE: pandas groupby dropna) — also
+    when only one column of a two-column key is null."""
     import pandas as pd
 
     from marker_spark.agg import NULL_KEY
     from marker_spark.kernels import bloom_factory, bloom_binary_updater
 
     df = spark.createDataFrame(
-        pd.DataFrame({"g": ["a", "a", None, None, None], "v": list("vwxyz")}),
-        schema="g string, v string",
+        pd.DataFrame({"g": ["a", "a", None, None, None], "h": ["p", None, "p", None, "p"],
+                      "v": list("vwxyz")}),
+        schema="g string, h string, v string",
     ).repartition(2)
     out = sketch_agg(df, bloom_factory(1000, 0.01), bloom_binary_updater("v"),
                      BloomSketch, group_cols=["g"])
@@ -156,6 +143,24 @@ def test_null_group_keys_reach_a_sketch(spark):
     assert null_sk.n_inserted == 3
     assert null_sk.contains([b"x", b"y", b"z"]).all()
     assert sketches[("a",)].n_inserted == 2
+
+    out2 = sketch_agg(df, bloom_factory(1000, 0.01), bloom_binary_updater("v"),
+                      BloomSketch, group_cols=["g", "h"])
+    sketches2 = collect_sketches(out2, BloomSketch, ["g", "h"])
+    expected = {("a", "p"): [b"v"], ("a", NULL_KEY): [b"w"],
+                (NULL_KEY, "p"): [b"x", b"z"], (NULL_KEY, NULL_KEY): [b"y"]}
+    assert set(sketches2) == set(expected)
+    for key, markers in expected.items():
+        assert sketches2[key].n_inserted == len(markers), key
+        assert sketches2[key].contains(markers).all(), key
+
+
+def test_unknown_group_col_rejected_up_front(spark, tokseq_df):
+    """A group column missing from the DataFrame fails with a ValueError
+    naming it when sketch_agg is called, not later inside a worker."""
+    with pytest.raises(ValueError, match="no_such_col"):
+        sketch_agg(tokseq_df, bloom_factory(1000, 0.01), bloom_ngram_updater(NGRAM),
+                   BloomSketch, group_cols=["source", "no_such_col"])
 
 
 def test_encode_series_null_cells():

@@ -160,3 +160,18 @@ def test_mg_agg_finds_heavy_items(spark):
     sks = collect_sketches(result, MisraGriesSketch, ["g"])
     assert 1 in set(int(i) for i in sks[("x",)].items)
     assert 2 in set(int(i) for i in sks[("y",)].items)
+
+
+def test_mg_agg_nullable_column_keeps_int64_precision(spark):
+    """A NULL beside an id above 2**53 in the same batch must neither
+    reach the summary nor round the id through float64."""
+    from marker_spark.api import mg_agg
+    from marker_spark.sketches.misra_gries import MisraGriesSketch
+
+    big = 2**53 + 1
+    df = spark.createDataFrame(
+        [(big,)] * 5 + [(None,)] + [(7,)] * 2, schema="item long"
+    ).coalesce(1)
+    sk = collect_sketch(mg_agg(df, item_col="item", k=8), MisraGriesSketch)
+    assert sorted(int(i) for i in sk.items) == [7, big]
+    assert sk.total == 7

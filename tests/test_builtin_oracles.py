@@ -304,11 +304,11 @@ def test_mg_exact_pass_matches_spark_approx_top_k(spark):
 
     hashed = df.withColumn("h", F.xxhash64("v"))
 
-    def update(sk, pdf):
-        sk.update(pdf["h"].to_numpy(dtype="int64"))
+    def update(sk, batch):
+        sk.update(batch.column("h").to_numpy())
 
     mg = collect_sketch(
-        sketch_agg(hashed, lambda: MisraGriesSketch(k=64), update, MisraGriesSketch),
+        sketch_agg(hashed, lambda _key: MisraGriesSketch(k=64), update, MisraGriesSketch),
         MisraGriesSketch,
     )
     cand = [int(x) for x in mg.items]

@@ -56,3 +56,23 @@ def test_null_key_single_definition():
     codes, uniques = arrow_str_codes(batch, "g")
     assert uniques[-1] == NULL_KEY
     assert list(codes) == [0, 1, 0]
+
+
+def test_arrow_tokens_view_on_sliced_batch():
+    """A slice's view holds only the slice's own tokens, with offsets
+    from 0 — an updater reading ``flat`` alone must not see the parent
+    batch's other rows."""
+    import pyarrow as pa
+
+    from marker_spark.kernels import arrow_tokens_view
+    from marker_spark.ngrams import list_column_to_flat
+
+    batch = pa.record_batch({"tokens": pa.array([[1, 2, 3], [4, 5], [], [6, 7, 8, 9]],
+                                                type=pa.list_(pa.int32()))})
+    for lo, n in [(0, 4), (1, 2), (1, 3), (2, 1), (3, 1), (4, 0)]:
+        part = batch.slice(lo, n)
+        flat, offsets = arrow_tokens_view(part)
+        exp_flat, exp_offsets = list_column_to_flat(part.column("tokens").to_pandas())
+        np.testing.assert_array_equal(flat, exp_flat)
+        np.testing.assert_array_equal(offsets, exp_offsets)
+        assert flat.dtype == np.int32 and offsets.dtype == np.int64

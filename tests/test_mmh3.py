@@ -80,3 +80,26 @@ def test_known_scalar(text, e1):
     h1, h2 = mmh3_x64_128([text])
     combined = int(h1[0]) | (int(h2[0]) << 64)
     assert combined == 121118445609844952839898260755277781762
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5, 8])
+def test_ngram_i32_matches_byte_matrix(n):
+    """The fused n-gram hash equals hashing the materialized
+    little-endian n-gram bytes, for every tail length — including empty
+    and too-short docs and negative token ids."""
+    from marker_spark.hashing import mmh3_ngram_i32
+    from marker_spark.ngrams import ngram_bytes, ngram_starts
+
+    rng = np.random.default_rng(n)
+    lens = np.concatenate(([0, n - 1, n, 0], rng.integers(0, 40, size=60)))
+    offsets = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    flat = rng.integers(-(2**31), 2**31, size=int(offsets[-1]), dtype=np.int64).astype(np.int32)
+    flat[::7] = -1
+    starts, _ = ngram_starts(offsets, n)
+    h1, h2 = mmh3_ngram_i32(flat, starts, n)
+    mat, _ = ngram_bytes(flat, offsets, n)
+    e1, e2 = mmh3_fixed_width(mat)
+    assert len(h1) == len(mat) > 0
+    np.testing.assert_array_equal(h1, e1)
+    np.testing.assert_array_equal(h2, e2)

@@ -322,3 +322,15 @@ def test_compaction_reclaim_and_frozen_fold_stay_broadcast(spark):
     # no sort-merge anywhere in the cap machinery
     assert "SortMergeJoin" not in plan2
     release_all()
+
+
+@pytest.mark.parametrize("name", ["flagship_bloom_by_source", "hll_distinct_ngrams"])
+def test_sketch_builds_enter_python_via_map_in_arrow(spark, name):
+    """sketch_agg's partial build hands whole Arrow batches to Python
+    (MapInArrow); no pandas conversion of the list-typed token column
+    (MapInPandas) may sit in the plan."""
+    import __spark_entry__ as entrymod
+
+    plan = _plan(entrymod.queries()[name](spark, SF_DIR))
+    assert "MapInArrow" in plan, plan[:1500]
+    assert "MapInPandas" not in plan
