@@ -276,8 +276,8 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold 0.3: the synthetic embeddings are near-orthogonal (best
     within-label cosine ~0.45), so 0.3 yields a real, non-empty match
-    set at every sf — the gate exercises the join + cosine math instead
-    of passing vacuously on 0 rows."""
+    set at every sf — the gate exercises the label-blocked pair kernel
+    and its cosine math instead of passing vacuously on 0 rows."""
     from marker_spark.ops.dedup import embedding_near_dup_pairs
 
     emb = _read(spark, sf_dir, "embeddings")

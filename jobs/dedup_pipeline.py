@@ -176,7 +176,7 @@ def main(argv: list[str] | None = None) -> None:
 
         # persist: the anti-joined `clean` feeds every later action
         # (span counts, removal, final write) — without this each one
-        # re-runs the O(cluster-size^2) blocked cosine pair join
+        # re-runs the O(cluster-size^2) blocked cosine pair kernel
         sem_drop = register(
             flagged.where(F.col("is_dup") == 1).select(idc).persist()
         )

@@ -168,6 +168,9 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--no-append", action="store_true",
                     help="report pairs only; do not append the batch to the index")
     args = ap.parse_args(argv)
+    fp = args.retention_prefilter_fp
+    if fp is not None and not 0 < fp < 1:
+        ap.error(f"--retention-prefilter-fp must be in (0, 1), got {fp}")
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F

@@ -9,8 +9,9 @@ Scale shapes (the part that must survive 100 TB):
    (band_id, band_hash), i.e. a shuffle keyed by small ints;
  * candidate verification — exact Jaccard only on LSH candidates;
  * SimHash — 64-bit fingerprint, near-dup via banded Hamming join;
- * embedding near-dup — blocked self-join (block key bounds the
-   quadratic term) + JVM-side cosine.
+ * embedding near-dup — one grouped-numpy pair kernel per block
+   (label, LSH bucket or SemDeDup cell): the block key bounds the
+   quadratic term, fixed-size tiles bound the memory.
 """
 
 from __future__ import annotations
@@ -604,6 +605,8 @@ def _retention_via_drop_prefilter(
     from ..agg import unpack_state
     from ..sketches.bloom import BloomSketch
 
+    # as in the plain semi-join, a NULL id is never retained
+    index = index.where(F.col(id_col).isNotNull())
     # drop = index ids - keep.  Semi/anti joins ignore right-side
     # multiplicity, so keep is never distinct'd (that alone is a full
     # shuffle of the corpus-sized retention list); while the per-shard
@@ -634,8 +637,7 @@ def _retention_via_drop_prefilter(
         bf = memo.get("bf")
         if bf is None:
             bf = memo["bf"] = unpack_state(BloomSketch, bcast.value)
-        # index ids are non-null by construction; a nullable id column
-        # would arrive as float64 and corrupt the hashes (CLAUDE.md r10)
+        # NULL ids were filtered above (NaN would corrupt the hashes)
         arr = ids.to_numpy(dtype=np.int64)
         return pd.Series(bf.contains_fixed_width(arr.view(np.uint8).reshape(-1, 8)))
 
@@ -686,7 +688,7 @@ def compact_band_index(
 
     ``prefilter_fp`` (opt-in, r10 verdict item 4): past the broadcast
     threshold the plain retention semi-join shuffles the WHOLE index on
-    ``id_col`` (measured 963 MB at 64M rows).  With a float fp rate the
+    ``id_col`` (measured 963 MB at 64M rows).  With an fp in (0, 1) the
     retention runs via :func:`_retention_via_drop_prefilter` instead —
     identical output (fp only moves rows onto the exact rescue join),
     exchange O(dropped + thin id columns).  The right mode for the
@@ -694,6 +696,8 @@ def compact_band_index(
     fraction of a multi-year index; default ``None`` keeps the plain
     join (optimal when ``keep`` broadcasts).
     """
+    if prefilter_fp is not None and not 0 < prefilter_fp < 1:
+        raise ValueError(f"prefilter_fp must be in (0, 1), got {prefilter_fp!r}")
     keys = ["band_id", "band_hash"]
     if prefilter_fp is not None:
         # no .distinct() on keep: the prefilter path only semi/anti
@@ -892,6 +896,87 @@ def simhash_near_dup_pairs(
     )
 
 
+_PAIR_TILE = 512  # each kernel temp holds <= 512**2 = 2**18 doubles
+
+
+def _block_pair_cosines(
+    pdf: pd.DataFrame, id_col: str, vec_col: str, margin: float
+) -> pd.DataFrame:
+    """Pairs ``id_a < id_b`` of one block with raw cosine >= margin.
+
+    Vectors shorter than the block's longest never pair; a NULL element
+    arrives as NaN, which fails the compare.  Dot and norm are left
+    folds one column at a time, so raw cosines are bit-identical to
+    Catalyst's ``aggregate(zip_with(a, b, x*y), 0.0, acc + x)``.  Pairs
+    come tile by tile: memory is bounded by ``_PAIR_TILE``, not by the
+    block size or the vector length."""
+    vecs = pdf[vec_col].to_numpy()
+    lens = np.array([len(v) for v in vecs])
+    ok = lens == lens.max()
+    ids = pdf[id_col].to_numpy()[ok]
+    order = np.argsort(ids, kind="stable")
+    ids, n = ids[order], len(ids)
+    cols = np.stack(vecs[ok][order]).T.copy()  # [dim, n], contiguous columns
+    nrm = np.zeros(n)
+    for c in cols:
+        nrm += c * c
+    nrm = np.sqrt(nrm)
+    out_a, out_b, out_c = [], [], []
+    for i0 in range(0, n, _PAIR_TILE):
+        i1 = min(i0 + _PAIR_TILE, n)
+        for j0 in range(i0, n, _PAIR_TILE):
+            j1 = min(j0 + _PAIR_TILE, n)
+            acc = np.zeros((i1 - i0, j1 - j0))
+            for c in cols:
+                acc += c[i0:i1, None] * c[None, j0:j1]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                acc /= nrm[i0:i1, None] * nrm[None, j0:j1]
+            # ids are sorted: id_a < id_b keeps the upper triangle and
+            # never pairs a duplicated id with itself
+            ii, jj = np.nonzero((acc >= margin) & (ids[i0:i1, None] < ids[None, j0:j1]))
+            out_a.append(ids[i0 + ii])
+            out_b.append(ids[j0 + jj])
+            out_c.append(acc[ii, jj])
+    return pd.DataFrame({"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b),
+                         "cosine": np.concatenate(out_c)})
+
+
+def embedding_near_dup_pairs(
+    df: DataFrame,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    block_col: str = "label",
+    threshold: float = 0.95,
+) -> DataFrame:
+    """Pairs ``(id_a < id_b, cosine)`` sharing a ``block_col`` value
+    with ``round(cosine, 6) >= threshold``.
+
+    The block key bounds the quadratic term (a label, an LSH bucket, a
+    quantizer cell).  Each block is ONE numpy pass of
+    :func:`_block_pair_cosines` (groupBy(block).applyInPandas), ~100x
+    cheaper than per-pair Catalyst higher-order functions; rounding and
+    the threshold compare stay in Spark.  Rows with a NULL id, block or
+    vector never pair, as under an equi-join on the block."""
+    # round(cos, 6) raises a value by at most 5e-7, so pre-filtering raw
+    # cosines at threshold - 1e-6 never drops an output pair
+    margin = threshold - 1e-6
+    id_type = df.schema[id_col].dataType.simpleString()
+    pairs = (
+        df.dropna(subset=[id_col, block_col, vec_col])
+        .select(id_col, block_col, F.col(vec_col).cast("array<double>").alias(vec_col))
+        .groupBy(block_col)
+        .applyInPandas(
+            lambda pdf: _block_pair_cosines(pdf, id_col, vec_col, margin),
+            schema=f"id_a {id_type}, id_b {id_type}, cosine double",
+        )
+    )
+    return (
+        pairs.withColumn("cosine", F.round(F.col("cosine"), 6))
+        .where(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
+    )
+
+
 def embedding_near_dup_lsh(
     df: DataFrame,
     dim: int,
@@ -904,105 +989,17 @@ def embedding_near_dup_lsh(
     """Corpus-scale embedding near-dup: random-hyperplane LSH buckets
     as the blocking key (cos >= 0.95 pairs agree on all 8 sign bits
     w.p. ~0.77 per plane set; same-bucket blocking bounds the quadratic
-    term by bucket size instead of label cardinality).
-
-    Within-bucket pairs and their cosines come from ONE vectorized
-    numpy pass per bucket (groupBy(bucket).applyInPandas) instead of a
-    self-join whose per-pair cosine runs through interpreted Catalyst
-    higher-order functions.  The per-pair work is bucket_size-quadratic
-    either way; the constant differs by ~100x.  The fold order of the
-    dot/norm sums replicates the Catalyst ``aggregate`` left fold
-    exactly (column-at-a-time accumulation, not BLAS), so the raw
-    cosines are bit-identical to the join form's; rounding and the
-    threshold compare stay in Spark expressions.
-    """
-    from .similarity import hyperplane_signatures, _stack_embeddings
+    term by bucket size instead of label cardinality), then
+    :func:`embedding_near_dup_pairs` per bucket.  Only ``dim``-long
+    vectors take part: the planes cannot bucket any other."""
+    from .similarity import hyperplane_signatures
 
     bucketed = hyperplane_signatures(
         df.select(id_col, vec_col), dim=dim, n_planes=n_planes, vec_col=vec_col, seed=seed
     )
-    # round(cos, 6) can raise a value by at most 5e-7, so pre-filtering
-    # raw cosines at threshold - 1e-6 never drops an output pair; the
-    # authoritative round + compare happen in Spark below, unchanged.
-    margin = threshold - 1e-6
-    _PAIR_CHUNK = 1 << 18  # bound per-task temp arrays (chunk x dim x 2 doubles)
-
-    def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
-            )
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        mat = _stack_embeddings(pdf[vec_col].iloc[order], dim)
-        # sequential left-fold, one column at a time: bit-identical to
-        # aggregate(zip_with(a, b, x*y), 0.0, acc + x) on cast doubles
-        nrm = np.zeros(n)
-        for j in range(dim):
-            nrm += mat[:, j] * mat[:, j]
-        nrm = np.sqrt(nrm)
-        iu, ju = np.triu_indices(n, 1)
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        out_c: list[np.ndarray] = []
-        for s in range(0, len(iu), _PAIR_CHUNK):
-            ii, jj = iu[s : s + _PAIR_CHUNK], ju[s : s + _PAIR_CHUNK]
-            left, right = mat[ii], mat[jj]
-            acc = np.zeros(len(ii))
-            for j in range(dim):
-                acc += left[:, j] * right[:, j]
-            cos = acc / (nrm[ii] * nrm[jj])
-            keep = cos >= margin  # NaN compares False: degenerate rows drop
-            out_a.append(ids[ii[keep]])
-            out_b.append(ids[jj[keep]])
-            out_c.append(cos[keep])
-        return pd.DataFrame({
-            "id_a": np.concatenate(out_a),
-            "id_b": np.concatenate(out_b),
-            "cosine": np.concatenate(out_c),
-        })
-
-    pairs = bucketed.groupBy("bucket").applyInPandas(
-        _bucket_pairs, schema="id_a long, id_b long, cosine double"
-    )
-    return (
-        pairs.withColumn("cosine", F.round(F.col("cosine"), 6))
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    block_col: str | None = "label",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Pairs with cosine >= threshold; blocked self-join, JVM-side math.
-
-    block_col bounds the quadratic blow-up (at scale: LSH bucket id).
-    """
-    cast = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = df.select(F.col(id_col), cast.alias("v"), *( [F.col(block_col)] if block_col else []))
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    if block_col:
-        cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))  # noqa: E731
-    cos = dot / (norm(F.col("a.v")) * norm(F.col("b.v")))
-    return (
-        a.join(b, cond)
-        .withColumn("cosine", F.round(cos, 6))
-        .where(F.col("cosine") >= threshold)
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"), "cosine")
+    return embedding_near_dup_pairs(
+        bucketed.where(F.size(vec_col) == dim), vec_col=vec_col, id_col=id_col,
+        block_col="bucket", threshold=threshold,
     )
 
 
@@ -1088,9 +1085,10 @@ def semdedup_flags(
     ``n_clusters`` with the corpus (50k clusters for LAION-440M) — the
     knob IS the bound, exactly like the LSH band / hyperplane-bucket
     blocking elsewhere in this module.  The celled table is persisted
-    (registered with cacheutil) because the self-join would otherwise
-    re-evaluate the k-dot assignment on both sides; the join shuffles
-    (id, vector, cell) keyed by the small-int cell."""
+    (registered with cacheutil) because the pair kernel and the final
+    flag join both read it and would otherwise each re-evaluate the
+    k-dot assignment; the kernel's groupBy shuffles (id, vector, cell)
+    keyed by the small-int cell."""
     celled = register(
         assign_cells_expr(
             df.select(id_col, vec_col), centroids, vec_col=vec_col

@@ -207,6 +207,111 @@ def test_embedding_near_dup_lsh_finds_planted_pairs(spark):
     assert recall >= 0.8, (recall, pairs)
 
 
+def _round6(x: float) -> float:
+    """Spark ``F.round(x, 6)``: BigDecimal.valueOf(double).setScale(6,
+    HALF_UP), i.e. HALF_UP over the SHORTEST-decimal repr of the double
+    (= Python repr).  np.round/round are half-even over the binary
+    value, so a tie at the 7th place would diverge."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def _fold_dot(a, b) -> float:
+    acc = 0.0  # sequential left fold, the order Catalyst's aggregate sums in
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _reference_block_pairs(rows, threshold: float) -> list:
+    """Plain-Python blocked cosine rule over ``(id, vector, block)``
+    rows: pairs ``id_a < id_b`` in one block with round-6 cosine >=
+    threshold.  NULL ids, blocks and vectors never pair, nor do vectors
+    holding a NULL or shorter than their block's longest."""
+    import math
+
+    blocks: dict = {}
+    for vid, vec, block in rows:
+        if vid is not None and vec is not None and block is not None:
+            blocks.setdefault(block, []).append((vid, vec))
+    out = []
+    for members in blocks.values():
+        dim = max(len(v) for _, v in members)
+        ok = [(i, v, math.sqrt(_fold_dot(v, v)))
+              for i, v in members if len(v) == dim and None not in v]
+        for ia, a, na in ok:
+            for ib, b, nb in ok:
+                if ia < ib:
+                    cos = _fold_dot(a, b) / (na * nb)
+                    if cos >= threshold - 1e-6 and _round6(cos) >= threshold:
+                        out.append((ia, ib, _round6(cos)))
+    return sorted(out)
+
+
+def test_embedding_pair_kernel_matches_python_reference(spark):
+    """embedding_near_dup_pairs (and embedding_near_dup_lsh on its own
+    buckets) equals a plain-Python replay of the blocked cosine rule.
+    Block 0 spans several kernel tiles in both directions, so tile
+    boundaries and the diagonal tile are covered; the extra rows carry
+    every never-pairs case next to a vector they would otherwise match."""
+    import numpy as np
+
+    from marker_spark.ops.dedup import (
+        _PAIR_TILE,
+        embedding_near_dup_lsh,
+        embedding_near_dup_pairs,
+    )
+    from marker_spark.ops.similarity import hyperplane_signatures
+
+    rng = np.random.default_rng(17)
+
+    def vec():  # float32 values, exact in the array<float> column
+        return rng.standard_normal(8).astype(np.float32).astype(float).tolist()
+
+    n_big = 2 * _PAIR_TILE + _PAIR_TILE // 3
+    rows = [(i, vec(), 0) for i in range(n_big)]
+    rows += [(n_big + i, vec(), 1) for i in range(40)]
+    rows += [
+        (9000, None, 0),  # NULL vector
+        (9001, rows[3][1][:7], 0),  # ragged
+        (9002, rows[4][1][:7] + [None], 0),  # vector holding a NULL
+        (9003, rows[5][1], None),  # NULL blocks: a NULL key never matches
+        (9005, rows[5][1], None),
+        (None, rows[6][1], 0),  # NULL id
+        (7, [x + 1e-4 for x in rows[7][1]], 0),  # duplicated id
+        (9004, rows[8][1], 1),  # copy of a block-0 vector in block 1
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).repartition(3)
+    threshold = 0.85
+
+    got = sorted(
+        tuple(r) for r in embedding_near_dup_pairs(df, threshold=threshold).collect()
+    )
+    want = _reference_block_pairs(rows, threshold)
+    assert len(want) > 500
+    assert got == want
+    paired = {i for p in got for i in p[:2]}
+    assert not paired & {9000, 9001, 9002, 9003, 9004, 9005}
+
+    # one plane: every row lands in one of two buckets
+    buckets = hyperplane_signatures(df, dim=8, n_planes=1, seed=42).collect()
+    assert {r["bucket"] for r in buckets} == {0, 1}
+    want_lsh = _reference_block_pairs(
+        [(r["vec_id"], r["embedding"], r["bucket"]) for r in buckets], threshold
+    )
+    got_lsh = sorted(
+        tuple(r)
+        for r in embedding_near_dup_lsh(
+            df, dim=8, threshold=threshold, n_planes=1, seed=42
+        ).collect()
+    )
+    assert len(want_lsh) > 100
+    assert got_lsh == want_lsh
+
+
 def test_connected_components_chain_and_clique(spark):
     """Min-label propagation must close transitive chains (A-B, B-C,
     C-D => one component) — the multi-round convergence case — and
@@ -570,20 +675,10 @@ def test_semdedup_flags_matches_numpy_replica(spark):
     }
 
     # ---- numpy replica (float32 round-trip like the Spark column) ----
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def r6(x: float) -> float:
-        # Spark F.round = BigDecimal.valueOf(double).setScale(6,
-        # HALF_UP): HALF_UP over the SHORTEST-decimal repr of the
-        # double (= Python repr). np.round/round are half-even over
-        # the binary value — a tie at the 7th place would diverge.
-        return float(Decimal(repr(float(x))).quantize(
-            Decimal("0.000001"), ROUND_HALF_UP))
-
     ids = sorted(vecs)
     mat = np.stack([vecs[i].astype(np.float32).astype(np.float64) for i in ids])
     raw = mat @ np.asarray(cents).T
-    dots = np.vectorize(r6)(raw)
+    dots = np.vectorize(_round6)(raw)
     cell = np.argmax(dots, axis=1)  # first max on ties, same rule
     want = {}
     for pos, i in enumerate(ids):
@@ -592,10 +687,10 @@ def test_semdedup_flags_matches_numpy_replica(spark):
             if j >= i or cell[qos] != cell[pos]:
                 continue
             a, b = mat[pos], mat[qos]
-            cos = r6(float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b))))
+            cos = _round6(float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b))))
             if cos >= 0.995:
                 best = max(best, cos)
-        want[i] = (int(cell[pos]), int(best > 0), r6(best))
+        want[i] = (int(cell[pos]), int(best > 0), _round6(best))
     assert got == want
     # the planted dups (higher id than their source) must be flagged
     assert all(got[i][1] == 1 for i in (60, 61, 62)), got

@@ -994,6 +994,8 @@ def test_compact_prefilter_equivalence(spark, fp):
         [(d, 0, 100) for d in range(1, 7)]
         + [(d, 0, 200) for d in range(1, 4)]
         + [(d, 0, 300) for d in range(10, 15)]
+        # NULL ids: never retained, on either path
+        + [(None, 0, 100), (None, 0, 300)]
     )
     index = spark.createDataFrame(
         idx_rows, "doc_id long, band_id int, band_hash long"
@@ -1003,7 +1005,7 @@ def test_compact_prefilter_equivalence(spark, fp):
     )
     c0, f0 = compact_band_index(index, keep, max_bucket=cap)
     c1, f1 = compact_band_index(index, keep, max_bucket=cap, prefilter_fp=fp)
-    key = lambda r: (r["doc_id"], r["band_id"], r["band_hash"])
+    key = lambda r: (r["doc_id"] or -1, r["band_id"], r["band_hash"])
     assert sorted(c1.collect(), key=key) == sorted(c0.collect(), key=key)
     assert sorted(f1.collect()) == sorted(f0.collect())
     # retention-only mode through the same split
@@ -1027,6 +1029,42 @@ def test_compact_prefilter_nothing_dropped(spark):
     r1, _ = compact_band_index(index, keep, prefilter_fp=0.01)
     assert sorted(r1.collect()) == sorted(index.collect())
     release_all()
+
+
+@pytest.mark.parametrize("fp", [0.0, 1.0, -0.1, float("nan")])
+@pytest.mark.parametrize("drops", [True, False])
+def test_compact_prefilter_fp_out_of_range_rejected_up_front(
+    spark, tmp_path, fp, drops
+):
+    """A prefilter fp outside (0, 1) is a ValueError before any Spark
+    job runs, whether or not the retention would drop anything; the
+    job CLI rejects it before starting a session."""
+    from jobs.incremental_dedup import main
+    from marker_spark.ops.dedup import compact_band_index
+
+    index = spark.createDataFrame(
+        [(d, 0, 100) for d in range(1, 9)],
+        "doc_id long, band_id int, band_hash long",
+    )
+    keep = spark.createDataFrame(
+        [(d,) for d in range(1, 5 if drops else 20)], "doc_id long"
+    )
+    sc = spark.sparkContext
+    group = f"prefilter-fp-{fp}-{drops}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        with pytest.raises(ValueError, match="prefilter_fp"):
+            compact_band_index(index, keep, prefilter_fp=fp)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        index.count()  # the probe sees jobs of this group
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # past the check, the missing --keep parquet would raise instead
+    with pytest.raises(SystemExit):
+        main(["--index", str(tmp_path / "idx"), "--compact",
+              "--keep", str(tmp_path / "keep"),
+              "--retention-prefilter-fp", str(fp)])
 
 
 @pytest.mark.parametrize("delta", [-1, 0, 1])
