@@ -19,6 +19,14 @@ shape is explicit here:
 ``update(sketch, batch_slice)`` kernel: each batch is split by the
 group columns with one stable sort, one ``take`` and zero-copy slices.
 
+``collect_agg`` is the driver-fold path for results that end on the
+driver anyway (the cache ring's buckets, a broadcast Bloom): the
+partial build runs over ``coalesce(defaultParallelism)`` and the
+partials are OR-folded by :func:`collect_sketches` — one stage, no
+merge shuffle, at most ``defaultParallelism`` partials per group.  Only
+order-free merges belong there (Bloom, HLL, CMS); order-sensitive
+states (KLL, t-digest, Misra-Gries) keep ``sketch_agg``'s merge.
+
 Skew note: because partials are keyed per-partition *inside* the map
 task, a hot group key (zipf ``source``) costs nothing extra at build
 time — the shuffle moves one sketch row per (partition, group), not the
@@ -317,6 +325,32 @@ def _split_groups(batch, group_cols: list[str]) -> Iterator[tuple[tuple, Any]]:
         yield key, batch.slice(lo, hi - lo)
 
 
+def _grouped_update(
+    factory: Callable[[tuple], Any], update: Callable[[Any, Any], None], group_cols: list[str]
+) -> Callable[[dict, Any], None]:
+    """``batch_update(states, batch)`` for :func:`build_partials_arrow`:
+    split the batch by ``group_cols``, create a missing group's sketch
+    with ``factory(key)`` and fold the group's slice in with
+    ``update``."""
+
+    def batch_update(states: dict, batch) -> None:
+        for key, part in _split_groups(batch, group_cols):
+            sk = states.get(key)
+            if sk is None:
+                sk = states[key] = factory(key)
+            update(sk, part)
+
+    return batch_update
+
+
+def _check_group_cols(df: DataFrame, group_cols: list[str] | None) -> list[str]:
+    group_cols = list(group_cols or [])
+    missing = [c for c in group_cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"group_cols not in DataFrame: {missing}")
+    return group_cols
+
+
 def sketch_agg(
     df: DataFrame,
     factory: Callable[[tuple], Any],
@@ -334,22 +368,36 @@ def sketch_agg(
     state per group).  ``update(sk, batch)`` folds a ``pa.RecordBatch``
     holding only that group's rows into the sketch.
     """
-    group_cols = list(group_cols or [])
-    missing = [c for c in group_cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"group_cols not in DataFrame: {missing}")
-
-    def batch_update(states: dict, batch) -> None:
-        for key, part in _split_groups(batch, group_cols):
-            sk = states.get(key)
-            if sk is None:
-                sk = states[key] = factory(key)
-            update(sk, part)
-
+    group_cols = _check_group_cols(df, group_cols)
+    partials = build_partials_arrow(df, _grouped_update(factory, update, group_cols), group_cols)
     return merge_partials(
-        build_partials_arrow(df, batch_update, group_cols), sketch_cls, group_cols,
-        finalize=finalize, finalize_schema=finalize_schema,
+        partials, sketch_cls, group_cols, finalize=finalize, finalize_schema=finalize_schema,
     )
+
+
+def collect_agg(
+    df: DataFrame,
+    factory: Callable[[tuple], Any],
+    update: Callable[[Any, Any], None],
+    sketch_cls: type,
+    group_cols: list[str] | None = None,
+) -> dict[tuple, Any]:
+    """:func:`sketch_agg`'s partial build, folded on the driver →
+    ``{group tuple: sketch}`` (``()`` keys the whole input without
+    ``group_cols``).
+
+    One Spark stage: the input is coalesced to ``defaultParallelism``
+    tasks (no shuffle), each emits one packed partial per group it saw,
+    and :func:`collect_sketches` merges duplicate keys on the driver in
+    collect order, so at most ``defaultParallelism`` partials per group
+    reach the driver.  Use it only where the merge does not depend on
+    fold order (Bloom OR, HLL max, CMS add)."""
+    group_cols = _check_group_cols(df, group_cols)
+    width = df.sparkSession.sparkContext.defaultParallelism
+    partials = build_partials_arrow(
+        df.coalesce(width), _grouped_update(factory, update, group_cols), group_cols
+    )
+    return collect_sketches(partials, sketch_cls, group_cols)
 
 
 def collect_sketch(df: DataFrame, sketch_cls: type):

@@ -33,9 +33,11 @@ a bucketed sketch table:
    experimental/rebuildfilters.cpp:31-76).
 
 At cluster scale the bucket table is tiny (num_filters rows of sketch
-state); all heavy work is the sketch_agg build, which shuffles only
-serialized sketches.  Partition pruning on the source's time column
-replaces the reference's newest-first early-break scan.
+state); all heavy work is the per-bucket partial build
+(``agg.collect_agg``): one map-only stage over defaultParallelism tasks
+whose packed partials OR-fold on the driver — there is no merge
+shuffle.  Partition pruning on the source's time column replaces the
+reference's newest-first early-break scan.
 """
 
 from __future__ import annotations
@@ -49,7 +51,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..agg import collect_sketches, sketch_agg
+from ..agg import collect_agg
 from ..kernels import bloom_binary_updater, bloom_ngram_updater
 from ..params import CacheParams
 from ..sketches.bloom import BloomSketch
@@ -112,8 +114,9 @@ class SketchCache:
 
         Exactly one of marker_col (binary/string markers, reference
         path) or token_col (token n-grams) must be given.  One Spark
-        job: assign bucket -> map-side partial sketches per bucket ->
-        merge -> OR into held buckets.
+        job with one stage: assign bucket -> partial sketches per
+        bucket in each of defaultParallelism coalesced tasks -> OR-fold
+        on the driver -> OR into held buckets.
         """
         t0 = time.monotonic()
         dur = self.params.duration
@@ -131,8 +134,7 @@ class SketchCache:
             raise ValueError("need marker_col or token_col")
         bp = self.params.bloom_params()
         factory = lambda _key: BloomSketch(bp.m, bp.k)  # noqa: E731
-        result = sketch_agg(with_bucket, factory, update, BloomSketch, group_cols=["__bucket"])
-        built = collect_sketches(result, BloomSketch, ["__bucket"])
+        built = collect_agg(with_bucket, factory, update, BloomSketch, ["__bucket"])
         # one Spark job built every bucket; attribute its wall time
         # proportionally so lineage totals equal the real job time
         secs = (time.monotonic() - t0) / max(len(built), 1)

@@ -120,17 +120,25 @@ def mmh3_x64_128_padded(
     return h1, h2
 
 
+def _pad_flat(flat: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Scatter N back-to-back byte strings (``flat``, row i holding
+    ``lengths[i]`` bytes) into the zero-padded [N, L] matrix of
+    :func:`mmh3_x64_128_padded` with one masked copy: a boolean mask
+    assignment fills the True cells in row-major order, which is
+    exactly the order of ``flat``."""
+    width = ((int(lengths.max(initial=0)) // 16) + 2) * 16  # >=16 zero bytes after every row
+    padded = np.zeros((len(lengths), width), dtype=np.uint8)
+    padded[np.arange(width) < lengths[:, None]] = flat
+    return padded
+
+
 def pad_bytes(items: list[bytes] | np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Pack a list of byte strings into the zero-padded matrix shape
-    required by :func:`mmh3_x64_128_padded`."""
-    lengths = np.fromiter((len(b) for b in items), dtype=np.int64, count=len(items))
-    max_len = int(lengths.max(initial=0))
-    width = ((max_len // 16) + 2) * 16  # >=16 zero bytes after every row
-    padded = np.zeros((len(items), width), dtype=np.uint8)
-    for i, b in enumerate(items):
-        if b:
-            padded[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-    return padded, lengths
+    """Pack a list (or object array) of byte strings into the
+    zero-padded matrix shape required by :func:`mmh3_x64_128_padded`:
+    one ``join``, then :func:`_pad_flat` — no per-row Python loop."""
+    lengths = np.fromiter(map(len, items), dtype=np.int64, count=len(items))
+    flat = np.frombuffer(b"".join(items), dtype=np.uint8)
+    return _pad_flat(flat, lengths), lengths
 
 
 def mmh3_x64_128(items: list[bytes], seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
@@ -318,8 +326,10 @@ def mmh3_ngram_i32(
 def mmh3_offsets(flat: np.ndarray, offsets: np.ndarray, seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
     """Hash N variable-length byte strings stored Arrow-style: a flat
     uint8 buffer plus int offsets of length N+1 (row i spans
-    flat[offsets[i]:offsets[i+1]]).  Avoids materializing Python bytes
-    when the input already lives in an Arrow BinaryArray.
+    flat[offsets[i]:offsets[i+1]]; offsets need not start at 0, as in a
+    sliced Arrow BinaryArray).  The fast path when the input already
+    lives in Arrow buffers: no Python bytes objects, one masked copy
+    into the padded matrix (:func:`_pad_flat`).
 
     Chunked on rows (see :func:`mmh3_x64_128`): each chunk pads to its
     OWN max length, keeping scratch in cache and bounding allocation."""
@@ -333,19 +343,8 @@ def mmh3_offsets(flat: np.ndarray, offsets: np.ndarray, seed: int = 0) -> tuple[
         h2 = np.empty(n, dtype=np.uint64)
         for lo in range(0, n, _HASH_CHUNK):
             hi = min(lo + _HASH_CHUNK, n)
-            sub = offsets[lo : hi + 1] - offsets[lo]
-            h1[lo:hi], h2[lo:hi] = mmh3_offsets(
-                flat[offsets[lo] : offsets[hi]], sub, seed
-            )
+            h1[lo:hi], h2[lo:hi] = mmh3_offsets(flat, offsets[lo : hi + 1], seed)
         return h1, h2
-    lengths = np.diff(offsets).astype(np.int64)
-    max_len = int(lengths.max(initial=0))
-    width = ((max_len // 16) + 2) * 16
-    padded = np.zeros((n, width), dtype=np.uint8)
-    # Scatter each row; vectorized via a single fancy-index assignment.
-    row_idx = np.repeat(np.arange(n, dtype=np.int64), lengths)
-    col_idx = np.arange(len(flat), dtype=np.int64) - np.repeat(
-        offsets[:-1].astype(np.int64), lengths
-    )
-    padded[row_idx, col_idx] = flat
+    lengths = np.diff(offsets)
+    padded = _pad_flat(flat[offsets[0] : offsets[-1]], lengths)
     return mmh3_x64_128_padded(padded, lengths, seed=seed)

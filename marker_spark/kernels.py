@@ -15,7 +15,7 @@ import numpy as np
 import pandas as pd
 
 from .hashing import mmh3_ngram_i32
-from .ngrams import list_column_to_flat, ngram_bytes, ngram_starts
+from .ngrams import list_column_to_flat, ngram_starts
 from .params import BloomParams
 from .sketches.bloom import BloomSketch
 
@@ -160,8 +160,8 @@ def make_ngram_membership_udf(sketch_bytes: bytes, n: int):
     def any_ngram_in(tokens: pd.Series) -> pd.Series:
         sk = _sketch()
         flat, offsets = list_column_to_flat(tokens)
-        mat, per_doc = ngram_bytes(flat, offsets, n)
-        hits = sk.contains_fixed_width(mat) if len(mat) else np.empty(0, dtype=bool)
+        starts, per_doc = ngram_starts(offsets, n)
+        hits = sk.contains_hashes(*mmh3_ngram_i32(flat, starts, n))
         # any() per doc, vectorized via add.reduceat over doc segments
         out = np.zeros(len(tokens), dtype=bool)
         nz = per_doc > 0

@@ -60,11 +60,3 @@ def ngram_bytes(flat: np.ndarray, offsets: np.ndarray, n: int) -> tuple[np.ndarr
     grams = flat[idx].astype("<i4", copy=False)  # [G, n] little-endian int32
     return np.ascontiguousarray(grams).view(np.uint8).reshape(len(starts), 4 * n), per_doc
 
-
-def ngram_hash64(flat: np.ndarray, offsets: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Hash every n-gram with MurmurHash3_x64_128; returns (h1, h2, per_doc)."""
-    from .hashing import mmh3_fixed_width
-
-    mat, per_doc = ngram_bytes(flat, offsets, n)
-    h1, h2 = mmh3_fixed_width(mat)
-    return h1, h2, per_doc

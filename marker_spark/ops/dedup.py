@@ -545,40 +545,28 @@ def incremental_lsh_pairs(
 def _bloom_over_ids(
     ids_df: DataFrame, id_col: str, capacity: int, fp: float
 ) -> bytes:
-    """One OR-merged Bloom over a thin long-id table: each partition
-    builds a partial (mapInArrow, ids hashed as their 8 LE bytes), the
-    packed partials come back to the driver and OR-fold there.  Bounded
-    by #partitions x packed-state size — callers pass a BOUNDED id
-    list (the compaction drop-list), never a corpus-sized table."""
-    from ..agg import pack_state, unpack_state
+    """One packed Bloom over a thin long-id table, ids hashed as their
+    8 little-endian bytes.  Built by ``agg.collect_agg``: partials over
+    at most defaultParallelism coalesced tasks, OR-folded on the
+    driver — so however many shuffle partitions ``ids_df`` carries, the
+    driver receives at most defaultParallelism m-sized partials.
+    Callers pass a BOUNDED, non-empty id list (the compaction
+    drop-list), never a corpus-sized table."""
+    from ..agg import collect_agg, pack_state
     from ..params import BloomParams
     from ..sketches.bloom import BloomSketch
 
     params = BloomParams.solve(max(capacity, 1), fp)
-    m, k = params.m, params.k
 
-    def build(batches):
-        import pyarrow as pa
+    def update(bf: BloomSketch, batch) -> None:
+        arr = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        bf.insert_fixed_width(arr.view(np.uint8).reshape(-1, 8))
 
-        bf = BloomSketch(m, k)
-        for b in batches:
-            arr = b.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(arr):
-                bf.insert_fixed_width(arr.view(np.uint8).reshape(-1, 8))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([pack_state(bf)], type=pa.binary())], ["state"]
-        )
-
-    parts = (
-        ids_df.select(F.col(id_col).cast("long").alias(id_col))
-        .mapInArrow(build, schema="state binary")
-        .collect()
+    built = collect_agg(
+        ids_df.select(F.col(id_col).cast("long").alias(id_col)),
+        lambda _key: BloomSketch(params.m, params.k), update, BloomSketch,
     )
-    acc = None
-    for r in parts:
-        sk = unpack_state(BloomSketch, bytes(r["state"]))
-        acc = sk if acc is None else acc.merge_in_place(sk)
-    return pack_state(acc)
+    return pack_state(built[()])
 
 
 # explicit-broadcast bound for the per-shard index id set in the

@@ -285,3 +285,57 @@ def test_resume_rebuilds_interior_gap(tmp_path, spark):
     assert r.lookup_from(150, 150, [b"b"]).all(), "interior gap not rebuilt"
     assert r.lookup_from(50, 50, [b"a"]).all()
     assert r.lookup_from(250, 250, [b"c"]).all()
+
+
+def _spread_events(spark, rows, n_parts):
+    """rows: (epoch_secs, marker) spread over ``n_parts`` partitions
+    with no shuffle in the plan."""
+    rdd = spark.sparkContext.parallelize(rows, n_parts)
+    df = spark.createDataFrame(rdd, schema="secs long, marker string")
+    return df.withColumn("ts", F.col("secs").cast("timestamp")).drop("secs")
+
+
+def test_insert_batch_matches_driver_insert_across_partitions(spark):
+    """Input over 3 x defaultParallelism partitions and five buckets:
+    the coalesced tasks each hold several buckets' partials, and the
+    driver fold must give per-bucket bitmaps byte-identical to one
+    driver-side insert of the same markers."""
+    from marker_spark.sketches.bloom import BloomSketch
+
+    p = CacheParams(duration=100, lifespan=300, fp=0.001, total_capacity=10_000)
+    rows = [((i % 5) * 100 + i % 97, f"mk-{i}") for i in range(3_000)]
+    n_parts = 3 * spark.sparkContext.defaultParallelism
+    df = _spread_events(spark, rows, n_parts)
+    assert df.rdd.getNumPartitions() == n_parts
+    c = SketchCache(p)
+    c.insert_batch(df, ts_col="ts", marker_col="marker")
+    assert [b.start for b in c.buckets] == [0, 100, 200, 300, 400]
+    bp = p.bloom_params()
+    for b in c.buckets:
+        want = BloomSketch(bp.m, bp.k)
+        want.insert([m.encode() for s, m in rows if s // 100 * 100 == b.start])
+        assert b.sketch.to_bytes() == want.to_bytes(), b.start
+        assert b.n_markers == 600
+
+
+def test_insert_batch_runs_one_job_with_one_stage(spark):
+    """insert_batch folds its partials on the driver: one job, one
+    stage — no merge shuffle — over defaultParallelism coalesced
+    tasks, which bounds the partials per bucket reaching the driver."""
+    p = CacheParams(duration=100, lifespan=300, fp=0.001, total_capacity=10_000)
+    rows = [((i % 3) * 100, f"mk-{i}") for i in range(300)]
+    df = _spread_events(spark, rows, 3 * spark.sparkContext.defaultParallelism)
+    c = SketchCache(p)
+    sc = spark.sparkContext
+    group = "insert-batch-one-stage"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        c.insert_batch(df, ts_col="ts", marker_col="marker")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup(group))
+    assert len(jobs) == 1, jobs
+    (stage,) = tracker.getJobInfo(jobs[0]).stageIds
+    assert tracker.getStageInfo(stage).numTasks == sc.defaultParallelism
+    assert len(c.buckets) == 3
