@@ -45,6 +45,8 @@ def main(argv: list[str] | None = None) -> None:
         "production flow, no rebuild of history",
     )
     args = ap.parse_args(argv)
+    if args.ngram < 1:
+        ap.error(f"--ngram must be >= 1, got {args.ngram}")
     if args.ckpt:
         # checkpoints are keyed by partition id only; guard against
         # silently replaying partials built from a DIFFERENT input or

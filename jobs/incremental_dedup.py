@@ -25,7 +25,7 @@ Index storage (doc_id, band_id, band_hash), append-only across batches:
   only the day's small increment moves).  At 100 TB this is the
   difference between re-shuffling the corpus index every increment and
   never moving it at all (zero-exchange plan asserted in
-  tests/test_tables.py and tests/test_incremental_dedup.py).
+  tests/test_incremental_dedup.py).
 
 Candidate pairs are verified with exact shingle Jaccard bounded by the
 candidate count (never a discovery-shaped self-join).  Within-batch
@@ -350,21 +350,11 @@ def _run_compact(spark, args, t0) -> None:
         (r["band_id"], r["band_hash"], r["frozen_sz"]) for r in frozen.collect()
     ]
 
-    # a streaming index is hive-partitioned by __batch_id
-    # (streaming_incremental_dedup's dynamic-overwrite writes) — the
-    # rewrite must PRESERVE that layout or the next micro-batch's
-    # partitioned write collides with flat files (r10 review)
-    part_cols = [c for c in index.columns if c == "__batch_id"]
     tmp = args.index.rstrip("/") + "__compact_tmp"
-    w = compacted.write.mode("overwrite")
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.parquet(tmp)
-    # explicit schema: a retention pass that drops EVERY row leaves a
-    # partitioned staging dir with no data files, and a schema-infer
-    # read fails with UNABLE_TO_INFER_SCHEMA (r10 ADVICE; reproduced —
-    # flat empty writes do keep a schema-bearing file, partitioned
-    # ones do not)
+    compacted.write.mode("overwrite").parquet(tmp)
+    # explicit schema: the staged rows read back with the index's own
+    # schema instead of an inferred one (an empty retention pass still
+    # reads as a typed, empty index)
     staged = spark.read.schema(index.schema).parquet(tmp)
     # tombstones FIRST: a crash between the two writes then only
     # double-counts reclaimed buckets (conservative — they stay
@@ -384,26 +374,7 @@ def _run_compact(spark, args, t0) -> None:
             .insertInto(table, overwrite=True)
         )
     else:
-        n_staged = staged.count()
-        if part_cols and n_staged == 0:
-            # an empty partitionBy write emits ONLY _SUCCESS and every
-            # later schema-infer read of the index dies — park one
-            # empty schema-bearing file inside the sentinel partition
-            # dir instead (hive layout stays uniform; -1 is the
-            # rebuild sentinel, always excluded by the streaming
-            # twin's __batch_id != batch_id filter since ids are >= 0)
-            from marker_spark.tables import delete_path as _del
-
-            _del(spark, args.index)
-            data_cols = [c for c in index.columns if c != "__batch_id"]
-            staged.select(*data_cols).write.mode("overwrite").parquet(
-                args.index.rstrip("/") + "/__batch_id=-1"
-            )
-        else:
-            w = staged.write.mode("overwrite")
-            if part_cols:
-                w = w.partitionBy(*part_cols)
-            w.parquet(args.index)
+        staged.write.mode("overwrite").parquet(args.index)
     n_after = staged.count()
     delete_path(spark, tmp)
     release_all()
@@ -430,7 +401,7 @@ def _run_rebuild(spark, args, t0) -> None:
 
     from marker_spark.cacheutil import release_all
     from marker_spark.ops.dedup import lsh_band_table, minhash_signatures
-    from marker_spark.tables import delete_path, path_exists
+    from marker_spark.tables import delete_path
 
     corpus = spark.read.parquet(args.corpus).select("doc_id", "text")
     sigs = minhash_signatures(corpus, num_perm=args.bands * args.rows_per_band)
@@ -448,24 +419,7 @@ def _run_rebuild(spark, args, t0) -> None:
         )
         n_rows = spark.read.table(table).count()
     else:
-        # a streaming index is hive-partitioned by __batch_id — a flat
-        # rebuild would break the next micro-batch's partitioned
-        # dynamic-overwrite write AND its __batch_id self-exclusion
-        # read (r10 review follow-up).  Preserve the layout under the
-        # sentinel partition -1: real batch ids are >= 0, so the
-        # stream's `__batch_id != batch_id` filter always keeps it.
-        streaming_layout = path_exists(spark, args.index) and (
-            "__batch_id" in spark.read.parquet(args.index).columns
-        )
-        if streaming_layout:
-            (
-                bands.withColumn("__batch_id", F.lit(-1))
-                .write.partitionBy("__batch_id")
-                .mode("overwrite")
-                .parquet(args.index)
-            )
-        else:
-            bands.write.mode("overwrite").parquet(args.index)
+        bands.write.mode("overwrite").parquet(args.index)
         n_rows = spark.read.parquet(args.index).count()
     cleared = delete_path(spark, _frozen_path(args.index))
     release_all()

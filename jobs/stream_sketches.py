@@ -33,6 +33,20 @@ def main(argv: list[str] | None = None) -> None:
                     help="drain available input then stop (otherwise run until killed)")
     args = ap.parse_args(argv)
 
+    from marker_spark.params import CacheParams
+
+    try:
+        params = CacheParams(
+            duration=args.duration, lifespan=args.lifespan, fp=args.fp,
+            total_capacity=args.capacity,
+        )
+        # solve the Bloom sizing before any session or stream exists:
+        # bad --fp/--capacity would otherwise fail only inside the
+        # first micro-batch
+        params.bloom_params()
+    except ValueError as e:
+        ap.error(str(e))
+
     from pyspark.sql import SparkSession
 
     owns_session = SparkSession.getActiveSession() is None
@@ -40,13 +54,8 @@ def main(argv: list[str] | None = None) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     from marker_spark.cache.sketch_cache import SketchCache
-    from marker_spark.params import CacheParams
     from marker_spark.streaming import stream_into_cache
 
-    params = CacheParams(
-        duration=args.duration, lifespan=args.lifespan, fp=args.fp,
-        total_capacity=args.capacity,
-    )
     cache = SketchCache(params, ckpt_dir=args.ckpt)
 
     # the consumer normally starts before the producer: poll for the

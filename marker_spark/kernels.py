@@ -106,7 +106,10 @@ def ngram_updater(
     batch's rows — MurmurHash3_x64_128 of the little-endian int32
     n-gram bytes, fused straight off the Arrow buffer — and hands the
     (h1, h2) vectors to ``insert(sk, h1, h2)``.  A batch without a
-    single n-gram never reaches ``insert``."""
+    single n-gram never reaches ``insert``.  Raises ``ValueError`` for
+    ``n < 1`` (every "n-gram" would hash the same empty byte string)."""
+    if n < 1:
+        raise ValueError(f"ngram must be >= 1, got {n}")
 
     def update(sk, batch) -> None:
         flat, offsets = arrow_tokens_view(batch, token_col)

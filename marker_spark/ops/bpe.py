@@ -205,37 +205,3 @@ def bpe_tokens_col(
 
     src = df.select(F.col(id_col), F.col(text_col).alias("__text"))
     return src.mapInArrow(batch_fn, schema=f"`{id_col}` {id_type}, {out_col} array<string>")
-
-
-# --------------------------------------------------------------------------
-# merge-table persistence (the tokenizer artifact a pipeline ships)
-# --------------------------------------------------------------------------
-
-def save_merges(merges: list[tuple[str, str]], path: str) -> None:
-    """Write the merge table as one JSON object (versioned), atomically
-    — a partially-written vocabulary must never be loadable."""
-    import json
-    import os
-
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"format": "marker-spark-bpe", "version": 1,
-                   "merges": [list(p) for p in merges]}, f)
-        f.flush()
-        os.fsync(f.fileno())  # rename must not become durable first
-    os.replace(tmp, path)
-
-
-def load_merges(path: str) -> list[tuple[str, str]]:
-    import json
-
-    with open(path, encoding="utf-8") as f:
-        obj = json.load(f)
-    if obj.get("format") != "marker-spark-bpe" or obj.get("version") != 1:
-        raise ValueError(f"not a marker-spark BPE merge table: {path}")
-    merges = []
-    for p in obj["merges"]:
-        if len(p) != 2 or not all(isinstance(s, str) for s in p):
-            raise ValueError(f"malformed merge entry {p!r} in {path}")
-        merges.append((p[0], p[1]))
-    return merges

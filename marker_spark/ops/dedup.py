@@ -177,22 +177,6 @@ def _shingle_hashes_flat(
     return out, seg
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id representative of each exact-duplicate group;
-    returns (text_col, id_col, dup_count).
-
-    Thin projection of :func:`exact_dedup_scalable`, which owns the
-    single 100 TB-shape plan: the groupBy shuffle carries a 128-bit
-    digest + id — never document text (text moves once, with its own
-    representative row, in the final join).  An earlier variant grouped
-    by (digest, text) directly; folded so no API path pays a
-    text-payload shuffle.
-    """
-    return exact_dedup_scalable(df, text_col, id_col).select(
-        text_col, id_col, "dup_count"
-    )
-
-
 def exact_dedup_scalable(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

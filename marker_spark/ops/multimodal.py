@@ -27,7 +27,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 ASSET_SCHEMA = (
     "asset_id string, kind string, payload binary, "
@@ -341,59 +340,6 @@ def synth_real_assets(spark, n: int = 32, seed: int = 42) -> DataFrame:
     return spark.createDataFrame(rows, schema=ASSET_SCHEMA)
 
 
-def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Distributed image resize over real BMP/PNG/JPEG payloads: decode
-    -> nearest-neighbor index sampling -> re-encode in the same
-    container.  mapInPandas so payload bytes stay in Arrow batches;
-    non-image rows pass through untouched (payload and meta
-    unchanged)."""
-    from .jpeg import decode_jpeg, encode_jpeg
-
-    out_schema = ASSET_SCHEMA
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for p, k, m in zip(pdf["payload"], pdf["kind"], pdf["meta"]):
-                pb = bytes(p)
-                is_bmp = pb[:2] == b"BM"
-                is_png = pb[:8] == b"\x89PNG\r\n\x1a\n"
-                is_jpg = pb[:2] == b"\xff\xd8"
-                if k == "image" and (is_bmp or is_png or is_jpg):
-                    if is_bmp:
-                        img = decode_bmp(pb)
-                    elif is_png:
-                        img = _to_rgb(decode_png(pb))
-                    else:
-                        img = decode_jpeg(pb).astype(np.float64) / 255.0
-                    h0, w0, _ = img.shape
-                    yi = (np.arange(height) * h0 // height).clip(0, h0 - 1)
-                    xi = (np.arange(width) * w0 // width).clip(0, w0 - 1)
-                    small = (img[yi][:, xi] * 255.0).round().astype(np.uint8)
-                    if is_bmp:
-                        payloads.append(encode_bmp(small))
-                    elif is_png:
-                        payloads.append(encode_png(small))
-                    else:
-                        payloads.append(encode_jpeg(small, subsample=True))
-                    m = dict(m)
-                    m["width"], m["height"] = width, height
-                    metas.append(m)
-                else:
-                    payloads.append(p)
-                    metas.append(m)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["kind"],
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
-    return df.mapInPandas(fn, schema=out_schema)
-
-
 def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
     """asset table -> (asset_id, kind, feature array<double>, n_bytes).
 
@@ -415,19 +361,6 @@ def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
             )
 
     return df.mapInPandas(fn, schema=out_schema)
-
-
-def frame_sample(df: DataFrame, every_n: int = 10, fake: bool = True) -> DataFrame:
-    """video rows -> one row per sampled frame index (UDTF-style
-    explode); frame decode itself is the stub."""
-    frames = F.when(
-        F.col("kind") == "video",
-        F.sequence(F.lit(0), F.greatest(F.col("meta.n_frames") - 1, F.lit(0)), F.lit(every_n)),
-    ).otherwise(F.array(F.lit(0)))
-    out = df.withColumn("frame_idx", F.explode(frames))
-    if not fake:
-        raise NotImplementedError("real frame decode not available in this environment")
-    return out.select("asset_id", "kind", "frame_idx")
 
 
 # --------------------------------------------------------------------------

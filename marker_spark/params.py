@@ -60,6 +60,12 @@ class CacheParams:
     fp: float
     total_capacity: int
 
+    def __post_init__(self):
+        if self.duration < 1:
+            raise ValueError(f"duration must be >= 1 second, got {self.duration}")
+        if self.lifespan < 0:
+            raise ValueError(f"lifespan must be >= 0 seconds, got {self.lifespan}")
+
     @property
     def num_filters(self) -> int:
         return math.ceil(self.lifespan / self.duration) + 1

@@ -48,8 +48,8 @@ def unpack_header_versioned(
     """Like :func:`unpack_header` but returns ``(payload_offset, version)``
     for sketches whose wire format has evolved — the version byte is the
     dispatch key for parsing legacy payload layouts (e.g. HLL v1 dense
-    vs v2 dense/sparse), so persisted state (streaming state-store
-    checkpoints, saved sketch tables) stays readable across upgrades."""
+    vs v2 dense/sparse), so persisted state (saved sketch tables)
+    stays readable across upgrades."""
     magic, kind, version = _HEADER.unpack_from(buf, 0)
     if magic != MAGIC:
         raise ValueError(f"bad sketch magic {magic!r}")

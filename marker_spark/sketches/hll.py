@@ -112,8 +112,8 @@ class HllSketch:
         — whichever is smaller.  Low-cardinality groups (the common case
         for fine-grained (source, bucket) keys at scale) shrink from
         2^p bytes to ~5 bytes per distinct-ish item, which matters
-        wherever states travel UNcompressed: streaming state stores and
-        UDF closures (the sketch-table sink already zlib-packs)."""
+        wherever states travel UNcompressed, such as UDF closures (the
+        sketch-table sink already zlib-packs)."""
         nz = np.flatnonzero(self.registers)
         if len(nz) * 5 + _SPARSE_N.size < self.m:
             return (

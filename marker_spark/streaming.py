@@ -1,20 +1,14 @@
-"""Structured Streaming analogues of the reference cache lifecycle.
+"""Structured Streaming ingestion into the time-bucketed SketchCache.
 
 The reference ages buckets on a processing-time tick
-(/root/reference/markercache.cpp:203-242) and always inserts into the
-current bucket (:197-201).  The streaming engine expresses the same
-lifecycle two ways:
-
- 1. ``stream_into_cache`` — ``foreachBatch`` ingestion: each micro-batch
-    is aggregated into the bucketed SketchCache (event-time bucketing,
-    documented divergence from the reference's insert-time bucketing),
-    then ``maybe_age`` seals/evicts/opens buckets and idempotently
-    checkpoints — the exact maybe_age/save sequence, driven by the
-    stream clock instead of a mutex-guarded tick.
- 2. ``windowed_marker_counts`` — the declarative form: event-time
-    tumbling windows + watermark = bucket grid + ageing.  The watermark
-    is the lifespan: state for windows older than it is evicted by
-    Spark, which is precisely the reference's retention rule.
+(reference markercache.cpp:203-242) and always inserts into the
+current bucket (:197-201).  ``stream_into_cache`` runs the same
+lifecycle as a ``foreachBatch`` sink: each micro-batch is aggregated
+into the bucketed SketchCache (event-time bucketing, documented
+divergence from the reference's insert-time bucketing), then
+``maybe_age`` seals/evicts/opens buckets and idempotently checkpoints —
+the exact maybe_age/save sequence, driven by the stream clock instead
+of a mutex-guarded tick.  ``jobs/stream_sketches.py`` is its CLI.
 """
 
 from __future__ import annotations
@@ -23,7 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cache.sketch_cache import SketchCache
-from .kernels import encode_series
 
 
 def stream_into_cache(
@@ -60,683 +53,3 @@ def stream_into_cache(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stateful_distinct_estimate(
-    stream_df: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "user_id",
-    precision: int = 12,
-):
-    """Custom stateful streaming operator: per-key running
-    distinct-count estimate via an HLL sketch held in Spark's group
-    state (``applyInPandasWithState``).
-
-    The sketch's mergeable bytearray state is exactly what streaming
-    state stores need: each micro-batch deserializes the key's HLL,
-    folds the batch in vectorized, and writes the bytes back —
-    the streaming analogue of the cache's per-bucket filter updates
-    (/root/reference/markercache.cpp:197-201), generalized from
-    membership to cardinality.  Emits (key, n_distinct_est, n_rows)
-    per updated key per batch.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from .sketches.hll import HllSketch
-
-    def update_fn(key, pdf_iter, state: GroupState):
-        sk = (
-            HllSketch.from_bytes(bytes(state.get[0]))
-            if state.exists
-            else HllSketch(p=precision)
-        )
-        n_rows = int(state.get[1]) if state.exists else 0
-        for pdf in pdf_iter:
-            sk.update(encode_series(pdf[value_col]))
-            n_rows += len(pdf)
-        state.update((sk.to_bytes(), n_rows))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_distinct_est": [int(round(sk.estimate()))],
-                "n_rows": [n_rows],
-            }
-        )
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update_fn,
-        outputStructType="key string, n_distinct_est long, n_rows long",
-        stateStructType="sketch binary, n_rows long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_bucket_bloom(
-    stream_df: DataFrame,
-    duration_secs: int,
-    capacity: int = 100_000,
-    fp: float = 0.001,
-    ts_col: str = "ts",
-    marker_col: str = "marker",
-    lifespan_secs: int | None = None,
-    watermark_delay_secs: int = 1,
-):
-    """Per-bucket Bloom filters as streaming group state — the
-    reference's bucket ring (markercache.h:41-42) held by Spark's state
-    store instead of shared memory.
-
-    Rows are keyed by their event-time bucket; each micro-batch folds
-    the bucket's markers into its Bloom state and emits the bucket's
-    running metadata (rows, fill ratio, serialized size).  The sealed
-    sketch bytes live in the state store, surviving restarts via the
-    streaming checkpoint — complementary to the foreachBatch
-    SketchCache path (which owns ageing + archive files).
-
-    ``lifespan_secs`` enables the reference's ageing
-    (markercache.cpp:203-242) as watermark-driven eviction: the stream
-    is watermarked on ``ts_col`` and each bucket's state carries an
-    event-time timeout at ``bucket_end + lifespan``; when the watermark
-    passes it, the bucket emits one final row with ``sealed=true`` and
-    its state is REMOVED from the store — without this, state grows
-    with the number of buckets forever, the exact unbounded growth the
-    reference's retention rule prevents."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from .params import BloomParams
-    from .sketches.bloom import BloomSketch
-
-    bp = BloomParams.solve(capacity, fp)
-    src = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    if lifespan_secs is not None:
-        src = src.withWatermark(ts_col, f"{watermark_delay_secs} seconds")
-    keyed = src.withColumn(
-        "bucket_start",
-        (F.floor(F.unix_timestamp(F.col(ts_col)) / duration_secs) * duration_secs).cast("long"),
-    )
-
-    def _emit(key, sk: "BloomSketch", n_rows: int, buf: bytes, sealed: bool) -> "pd.DataFrame":
-        return pd.DataFrame(
-            {
-                "bucket_start": [key[0]],
-                "n_rows": [n_rows],
-                "n_inserted": [sk.n_inserted],
-                "sketch_bytes": [len(buf)],
-                "sealed": [sealed],
-            }
-        )
-
-    def update_fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            buf = bytes(state.get[0])
-            sk = BloomSketch.from_bytes(buf)
-            n_rows = int(state.get[1])
-            state.remove()
-            yield _emit(key, sk, n_rows, buf, True)
-            return
-        sk = (
-            BloomSketch.from_bytes(bytes(state.get[0]))
-            if state.exists
-            else BloomSketch(bp.m, bp.k)
-        )
-        n_rows = int(state.get[1]) if state.exists else 0
-        for pdf in pdf_iter:
-            sk.insert(encode_series(pdf[marker_col]))
-            n_rows += len(pdf)
-        buf = sk.to_bytes()
-        state.update((buf, n_rows))
-        if lifespan_secs is not None:
-            state.setTimeoutTimestamp((int(key[0]) + duration_secs + lifespan_secs) * 1000)
-        yield _emit(key, sk, n_rows, buf, False)
-
-    return keyed.groupBy("bucket_start").applyInPandasWithState(
-        update_fn,
-        outputStructType="bucket_start long, n_rows long, n_inserted long, "
-        "sketch_bytes long, sealed boolean",
-        stateStructType="sketch binary, n_rows long",
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if lifespan_secs is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-def stateful_heavy_hitters(
-    stream_df: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "user_id",
-    k: int = 64,
-    top: int = 5,
-):
-    """Per-key running heavy hitters via a Misra-Gries summary in group
-    state: each micro-batch folds its values into the key's bounded
-    (<= k entries) summary and emits the current top items with their
-    count bounds — frequency tracking over an unbounded stream with
-    O(k) state per key, the third stateful-sketch operator alongside
-    the HLL distinct estimate and the per-bucket Bloom."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from .sketches.misra_gries import MisraGriesSketch
-
-    def update_fn(key, pdf_iter, state: GroupState):
-        sk = (
-            MisraGriesSketch.from_bytes(bytes(state.get[0]))
-            if state.exists
-            else MisraGriesSketch(k=k)
-        )
-        for pdf in pdf_iter:
-            vals = pdf[value_col].dropna()  # NaN would cast to INT64_MIN
-            if len(vals):
-                sk.update(vals.to_numpy(dtype="int64"))
-        state.update((sk.to_bytes(),))
-        hh = sk.heavy_hitters()[:top]
-        yield pd.DataFrame(
-            {
-                "key": [key[0]] * len(hh),
-                "item": [h[0] for h in hh],
-                "count_lo": [h[1] for h in hh],
-                "count_hi": [h[2] for h in hh],
-                "n_total": [sk.total] * len(hh),
-            }
-        )
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update_fn,
-        outputStructType="key string, item long, count_lo long, count_hi long, n_total long",
-        stateStructType="sketch binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def windowed_marker_counts(
-    stream_df: DataFrame,
-    duration_secs: int,
-    lifespan_secs: int,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    distinct_col: str = "marker",
-) -> DataFrame:
-    """Declarative bucket grid: tumbling event-time windows sized like
-    the cache's buckets, watermarked at the lifespan so Spark evicts
-    state exactly where the reference deletes aged filters.  n_distinct
-    estimates distinct ``distinct_col`` values per (bucket, key) —
-    counting the GROUP KEY would be a constant 1 (r3 review fix)."""
-    # watermarks require TIMESTAMP (not NTZ); normalize first
-    stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream_df.withWatermark(ts_col, f"{lifespan_secs} seconds")
-        .groupBy(
-            F.window(F.col(ts_col), f"{duration_secs} seconds").alias("bucket"),
-            F.col(key_col),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.approx_count_distinct(distinct_col).alias("n_distinct"),
-        )
-        .select(
-            F.unix_timestamp("bucket.start").alias("bucket_start"),
-            F.unix_timestamp("bucket.end").alias("bucket_end"),
-            key_col,
-            "n_events",
-            "n_distinct",
-        )
-    )
-
-
-def stateful_novelty_filter(
-    stream_df: DataFrame,
-    marker_col: str = "marker",
-    n_shards: int = 8,
-    capacity: int = 100_000,
-    fp: float = 0.001,
-):
-    """Online dedup for a training-data ingest stream: emit each marker
-    AT MOST ONCE across the stream's lifetime, dropping re-occurrences.
-
-    Rows shard by hash(marker) so each shard's group state holds one
-    bounded Bloom filter sized for capacity/n_shards — state volume is
-    configured, not corpus-proportional, and shards parallelize the
-    stateful operator.  Guarantees (Bloom semantics): a duplicate is
-    NEVER emitted twice (no false negatives), and at most ~fp of novel
-    markers are wrongly dropped (false positives).  Within a batch the
-    first occurrence wins; the probe and the insert are one vectorized
-    hash pass.  The streaming form of the reference's insert+lookup
-    cycle (markercache.cpp:161-201) with emission semantics.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from .hashing import mmh3_x64_128
-    from .params import BloomParams
-    from .sketches.bloom import BloomSketch
-
-    bp = BloomParams.solve(max(capacity // n_shards, 1_000), fp)
-    keyed = stream_df.withColumn(
-        "__shard", F.pmod(F.xxhash64(F.col(marker_col)), F.lit(n_shards)).cast("int")
-    )
-
-    def update_fn(key, pdf_iter, state: GroupState):
-        sk = (
-            BloomSketch.from_bytes(bytes(state.get[0]))
-            if state.exists
-            else BloomSketch(bp.m, bp.k)
-        )
-        import numpy as np
-
-        outs = []
-        for pdf in pdf_iter:
-            markers = encode_series(pdf[marker_col])
-            h1, h2 = mmh3_x64_128(markers)
-            seen = sk.contains_hashes(h1, h2)
-            later_dup = pd.Series(markers).duplicated().to_numpy()
-            novel = ~seen & ~later_dup
-            if novel.any():
-                sk.insert_hashes(h1[novel], h2[novel])
-                outs.append(pdf.loc[novel, [marker_col]])
-        state.update((sk.to_bytes(),))
-        if outs:
-            yield pd.concat(outs)
-        else:
-            yield pd.DataFrame({marker_col: pd.Series([], dtype=object)})
-
-    # append mode: every emitted row is final (a marker is emitted at
-    # most once), so the operator composes with append-only sinks (file
-    # sinks) and checkpoint recovery.
-    return keyed.groupBy("__shard").applyInPandasWithState(
-        update_fn,
-        outputStructType=f"{marker_col} string",
-        stateStructType="sketch binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_quantile_estimate(
-    stream_df: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    k: int = 256,
-    quantiles: tuple = (0.5, 0.9, 0.99),
-):
-    """Per-key running quantile estimates via a KLL sketch in group
-    state — completes the streaming sketch family (HLL distinct, Bloom
-    membership, Misra-Gries heavy hitters, KLL quantiles).  Each
-    micro-batch folds its values into the key's bounded sketch and
-    emits the current estimate vector; state is O(k log n) per key and
-    survives restarts via the streaming checkpoint."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from .sketches.kll import KllSketch
-
-    qs = [float(q) for q in quantiles]
-
-    def update_fn(key, pdf_iter, state: GroupState):
-        sk = (
-            KllSketch.from_bytes(bytes(state.get[0]))
-            if state.exists
-            else KllSketch(k=k)
-        )
-        for pdf in pdf_iter:
-            vals = pdf[value_col].dropna()  # NaN would poison the ranks
-            if len(vals):
-                sk.update(vals.to_numpy(dtype="float64"))
-        state.update((sk.to_bytes(),))
-        est = [float(e) for e in sk.quantile(qs)] if sk.n else [float("nan")] * len(qs)
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "q": [qs],
-                "est": [est],
-                "n": [int(sk.n)],
-            }
-        )
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update_fn,
-        outputStructType="key string, q array<double>, est array<double>, n long",
-        stateStructType="sketch binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_column_profile(
-    stream_df: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    hll_p: int = 12,
-    mg_k: int = 64,
-    kll_k: int = 200,
-    quantiles: tuple = (0.25, 0.5, 0.75),
-):
-    """Per-key RUNNING column profile — the streaming twin of
-    ops/profile.py's batch ANALYZE (r8 verdict #7): one composite
-    HLL+MG+KLL state per key folds every micro-batch's values and
-    emits the current (n, n_null, distinct_est, quantiles, top
-    heavy-hitter hashes).  The value hashing is a Catalyst xxhash64
-    BEFORE the stateful operator (same hash the batch profiler melts
-    on), so the Python state update touches only int64/float64 numpy
-    columns; state is O(p + k) bytes per key and survives restarts via
-    the streaming checkpoint.  Heavy hitters are reported as MG
-    candidate HASHES with approximate counts (a streaming operator has
-    no second exact-count pass; the batch profiler's pass-3 contract
-    covers that need offline)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from .ops.profile import _ProfileSketch
-    from .sketches.hll import HllSketch
-    from .sketches.kll import KllSketch
-    from .sketches.misra_gries import MisraGriesSketch
-
-    qs = [float(q) for q in quantiles]
-    prepped = stream_df.select(
-        F.col(key_col).alias("__k"),
-        # xxhash64(NULL) is the SEED (42), not NULL, so NULL rows must
-        # be excluded — but NOT by making this column nullable: a
-        # nullable int64 arrives in pandas as float64 and the 53-bit
-        # mantissa silently corrupts the low bits of every OTHER hash
-        # in any chunk containing a NULL (r10 review, verified live).
-        # Keep the hash unconditional (non-null int64 stays exact) and
-        # filter by __isnull inside the update instead.
-        F.xxhash64(F.col(value_col).cast("string")).alias("__h"),
-        F.col(value_col).cast("double").alias("__num"),
-        F.col(value_col).isNull().cast("long").alias("__isnull"),
-    )
-
-    def update_fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            n, n_null = int(state.get[1]), int(state.get[2])
-            sk = _ProfileSketch.from_bytes(bytes(state.get[0]))
-        else:
-            n, n_null = 0, 0
-            sk = _ProfileSketch(
-                HllSketch(p=hll_p), MisraGriesSketch(k=mg_k), KllSketch(k=kll_k)
-            )
-        for pdf in pdf_iter:
-            n += len(pdf)
-            n_null += int(pdf["__isnull"].sum())
-            # exclude NULL rows via the flag, matching the batch
-            # profiler's isNotNull filter (_melt) — never via a
-            # nullable hash column (float64 corruption, see prepped)
-            hs = pdf.loc[pdf["__isnull"] == 0, "__h"]
-            if len(hs):
-                sk.update_hashes(hs.to_numpy(dtype="int64"))
-            nums = pdf["__num"].dropna()
-            if len(nums):
-                sk.update_numeric(nums.to_numpy(dtype="float64"))
-        state.update((sk.to_bytes(), n, n_null))
-        est = [float(e) for e in sk.kll.quantile(qs)] if sk.kll.n else []
-        top = sorted(
-            zip(sk.mg.items.tolist(), sk.mg.counts.tolist()),
-            key=lambda hc: (-hc[1], hc[0]),
-        )[:5]
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n": [n],
-                "n_null": [n_null],
-                "distinct_est": [int(round(sk.hll.estimate()))],
-                "quantiles": [est],
-                "top_hashes": [[int(h) for h, _ in top]],
-            }
-        )
-
-    return prepped.groupBy("__k").applyInPandasWithState(
-        update_fn,
-        outputStructType=(
-            "key string, n long, n_null long, distinct_est long, "
-            "quantiles array<double>, top_hashes array<bigint>"
-        ),
-        stateStructType="sketch binary, n long, n_null long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_span_novelty(
-    stream_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    n_shards: int = 8,
-    capacity: int = 1_000_000,
-    fp: float = 0.001,
-):
-    """Streaming SUBSTRING-level novelty: for every incoming document,
-    score each of its non-overlapping char k-grams against a
-    stream-lifetime Bloom memory and emit per-gram novelty rows
-    ``(doc_id, novel int)`` — the online form of duplicated-span
-    detection (a re-ingested or boilerplate-heavy doc scores ~0 novel).
-
-    Gram rows shard by hash(gram) so the SAME gram always lands in the
-    same shard — novelty is stream-global, not per-shard — and each
-    shard's group state is one bounded Bloom (capacity/n_shards), so
-    state volume is configured, not corpus-proportional.  Doc-level
-    ratios are a downstream aggregation over the emitted rows
-    (sum(novel)/count per doc_id) — kept OUT of the stateful operator
-    so the plan stays a single arbitrary-stateful op (chaining a
-    stateful agg after applyInPandasWithState is restricted).
-
-    Bloom semantics: a seen gram is never scored novel again (no false
-    negatives); at most ~fp of genuinely novel grams score 0.
-    Non-overlapping stride (positions 1, k+1, ...) bounds work and
-    state at 1/k of corpus chars; a duplicated span of length >= 2k-1
-    always contains at least one full stride-aligned gram of its
-    source doc — the coverage argument winnowing makes, traded toward
-    throughput.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from .hashing import mmh3_x64_128
-    from .kernels import encode_series
-    from .params import BloomParams
-    from .sketches.bloom import BloomSketch
-
-    bp = BloomParams.solve(max(capacity // n_shards, 1_000), fp)
-    grams = stream_df.select(
-        F.col(id_col),
-        F.explode(
-            F.when(
-                F.length(text_col) >= k,
-                F.expr(
-                    f"transform(sequence(1, length({text_col}) - {k} + 1, {k}),"
-                    f" i -> substring({text_col}, i, {k}))"
-                ),
-            )
-            .when(
-                # short non-empty text: the whole text is its one gram
-                F.col(text_col).isNotNull() & (F.length(text_col) > 0),
-                F.array(F.col(text_col)),
-            )
-            # NULL/empty text contributes no grams (the batch-side
-            # convention) — array(NULL) would alias every null-text doc
-            # through encode_series' b"None" into one false duplicate
-            .otherwise(F.array().cast("array<string>"))
-        ).alias("__gram"),
-    ).withColumn(
-        "__shard", F.pmod(F.xxhash64("__gram"), F.lit(n_shards)).cast("int")
-    )
-
-    def update_fn(key, pdf_iter, state: GroupState):
-        sk = (
-            BloomSketch.from_bytes(bytes(state.get[0]))
-            if state.exists
-            else BloomSketch(bp.m, bp.k)
-        )
-        import numpy as np
-
-        outs = []
-        for pdf in pdf_iter:
-            h1, h2 = mmh3_x64_128(encode_series(pdf["__gram"]))
-            seen = sk.contains_hashes(h1, h2)
-            # within-batch repeats of a gram: only the first is novel
-            later_dup = pdf["__gram"].duplicated().to_numpy()
-            novel = ~seen & ~later_dup
-            if novel.any():
-                sk.insert_hashes(h1[novel], h2[novel])
-            outs.append(
-                pd.DataFrame(
-                    {id_col: pdf[id_col], "novel": novel.astype("int32")}
-                )
-            )
-        state.update((sk.to_bytes(),))
-        yield pd.concat(outs) if outs else pd.DataFrame(
-            {id_col: pd.Series([], dtype=object), "novel": pd.Series([], dtype="int32")}
-        )
-
-    id_type = stream_df.schema[id_col].dataType.simpleString()
-    return grams.groupBy("__shard").applyInPandasWithState(
-        update_fn,
-        outputStructType=f"`{id_col}` {id_type}, novel int",
-        stateStructType="sketch binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_sessions(
-    stream_df: DataFrame,
-    gap_secs: int,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    watermark_secs: int = 1,
-) -> DataFrame:
-    """Streaming sessionization via Spark's NATIVE session windows —
-    the declarative twin of :func:`marker_spark.ops.temporal.sessionize`
-    (which owns the batch gaps-and-islands plan): events within
-    ``gap_secs`` of each other merge into one growing window; the
-    watermark finalizes (and evicts) a session once event time passes
-    its end, so state is bounded by the number of OPEN sessions.
-
-    Boundary contract difference vs the batch operator, inherent to
-    session windows: a gap of EXACTLY ``gap_secs`` starts a new session
-    here (windows span [start, last_event + gap)), while the batch
-    operator's strictly-greater rule keeps it in the same session.
-    Continuous (sub-second) event time makes exact-boundary gaps
-    measure-zero; the parity test runs on such data.
-
-    Returns (key, start_us, n_events) per finalized session in append
-    mode — start_us in exact epoch microseconds (the session-window END
-    is last_event + gap by definition, so only the start is comparable
-    to the batch operator).
-    """
-    src = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        src.withWatermark(ts_col, f"{watermark_secs} seconds")
-        .groupBy(
-            F.session_window(F.col(ts_col), f"{gap_secs} seconds").alias("w"),
-            F.col(key_col),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.unix_micros(F.col("w.start")).alias("start_us"),
-            "n_events",
-        )
-    )
-
-
-def streaming_incremental_dedup(
-    spark,
-    index_path: str,
-    pairs_path: str,
-    bands: int = 32,
-    rows_per_band: int = 4,
-    max_bucket: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    frozen_path: str | None = None,
-):
-    """Continuous-crawl dedup: returns a ``foreachBatch`` function that
-    runs :func:`marker_spark.ops.dedup.incremental_lsh_pairs` per
-    micro-batch against the parquet band index at ``index_path`` —
-    each batch bands only itself, joins the index, appends candidate
-    pairs to ``pairs_path``, and appends its bands to the index.
-
-    Emission invariant (tested): a candidate pair is emitted exactly
-    once, in the batch where its LATER doc arrives — so the union of
-    all batches' pairs equals the one-shot batch
-    :func:`lsh_candidate_pairs` over the full corpus, regardless of
-    how ingestion was split.
-
-    Exactly-once across restarts: both sinks write partitioned by
-    ``__batch_id`` with DYNAMIC partition overwrite, so a batch
-    replayed from the checkpoint rewrites its own partition instead of
-    double-appending (plain parquet append would duplicate the
-    replayed batch's bands in the index AND its pairs).  Use with
-    ``writeStream.foreachBatch(fn).option("checkpointLocation", ...)``.
-
-    ``frozen_path``: tombstone table from an offline
-    :func:`marker_spark.ops.dedup.compact_band_index` maintenance pass
-    (see jobs/incremental_dedup.py --compact); read per batch if
-    present so reclaimed degenerate buckets stay capped.
-    """
-    from .cacheutil import release_all
-    from .ops.dedup import incremental_lsh_pairs, minhash_signatures
-    from .tables import path_exists
-
-    empty_index = "doc_id long, band_id int, band_hash long"
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sigs = minhash_signatures(
-            batch_df, text_col=text_col, num_perm=bands * rows_per_band,
-            id_col=id_col,
-        )
-        if path_exists(spark, index_path):
-            # a batch REPLAYED from the checkpoint already has its own
-            # __batch_id partition in the index — joining it would
-            # double-count bucket sizes under max_bucket (the rewritten
-            # pairs partition could lose pairs, breaking the documented
-            # union==batch invariant), so exclude self before dropping.
-            # An offline --rebuild folds EVERY doc under the sentinel
-            # partition -1, where the __batch_id filter can no longer
-            # self-exclude a replayed batch's docs — anti-join the
-            # sentinel slice on the batch's own ids too (r10 ADVICE);
-            # the compound condition keeps this one pass over the index
-            idx = spark.read.parquet(index_path).where(
-                F.col("__batch_id") != F.lit(batch_id)
-            )
-            batch_ids = batch_df.select(F.col(id_col).alias("__bid")).distinct()
-            index = idx.join(
-                batch_ids,
-                (idx[id_col] == F.col("__bid"))
-                & (idx["__batch_id"] == F.lit(-1)),
-                "left_anti",
-            ).drop("__batch_id")
-        else:
-            index = spark.createDataFrame([], empty_index)
-        frozen = None
-        if frozen_path is not None and path_exists(spark, frozen_path):
-            frozen = spark.read.parquet(frozen_path)
-        pairs, new_bands = incremental_lsh_pairs(
-            index, sigs, id_col=id_col,
-            bands=bands, rows_per_band=rows_per_band, max_bucket=max_bucket,
-            frozen=frozen,
-        )
-        (
-            pairs.withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(pairs_path)
-        )
-        (
-            new_bands.withColumn("__batch_id", F.lit(batch_id))
-            .write.partitionBy("__batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(index_path)
-        )
-        release_all()
-
-    return process

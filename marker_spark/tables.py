@@ -1,30 +1,15 @@
-"""Table layer: Iceberg-style partitioned tables behind a provider flag.
+"""Hadoop-FileSystem path helpers for jobs that keep state on disk.
 
-The north_star targets Iceberg tables of pre-tokenized sequences; this
-sandbox has no Iceberg runtime jar (and may lack network for
-``--packages``), so the layer abstracts provider choice with identical
-schema and partitioning semantics (SURVEY.md §7.1):
-
-* ``provider="parquet"`` (default): hive-style partitioned parquet
-  directories — partition pruning via directory pruning + parquet
-  min/max row-group stats;
-* ``provider="iceberg"``: same API through a configured Iceberg
-  catalog when ``spark.sql.catalog.<name>`` is set on the session
-  (snapshot isolation, partition evolution, expire_snapshots for the
-  cache's retention ageing).
-
-Partitioning conventions:
-* tokenized_sequences -> partitioned by ``source`` (prunes per-group
-  sketch builds to their input files);
-* sketch/bucket tables -> partitioned by ``bucket_start`` (the
-  time-range lookup's overlap predicate prunes partitions — the
-  declarative replacement for the reference's newest-first early-break
-  scan, /root/reference/markercache.cpp:180-189).
+Every probe, delete and sidecar read/write goes through the Hadoop
+FileSystem API of the session, so hdfs:// and s3a:// paths behave
+exactly like local ones.  ``jobs/incremental_dedup.py`` uses them for
+its band index, its ``__frozen`` tombstones, its ``__compact_tmp``
+staging dir and its ``__meta`` bucket-count sidecar.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -76,146 +61,3 @@ def read_text(spark: SparkSession, path: str) -> str:
         return bytes(baos.toByteArray()).decode("utf-8")
     finally:
         stream.close()
-
-
-class TableProvider:
-    def __init__(self, spark: SparkSession, provider: str = "parquet", catalog: str | None = None):
-        if provider not in ("parquet", "iceberg"):
-            raise ValueError(f"unknown provider {provider!r}")
-        if provider == "iceberg":
-            cat = catalog or "marker"
-            if spark.conf.get(f"spark.sql.catalog.{cat}", None) is None:
-                raise RuntimeError(
-                    f"iceberg provider requires spark.sql.catalog.{cat} on the session "
-                    "(runtime jar + catalog config); use provider='parquet' here"
-                )
-        self.spark = spark
-        self.provider = provider
-        self.catalog = catalog or "marker"
-
-    # --- write -----------------------------------------------------------------
-    def write(self, df: DataFrame, location: str, partition_by: list[str] | None = None,
-              mode: str = "overwrite") -> None:
-        if self.provider == "iceberg":
-            w = df.writeTo(f"{self.catalog}.{location}")
-            if partition_by:
-                from pyspark.sql import functions as F
-
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            # honor `mode` — createOrReplace() for an append request
-            # would silently destroy previously written partitions.
-            # First-ever append: the table does not exist yet, and
-            # DataFrameWriterV2.append() would throw — create it then.
-            if mode == "append":
-                if self.spark.catalog.tableExists(f"{self.catalog}.{location}"):
-                    w.append()
-                else:
-                    # create(), not createOrReplace(): if a concurrent
-                    # writer created the table after our existence
-                    # check, REPLACE would silently drop its rows —
-                    # create() fails loudly on the race instead
-                    w.create()
-            elif mode in ("overwrite", "createOrReplace"):
-                w.createOrReplace()
-            else:
-                raise ValueError(f"unsupported iceberg write mode {mode!r}")
-            return
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(location)
-
-    # --- bucketed tables (co-located joins) --------------------------------------
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_by: list[str],
-        n_buckets: int,
-        sort_by: list[str] | None = None,
-        mode: str = "overwrite",
-    ) -> None:
-        """Write ``df`` as a BUCKETED catalog table — the storage shape
-        for tables that are repeatedly joined on the same keys (the
-        persisted LSH dedup index, pre-tokenized corpus keyed by doc):
-        rows are hash-clustered into ``n_buckets`` files per partition,
-        so a later join on ``bucket_by`` reads the table WITHOUT an
-        exchange (only the other, usually far smaller, side shuffles —
-        plan-asserted in tests/test_tables.py).  At 100 TB this is the
-        difference between re-shuffling the corpus index every
-        increment and never moving it at all.
-
-        parquet provider: ``bucketBy`` requires the catalog
-        (``saveAsTable``); iceberg provider: the equivalent is a
-        ``bucket(n, col)`` partition transform."""
-        if self.provider == "iceberg":
-            from pyspark.sql import functions as F
-
-            # bucket EVERY key: identity-partitioning the tail keys
-            # would create one partition per distinct value — for the
-            # LSH index's (band_id, band_hash) that is one partition
-            # per 64-bit hash, unbounded partition explosion (r9 ADVICE)
-            w = df.writeTo(f"{self.catalog}.{table}").partitionedBy(
-                *[F.bucket(n_buckets, c) for c in bucket_by]
-            )
-            if mode in ("overwrite", "createOrReplace"):
-                w.createOrReplace()
-            elif mode == "append":
-                # first-ever append: the table does not exist yet and
-                # append() would throw — create() (not createOrReplace,
-                # which would clobber a concurrent creator) then holds
-                # the rows
-                if self.spark.catalog.tableExists(f"{self.catalog}.{table}"):
-                    w.append()
-                else:
-                    w.create()
-            else:
-                raise ValueError(f"unsupported iceberg write mode {mode!r}")
-            return
-        w = df.write.mode(mode).bucketBy(n_buckets, *bucket_by)
-        if sort_by:
-            w = w.sortBy(*sort_by)
-        w.format("parquet").saveAsTable(table)
-
-    def read_table(self, table: str) -> DataFrame:
-        """Read a catalog table written by :meth:`write_bucketed` —
-        the scan carries the bucket spec, so joins on the bucket keys
-        skip the exchange on this side."""
-        name = f"{self.catalog}.{table}" if self.provider == "iceberg" else table
-        return self.spark.read.table(name)
-
-    # --- read ------------------------------------------------------------------
-    def read(self, location: str) -> DataFrame:
-        if self.provider == "iceberg":
-            return self.spark.read.table(f"{self.catalog}.{location}")
-        return self.spark.read.parquet(location)
-
-    # --- retention (the cache ageing's storage-side half) -----------------------
-    def drop_partitions_before(self, location: str, partition_col: str, cutoff) -> int:
-        """Delete partitions older than ``cutoff``; returns #dropped.
-
-        parquet: directory removal (cheap metadata op, like the
-        reference deleting expired archive files,
-        /root/reference/markercache.cpp:59-69); iceberg: DELETE + an
-        expire_snapshots call would follow in production."""
-        if self.provider == "iceberg":
-            self.spark.sql(
-                f"DELETE FROM {self.catalog}.{location} WHERE {partition_col} < {cutoff!r}"
-            )
-            return -1
-        import shutil
-        from pathlib import Path
-
-        dropped = 0
-        root = Path(location)
-        if not root.is_dir():
-            return 0
-        for d in root.glob(f"{partition_col}=*"):
-            try:
-                val = type(cutoff)(d.name.split("=", 1)[1])
-            except (TypeError, ValueError):
-                continue
-            if val < cutoff:
-                shutil.rmtree(d)
-                dropped += 1
-        return dropped

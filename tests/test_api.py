@@ -17,7 +17,15 @@ from marker_spark import (
     collect_sketch,
     collect_sketches,
 )
-from marker_spark.api import bloom_agg, cms_agg, hll_agg, kll_agg, minhash_agg, tdigest_agg
+from marker_spark.api import (
+    bloom_agg,
+    cms_agg,
+    hll_agg,
+    kll_agg,
+    minhash_agg,
+    tdigest_agg,
+    theta_agg,
+)
 from marker_spark.datagen import gen_tokenized_sequences
 from marker_spark.ngrams import list_column_to_flat, ngram_bytes
 
@@ -175,3 +183,35 @@ def test_mg_agg_nullable_column_keeps_int64_precision(spark):
     sk = collect_sketch(mg_agg(df, item_col="item", k=8), MisraGriesSketch)
     assert sorted(int(i) for i in sk.items) == [7, big]
     assert sk.total == 7
+
+
+@pytest.mark.parametrize("ngram", [0, -1])
+@pytest.mark.parametrize(
+    "agg", [bloom_agg, hll_agg, cms_agg, minhash_agg, theta_agg],
+    ids=lambda f: f.__name__,
+)
+def test_ngram_below_one_rejected_up_front(spark, tok, agg, ngram):
+    """ngram < 1 would hash every row's "n-grams" as one empty string:
+    a ValueError on the driver, before any Spark job runs."""
+    sc = spark.sparkContext
+    group = f"ngram-{agg.__name__}-{ngram}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        with pytest.raises(ValueError, match="ngram"):
+            agg(tok, ngram=ngram)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        tok.count()  # the probe sees jobs of this group
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize("ngram", [0, -1])
+def test_build_sketches_rejects_ngram_below_one(tokseq_path, tmp_path, ngram):
+    from jobs.build_sketches import main
+
+    out = tmp_path / "out"
+    with pytest.raises(SystemExit):
+        main(["--input", tokseq_path, "--output", str(out),
+              "--ngram", str(ngram)])
+    assert not out.exists()

@@ -7,7 +7,6 @@ from __future__ import annotations
 from collections import Counter
 
 import pandas as pd
-import pytest
 
 from marker_spark.ops.bpe import bpe_tokens_col, encode_word, train_bpe
 
@@ -122,22 +121,3 @@ def test_encode_roundtrip_property(words):
     ranks = {p: i for i, p in enumerate(merges)}
     for w in words:
         assert "".join(encode_word(w, ranks)) == w
-
-
-def test_merge_table_roundtrip(tmp_path):
-    from marker_spark.ops.bpe import load_merges, save_merges
-
-    merges = train_bpe(CORPUS, n_merges=25)
-    p = str(tmp_path / "merges.json")
-    save_merges(merges, p)
-    assert load_merges(p) == merges
-    bad = str(tmp_path / "bad.json")
-    with open(bad, "w") as f:
-        f.write('{"format": "other"}')
-    with pytest.raises(ValueError, match="merge table"):
-        load_merges(bad)
-    arity = str(tmp_path / "arity.json")
-    with open(arity, "w") as f:
-        f.write('{"format": "marker-spark-bpe", "version": 1, "merges": [["a"]]}')
-    with pytest.raises(ValueError, match="malformed"):
-        load_merges(arity)

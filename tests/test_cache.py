@@ -339,3 +339,20 @@ def test_insert_batch_runs_one_job_with_one_stage(spark):
     (stage,) = tracker.getJobInfo(jobs[0]).stageIds
     assert tracker.getStageInfo(stage).numTasks == sc.defaultParallelism
     assert len(c.buckets) == 3
+
+
+def test_cache_lookup_df(spark):
+    from marker_spark.cache.sketch_cache import OPEN_END, SketchCache
+    from marker_spark.params import CacheParams
+
+    params = CacheParams(duration=10 * DAY, lifespan=30 * DAY, fp=0.001, total_capacity=100_000)
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").withColumn(
+        "marker", F.concat_ws("|", F.col("event_id"), F.col("props"))
+    )
+    cache = SketchCache(params)
+    cache.insert_batch(ev, ts_col="ts", marker_col="marker")
+    probe = ev.select("marker").limit(200)
+    found = cache.lookup_df(0, OPEN_END, probe, "marker")
+    assert found.where(F.col("found")).count() == 200
+    none = cache.lookup_df(100, 50, probe, "marker")  # inverted range guard
+    assert none.where(F.col("found")).count() == 0

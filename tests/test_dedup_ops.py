@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from marker_spark.ops.dedup import (
-    exact_dedup,
     exact_dedup_scalable,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -25,7 +24,7 @@ def docs(spark):
 
 
 def test_exact_dedup_variants_agree(spark, docs):
-    a = exact_dedup(docs).select("doc_id", "dup_count")
+    a = exact_dedup_scalable(docs).select("text", "doc_id", "dup_count")
     b = exact_dedup_scalable(docs).select("doc_id", "dup_count")
     ra = {(r["doc_id"], r["dup_count"]) for r in a.collect()}
     rb = {(r["doc_id"], r["dup_count"]) for r in b.collect()}

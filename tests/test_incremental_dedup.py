@@ -596,47 +596,6 @@ def test_job_corpus_gap_ships_null_not_dropped(spark, tmp_path, capsys):
     release_all()
 
 
-def test_job_compact_preserves_streaming_batch_partitions(spark, tmp_path, capsys):
-    """--compact on a streaming_incremental_dedup index (hive-
-    partitioned by __batch_id) must preserve the partition layout —
-    a flat rewrite would collide with the next micro-batch's
-    partitionBy write (r10 review #4)."""
-    import json
-    import os
-
-    from jobs.incremental_dedup import main
-
-    index = str(tmp_path / "stream_idx")
-    rows = [(d, 0, d % 5, d % 3) for d in range(60)]
-    df = spark.createDataFrame(
-        rows, "doc_id long, band_id int, band_hash long, __batch_id int"
-    )
-    df.write.partitionBy("__batch_id").parquet(index)
-
-    keep = str(tmp_path / "keep.parquet")
-    spark.createDataFrame(
-        [(d,) for d in range(0, 60, 2)], "doc_id long"
-    ).write.parquet(keep)
-    main(["--compact", "--keep", keep, "--index", index, "--max-bucket", "200"])
-    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rep["rows_after"] == 30
-    # partition layout survived: __batch_id=N dirs, rediscovered column
-    assert any(e.startswith("__batch_id=") for e in os.listdir(index))
-    re_read = spark.read.parquet(index)
-    assert "__batch_id" in re_read.columns and re_read.count() == 30
-    # the next micro-batch's dynamic-overwrite partitioned write works
-    nxt = spark.createDataFrame(
-        [(100, 0, 1, 7)], "doc_id long, band_id int, band_hash long, __batch_id int"
-    )
-    (
-        nxt.write.partitionBy("__batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(index)
-    )
-    assert spark.read.parquet(index).count() == 31
-    release_all()
-
-
 def test_job_compact_bucketed_roundtrip(spark, tmp_path, capsys):
     """--compact --bucketed: INSERT OVERWRITE on the bucketed index
     table must keep the bucket layout AND the compaction semantics —
@@ -760,48 +719,6 @@ def test_job_rebuild_clears_tombstones(spark, tmp_path, capsys):
     release_all()
 
 
-def test_job_rebuild_preserves_streaming_batch_partitions(spark, tmp_path, capsys):
-    """--rebuild on a streaming (__batch_id-partitioned) index must
-    keep the partition layout under the sentinel partition -1 — a flat
-    rebuild would break both the next micro-batch's partitioned write
-    and its __batch_id self-exclusion read (r10 review follow-up)."""
-    import json
-    import os
-
-    from jobs.incremental_dedup import main
-
-    index = str(tmp_path / "stream_idx")
-    spark.createDataFrame(
-        [(d, 0, d % 5, d % 2) for d in range(20)],
-        "doc_id long, band_id int, band_hash long, __batch_id int",
-    ).write.partitionBy("__batch_id").parquet(index)
-
-    corpus = str(tmp_path / "corpus.parquet")
-    spark.read.parquet(f"{SF_DIR}/documents.parquet") \
-        .where(F.col("doc_id") % 4 != 0).select("doc_id", "text") \
-        .write.parquet(corpus)
-    main(["--rebuild", "--corpus", corpus, "--index", index])
-    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rep["mode"] == "rebuild"
-    assert any(e == "__batch_id=-1" for e in os.listdir(index))
-    re_read = spark.read.parquet(index)
-    assert "__batch_id" in re_read.columns
-    # the stream's self-exclusion filter keeps the sentinel partition
-    assert re_read.where(F.col("__batch_id") != F.lit(3)).count() == rep["index_rows"]
-    # and the next micro-batch's dynamic-overwrite partitioned write works
-    (
-        spark.createDataFrame(
-            [(999, 0, 1, 7)],
-            "doc_id long, band_id int, band_hash long, __batch_id int",
-        )
-        .write.partitionBy("__batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(index)
-    )
-    assert spark.read.parquet(index).count() == rep["index_rows"] + 1
-    release_all()
-
-
 def test_bucketed_n_buckets_mismatch_fails_loudly(spark, tmp_path, capsys):
     """The sidecar pins the bucket count: a fresh session passing a
     different --n-buckets must fail instead of silently declaring a
@@ -847,22 +764,18 @@ def test_compact_and_rebuild_are_mutually_exclusive(spark, tmp_path):
 def test_compact_dropping_every_row_leaves_readable_index(
     spark, tmp_path, capsys
 ):
-    """Retention that drops EVERYTHING must not strand the index as an
-    unreadable directory: a partitioned empty write emits only
-    _SUCCESS and the next run's schema-infer read dies (r11 ADVICE
-    fix — reproduced on this Spark: flat empty writes keep a
-    schema-bearing file, partitioned ones do not)."""
+    """Retention that drops EVERYTHING must leave a readable index: a
+    plain schema-infer read sees zero rows, and the next dedup batch
+    over it runs."""
     import json
 
     from jobs.incremental_dedup import main
 
-    # streaming-layout index (hive-partitioned by __batch_id): the
-    # shape that actually loses its schema on an empty rewrite
-    index = str(tmp_path / "sidx")
+    index = str(tmp_path / "idx")
     spark.createDataFrame(
-        [(d, 0, d % 5, d % 2) for d in range(20)],
-        "doc_id long, band_id int, band_hash long, __batch_id int",
-    ).write.partitionBy("__batch_id").parquet(index)
+        [(d, 0, d % 5) for d in range(20)],
+        "doc_id long, band_id int, band_hash long",
+    ).write.parquet(index)
     keep = str(tmp_path / "keep_none.parquet")
     spark.createDataFrame([], "doc_id long").write.parquet(keep)
 
@@ -870,9 +783,7 @@ def test_compact_dropping_every_row_leaves_readable_index(
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["rows_after"] == 0 and rep["rows_before"] == 20
     # the index stays readable by a plain schema-infer read...
-    re_read = spark.read.parquet(index)
-    assert re_read.count() == 0
-    assert "__batch_id" in re_read.columns
+    assert spark.read.parquet(index).count() == 0
     # ...and a later dedup batch over it just works
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     day1 = str(tmp_path / "day1.parquet")
@@ -910,72 +821,6 @@ def test_corpus_conflict_prefers_batch_text(spark, tmp_path, capsys):
     rows = spark.read.parquet(out).collect()
     assert {(r["id_a"], r["id_b"]) for r in rows} == {(1, 2)}
     assert rows[0]["jaccard"] == 1.0
-    release_all()
-
-
-def test_streaming_replay_after_rebuild_excludes_own_docs(
-    spark, tmp_path
-):
-    """A checkpoint-replayed batch whose docs were folded under the
-    rebuild sentinel partition (__batch_id=-1) must still self-exclude
-    (r11 ADVICE fix): without the sentinel anti-join its own bands
-    count into idx_sz AND new_sz, the joint cap spuriously freezes the
-    bucket, and the rewritten pairs partition LOSES pairs.  A 3-clone
-    group under max_bucket=4 is legal alone (3 <= 4) but spuriously
-    capped when double-counted (3 + 3 > 4); the 2-clone group survives
-    either way (2 + 2 <= 4), so the un-fixed replay rewrites the pairs
-    partition NON-empty with the 3-clone pairs missing — an empty
-    rewrite would be masked entirely, because dynamic partition
-    overwrite of zero rows is a no-op that leaves the stale pairs."""
-    from marker_spark.streaming import streaming_incremental_dedup
-
-    two = (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        .where(F.length("text") > 50).orderBy("doc_id").limit(2)
-    )
-    a = two.orderBy("doc_id").limit(1)
-    b = two.orderBy(F.desc("doc_id")).limit(1)
-    docs = (
-        a.crossJoin(spark.range(3).withColumnRenamed("id", "k"))
-        .select((F.col("doc_id") * 10 + F.col("k")).alias("doc_id"), "text")
-        .unionByName(
-            b.crossJoin(spark.range(2).withColumnRenamed("id", "k"))
-            .select(
-                (F.col("doc_id") * 10 + F.col("k") + 1_000_000).alias("doc_id"),
-                "text",
-            )
-        )
-        .persist()
-    )
-    index = str(tmp_path / "ridx")
-    pairs = str(tmp_path / "rpairs")
-    fn = streaming_incremental_dedup(spark, index, pairs, max_bucket=4)
-    fn(docs, 0)
-    first = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(pairs).where("__batch_id = 0").collect()
-    }
-    # simulate an offline --rebuild: every band refolded under -1
-    rebuilt = (
-        spark.read.parquet(index)
-        .drop("__batch_id")
-        .withColumn("__batch_id", F.lit(-1))
-    )
-    tmp = str(tmp_path / "ridx_tmp")
-    rebuilt.write.partitionBy("__batch_id").parquet(tmp)
-    import shutil
-
-    shutil.rmtree(index)
-    shutil.move(tmp, index)
-    # checkpoint replay of the SAME batch (same batch_id)
-    fn(docs, 0)
-    replayed = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(pairs).where("__batch_id = 0").collect()
-    }
-    assert first, "fixture produced no pairs — test is vacuous"
-    assert replayed == first
-    docs.unpersist()
     release_all()
 
 

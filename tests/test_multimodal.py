@@ -14,8 +14,6 @@ from marker_spark.ops.multimodal import (
     encode_bmp,
     encode_wav,
     extract_features,
-    frame_sample,
-    resize_images,
     synth_assets,
     synth_real_assets,
 )
@@ -66,72 +64,10 @@ def test_real_decode_rejects_unknown_format(spark):
     )
 
 
-def test_resize_images(spark):
-    from marker_spark.ops.multimodal import decode_png
-
-    from marker_spark.ops.jpeg import decode_jpeg
-
-    assets = synth_real_assets(spark, n=12, seed=7)
-    out = resize_images(assets, width=16, height=12).collect()
-    seen = set()
-    for r in out:
-        if r["kind"] == "image":
-            pb = bytes(r["payload"])
-            if pb[:2] == b"BM":
-                img, fmt = decode_bmp(pb), "bmp"
-            elif pb[:2] == b"\xff\xd8":
-                img, fmt = decode_jpeg(pb), "jpeg"
-            else:
-                img, fmt = decode_png(pb), "png"
-            seen.add(fmt)
-            assert img.shape == (12, 16, 3)
-            assert r["meta"]["width"] == 16 and r["meta"]["height"] == 12
-        else:
-            # non-image rows pass through untouched
-            assert bytes(r["payload"])[:4] == b"RIFF"
-    assert seen == {"bmp", "png", "jpeg"}  # all three containers exercised
-
-
-def test_resize_nearest_neighbor_exact(spark):
-    """2x upscale of a 2x2 checker THROUGH THE PRODUCT resize_images
-    path must replicate blocks exactly — the prior version re-derived
-    the NN index math inline, so a regression in the product kernel
-    could not fail it."""
-    import pandas as pd
-
-    from marker_spark.ops.multimodal import (
-        ASSET_SCHEMA,
-        decode_bmp,
-        encode_bmp,
-        resize_images,
-    )
-
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    img[0, 0] = 255
-    img[1, 1] = 128
-    pdf = pd.DataFrame(
-        {
-            "asset_id": ["a0"],
-            "kind": ["image"],
-            "payload": [encode_bmp(img)],
-            "meta": [{"width": 2, "height": 2, "sample_rate": 0, "n_frames": 0}],
-        }
-    )
-    df = spark.createDataFrame(pdf, schema=ASSET_SCHEMA)
-    out = resize_images(df, width=4, height=4).collect()[0]
-    up = (decode_bmp(bytes(out["payload"])) * 255.0).round().astype(np.uint8)
-    assert up.shape == (4, 4, 3)
-    assert np.array_equal(up[0:2, 0:2], np.full((2, 2, 3), 255, dtype=np.uint8))
-    assert np.array_equal(up[2:4, 2:4], np.full((2, 2, 3), 128, dtype=np.uint8))
-    assert out["meta"]["width"] == 4 and out["meta"]["height"] == 4
-
-
 def test_fake_plumbing_and_frame_sample(spark):
     assets = synth_assets(spark, n=12, seed=3)
     feats = extract_features(assets, fake=True).collect()
     assert len(feats) == 12 and all(len(r["feature"]) == FEATURE_DIM for r in feats)
-    frames = frame_sample(assets, every_n=10).collect()
-    assert len(frames) >= 12  # videos explode to >=1 frame row each
 
 
 def _png_with_filter(img: np.ndarray, ftype: int) -> bytes:
@@ -216,49 +152,14 @@ def test_png_greyscale_and_rgba():
 
 def test_png_in_distributed_pipeline(spark):
     """synth_real_assets mixes BMP, PNG, and JPEG images; feature
-    extraction and resize must handle all three containers
-    distributed."""
-    from marker_spark.ops.jpeg import decode_jpeg
-    from marker_spark.ops.multimodal import decode_png, synth_real_assets
+    extraction must handle all three containers distributed."""
+    from marker_spark.ops.multimodal import synth_real_assets
 
     assets = synth_real_assets(spark, n=16, seed=11).repartition(4)
     feats = extract_features(assets, fake=False).collect()
     assert len(feats) == 16
     magic = {bytes(r["payload"])[:2] for r in assets.collect() if r["kind"] == "image"}
     assert b"BM" in magic and b"\x89P" in magic and b"\xff\xd8" in magic
-    resized = resize_images(assets, width=10, height=10).collect()
-    for r in resized:
-        if r["kind"] != "image":
-            continue
-        pb = bytes(r["payload"])
-        if pb[:2] == b"\xff\xd8":
-            assert decode_jpeg(pb).shape == (10, 10, 3)
-        elif pb[:2] != b"BM":
-            assert decode_png(pb).shape == (10, 10, 3)
-
-
-def test_resize_handles_greyscale_png(spark):
-    """resize_images must resize greyscale/alpha PNGs (decode_png
-    supports them) instead of crashing in the RGB re-encode."""
-    import pandas as pd
-
-    from marker_spark.ops.multimodal import decode_png
-
-    rng = np.random.default_rng(31)
-    grey = rng.integers(0, 256, size=(7, 9, 1), dtype=np.uint8)
-    rgba = rng.integers(0, 256, size=(6, 6, 4), dtype=np.uint8)
-    rows = [
-        ("g", "image", _png_with_filter(grey, 0),
-         {"width": 9, "height": 7, "sample_rate": None, "n_frames": None}),
-        ("r", "image", _png_with_filter(rgba, 0),
-         {"width": 6, "height": 6, "sample_rate": None, "n_frames": None}),
-    ]
-    df = spark.createDataFrame(rows, schema=(
-        "asset_id string, kind string, payload binary, "
-        "meta struct<width:int, height:int, sample_rate:int, n_frames:int>"))
-    out = resize_images(df, width=4, height=4).collect()
-    for r in out:
-        assert decode_png(bytes(r["payload"])).shape == (4, 4, 3)
 
 
 def test_mp3_meta_roundtrip():

@@ -165,16 +165,16 @@ def test_decontamination_broadcasts_benchmark_grams(spark):
 
 
 def test_exact_dedup_exchange_carries_no_text(spark):
-    """exact_dedup's groupBy shuffle must move digest+id only — document
-    text may appear in the scan and the final representative join, never
-    in an Exchange above the aggregation (the 100 TB-shape invariant the
-    scalable fold guarantees)."""
-    from marker_spark.ops.dedup import exact_dedup
+    """exact_dedup_scalable's groupBy shuffle must move digest+id only —
+    document text may appear in the scan and the final representative
+    join, never in an Exchange above the aggregation (the 100 TB-shape
+    invariant the scalable fold guarantees)."""
+    from marker_spark.ops.dedup import exact_dedup_scalable
 
     import re
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(exact_dedup(docs))
+    plan = _plan(exact_dedup_scalable(docs).select("text", "doc_id", "dup_count"))
     # every hashpartitioning spec in the plan keys on the digest or the
     # id — none mentions the text column (formatted mode puts the spec
     # on the Exchange node's Arguments line)

@@ -1,16 +1,14 @@
 """Structured Streaming tests: foreachBatch cache ingestion and the
-declarative windowed/watermarked bucket aggregation."""
+``jobs/stream_sketches.py`` CLI built on it."""
 
 from __future__ import annotations
-
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from marker_spark.cache.sketch_cache import OPEN_END, SketchCache
 from marker_spark.params import CacheParams
-from marker_spark.streaming import stream_into_cache, windowed_marker_counts
+from marker_spark.streaming import stream_into_cache
 
 SF_DIR = "/root/testdata/sf0.001"
 DAY = 86_400
@@ -65,328 +63,6 @@ def test_stream_into_cache(spark, stream_dir, tmp_path):
         assert os.path.exists(tmp_path / "ckpt" / f"{b['start']}.sketch"), b
 
 
-def test_windowed_counts_match_batch(spark, stream_dir, tmp_path):
-    src, pdf = stream_dir
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    agg = windowed_marker_counts(stream, duration_secs=10 * DAY, lifespan_secs=30 * DAY)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("wincounts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["bucket_start"], r["event_type"]): r["n_events"]
-        for r in spark.sql("select * from wincounts").collect()
-    }
-    # batch oracle
-    ev = spark.read.parquet(src)
-    exact = {
-        (r["bucket_start"], r["event_type"]): r["n"]
-        for r in ev.groupBy(
-            (F.floor(F.unix_timestamp("ts") / (10 * DAY)) * (10 * DAY)).cast("long").alias("bucket_start"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == exact
-
-
-def test_stateful_distinct_estimate(spark, stream_dir, tmp_path):
-    from marker_spark.streaming import stateful_distinct_estimate
-
-    src, pdf = stream_dir
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    est = stateful_distinct_estimate(stream, key_col="event_type", value_col="user_id", precision=12)
-    q = (
-        est.writeStream.format("memory")
-        .queryName("statefulhll")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "hll_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # last update per key = final running estimate
-    rows = spark.sql(
-        "select key, last(n_distinct_est) as est, max(n_rows) as n_rows "
-        "from statefulhll group by key"
-    ).collect()
-    got = {r["key"]: (r["est"], r["n_rows"]) for r in rows}
-    exact = pdf.groupby("event_type").agg(u=("user_id", "nunique"), n=("user_id", "size"))
-    assert set(got) == set(exact.index)
-    for k, row in exact.iterrows():
-        est_v, n_rows = got[k]
-        assert n_rows == row["n"], k
-        tol = max(3 * 1.04 / (2**12) ** 0.5 * row["u"], 2)
-        assert abs(est_v - row["u"]) <= tol, (k, est_v, row["u"])
-
-
-def test_stateful_bucket_bloom(spark, stream_dir, tmp_path):
-    from marker_spark.streaming import stateful_bucket_bloom
-
-    src, pdf = stream_dir
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    out = stateful_bucket_bloom(stream, duration_secs=10 * DAY, capacity=50_000,
-                                ts_col="ts", marker_col="marker")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("bucketbloom")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "bb_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql(
-        "select bucket_start, max(n_rows) as n_rows from bucketbloom group by bucket_start"
-    ).collect()
-    got = {r["bucket_start"]: r["n_rows"] for r in rows}
-    import numpy as np
-
-    ts_epoch = pdf["ts"].astype("int64") // 10**9
-    exact = (
-        pdf.assign(bucket=(ts_epoch // (10 * DAY)) * (10 * DAY))
-        .groupby("bucket")["marker"]
-        .size()
-        .to_dict()
-    )
-    assert got == exact, (got, exact)
-
-
-def test_stateful_bucket_bloom_evicts_aged_state(spark, stream_dir, tmp_path):
-    """Watermark-driven ageing: buckets whose end + lifespan falls behind
-    the watermark must emit a final sealed row and have their state
-    REMOVED — the streaming analogue of the reference's maybe_age
-    retention (markercache.cpp:203-242).  Events span ~30 days; with
-    5-day buckets and a 2-day lifespan the early buckets must age out
-    while the stream is still running."""
-    from marker_spark.streaming import stateful_bucket_bloom
-
-    src, pdf = stream_dir
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    out = stateful_bucket_bloom(
-        stream, duration_secs=5 * DAY, capacity=50_000,
-        ts_col="ts", marker_col="marker", lifespan_secs=2 * DAY,
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("bucketbloom_aged")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "bb_aged_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("select * from bucketbloom_aged").collect()
-    sealed = {r["bucket_start"]: r["n_rows"] for r in rows if r["sealed"]}
-    assert sealed, "no bucket state was evicted despite watermark passing lifespan"
-    # sealed buckets are the OLD ones: every sealed bucket must end before
-    # the final watermark (max event time), with lifespan to spare
-    ts_epoch = pdf["ts"].astype("int64") // 10**9
-    max_ev = int(ts_epoch.max())
-    for bstart in sealed:
-        assert bstart + 5 * DAY + 2 * DAY <= max_ev + 1
-    # a sealed bucket's final row carries the complete per-bucket count
-    exact = (
-        pdf.assign(bucket=(ts_epoch // (5 * DAY)) * (5 * DAY))
-        .groupby("bucket")["marker"].size().to_dict()
-    )
-    for bstart, n in sealed.items():
-        assert n == exact[bstart], (bstart, n, exact[bstart])
-
-
-def test_rate_source_soak_bucket_bloom(spark, tmp_path):
-    """Live soak: the built-in rate source feeds stateful_bucket_bloom
-    with processing-time events for several micro-batches; with 5-second
-    buckets and a 5-second lifespan, early buckets must seal (state
-    evicted) WHILE the stream is still running — the reference's
-    wall-clock ageing tick, driven by a real unbounded source instead
-    of availableNow file batches."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from marker_spark.streaming import stateful_bucket_bloom
-
-    rate = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", 200)
-        .load()
-        .withColumn("marker", F.concat_ws("-", F.lit("m"), F.col("value")))
-        .withColumnRenamed("timestamp", "ts")
-    )
-    out = stateful_bucket_bloom(
-        rate, duration_secs=5, capacity=10_000,
-        ts_col="ts", marker_col="marker", lifespan_secs=5,
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("rate_soak")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "rate_ckpt"))
-        .trigger(processingTime="2 seconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 60
-        sealed = []
-        while _time.time() < deadline:
-            _time.sleep(2)
-            sealed = spark.sql(
-                "select bucket_start, n_rows from rate_soak where sealed"
-            ).collect()
-            if sealed:
-                break
-        assert sealed, "no bucket aged out during the 60s soak"
-        # progress was continuous: multiple batches, rows flowed
-        assert q.lastProgress is not None and q.lastProgress["batchId"] >= 2
-        live = spark.sql("select * from rate_soak where not sealed").collect()
-        assert live, "stream produced no live-bucket updates"
-        for r in sealed:
-            assert r["n_rows"] > 0
-        # State-count plateau: with 5s buckets and a 5s lifespan, at most
-        # ~3 bucket states coexist (current + up to two awaiting the
-        # watermark); sample the state store across several more trigger
-        # cycles and assert it stays bounded — creation is balanced by
-        # eviction, the unbounded-growth failure the lifespan prevents.
-        state_counts = []
-        plateau_deadline = _time.time() + 12
-        while _time.time() < plateau_deadline:
-            _time.sleep(2)
-            prog = q.lastProgress
-            if prog and prog.get("stateOperators"):
-                state_counts.append(int(prog["stateOperators"][0]["numRowsTotal"]))
-        assert len(state_counts) >= 2, "too few progress samples for plateau check"
-        assert max(state_counts) <= 5, f"state grew unboundedly: {state_counts}"
-    finally:
-        q.stop()
-
-
-def test_stateful_heavy_hitters(spark, stream_dir, tmp_path):
-    """Streaming MG: after all batches, each key's reported items must
-    respect the MG bounds against the exact batch counts, and the true
-    top-1 item must be reported."""
-    from marker_spark.streaming import stateful_heavy_hitters
-
-    src, pdf = stream_dir
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    out = stateful_heavy_hitters(stream, key_col="event_type", value_col="user_id", k=64)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("hhits")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "hh_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # last emission per key = final summary state
-    rows = spark.sql(
-        "select * from hhits where n_total = (select max(n_total) from hhits h2 "
-        "where h2.key = hhits.key)"
-    ).collect()
-    got: dict[str, list] = {}
-    for r in rows:
-        got.setdefault(r["key"], []).append((r["item"], r["count_lo"], r["count_hi"]))
-    exact = pdf.groupby(["event_type", "user_id"]).size()
-    for key, items in got.items():
-        sub = exact[key]
-        n = int(sub.sum())
-        for item, lo, hi in items:
-            t = int(sub.get(item, 0))
-            assert lo <= t <= hi, (key, item, lo, t, hi)
-            assert hi - lo <= n // 65 + 1  # offset bound
-        # the true most-frequent user for this key is reported
-        top_true = int(sub.idxmax())
-        assert top_true in {i for i, _, _ in items}, key
-
-
-def test_stateful_novelty_filter_emits_each_marker_once(spark, tmp_path):
-    """Online dedup: across micro-batches containing repeats, every
-    distinct marker is emitted exactly once (fp sized so false drops
-    are ~0 at this n), and nothing is emitted twice."""
-    import pandas as pd
-
-    from marker_spark.streaming import stateful_novelty_filter
-
-    d = tmp_path / "novelty_src"
-    d.mkdir()
-    # 3 chunks with heavy overlap: chunk2 repeats half of chunk1 etc.
-    base = [f"m-{i}" for i in range(300)]
-    chunks = [base[:200], base[100:250] + base[:50], base[200:300] + base[:100]]
-    for i, ch in enumerate(chunks):
-        pd.DataFrame({"marker": ch}).to_parquet(d / f"c{i}.parquet", index=False)
-
-    stream = spark.readStream.schema("marker string").parquet(str(d))
-    out = stateful_novelty_filter(stream, capacity=10_000, fp=1e-6, n_shards=4)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("novelty")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "novelty_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    emitted = [r["marker"] for r in spark.sql("select marker from novelty").collect()]
-    assert len(emitted) == len(set(emitted)), "a marker was emitted twice"
-    assert set(emitted) == set(base), "novel markers were lost"
-
-
-def test_stateful_novelty_filter_resumes_across_restart(spark, tmp_path):
-    """The dedup state must survive a query restart: markers emitted
-    before the stop are NOT re-emitted by a new query started from the
-    same checkpoint (state-store recovery, the streaming analogue of
-    the cache's resume path).  File sink + append mode: the combination
-    that actually supports checkpoint recovery."""
-    import pandas as pd
-
-    from marker_spark.streaming import stateful_novelty_filter
-
-    d = tmp_path / "novelty_resume_src"
-    d.mkdir()
-    ckpt = str(tmp_path / "novelty_resume_ckpt")
-    sink = str(tmp_path / "novelty_resume_out")
-    pd.DataFrame({"marker": [f"a-{i}" for i in range(200)]}).to_parquet(
-        d / "c0.parquet", index=False
-    )
-
-    def run():
-        stream = spark.readStream.schema("marker string").parquet(str(d))
-        out = stateful_novelty_filter(stream, capacity=10_000, fp=1e-6, n_shards=4)
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return [r["marker"] for r in spark.read.parquet(sink).collect()]
-
-    first = run()
-    assert set(first) == {f"a-{i}" for i in range(200)}
-    # second run from the SAME checkpoint: old markers repeat + new ones
-    pd.DataFrame(
-        {"marker": [f"a-{i}" for i in range(200)] + [f"b-{i}" for i in range(100)]}
-    ).to_parquet(d / "c1.parquet", index=False)
-    both = run()
-    second = set(both) - set(first)
-    assert second == {f"b-{i}" for i in range(100)}
-    assert len(both) == len(set(both)), (
-        "restarted query re-emitted markers already seen before the restart"
-    )
-
-
 def test_stream_sketches_job_end_to_end(spark, stream_dir, tmp_path):
     """The spark-submit streaming job runs end to end programmatically:
     consumes the chunked source with availableNow, builds + ages the
@@ -432,419 +108,21 @@ def test_stream_sketches_job_end_to_end(spark, stream_dir, tmp_path):
         assert restored_counts[b["start"]] == b["n_markers"], b
 
 
-def test_stateful_quantile_estimate(spark, stream_dir, tmp_path):
-    """Per-key running KLL quantiles: final estimates must sit within a
-    rank band of the exact per-key quantiles over the whole stream."""
-    import numpy as np
+@pytest.mark.parametrize("flag,value", [
+    ("--duration", "0"), ("--lifespan", "-1"),
+    ("--fp", "2"), ("--capacity", "0"),
+])
+def test_stream_sketches_job_rejects_bad_sizing(spark, stream_dir, tmp_path,
+                                                 flag, value):
+    """Bad cache sizing fails at argument parsing: no stream starts and
+    no checkpoint dir is created (it would otherwise fail only inside
+    the first micro-batch's foreachBatch)."""
+    from jobs.stream_sketches import main as job_main
 
-    from marker_spark.streaming import stateful_quantile_estimate
-
-    src, pdf = stream_dir
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    est = stateful_quantile_estimate(stream, key_col="event_type", value_col="value",
-                                     quantiles=(0.5, 0.9))
-    q = (
-        est.writeStream.format("memory")
-        .queryName("statefulkll")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "kll_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql(
-        # max_by, not last: the memory sink table is unordered, so
-        # last() could pick an early-micro-batch estimate built from
-        # few values and flake outside the rank band
-        "select key, max_by(est, n) as est, max(n) as n from statefulkll group by key"
-    ).collect()
-    got = {r["key"]: (r["est"], r["n"]) for r in rows}
-    for key, sub in pdf.groupby("event_type"):
-        vals = sub["value"].to_numpy(dtype="float64")
-        est_v, n = got[key]
-        assert n == len(vals), key
-        # rank-band gate, same discipline as the batch API tests
-        for target, e in zip((0.5, 0.9), est_v):
-            lo = float(np.quantile(vals, max(target - 0.1, 0.0)))
-            hi = float(np.quantile(vals, min(target + 0.1, 1.0)))
-            assert lo <= e <= hi, (key, target, e, lo, hi)
-
-
-def test_stateful_span_novelty_scores_reingested_docs_zero(spark, tmp_path):
-    """Substring-level streaming novelty: a document re-ingested later
-    (even under a new id) scores ~0 novel grams, a genuinely new
-    document scores all-novel, and a half-copied document lands in
-    between. Two runs from one checkpoint pin cross-batch ordering and
-    state recovery at once."""
-    import pandas as pd
-
-    from marker_spark.streaming import stateful_span_novelty
-
-    d = tmp_path / "span_novelty_src"
-    d.mkdir()
-    ckpt = str(tmp_path / "span_novelty_ckpt")
-    sink = str(tmp_path / "span_novelty_out")
-    import numpy as np
-
-    # non-repetitive texts: a repeated base phrase would create genuine
-    # within-doc duplicate grams (only the first scores novel), which is
-    # correct behavior but muddies the all-novel assertion for C
-    rng = np.random.default_rng(5)
-    text_a = "".join(rng.choice(list("abcdefghij "), size=400))
-    text_c = "".join(rng.choice(list("qrstuvwxyz "), size=400))
-    assert len(set(text_a[i : i + 16] for i in range(0, 385, 16))) == 25
-    assert len(set(text_c[i : i + 16] for i in range(0, 385, 16))) == 25
-
-    def run():
-        stream = spark.readStream.schema("doc_id string, text string").parquet(str(d))
-        out = stateful_span_novelty(stream, k=16, n_shards=4, capacity=100_000, fp=1e-6)
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.read.parquet(sink).groupBy("doc_id").agg(
-            F.sum("novel").alias("n_novel"), F.count(F.lit(1)).alias("n_grams")
-        ).collect()
-        return {r["doc_id"]: (r["n_novel"], r["n_grams"]) for r in rows}
-
-    pd.DataFrame({"doc_id": ["A"], "text": [text_a]}).to_parquet(
-        d / "c0.parquet", index=False
-    )
-    first = run()
-    assert first["A"][0] > 0  # the first sighting is novel
-
-    half = text_a[: len(text_a) // 2] + text_c[: len(text_c) // 2]
-    pd.DataFrame(
-        {"doc_id": ["B", "C", "H"], "text": [text_a, text_c, half]}
-    ).to_parquet(d / "c1.parquet", index=False)
-    both = run()
-    n_b, g_b = both["B"]
-    n_c, g_c = both["C"]
-    n_h, g_h = both["H"]
-    assert n_b == 0, "verbatim re-ingest must score zero novel grams"
-    assert n_c == g_c, "fresh content must be all-novel"
-    assert 0 < n_h < g_h, "half-copied doc must land strictly between"
-
-
-def test_streaming_sessions_match_batch(spark, stream_dir, tmp_path):
-    """Native session windows vs the batch gaps-and-islands operator:
-    every FINALIZED streaming session (append mode emits a session only
-    once the watermark passes its end) must agree exactly with the
-    batch sessionize row — same key, same start, same event count."""
-    from marker_spark.ops.temporal import sessionize
-    from marker_spark.streaming import streaming_sessions
-
-    src, pdf = stream_dir
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    GAP = 4 * 3600  # ~mean per-type spacing, so sessions split often
-    q = (
-        streaming_sessions(stream, gap_secs=GAP, ts_col="ts", key_col="event_type")
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["event_type"], r["start_us"]): r["n_events"]
-        for r in spark.sql("select * from sessions").collect()
-    }
-    batch = {
-        (r["event_type"], r["start_us"]): r["n_events"]
-        for r in sessionize(
-            spark.read.parquet(src), "event_type", "ts", gap_s=GAP
-        ).collect()
-    }
-    assert got, "no session finalized — watermark never advanced"
-    # append mode withholds sessions still open at end-of-input; every
-    # emitted session must match its batch twin exactly
-    for key, n in got.items():
-        assert batch.get(key) == n, (key, n, batch.get(key))
-    assert len(got) >= len(batch) * 0.5, (len(got), len(batch))
-
-
-def test_stateful_column_profile_runs_and_recovers(spark, tmp_path):
-    """Streaming twin of the batch ANALYZE (ops/profile.py): per-key
-    running profile folds micro-batches into one composite HLL+MG+KLL
-    state.  Two runs from one checkpoint: the second run's counts must
-    CONTINUE from the first (state recovery), and the final stats must
-    match exact batch values (n, n_null exact; distinct within the HLL
-    bound; quantiles inside a rank band)."""
-    import numpy as np
-    import pandas as pd
-
-    from marker_spark.streaming import stateful_column_profile
-
-    d = tmp_path / "colprof_src"
-    d.mkdir()
-    ckpt = str(tmp_path / "colprof_ckpt")
-
-    def mk_chunk(path, lo, hi):
-        n = hi - lo
-        i = np.arange(lo, hi)
-        pd.DataFrame({
-            "event_type": np.where(i % 2 == 0, "click", "view"),
-            "value": [None if x % 17 == 5 else float((x * 37) % 1000)
-                      for x in i],
-        }).to_parquet(path, index=False)
-
-    mk_chunk(d / "c0.parquet", 0, 3000)
-
-    sink = str(tmp_path / "colprof_out")
-
-    def run():
-        # foreachBatch + parquet append: the memory sink does not
-        # support checkpoint RECOVERY, and the file sink does not
-        # support update mode — foreachBatch supports both
-        stream = spark.readStream.schema(
-            "event_type string, value double"
-        ).parquet(str(d))
-        prof = stateful_column_profile(
-            stream, key_col="event_type", value_col="value",
-            quantiles=(0.25, 0.5, 0.75),
-        )
-
-        def write_batch(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(sink)
-
-        q = (
-            prof.writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        out = spark.read.parquet(sink)
-        return {
-            r["key"]: r.asDict()
-            for r in out.groupBy("key").agg(
-                F.max_by("n", "n").alias("n"),
-                F.max_by("n_null", "n").alias("n_null"),
-                F.max_by("distinct_est", "n").alias("distinct_est"),
-                F.max_by("quantiles", "n").alias("quantiles"),
-                F.max_by("top_hashes", "n").alias("top_hashes"),
-            ).collect()
-        }
-
-    first = run()
-    assert first["click"]["n"] == 1500 and first["view"]["n"] == 1500
-    # second run from the SAME checkpoint over one more chunk: state
-    # must continue, not restart from zero
-    mk_chunk(d / "c1.parquet", 3000, 5000)
-    got = run()
-
-    full = pd.concat([
-        pd.read_parquet(d / "c0.parquet"), pd.read_parquet(d / "c1.parquet"),
-    ])
-    for key, sub in full.groupby("event_type"):
-        g = got[key]
-        assert g["n"] == len(sub), key
-        assert g["n_null"] == int(sub["value"].isna().sum()), key
-        vals = sub["value"].dropna().to_numpy(dtype="float64")
-        # the profile hashes only NON-NULL values: xxhash64(NULL) is the
-        # SEED (42), not NULL, so the operator masks NULL before hashing
-        # (r9 ADVICE) — distinct is over non-null strings, and the
-        # constant 42 must never surface as a heavy hitter
-        exact_d = sub["value"].dropna().astype(str).nunique()
-        assert 42 not in g["top_hashes"], (key, g["top_hashes"])
-        assert abs(g["distinct_est"] - exact_d) <= max(3, 0.05 * exact_d), (
-            key, g["distinct_est"], exact_d)
-        for target, e in zip((0.25, 0.5, 0.75), g["quantiles"]):
-            lo = float(np.quantile(vals, max(target - 0.1, 0.0)))
-            hi = float(np.quantile(vals, min(target + 0.1, 1.0)))
-            assert lo <= e <= hi, (key, target, e, lo, hi)
-
-
-def test_streaming_incremental_dedup_matches_one_shot_batch(spark, tmp_path):
-    """Continuous-crawl dedup: each micro-batch joins the persisted
-    band index and appends its own bands — the union of all batches'
-    emitted pairs must equal the one-shot batch lsh_candidate_pairs
-    over the full corpus (each pair emitted exactly once, in the batch
-    where its later doc arrives)."""
-    from marker_spark.ops.dedup import lsh_candidate_pairs, minhash_signatures
-    from marker_spark.streaming import streaming_incremental_dedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    d = tmp_path / "inc_src"
-    d.mkdir()
-    docs.where(F.col("doc_id") % 4 != 0).select("doc_id", "text").toPandas() \
-        .to_parquet(d / "c0.parquet", index=False)
-    docs.where(F.col("doc_id") % 4 == 0).select("doc_id", "text").toPandas() \
-        .to_parquet(d / "c1.parquet", index=False)
-
-    index_path = str(tmp_path / "inc_index")
-    pairs_path = str(tmp_path / "inc_pairs")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1).parquet(str(d))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            streaming_incremental_dedup(
-                spark, index_path, pairs_path, bands=8, rows_per_band=4
-            )
-        )
-        .option("checkpointLocation", str(tmp_path / "inc_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(pairs_path).select("id_a", "id_b").collect()
-    }
-    sigs = minhash_signatures(docs, num_perm=32)
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs(sigs, bands=8, rows_per_band=4).collect()
-    }
-    assert got == want and got
-    # index holds every doc's bands exactly once
-    idx = spark.read.parquet(index_path)
-    assert idx.count() == idx.distinct().count()
-    assert idx.groupBy("doc_id").count().where("count != 8").count() == 0
-
-
-def test_streaming_incremental_dedup_resumes_across_restart(spark, tmp_path):
-    """Restart from the same checkpoint with a new file: already-banded
-    batches are not re-processed (their index partitions stay single),
-    and the new batch's pairs land against the accumulated index."""
-    from marker_spark.ops.dedup import lsh_candidate_pairs, minhash_signatures
-    from marker_spark.streaming import streaming_incremental_dedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    d = tmp_path / "inc_resume_src"
-    d.mkdir()
-    index_path = str(tmp_path / "inc_resume_index")
-    pairs_path = str(tmp_path / "inc_resume_pairs")
-    ckpt = str(tmp_path / "inc_resume_ckpt")
-
-    def run():
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1).parquet(str(d))
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                streaming_incremental_dedup(
-                    spark, index_path, pairs_path, bands=8, rows_per_band=4
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    docs.where(F.col("doc_id") % 4 != 0).select("doc_id", "text").toPandas() \
-        .to_parquet(d / "c0.parquet", index=False)
-    run()
-    n_idx_first = spark.read.parquet(index_path).count()
-    docs.where(F.col("doc_id") % 4 == 0).select("doc_id", "text").toPandas() \
-        .to_parquet(d / "c1.parquet", index=False)
-    run()
-
-    idx = spark.read.parquet(index_path)
-    assert idx.count() > n_idx_first
-    assert idx.count() == idx.distinct().count(), "a replayed batch double-appended"
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(pairs_path).select("id_a", "id_b").collect()
-    }
-    sigs = minhash_signatures(docs, num_perm=32)
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs(sigs, bands=8, rows_per_band=4).collect()
-    }
-    assert got == want
-
-
-def test_streaming_incremental_dedup_respects_frozen_tombstones(spark, tmp_path):
-    """The streaming twin folds an offline compaction pass's frozen
-    table into the joint cap check: a tombstoned bucket (size > cap,
-    rows reclaimed) emits NO pairs for arriving docs, while normal
-    buckets behave as if no compaction happened (r10 — the frozen_path
-    parameter was previously untested)."""
-    from marker_spark.streaming import streaming_incremental_dedup
-
-    cap = 4
-    index_path = str(tmp_path / "fz_index")
-    frozen_path = str(tmp_path / "fz_index__frozen")
-    pairs_path = str(tmp_path / "fz_pairs")
-    # compacted index: bucket (0,1) tombstoned at size 6 (rows gone);
-    # bucket (0,2) intact with 2 docs — written with the streaming
-    # layout under the SENTINEL partition -1 (a pre-seeded/rebuilt
-    # index must never use a real batch id: batch 0's self-exclusion
-    # filter would drop it)
-    spark.createDataFrame(
-        [(5, 0, 2, -1), (6, 0, 2, -1)],
-        "doc_id long, band_id int, band_hash long, __batch_id int",
-    ).write.partitionBy("__batch_id").parquet(index_path)
-    spark.createDataFrame(
-        [(0, 1, 6)], "band_id int, band_hash long, frozen_sz long"
-    ).write.parquet(frozen_path)
-
-    # exercise the PUBLIC path with real texts; the oracle below runs
-    # the library kernel over the same inputs + the same tombstones
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    d = tmp_path / "fz_src"
-    d.mkdir()
-    docs.where(F.col("doc_id") % 4 == 0).select("doc_id", "text").toPandas() \
-        .to_parquet(d / "c0.parquet", index=False)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(d))
-    q = (
-        stream.writeStream.foreachBatch(
-            streaming_incremental_dedup(
-                spark, index_path, pairs_path, bands=8, rows_per_band=4,
-                max_bucket=cap, frozen_path=frozen_path,
-            )
-        )
-        .option("checkpointLocation", str(tmp_path / "fz_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(pairs_path).select("id_a", "id_b").collect()
-    }
-    # equivalent batch rule: same increment vs the same index WITH the
-    # same tombstones through the library API
-    from marker_spark.ops.dedup import (
-        incremental_pairs_from_bands,
-        minhash_signatures,
-        lsh_band_table,
-    )
-
-    # the stream APPENDED its own bands (partition 0) after emitting
-    # pairs — the oracle must see only the pre-existing index (-1)
-    index = spark.read.parquet(index_path).where("__batch_id = -1") \
-        .drop("__batch_id")
-    frozen = spark.read.parquet(frozen_path)
-    nb = lsh_band_table(
-        minhash_signatures(
-            docs.where(F.col("doc_id") % 4 == 0), num_perm=32
-        ), bands=8, rows_per_band=4,
-    )
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in incremental_pairs_from_bands(
-            index, nb, max_bucket=cap, frozen=frozen
-        ).collect()
-    }
-    assert got == want
-    from marker_spark.cacheutil import release_all
-
-    release_all()
+    src, _ = stream_dir
+    ck = tmp_path / "job_ck"
+    with pytest.raises(SystemExit):
+        job_main(["--source", src, "--ckpt", str(ck), "--available-now",
+                  flag, value])
+    assert not ck.exists()
+    assert spark.streams.active == []
