@@ -47,6 +47,13 @@ def main(argv: list[str] | None = None) -> None:
     args = ap.parse_args(argv)
     if args.ngram < 1:
         ap.error(f"--ngram must be >= 1, got {args.ngram}")
+    from marker_spark.params import BloomParams
+
+    try:
+        # a bad --fp would otherwise fail only inside bloom_factory in a task
+        BloomParams.solve(10_000, args.fp)
+    except ValueError as e:
+        ap.error(f"--fp: {e}")
     if args.ckpt:
         # checkpoints are keyed by partition id only; guard against
         # silently replaying partials built from a DIFFERENT input or

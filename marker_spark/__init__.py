@@ -4,6 +4,7 @@ Public API surface; see README.md for the architecture overview and
 SURVEY.md for the reference analysis this engine derives from.
 """
 
+from . import _pyworker  # noqa: F401  (first: guards the worker's per-task zip re-parse)
 from .agg import (  # noqa: F401
     build_partials_arrow,
     collect_sketch,

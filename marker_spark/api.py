@@ -40,6 +40,15 @@ def _h1_h2(sk, h1, h2) -> None:
     sk.update_hashes(h1, h2)
 
 
+def _check_args(df: DataFrame, factory, col: str) -> None:
+    """Fail on the driver, before any Spark job: build one empty sketch
+    (each constructor range-checks its own parameters) and require the
+    input column.  ``agg._check_group_cols`` covers ``group_cols``."""
+    factory(())
+    if col not in df.columns:
+        raise ValueError(f"column {col!r} not in DataFrame: {df.columns}")
+
+
 def _values_updater(value_col: str):
     """update(sk, batch) passing a numeric column to ``sk.update`` as a
     numpy array (a nullable column's nulls arrive as NaN)."""
@@ -63,6 +72,7 @@ def bloom_agg(
     """Bloom filter over token n-grams (or raw byte markers) per group."""
     params = BloomParams.solve(capacity, fp)
     factory = lambda _key: BloomSketch(params.m, params.k)  # noqa: E731
+    _check_args(df, factory, marker_col if marker_col is not None else token_col)
     if marker_col is not None:
         update = bloom_binary_updater(marker_col)
     else:
@@ -80,6 +90,7 @@ def hll_agg(
 ) -> DataFrame:
     """HyperLogLog distinct-n-gram counter per group."""
     factory = lambda _key: HllSketch(p=precision)  # noqa: E731
+    _check_args(df, factory, token_col)
     update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, HllSketch, group_cols, **agg_kw)
 
@@ -95,6 +106,7 @@ def cms_agg(
 ) -> DataFrame:
     """Count-min frequency sketch over n-grams (default unigrams)."""
     factory = lambda _key: CmsSketch(d=depth, w=width)  # noqa: E731
+    _check_args(df, factory, token_col)
     update = ngram_updater(ngram, token_col, _h1_h2)
     return sketch_agg(df, factory, update, CmsSketch, group_cols, **agg_kw)
 
@@ -110,6 +122,7 @@ def minhash_agg(
 ) -> DataFrame:
     """MinHash signature per group (cross-group Jaccard estimation)."""
     factory = lambda _key: MinHashSketch(num_perm=num_perm, seed=seed)  # noqa: E731
+    _check_args(df, factory, token_col)
     update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, MinHashSketch, group_cols, **agg_kw)
 
@@ -123,6 +136,7 @@ def kll_agg(
 ) -> DataFrame:
     """KLL quantile sketch over a numeric column per group."""
     factory = lambda _key: KllSketch(k=k)  # noqa: E731
+    _check_args(df, factory, value_col)
     update = _values_updater(value_col)
     return sketch_agg(df, factory, update, KllSketch, group_cols, **agg_kw)
 
@@ -136,6 +150,7 @@ def tdigest_agg(
 ) -> DataFrame:
     """t-digest quantile sketch over a numeric column per group."""
     factory = lambda _key: TDigestSketch(delta=delta)  # noqa: E731
+    _check_args(df, factory, value_col)
     update = _values_updater(value_col)
     return sketch_agg(df, factory, update, TDigestSketch, group_cols, **agg_kw)
 
@@ -151,6 +166,7 @@ def theta_agg(
     """Theta/KMV sketch per group — distinct counts plus set-operation
     (intersection/difference) estimates between groups."""
     factory = lambda _key: ThetaSketch(k=k)  # noqa: E731
+    _check_args(df, factory, token_col)
     update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, ThetaSketch, group_cols, **agg_kw)
 
@@ -166,6 +182,7 @@ def mg_agg(
     group — frequent items WITHOUT a known candidate set (count-min's
     complement), bounded O(k) state.  Null items are dropped."""
     factory = lambda _key: MisraGriesSketch(k=k)  # noqa: E731
+    _check_args(df, factory, item_col)
 
     def update(sk, batch) -> None:
         import pyarrow.compute as pc

@@ -22,6 +22,7 @@ from marker_spark.api import (
     cms_agg,
     hll_agg,
     kll_agg,
+    mg_agg,
     minhash_agg,
     tdigest_agg,
     theta_agg,
@@ -193,17 +194,41 @@ def test_mg_agg_nullable_column_keeps_int64_precision(spark):
 def test_ngram_below_one_rejected_up_front(spark, tok, agg, ngram):
     """ngram < 1 would hash every row's "n-grams" as one empty string:
     a ValueError on the driver, before any Spark job runs."""
+    _rejected_before_any_job(
+        spark, tok, f"ngram-{agg.__name__}-{ngram}", lambda: agg(tok, ngram=ngram), "ngram"
+    )
+
+
+def _rejected_before_any_job(spark, tok, group, call, match):
     sc = spark.sparkContext
-    group = f"ngram-{agg.__name__}-{ngram}"
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        with pytest.raises(ValueError, match="ngram"):
-            agg(tok, ngram=ngram)
+        with pytest.raises(ValueError, match=match):
+            call()
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         tok.count()  # the probe sees jobs of this group
         assert list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize(
+    "call, match",
+    [
+        pytest.param(lambda t: hll_agg(t, precision=30), "p must", id="hll-precision"),
+        pytest.param(lambda t: kll_agg(t, "n_tok", k=4), "k must", id="kll-k"),
+        pytest.param(lambda t: cms_agg(t, depth=0), "d>0", id="cms-depth"),
+        pytest.param(lambda t: tdigest_agg(t, "n_tok", delta=5), "delta must", id="tdigest-delta"),
+        pytest.param(lambda t: theta_agg(t, k=8), "k must", id="theta-k"),
+        pytest.param(lambda t: mg_agg(t, "n_tok", k=0), "k must", id="mg-k"),
+        pytest.param(lambda t: hll_agg(t, token_col="no_such_col"), "no_such_col", id="hll-token-col"),
+        pytest.param(lambda t: kll_agg(t, "no_such_col"), "no_such_col", id="kll-value-col"),
+    ],
+)
+def test_bad_sketch_args_rejected_up_front(request, spark, tok, call, match):
+    """Parameters a sketch constructor rejects, and a missing input
+    column, fail on the driver with no Spark job started."""
+    _rejected_before_any_job(spark, tok, request.node.name, lambda: call(tok), match)
 
 
 @pytest.mark.parametrize("ngram", [0, -1])
@@ -214,4 +239,14 @@ def test_build_sketches_rejects_ngram_below_one(tokseq_path, tmp_path, ngram):
     with pytest.raises(SystemExit):
         main(["--input", tokseq_path, "--output", str(out),
               "--ngram", str(ngram)])
+    assert not out.exists()
+
+
+@pytest.mark.parametrize("fp", [2.0, 0.0])
+def test_build_sketches_rejects_bad_fp(tokseq_path, tmp_path, fp):
+    from jobs.build_sketches import main
+
+    out = tmp_path / "out"
+    with pytest.raises(SystemExit):
+        main(["--input", tokseq_path, "--output", str(out), "--fp", str(fp)])
     assert not out.exists()
