@@ -1166,21 +1166,18 @@ def _tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bloom_ngram_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build Bloom over 3-grams per source; self-probe each doc."""
-    from marker_spark.agg import collect_sketch
+    """Build one Bloom over every doc's 3-grams; self-probe each doc
+    against it (the zero-key form of the sketch-table probe)."""
     from marker_spark.api import bloom_agg
-    from marker_spark.kernels import make_ngram_membership_udf
-    from marker_spark.sketches.bloom import BloomSketch
-
     from marker_spark.cacheutil import register
+    from marker_spark.probe import probe_sketch_table
 
     tok = register(_tokenized_docs(spark, sf_dir).cache())
-    sk = collect_sketch(bloom_agg(tok, capacity=2_000_000, fp=0.001, ngram=3), BloomSketch)
-    udf = make_ngram_membership_udf(sk.to_bytes(), 3)
+    table = bloom_agg(tok, capacity=2_000_000, fp=0.001, ngram=3)
     out = (
-        tok.withColumn("hit", udf("tokens"))
+        probe_sketch_table(tok, table, [], token_col="tokens")
         .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum(F.col("hit").cast("long")).alias("n_docs_found"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum(F.col("found").cast("long")).alias("n_docs_found"))
     )
     return out
 
@@ -2377,7 +2374,7 @@ def q_cache_fp_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = probe_df.withColumn("q_start", F.lit(t0 + 20 * day)).withColumn(
         "q_end", F.lit(t0 + 40 * day)
     )
-    found = cache.lookup_range_join(spark, probes, "marker", "q_start", "q_end")
+    found = cache.lookup_range_join(probes, "marker", "q_start", "q_end")
     agg = found.agg(
         F.count(F.lit(1)).alias("n_probes"),
         F.sum(F.col("found").cast("long")).alias("n_found"),

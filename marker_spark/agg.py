@@ -43,6 +43,7 @@ from typing import Any
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .kernels import arrow_str_codes
 
@@ -351,6 +352,23 @@ def _check_group_cols(df: DataFrame, group_cols: list[str] | None) -> list[str]:
     return group_cols
 
 
+def check_input_col(df: DataFrame, col: str, kind: str | None = None) -> None:
+    """Raise ``ValueError`` on the driver, before any Spark job, unless
+    ``df`` has column ``col`` of type ``kind``: ``"numeric"``,
+    ``"integral"``, ``"array<int>"`` or ``None`` (any type)."""
+    if col not in df.columns:
+        raise ValueError(f"column {col!r} not in DataFrame: {df.columns}")
+    t = df.schema[col].dataType
+    ok = {
+        None: True,
+        "numeric": isinstance(t, T.NumericType),
+        "integral": isinstance(t, T.IntegralType),
+        "array<int>": isinstance(t, T.ArrayType) and isinstance(t.elementType, T.IntegerType),
+    }[kind]
+    if not ok:
+        raise ValueError(f"column {col!r} must be {kind}, got {t.simpleString()}")
+
+
 def sketch_agg(
     df: DataFrame,
     factory: Callable[[tuple], Any],
@@ -401,14 +419,9 @@ def collect_agg(
 
 
 def collect_sketch(df: DataFrame, sketch_cls: type):
-    """Driver-side: collect a single-group sketch result."""
-    rows = df.collect()
-    if not rows:
-        return None
-    acc = unpack_state(sketch_cls, rows[0][SKETCH_COL])
-    for r in rows[1:]:
-        acc.merge_in_place(unpack_state(sketch_cls, r[SKETCH_COL]))
-    return acc
+    """Driver-side: collect a single-group sketch result (``None`` when
+    ``df`` is empty)."""
+    return collect_sketches(df, sketch_cls, []).get(())
 
 
 def collect_sketches(df: DataFrame, sketch_cls: type, group_cols: list[str]) -> dict[tuple, Any]:

@@ -4,8 +4,8 @@ The thin wrappers promised in SURVEY.md §2 Part B: each takes a
 DataFrame plus column/group parameters and returns a DataFrame of
 ``(group..., sketch binary)`` (use :func:`marker_spark.collect_sketch`
 / ``collect_sketches`` to materialize driver-side objects, or keep the
-table distributed and probe with the UDF builders in
-:mod:`marker_spark.kernels`).
+table distributed and probe it with
+:func:`marker_spark.probe.probe_sketch_table`).
 
 Column semantics:
  * ``tokens`` columns (array<int32>) are sketched over their n-grams —
@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .agg import sketch_agg
+from .agg import check_input_col, sketch_agg
 from .kernels import bloom_binary_updater, bloom_ngram_updater, ngram_updater
 from .params import BloomParams
 from .sketches.bloom import BloomSketch
@@ -40,13 +40,13 @@ def _h1_h2(sk, h1, h2) -> None:
     sk.update_hashes(h1, h2)
 
 
-def _check_args(df: DataFrame, factory, col: str) -> None:
+def _check_args(df: DataFrame, factory, col: str, kind: str | None) -> None:
     """Fail on the driver, before any Spark job: build one empty sketch
     (each constructor range-checks its own parameters) and require the
-    input column.  ``agg._check_group_cols`` covers ``group_cols``."""
+    input column with a type of ``kind`` (see ``agg.check_input_col``).
+    ``agg._check_group_cols`` covers ``group_cols``."""
     factory(())
-    if col not in df.columns:
-        raise ValueError(f"column {col!r} not in DataFrame: {df.columns}")
+    check_input_col(df, col, kind)
 
 
 def _values_updater(value_col: str):
@@ -72,10 +72,11 @@ def bloom_agg(
     """Bloom filter over token n-grams (or raw byte markers) per group."""
     params = BloomParams.solve(capacity, fp)
     factory = lambda _key: BloomSketch(params.m, params.k)  # noqa: E731
-    _check_args(df, factory, marker_col if marker_col is not None else token_col)
     if marker_col is not None:
+        _check_args(df, factory, marker_col, None)
         update = bloom_binary_updater(marker_col)
     else:
+        _check_args(df, factory, token_col, "array<int>")
         update = bloom_ngram_updater(ngram, token_col)
     return sketch_agg(df, factory, update, BloomSketch, group_cols, **agg_kw)
 
@@ -90,7 +91,7 @@ def hll_agg(
 ) -> DataFrame:
     """HyperLogLog distinct-n-gram counter per group."""
     factory = lambda _key: HllSketch(p=precision)  # noqa: E731
-    _check_args(df, factory, token_col)
+    _check_args(df, factory, token_col, "array<int>")
     update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, HllSketch, group_cols, **agg_kw)
 
@@ -106,7 +107,7 @@ def cms_agg(
 ) -> DataFrame:
     """Count-min frequency sketch over n-grams (default unigrams)."""
     factory = lambda _key: CmsSketch(d=depth, w=width)  # noqa: E731
-    _check_args(df, factory, token_col)
+    _check_args(df, factory, token_col, "array<int>")
     update = ngram_updater(ngram, token_col, _h1_h2)
     return sketch_agg(df, factory, update, CmsSketch, group_cols, **agg_kw)
 
@@ -122,7 +123,7 @@ def minhash_agg(
 ) -> DataFrame:
     """MinHash signature per group (cross-group Jaccard estimation)."""
     factory = lambda _key: MinHashSketch(num_perm=num_perm, seed=seed)  # noqa: E731
-    _check_args(df, factory, token_col)
+    _check_args(df, factory, token_col, "array<int>")
     update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, MinHashSketch, group_cols, **agg_kw)
 
@@ -136,7 +137,7 @@ def kll_agg(
 ) -> DataFrame:
     """KLL quantile sketch over a numeric column per group."""
     factory = lambda _key: KllSketch(k=k)  # noqa: E731
-    _check_args(df, factory, value_col)
+    _check_args(df, factory, value_col, "numeric")
     update = _values_updater(value_col)
     return sketch_agg(df, factory, update, KllSketch, group_cols, **agg_kw)
 
@@ -150,7 +151,7 @@ def tdigest_agg(
 ) -> DataFrame:
     """t-digest quantile sketch over a numeric column per group."""
     factory = lambda _key: TDigestSketch(delta=delta)  # noqa: E731
-    _check_args(df, factory, value_col)
+    _check_args(df, factory, value_col, "numeric")
     update = _values_updater(value_col)
     return sketch_agg(df, factory, update, TDigestSketch, group_cols, **agg_kw)
 
@@ -166,7 +167,7 @@ def theta_agg(
     """Theta/KMV sketch per group — distinct counts plus set-operation
     (intersection/difference) estimates between groups."""
     factory = lambda _key: ThetaSketch(k=k)  # noqa: E731
-    _check_args(df, factory, token_col)
+    _check_args(df, factory, token_col, "array<int>")
     update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, ThetaSketch, group_cols, **agg_kw)
 
@@ -182,7 +183,7 @@ def mg_agg(
     group — frequent items WITHOUT a known candidate set (count-min's
     complement), bounded O(k) state.  Null items are dropped."""
     factory = lambda _key: MisraGriesSketch(k=k)  # noqa: E731
-    _check_args(df, factory, item_col)
+    _check_args(df, factory, item_col, "integral")
 
     def update(sk, batch) -> None:
         import pyarrow.compute as pc

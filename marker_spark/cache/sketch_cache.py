@@ -16,7 +16,10 @@ a bucketed sketch table:
    than the oldest bucket -> false (:166); then OR of per-bucket
    membership over buckets whose timerange overlaps
    (markercache.cpp:181-192), with the same inclusive overlap predicate
-   (markercache.cpp:271-274);
+   (markercache.cpp:271-274).  One kernel, ``_range_hits``, answers it
+   on the driver and, for R ranges at once, inside
+   ``lookup_multi_range_udf``; ``lookup_range_join`` answers a range
+   per probe row;
  * age: seal the current bucket (end = max(now, start),
    markercache.cpp:211), evict buckets past the lifespan (:216-226),
    open the next bucket at prev_end + 1 (:229-232);
@@ -52,11 +55,48 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..agg import collect_agg
-from ..kernels import bloom_binary_updater, bloom_ngram_updater
+from ..hashing import mmh3_x64_128
+from ..kernels import bloom_binary_updater, bloom_ngram_updater, encode_series
 from ..params import CacheParams
 from ..sketches.bloom import BloomSketch
 
 OPEN_END = 2**62  # stand-in for time_t::max on the open bucket
+
+
+def _range_hits(
+    buckets: list[tuple[int, int, BloomSketch]],
+    oldest: int | None,
+    probes: list[bytes],
+    ranges: list[tuple[int, int]],
+) -> np.ndarray:
+    """``bool[len(probes), len(ranges)]``: column j is the membership of
+    each probe in the buckets overlapping ``ranges[j]``.
+
+    ``buckets`` are newest-first ``(start, end, sketch)`` and ``oldest``
+    the oldest bucket's start (``None`` for an empty cache).  A range
+    with ``lo > hi`` (markercache.cpp:164) or ending before ``oldest``
+    (:166) is all False.  Probes are hashed once, and only when some
+    range is live (:168-169); each bucket overlapping a live range
+    (inclusive, :271-274) is probed once and ORed into the column of
+    every range it overlaps."""
+    out = np.zeros((len(probes), len(ranges)), dtype=bool)
+    live = [
+        (j, lo, hi) for j, (lo, hi) in enumerate(ranges)
+        if oldest is not None and lo <= hi and hi >= oldest
+    ]
+    if not live or not len(probes):
+        return out
+    h1 = h2 = None
+    for s, e, sk in buckets:
+        cols = [j for j, lo, hi in live if s <= hi and lo <= e]
+        if not cols:
+            continue
+        if h1 is None:
+            h1, h2 = mmh3_x64_128(probes)
+        hits = sk.contains_hashes(h1, h2)
+        for j in cols:
+            out[:, j] |= hits
+    return out
 
 
 @dataclass
@@ -167,48 +207,27 @@ class SketchCache:
     # --- lookup -----------------------------------------------------------------
     def lookup_from(self, start: int, end: int, probes: list[bytes]) -> np.ndarray:
         """Time-range membership with the reference's edge guards."""
-        out = np.zeros(len(probes), dtype=bool)
-        if start > end:  # markercache.cpp:164
-            return out
-        if not self.buckets or end < self.buckets[0].start:  # markercache.cpp:166
-            return out
-        from ..hashing import mmh3_x64_128
+        newest_first = [(b.start, b.end, b.sketch) for b in reversed(self.buckets)]
+        oldest = self.buckets[0].start if self.buckets else None
+        return _range_hits(newest_first, oldest, probes, [(start, end)])[:, 0]
 
-        h1, h2 = mmh3_x64_128(probes)  # hash once for all buckets, :168-169
-        for b in reversed(self.buckets):  # newest-first, :181
-            if not b.overlaps(start, end):
-                if b.end < start:
-                    break  # past the overlap window, :186-188
-                continue
-            out |= b.sketch.contains_hashes(h1, h2)
-            if out.all():
-                break
-        return out
+    def _worker_buckets(self):
+        """``(oldest, sketches)`` for a UDF closure: the buckets ship as
+        newest-first ``(start, end, blob)`` triples and ``sketches()``
+        deserializes them once per python worker."""
+        blobs = [(b.start, b.end, b.sketch.to_bytes()) for b in reversed(self.buckets)]
+        oldest = self.buckets[0].start if self.buckets else None
+        state: dict[str, list] = {}
 
-    def lookup_df(self, start: int, end: int, probe_df: DataFrame, marker_col: str) -> DataFrame:
-        """DataFrame form: adds boolean column `found` to probe_df."""
-        from ..kernels import make_marker_membership_udf
+        def sketches() -> list:
+            sks = state.get("sks")
+            if sks is None:
+                sks = state["sks"] = [
+                    (s, e, BloomSketch.from_bytes(blob)) for s, e, blob in blobs
+                ]
+            return sks
 
-        overlapping = [b for b in self.buckets if b.overlaps(start, end)] if start <= end else []
-        if not overlapping or (self.buckets and end < self.buckets[0].start):
-            return probe_df.withColumn("found", F.lit(False))
-        col = F.lit(False)
-        for b in overlapping:
-            col = col | make_marker_membership_udf(b.sketch.to_bytes())(F.col(marker_col))
-        return probe_df.withColumn("found", col)
-
-    def bucket_table(self, spark) -> DataFrame:
-        """The cache as a DataFrame: one row per bucket
-        (bucket_start, bucket_end, sketch binary) — the bf_pair deque
-        (markercache.h:26-42) in table form."""
-        rows = pd.DataFrame(
-            {
-                "bucket_start": [b.start for b in self.buckets],
-                "bucket_end": [b.end for b in self.buckets],
-                "sketch": [b.sketch.to_bytes() for b in self.buckets],
-            }
-        )
-        return spark.createDataFrame(rows, schema="bucket_start long, bucket_end long, sketch binary")
+        return oldest, sketches
 
     def lookup_range_udf(self):
         """Vectorized pandas UDF ``(marker, start, end) -> found`` with
@@ -229,11 +248,7 @@ class SketchCache:
         executor, full stop."""
         from pyspark.sql.functions import pandas_udf
 
-        bucket_blobs = [
-            (b.start, b.end, b.sketch.to_bytes()) for b in reversed(self.buckets)
-        ]  # newest-first
-        oldest = self.buckets[0].start if self.buckets else None
-        state: dict[str, list] = {}
+        oldest, sketches = self._worker_buckets()
 
         @pandas_udf("boolean")
         def found_udf(marker: pd.Series, lo: pd.Series, hi: pd.Series) -> pd.Series:
@@ -245,16 +260,8 @@ class SketchCache:
             valid = (lo_np <= hi_np) & (hi_np >= oldest)
             if not valid.any():
                 return pd.Series(out)
-            sks = state.get("sks")
-            if sks is None:
-                sks = state["sks"] = [
-                    (s, e, BloomSketch.from_bytes(blob)) for s, e, blob in bucket_blobs
-                ]
-            from ..hashing import mmh3_x64_128
-            from ..kernels import encode_series
-
             h1, h2 = mmh3_x64_128(encode_series(marker))  # hash once for all buckets
-            for s, e, sk in sks:
+            for s, e, sk in sketches():
                 idx = np.flatnonzero(valid & ~out & (s <= hi_np) & (lo_np <= e))
                 if len(idx):
                     out[idx] = sk.contains_hashes(h1[idx], h2[idx])
@@ -264,57 +271,31 @@ class SketchCache:
 
     def lookup_multi_range_udf(self, ranges: list[tuple[int, int]]):
         """Vectorized pandas UDF ``marker -> struct<f0..fR boolean>``
-        answering ALL the given (start, end) ranges in one pass: markers
-        are hashed once per batch, each bucket's membership vector is
-        computed at most once (memoized across ranges), and each range
-        ORs the vectors of its overlapping buckets.  For R query-level
-        ranges this scans the probe set once instead of R times — the
-        fan-out-free form of repeating :meth:`lookup_range_join` per
-        range.  The result is a STRUCT of boolean columns (one field
-        ``f{j}`` per range), which stays columnar through Arrow — an
-        array<boolean> return would materialize one Python list per
-        probe row."""
+        answering ALL the given (start, end) ranges in one pass with the
+        kernel :meth:`lookup_from` runs on the driver: markers are
+        hashed once per batch, each bucket's membership vector is
+        computed at most once and ORed into every range it overlaps.
+        For R query-level ranges this scans the probe set once instead
+        of R times — the fan-out-free form of repeating
+        :meth:`lookup_range_join` per range.  The result is a STRUCT of
+        boolean columns (one field ``f{j}`` per range), which stays
+        columnar through Arrow — an array<boolean> return would
+        materialize one Python list per probe row."""
         from pyspark.sql.functions import pandas_udf
 
-        bucket_blobs = [
-            (b.start, b.end, b.sketch.to_bytes()) for b in reversed(self.buckets)
-        ]
-        oldest = self.buckets[0].start if self.buckets else None
+        oldest, sketches = self._worker_buckets()
         rng = [(int(lo), int(hi)) for lo, hi in ranges]
         out_type = "struct<" + ", ".join(f"f{j}: boolean" for j in range(len(rng))) + ">"
-        state: dict[str, list] = {}
 
         @pandas_udf(out_type)
         def found_udf(marker: pd.Series) -> pd.DataFrame:
-            n = len(marker)
-            out = np.zeros((n, len(rng)), dtype=bool)
-            if oldest is not None and n:
-                sks = state.get("sks")
-                if sks is None:
-                    sks = state["sks"] = [
-                        (s, e, BloomSketch.from_bytes(blob)) for s, e, blob in bucket_blobs
-                    ]
-                from ..hashing import mmh3_x64_128
-                from ..kernels import encode_series
-
-                h1, h2 = mmh3_x64_128(encode_series(marker))
-                memo: dict[int, np.ndarray] = {}
-                for j, (lo, hi) in enumerate(rng):
-                    if lo > hi or hi < oldest:  # markercache.cpp:164,:166
-                        continue
-                    for bi, (s, e, sk) in enumerate(sks):
-                        if not (s <= hi and lo <= e):  # overlap, :271-274
-                            continue
-                        m = memo.get(bi)
-                        if m is None:
-                            m = memo[bi] = sk.contains_hashes(h1, h2)
-                        out[:, j] |= m
+            out = _range_hits(sketches(), oldest, encode_series(marker), rng)
             return pd.DataFrame({f"f{j}": out[:, j] for j in range(len(rng))})
 
         return found_udf
 
     def lookup_range_join(
-        self, spark, probe_df: DataFrame, marker_col: str, start_col: str, end_col: str
+        self, probe_df: DataFrame, marker_col: str, start_col: str, end_col: str
     ) -> DataFrame:
         """Per-probe time-range membership: adds a boolean ``found``
         column to probe_df, one row per input row.  Logically the
@@ -322,7 +303,7 @@ class SketchCache:
         predicate (markercache.cpp:271-274) with a per-probe OR; executed
         via :meth:`lookup_range_udf` so the bounded bucket state rides
         the UDF closure instead of being replicated onto every joined
-        row (``spark`` is kept for API compatibility)."""
+        row."""
         udf = self.lookup_range_udf()
         return probe_df.withColumn(
             "found",

@@ -1,10 +1,10 @@
 """Vectorized update kernels binding sketches to the tokenized-sequence
-schema (doc_id string, tokens array<int32>, n_tok int32, source string),
-plus probe-side pandas UDF builders.
+schema (doc_id string, tokens array<int32>, n_tok int32, source string).
 
-Every update kernel consumes a whole Arrow RecordBatch (a probe UDF a
-pandas batch) and runs numpy-only math — no per-row Python in the hot
-path (BASELINE.json:input_hint).
+Every update kernel consumes a whole Arrow RecordBatch and runs
+numpy-only math — no per-row Python in the hot path
+(BASELINE.json:input_hint).  The probe side lives in
+:mod:`marker_spark.probe` and :mod:`marker_spark.cache.sketch_cache`.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import numpy as np
 import pandas as pd
 
 from .hashing import mmh3_ngram_i32
-from .ngrams import list_column_to_flat, ngram_starts
+from .ngrams import ngram_starts
 from .params import BloomParams
 from .sketches.bloom import BloomSketch
 
@@ -139,56 +139,3 @@ def bloom_factory(capacity: int, fp: float) -> Callable[..., BloomSketch]:
     params = BloomParams.solve(capacity, fp)
     return lambda key=None: BloomSketch(params.m, params.k)
 
-
-# --- probe-side pandas UDFs ---------------------------------------------------
-
-def make_ngram_membership_udf(sketch_bytes: bytes, n: int):
-    """Returns a pandas UDF tokens:array<int32> -> boolean ("does this row
-    contain at least one n-gram present in the sketch"), plus an
-    all-ngrams variant.  The serialized sketch ships to executors inside
-    the UDF closure (Spark broadcasts task binaries); deserialized once
-    per worker via lazy init.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    state: dict[str, BloomSketch] = {}
-
-    def _sketch() -> BloomSketch:
-        sk = state.get("sk")
-        if sk is None:
-            sk = state["sk"] = BloomSketch.from_bytes(sketch_bytes)
-        return sk
-
-    @pandas_udf("boolean")
-    def any_ngram_in(tokens: pd.Series) -> pd.Series:
-        sk = _sketch()
-        flat, offsets = list_column_to_flat(tokens)
-        starts, per_doc = ngram_starts(offsets, n)
-        hits = sk.contains_hashes(*mmh3_ngram_i32(flat, starts, n))
-        # any() per doc, vectorized via add.reduceat over doc segments
-        out = np.zeros(len(tokens), dtype=bool)
-        nz = per_doc > 0
-        if hits.size:
-            seg_starts = np.concatenate(([0], np.cumsum(per_doc)[:-1]))
-            sums = np.add.reduceat(hits.astype(np.int64), seg_starts[nz])
-            out[nz] = sums > 0
-        return pd.Series(out)
-
-    return any_ngram_in
-
-
-def make_marker_membership_udf(sketch_bytes: bytes):
-    """pandas UDF binary -> boolean: exact reference lookup semantics
-    (is this byte-string marker in the filter)."""
-    from pyspark.sql.functions import pandas_udf
-
-    state: dict[str, BloomSketch] = {}
-
-    @pandas_udf("boolean")
-    def marker_in(data: pd.Series) -> pd.Series:
-        sk = state.get("sk")
-        if sk is None:
-            sk = state["sk"] = BloomSketch.from_bytes(sketch_bytes)
-        return pd.Series(sk.contains(encode_series(data)))
-
-    return marker_in

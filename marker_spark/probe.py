@@ -13,6 +13,10 @@ multi-hundred-KB state through the JVM→Python Arrow path,
 O(probes × state_bytes) movement (the repo's measured read-side
 scale-killer; CLAUDE.md round-3 decisions).
 
+With zero group columns the table holds one state keyed ``()`` and
+every probe row is answered against it — the ungrouped probe is the
+keyed probe with no keys, not a separate UDF.
+
 This is the distributed generalization of the reference's reader
 process: attach to published filter state, answer membership
 (/root/reference/markercache.cpp:143-152,161-195) — with a sketch
@@ -28,7 +32,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .agg import SKETCH_COL, unpack_state
+from .agg import SKETCH_COL, check_input_col, unpack_state
+from .hashing import mmh3_ngram_i32
+from .kernels import encode_series
+from .ngrams import list_column_to_flat, ngram_starts
 from .sketches.bloom import BloomSketch
 
 
@@ -47,8 +54,12 @@ def _norm_key(v):
 
 def _group_rows(key_cols: tuple[pd.Series, ...]):
     """Yield (key_tuple, row_positions) for each distinct group-key
-    combination in the batch.  Cost is O(rows) over SMALL key cells
-    (strings/ints), never over sketch payloads."""
+    combination in the batch; with no key columns, ``((), slice(None))``
+    — every row under the single ``()`` state.  Cost is O(rows) over
+    SMALL key cells (strings/ints), never over sketch payloads."""
+    if not key_cols:
+        yield (), slice(None)
+        return
     n = len(key_cols[0])
     if n == 0:
         return
@@ -123,73 +134,59 @@ def collect_sketch_states(
     }
 
 
-def make_keyed_marker_membership_udf(bcast, n_keys: int):
-    """pandas UDF (group cols..., marker) -> boolean.  States come from
-    the broadcast dict; each group's sketch is deserialized once per
-    worker (memo dict, bounded by #groups) and evaluated vectorized."""
+def _marker_hits(bf: BloomSketch, markers: pd.Series) -> np.ndarray:
+    """Is each byte-string marker in the filter (reference lookup)."""
+    return bf.contains(encode_series(markers))
+
+
+def _ngram_hits(n: int):
+    """``hits(bf, tokens)``: does each array<int> row hold at least one
+    token n-gram present in the filter.  Raises ``ValueError`` for
+    ``n < 1``."""
+    if n < 1:
+        raise ValueError(f"ngram must be >= 1, got {n}")
+
+    def hits(bf: BloomSketch, tokens: pd.Series) -> np.ndarray:
+        out = np.zeros(len(tokens), dtype=bool)
+        flat, offsets = list_column_to_flat(tokens)
+        starts, per_doc = ngram_starts(offsets, n)
+        if len(starts):
+            found = bf.contains_hashes(*mmh3_ngram_i32(flat, starts, n))
+            # any() per doc: OR-reduce each doc's run of n-gram hits
+            seg = np.zeros(len(per_doc), dtype=np.int64)
+            np.cumsum(per_doc[:-1], out=seg[1:])
+            nz = per_doc > 0
+            out[nz] = np.logical_or.reduceat(found, seg[nz])
+        return out
+
+    return hits
+
+
+def make_keyed_membership_udf(bcast, n_keys: int, hits):
+    """pandas UDF (group cols..., probe col) -> boolean.  States come
+    from the broadcast dict; each group's sketch is deserialized once
+    per worker (memo dict, bounded by #groups) and
+    ``hits(sketch, rows)`` answers the group's rows vectorized.  Rows
+    whose group has no state get False."""
     memo: dict[tuple, BloomSketch | None] = {}
 
     @F.pandas_udf("boolean")
     def member(*cols: pd.Series) -> pd.Series:
-        from .kernels import encode_series
-
-        marker = cols[-1]
-        out = np.zeros(len(marker), dtype=bool)
+        data = cols[-1]
+        out = np.zeros(len(data), dtype=bool)
         states = bcast.value
-        for key, idxs in _group_rows(cols[:n_keys]):
+        for key, rows in _group_rows(cols[:n_keys]):
             bf = memo.get(key)
             if bf is None and key not in memo:
                 payload = states.get(key)
                 bf = memo[key] = (
                     unpack_state(BloomSketch, payload) if payload is not None else None
                 )
-            if bf is None:
-                continue  # no sketch published for this group -> False
-            out[idxs] = bf.contains(encode_series(marker.iloc[idxs]))
+            if bf is not None:
+                out[rows] = hits(bf, data.iloc[rows])
         return pd.Series(out)
 
     return member
-
-
-def make_keyed_ngram_membership_udf(bcast, n_keys: int, n: int = 3):
-    """pandas UDF (group cols..., tokens array<int>) -> boolean: does
-    the row contain at least one n-gram present in its group's sketch."""
-    from .hashing import mmh3_ngram_i32
-    from .ngrams import list_column_to_flat, ngram_starts
-
-    memo: dict[tuple, BloomSketch | None] = {}
-
-    @F.pandas_udf("boolean")
-    def any_ngram(*cols: pd.Series) -> pd.Series:
-        tokens = cols[-1]
-        out = np.zeros(len(tokens), dtype=bool)
-        states = bcast.value
-        for key, idxs in _group_rows(cols[:n_keys]):
-            bf = memo.get(key)
-            if bf is None and key not in memo:
-                payload = states.get(key)
-                bf = memo[key] = (
-                    unpack_state(BloomSketch, payload) if payload is not None else None
-                )
-            if bf is None:
-                continue
-            flat, offsets = list_column_to_flat(tokens.iloc[idxs])
-            starts, per_doc = ngram_starts(offsets, n)
-            if len(starts) == 0:
-                continue
-            h1, h2 = mmh3_ngram_i32(flat, starts, n)
-            hits = bf.contains_hashes(h1, h2)
-            seg = np.zeros(len(idxs), dtype=np.int64)
-            np.cumsum(per_doc[:-1], out=seg[1:])
-            nz = per_doc > 0
-            sums = np.add.reduceat(hits.astype(np.int64), seg[nz]) if hits.size else None
-            res = np.zeros(len(idxs), dtype=bool)
-            if sums is not None:
-                res[nz] = sums > 0
-            out[np.asarray(idxs)] = res
-        return pd.Series(out)
-
-    return any_ngram
 
 
 def probe_sketch_table(
@@ -204,21 +201,27 @@ def probe_sketch_table(
     """Evaluate probe rows against their group's sketch with zero
     sketch bytes in the probe plan: the bounded per-group state dict is
     collected once and broadcast; the UDF keys into it by the row's
-    group columns.  Probes whose group has no sketch get False (nothing
-    was inserted for that group)."""
+    group columns (``[]`` probes every row against the table's single
+    ungrouped state).  Probes whose group has no sketch get False
+    (nothing was inserted for that group).  Bad arguments raise
+    ``ValueError`` before any Spark job."""
     from .cacheutil import register
 
+    if marker_col is not None:
+        hits, col = _marker_hits, marker_col
+        check_input_col(probe_df, col)
+    elif token_col is not None:
+        hits, col = _ngram_hits(ngram), token_col
+        check_input_col(probe_df, col, "array<int>")
+    else:
+        raise ValueError("need marker_col or token_col")
+    for c in group_cols:
+        check_input_col(probe_df, c)
+        check_input_col(sketch_table, c)
     states = collect_sketch_states(sketch_table, group_cols)
     # registered so the session owner's release_all() drops executor
     # copies between queries (re-execution re-fetches from the driver)
     bcast = register(probe_df.sparkSession.sparkContext.broadcast(states))
     keys = [F.col(c).cast("string") for c in group_cols]  # match state keys
-    if marker_col is not None:
-        udf = make_keyed_marker_membership_udf(bcast, len(group_cols))
-        col = udf(*keys, F.col(marker_col))
-    elif token_col is not None:
-        udf = make_keyed_ngram_membership_udf(bcast, len(group_cols), ngram)
-        col = udf(*keys, F.col(token_col))
-    else:
-        raise ValueError("need marker_col or token_col")
-    return probe_df.withColumn(result_col, col)
+    udf = make_keyed_membership_udf(bcast, len(group_cols), hits)
+    return probe_df.withColumn(result_col, udf(*keys, F.col(col)))

@@ -23,7 +23,7 @@ import struct
 
 import numpy as np
 
-from ..hashing import mmh3_fixed_width, mmh3_offsets, mmh3_x64_128
+from ..hashing import mmh3_fixed_width, mmh3_x64_128
 from .base import KIND_BLOOM, pack_header, unpack_header
 
 _PARAMS = struct.Struct("<QIQ")
@@ -46,7 +46,6 @@ class BloomSketch:
                 raise ValueError(f"blocks len {len(blocks)} != {nblocks}")
             self.blocks = blocks
 
-    # --- probe computation -------------------------------------------------
     # --- updates -----------------------------------------------------------
     def insert_hashes(self, h1: np.ndarray, h2: np.ndarray) -> None:
         n = len(h1)
@@ -103,10 +102,6 @@ class BloomSketch:
         h1, h2 = mmh3_fixed_width(matrix)
         self.insert_hashes(h1, h2)
 
-    def insert_offsets(self, flat: np.ndarray, offsets: np.ndarray) -> None:
-        h1, h2 = mmh3_offsets(flat, offsets)
-        self.insert_hashes(h1, h2)
-
     # --- lookups -----------------------------------------------------------
     def contains_hashes(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
         """Batch-vectorized analogue of the reference's early-out lookup
@@ -139,10 +134,6 @@ class BloomSketch:
         h1, h2 = mmh3_fixed_width(matrix)
         return self.contains_hashes(h1, h2)
 
-    def contains_offsets(self, flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-        h1, h2 = mmh3_offsets(flat, offsets)
-        return self.contains_hashes(h1, h2)
-
     # --- merge / lifecycle ---------------------------------------------------
     def merge_in_place(self, other: "BloomSketch") -> "BloomSketch":
         if (self.m, self.k) != (other.m, other.k):
@@ -152,10 +143,6 @@ class BloomSketch:
         np.bitwise_or(self.blocks, other.blocks, out=self.blocks)
         self.n_inserted += other.n_inserted
         return self
-
-    def reset(self) -> None:
-        self.blocks[:] = 0
-        self.n_inserted = 0
 
     def fill_ratio(self) -> float:
         set_bits = int(np.unpackbits(self.blocks.view(np.uint8)).sum())

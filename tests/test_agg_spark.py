@@ -9,12 +9,9 @@ import pytest
 
 from marker_spark.agg import collect_sketch, collect_sketches, sketch_agg
 from marker_spark.datagen import gen_tokenized_sequences
-from marker_spark.kernels import (
-    bloom_factory,
-    bloom_ngram_updater,
-    make_ngram_membership_udf,
-)
+from marker_spark.kernels import bloom_factory, bloom_ngram_updater
 from marker_spark.ngrams import list_column_to_flat, ngram_bytes
+from marker_spark.probe import probe_sketch_table
 from marker_spark.sketches.bloom import BloomSketch
 
 N_DOCS = 2000
@@ -78,10 +75,10 @@ def test_grouped_build_by_source(spark, tokseq_df):
 def test_membership_udf_no_false_negatives(spark, tokseq_df):
     factory = bloom_factory(capacity=300_000, fp=0.001)
     update = bloom_ngram_updater(NGRAM)
-    sk = collect_sketch(sketch_agg(tokseq_df, factory, update, BloomSketch), BloomSketch)
+    table = sketch_agg(tokseq_df, factory, update, BloomSketch)
 
-    udf = make_ngram_membership_udf(sk.to_bytes(), NGRAM)
-    hits = tokseq_df.select(udf("tokens").alias("hit")).toPandas()["hit"]
+    probed = probe_sketch_table(tokseq_df, table, [], token_col="tokens", ngram=NGRAM)
+    hits = probed.select("found").toPandas()["found"]
     # Every inserted doc contains its own n-grams -> all true.
     assert bool(hits.all())
 
@@ -95,6 +92,8 @@ def test_membership_udf_fp_bounded(spark):
     rng = np.random.default_rng(99)
     import pandas as pd
 
+    from marker_spark.agg import pack_state
+
     probe_tokens = [rng.integers(10**6, 10**7, size=20).astype(np.int32) for _ in range(500)]
     sk, _ = _local_reference_sketch(factory, NGRAM)
     flat, offsets = list_column_to_flat(pd.Series(probe_tokens))
@@ -102,10 +101,8 @@ def test_membership_udf_fp_bounded(spark):
     hits = sk.contains_fixed_width(mat)
     fp_rate = float(hits.mean())
     assert fp_rate <= 0.001 * 1.3
-    # the DISTRIBUTED probe UDF must agree with the local kernel doc
-    # for doc (any-n-gram semantics) — the negative path included
-    from marker_spark.kernels import make_ngram_membership_udf
-
+    # the DISTRIBUTED zero-key probe must agree with the local kernel
+    # doc for doc (any-n-gram semantics) — the negative path included
     seg = np.concatenate(([0], np.cumsum(per_doc)[:-1]))
     local_any = np.add.reduceat(hits.astype(np.int64), seg) > 0
     probe_df = spark.createDataFrame(
@@ -113,10 +110,10 @@ def test_membership_udf_fp_bounded(spark):
                       "tokens": [t.tolist() for t in probe_tokens]}),
         schema="i long, tokens array<int>",
     )
-    udf = make_ngram_membership_udf(sk.to_bytes(), NGRAM)
+    table = spark.createDataFrame([(pack_state(sk),)], schema="sketch binary")
     got = (
-        probe_df.withColumn("h", udf("tokens")).orderBy("i").select("h").toPandas()["h"]
-        .to_numpy()
+        probe_sketch_table(probe_df, table, [], token_col="tokens", ngram=NGRAM)
+        .orderBy("i").select("found").toPandas()["found"].to_numpy()
     )
     assert np.array_equal(got, local_any)
 

@@ -223,12 +223,42 @@ def _rejected_before_any_job(spark, tok, group, call, match):
         pytest.param(lambda t: mg_agg(t, "n_tok", k=0), "k must", id="mg-k"),
         pytest.param(lambda t: hll_agg(t, token_col="no_such_col"), "no_such_col", id="hll-token-col"),
         pytest.param(lambda t: kll_agg(t, "no_such_col"), "no_such_col", id="kll-value-col"),
+        pytest.param(lambda t: kll_agg(t, "source"), "must be numeric", id="kll-string-col"),
+        pytest.param(lambda t: tdigest_agg(t, "tokens"), "must be numeric", id="tdigest-array-col"),
+        pytest.param(lambda t: mg_agg(t, "source"), "must be integral", id="mg-string-col"),
+        pytest.param(lambda t: hll_agg(t, token_col="n_tok"), "must be array<int>", id="hll-int-tokens"),
+        pytest.param(lambda t: bloom_agg(t, token_col="source"), "must be array<int>",
+                     id="bloom-string-tokens"),
     ],
 )
 def test_bad_sketch_args_rejected_up_front(request, spark, tok, call, match):
-    """Parameters a sketch constructor rejects, and a missing input
-    column, fail on the driver with no Spark job started."""
+    """Parameters a sketch constructor rejects, and a missing or
+    wrongly typed input column, fail on the driver with no Spark job
+    started."""
     _rejected_before_any_job(spark, tok, request.node.name, lambda: call(tok), match)
+
+
+@pytest.mark.parametrize(
+    "kw, match",
+    [
+        pytest.param({}, "need marker_col or token_col", id="no-probe-col"),
+        pytest.param({"token_col": "n_tok"}, "must be array<int>", id="int-tokens"),
+        pytest.param({"token_col": "tokens", "ngram": 0}, "ngram", id="ngram-0"),
+        pytest.param({"marker_col": "no_such_col"}, "no_such_col", id="marker-col"),
+        pytest.param({"token_col": "tokens", "group_cols": ["no_such_key"]}, "no_such_key",
+                     id="group-col"),
+    ],
+)
+def test_bad_probe_args_rejected_up_front(request, spark, tok, kw, match):
+    """``probe_sketch_table`` checks its arguments before the state-size
+    job and the state collect."""
+    from marker_spark.probe import probe_sketch_table
+
+    kw = {"group_cols": ["source"], **kw}
+    _rejected_before_any_job(
+        spark, tok, request.node.name,
+        lambda: probe_sketch_table(tok, bloom_agg(tok, group_cols=["source"]), **kw), match,
+    )
 
 
 @pytest.mark.parametrize("ngram", [0, -1])

@@ -5,8 +5,9 @@ every recorded number, so they get deterministic tests."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))  # this checkout's root
 
 from bench import (  # noqa: E402
     bracketed_leg,

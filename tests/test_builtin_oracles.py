@@ -82,7 +82,7 @@ def test_range_join_lookup_matches_driver_api(spark):
         .withColumn("q_start", F.lit(t0))
         .withColumn("q_end", F.lit(t0 + 10 * DAY - 1))
     )
-    joined = cache.lookup_range_join(spark, probe, "marker", "q_start", "q_end")
+    joined = cache.lookup_range_join(probe, "marker", "q_start", "q_end")
     got = {r["marker"]: r["found"] for r in joined.collect()}
     probes = [m.encode() for m in got]
     want = cache.lookup_from(t0, t0 + 10 * DAY - 1, probes)
@@ -96,9 +96,6 @@ def test_theta_setops_query_within_bound(spark):
     within 5x the KMV relative standard error (1/sqrt(k-1), k=4096 ->
     ~1.6%) of the EXACT distinct-3-gram set algebra, computed with
     plain DataFrame ops over the same tokenized corpus."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
     from marker_spark.tokenize import tokenize_documents
 
@@ -171,7 +168,7 @@ def test_range_join_per_row_ranges_and_guards(spark):
         for (lo, hi) in [ranges[i % len(ranges)]]
     ]
     probe = spark.createDataFrame(rows, schema="marker string, q_start long, q_end long")
-    got = cache.lookup_range_join(spark, probe, "marker", "q_start", "q_end").collect()
+    got = cache.lookup_range_join(probe, "marker", "q_start", "q_end").collect()
     assert len(got) == len(rows)  # one output row per input row, no dedup
     for r in got:
         want = bool(cache.lookup_from(r["q_start"], r["q_end"], [r["marker"].encode()])[0])
@@ -204,7 +201,7 @@ def test_range_join_randomized_ranges(spark):
         hi = int(lo + rng.integers(-10, 40) * DAY)  # sometimes inverted
         rows.append((m, lo, hi))
     probe = spark.createDataFrame(rows, schema="marker string, q_start long, q_end long")
-    got = cache.lookup_range_join(spark, probe, "marker", "q_start", "q_end").collect()
+    got = cache.lookup_range_join(probe, "marker", "q_start", "q_end").collect()
     assert len(got) == 200
     for r in got:
         want = bool(cache.lookup_from(r["q_start"], r["q_end"], [r["marker"].encode()])[0])

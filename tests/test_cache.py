@@ -342,9 +342,8 @@ def test_insert_batch_runs_one_job_with_one_stage(spark):
 
 
 def test_cache_lookup_df(spark):
-    from marker_spark.cache.sketch_cache import OPEN_END, SketchCache
-    from marker_spark.params import CacheParams
-
+    """DataFrame lookup with literal bounds through the per-row range
+    UDF: all-time finds every inserted marker, an inverted range none."""
     params = CacheParams(duration=10 * DAY, lifespan=30 * DAY, fp=0.001, total_capacity=100_000)
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").withColumn(
         "marker", F.concat_ws("|", F.col("event_id"), F.col("props"))
@@ -352,7 +351,51 @@ def test_cache_lookup_df(spark):
     cache = SketchCache(params)
     cache.insert_batch(ev, ts_col="ts", marker_col="marker")
     probe = ev.select("marker").limit(200)
-    found = cache.lookup_df(0, OPEN_END, probe, "marker")
+
+    def lookup(lo, hi):
+        bounded = probe.withColumn("lo", F.lit(lo)).withColumn("hi", F.lit(hi))
+        return cache.lookup_range_join(bounded, "marker", "lo", "hi")
+
+    found = lookup(0, OPEN_END)
     assert found.where(F.col("found")).count() == 200
-    none = cache.lookup_df(100, 50, probe, "marker")  # inverted range guard
+    none = lookup(100, 50)  # inverted range guard
     assert none.where(F.col("found")).count() == 0
+
+
+def _four_bucket_cache():
+    """Four closed buckets of 300 distinct markers each, built on the
+    driver, plus the markers and 300 never-inserted ones."""
+    cache = SketchCache(PARAMS)
+    markers = []
+    for i in range(4):
+        ms = [f"b{i}-m{j}".encode() for j in range(300)]
+        sk = cache._new_sketch()
+        sk.insert(ms)
+        cache._merge_into_bucket(T0 + i * DUR, sk, 0.0, "test")
+        markers += ms
+    return cache, markers + [f"absent-{j}".encode() for j in range(300)]
+
+
+def test_multi_range_udf_matches_lookup_from_per_range(spark):
+    """Each field of the multi-range UDF equals lookup_from over the
+    same range, row for row, across the reference's edge cases."""
+    cache, markers = _four_bucket_cache()
+    oldest, last_end = cache.buckets[0].start, cache.buckets[-1].end
+    ranges = [
+        (0, OPEN_END),                      # all time
+        (T0 + DUR, T0 + 2 * DUR - 1),       # exactly one bucket
+        (T0 + DUR + 5, T0 + 2 * DUR + 5),   # straddles two buckets
+        (0, oldest - 1),                    # ends before the oldest bucket
+        (100, 50),                          # inverted
+        (last_end + 1, last_end + DUR),     # overlaps no bucket
+    ]
+    df = spark.createDataFrame([(i, m) for i, m in enumerate(markers)], "i long, marker binary")
+    udf = cache.lookup_multi_range_udf(ranges)
+    got = df.select("i", udf(F.col("marker")).alias("f")).orderBy("i").select("f.*").toPandas()
+    assert list(got.columns) == [f"f{j}" for j in range(len(ranges))]
+    for j, (lo, hi) in enumerate(ranges):
+        want = cache.lookup_from(lo, hi, markers)
+        assert np.array_equal(got[f"f{j}"].to_numpy(), want), (j, lo, hi)
+    inserted = len(markers) - 300
+    assert got["f0"][:inserted].all()  # no false negatives over all time
+    assert got["f1"][300:600].all() and not got["f3"].any() and not got["f4"].any()

@@ -5,8 +5,9 @@ registered handles (VERDICT r2 "what's wrong" #3)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))  # this checkout's root
 
 SF_DIR = "/root/testdata/sf0.001"
 

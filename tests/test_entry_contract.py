@@ -6,8 +6,9 @@ the ordering invariant is now a test, not a convention."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))  # this checkout's root
 
 DRIVER_WINDOW = 50
 

@@ -78,9 +78,6 @@ def test_topk_uses_takeordered(spark):
 def test_bpe_token_count_scan_prunes_columns(spark):
     """The BPE-ish token count is a pure Catalyst regex: its scan must
     read only (text, source), never the full document row."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
 
     plan = _plan(E.queries()["bpe_token_counts"](spark, SF_DIR))
@@ -137,14 +134,17 @@ def test_probe_plan_carries_no_sketch_bytes(spark):
     """The read side must never put the serialized sketch column into
     the probe plan: states ship once per executor via broadcast and the
     UDF keys into them by group columns, so per-probe-row data movement
-    is O(row), not O(state_bytes) (the round-3 measured scale-killer)."""
+    is O(row), not O(state_bytes) (the round-3 measured scale-killer).
+    The ungrouped self-probe is the same probe with zero keys."""
     import __spark_entry__ as entrymod
+    from marker_spark.cacheutil import release_all
 
-    q = entrymod.queries()["sketch_table_probe"](spark, SF_DIR)
-    plan = _plan(q)
-    assert "Join" not in plan, "probe must not join the sketch table"
-    assert "sketch#" not in plan, "sketch binary column leaked into the probe plan"
-    assert "ArrowEvalPython" in plan  # the keyed membership UDF
+    for name in ("sketch_table_probe", "bloom_ngram_membership"):
+        plan = _plan(entrymod.queries()[name](spark, SF_DIR))
+        release_all()
+        assert "Join" not in plan, f"{name}: probe must not join the sketch table"
+        assert "sketch#" not in plan, f"{name}: sketch binary column leaked into the probe plan"
+        assert "ArrowEvalPython" in plan, name  # the keyed membership UDF
 
 
 def test_decontamination_broadcasts_benchmark_grams(spark):

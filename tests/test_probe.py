@@ -66,3 +66,23 @@ def test_collect_states_guard_rejects_unbounded_tables(spark):
     # the default cap accepts the bounded table
     states = collect_sketch_states(table, ["event_type"])
     assert len(states) > 0
+
+
+def test_probe_with_zero_group_cols(spark, tokseq_path):
+    """``group_cols=[]`` probes every row against the table's single
+    ungrouped state, for token n-grams and for raw markers alike."""
+    tok = spark.read.parquet(tokseq_path)
+    table = bloom_agg(tok, capacity=200_000, fp=0.001)
+    res = probe_sketch_table(tok, table, [], token_col="tokens")
+    assert res.count() == tok.count()
+    assert res.where(~F.col("found")).count() == 0
+
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").withColumn(
+        "marker", F.concat_ws("|", F.col("event_id"), F.col("props"))
+    )
+    table = bloom_agg(ev, marker_col="marker", capacity=50_000, fp=0.001)
+    assert probe_sketch_table(ev, table, [], marker_col="marker").where(~F.col("found")).count() == 0
+    alien = ev.withColumn("marker", F.concat(F.lit("alien|"), F.col("marker")))
+    res2 = probe_sketch_table(alien, table, [], marker_col="marker")
+    n, hits = res2.count(), res2.where(F.col("found")).count()
+    assert hits / max(n, 1) < 0.05, f"zero-key FP rate {hits}/{n}"
