@@ -143,11 +143,12 @@ def main(argv: list[str] | None = None) -> None:
                     recs.append((g, sk.m, sk.k))
                 yield pd.DataFrame(recs, columns=[gcol, "m", "k"])
 
-        prev_tbl = spark.read.parquet(args.merge_into)
+        # read once: one footer job, and a table missing either column
+        # fails here, before any build
+        prev = spark.read.parquet(args.merge_into).select(gcol, SKETCH_COL)
         prev_mk = {
             r[gcol]: (int(r["m"]), int(r["k"]))
-            for r in prev_tbl.select(gcol, SKETCH_COL)
-            .mapInPandas(_params_fn, schema=f"`{gcol}` string, m long, k int")
+            for r in prev.mapInPandas(_params_fn, schema=f"`{gcol}` string, m long, k int")
             .collect()
         }
 
@@ -180,13 +181,14 @@ def main(argv: list[str] | None = None) -> None:
     if args.merge_into:
         # merge associativity makes yesterday's merged states just more
         # partials; groups new to either side pass through the merge
-        prev = spark.read.parquet(args.merge_into).select(gcol, SKETCH_COL)
         partials = partials.select(gcol, SKETCH_COL).unionByName(prev)
     merged = merge_partials(partials, BloomSketch, [gcol])
     merged.write.mode("overwrite").parquet(args.output)
 
     meta = (
-        spark.read.parquet(args.output)
+        # the schema the job just wrote: no schema-inference job
+        spark.read.schema(f"`{gcol}` string, {SKETCH_COL} binary")
+        .parquet(args.output)
         .select(gcol, F.length(SKETCH_COL).alias("sketch_bytes"))
         .collect()
     )

@@ -17,9 +17,9 @@ Column semantics:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
-from .agg import check_input_col, sketch_agg
+from .agg import _check_group_cols, check_input_col, sketch_agg
 from .kernels import bloom_binary_updater, bloom_ngram_updater, ngram_updater
 from .params import BloomParams
 from .sketches.bloom import BloomSketch
@@ -40,13 +40,19 @@ def _h1_h2(sk, h1, h2) -> None:
     sk.update_hashes(h1, h2)
 
 
-def _check_args(df: DataFrame, factory, col: str, kind: str | None) -> None:
+def _inputs(df: DataFrame, factory, col: str, kind: str | None, group_cols) -> DataFrame:
     """Fail on the driver, before any Spark job: build one empty sketch
     (each constructor range-checks its own parameters) and require the
-    input column with a type of ``kind`` (see ``agg.check_input_col``).
-    ``agg._check_group_cols`` covers ``group_cols``."""
+    input column with a type of ``kind`` (see ``agg.check_input_col``)
+    and the group columns.  Returns ``df`` projected to the group
+    columns plus ``col``: Catalyst cannot prune through the Python
+    partial build, so every other column would be converted to Arrow
+    and shipped to Python unread.  Names are quoted, so a dot in one is
+    part of the name, not struct-field access."""
     factory(())
     check_input_col(df, col, kind)
+    names = dict.fromkeys(_check_group_cols(df, group_cols) + [col])
+    return df.select(*[F.col("`" + c.replace("`", "``") + "`") for c in names])
 
 
 def _values_updater(value_col: str):
@@ -73,10 +79,10 @@ def bloom_agg(
     params = BloomParams.solve(capacity, fp)
     factory = lambda _key: BloomSketch(params.m, params.k)  # noqa: E731
     if marker_col is not None:
-        _check_args(df, factory, marker_col, None)
+        df = _inputs(df, factory, marker_col, None, group_cols)
         update = bloom_binary_updater(marker_col)
     else:
-        _check_args(df, factory, token_col, "array<int>")
+        df = _inputs(df, factory, token_col, "array<int>", group_cols)
         update = bloom_ngram_updater(ngram, token_col)
     return sketch_agg(df, factory, update, BloomSketch, group_cols, **agg_kw)
 
@@ -91,7 +97,7 @@ def hll_agg(
 ) -> DataFrame:
     """HyperLogLog distinct-n-gram counter per group."""
     factory = lambda _key: HllSketch(p=precision)  # noqa: E731
-    _check_args(df, factory, token_col, "array<int>")
+    df = _inputs(df, factory, token_col, "array<int>", group_cols)
     update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, HllSketch, group_cols, **agg_kw)
 
@@ -107,7 +113,7 @@ def cms_agg(
 ) -> DataFrame:
     """Count-min frequency sketch over n-grams (default unigrams)."""
     factory = lambda _key: CmsSketch(d=depth, w=width)  # noqa: E731
-    _check_args(df, factory, token_col, "array<int>")
+    df = _inputs(df, factory, token_col, "array<int>", group_cols)
     update = ngram_updater(ngram, token_col, _h1_h2)
     return sketch_agg(df, factory, update, CmsSketch, group_cols, **agg_kw)
 
@@ -123,7 +129,7 @@ def minhash_agg(
 ) -> DataFrame:
     """MinHash signature per group (cross-group Jaccard estimation)."""
     factory = lambda _key: MinHashSketch(num_perm=num_perm, seed=seed)  # noqa: E731
-    _check_args(df, factory, token_col, "array<int>")
+    df = _inputs(df, factory, token_col, "array<int>", group_cols)
     update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, MinHashSketch, group_cols, **agg_kw)
 
@@ -137,7 +143,7 @@ def kll_agg(
 ) -> DataFrame:
     """KLL quantile sketch over a numeric column per group."""
     factory = lambda _key: KllSketch(k=k)  # noqa: E731
-    _check_args(df, factory, value_col, "numeric")
+    df = _inputs(df, factory, value_col, "numeric", group_cols)
     update = _values_updater(value_col)
     return sketch_agg(df, factory, update, KllSketch, group_cols, **agg_kw)
 
@@ -151,7 +157,7 @@ def tdigest_agg(
 ) -> DataFrame:
     """t-digest quantile sketch over a numeric column per group."""
     factory = lambda _key: TDigestSketch(delta=delta)  # noqa: E731
-    _check_args(df, factory, value_col, "numeric")
+    df = _inputs(df, factory, value_col, "numeric", group_cols)
     update = _values_updater(value_col)
     return sketch_agg(df, factory, update, TDigestSketch, group_cols, **agg_kw)
 
@@ -167,7 +173,7 @@ def theta_agg(
     """Theta/KMV sketch per group — distinct counts plus set-operation
     (intersection/difference) estimates between groups."""
     factory = lambda _key: ThetaSketch(k=k)  # noqa: E731
-    _check_args(df, factory, token_col, "array<int>")
+    df = _inputs(df, factory, token_col, "array<int>", group_cols)
     update = ngram_updater(ngram, token_col, _h1)
     return sketch_agg(df, factory, update, ThetaSketch, group_cols, **agg_kw)
 
@@ -183,7 +189,7 @@ def mg_agg(
     group — frequent items WITHOUT a known candidate set (count-min's
     complement), bounded O(k) state.  Null items are dropped."""
     factory = lambda _key: MisraGriesSketch(k=k)  # noqa: E731
-    _check_args(df, factory, item_col, "integral")
+    df = _inputs(df, factory, item_col, "integral", group_cols)
 
     def update(sk, batch) -> None:
         import pyarrow.compute as pc

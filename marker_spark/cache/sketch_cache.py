@@ -55,12 +55,30 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..agg import collect_agg
-from ..hashing import mmh3_x64_128
+from ..hashing import _HASH_CHUNK, mmh3_x64_128
 from ..kernels import bloom_binary_updater, bloom_ngram_updater, encode_series
 from ..params import CacheParams
 from ..sketches.bloom import BloomSketch
 
 OPEN_END = 2**62  # stand-in for time_t::max on the open bucket
+
+
+def _bucket_hits(sketches: list[BloomSketch], h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+    """``bool[len(sketches), n]``: the membership of each hashed probe in
+    each sketch.  The k probe positions are computed once per distinct
+    (m, k) and resolved with one gather per sketch, in chunks of
+    ``_HASH_CHUNK`` probes so scratch stays bounded."""
+    out = np.empty((len(sketches), len(h1)), dtype=bool)
+    shapes: dict[tuple[int, int], list[int]] = {}
+    for b, sk in enumerate(sketches):
+        shapes.setdefault((sk.m, sk.k), []).append(b)
+    for lo in range(0, len(h1), _HASH_CHUNK):
+        hi = lo + _HASH_CHUNK
+        for idx in shapes.values():
+            words, masks = sketches[idx[0]].probe_positions(h1[lo:hi], h2[lo:hi])
+            for b in idx:
+                out[b, lo:hi] = sketches[b].hits_at(words, masks)
+    return out
 
 
 def _range_hits(
@@ -76,9 +94,10 @@ def _range_hits(
     the oldest bucket's start (``None`` for an empty cache).  A range
     with ``lo > hi`` (markercache.cpp:164) or ending before ``oldest``
     (:166) is all False.  Probes are hashed once, and only when some
-    range is live (:168-169); each bucket overlapping a live range
-    (inclusive, :271-274) is probed once and ORed into the column of
-    every range it overlaps."""
+    live range overlaps some bucket (:168-169); each bucket overlapping
+    a live range (inclusive, :271-274) is probed once
+    (:func:`_bucket_hits`) and ORed into the column of every range it
+    overlaps."""
     out = np.zeros((len(probes), len(ranges)), dtype=bool)
     live = [
         (j, lo, hi) for j, (lo, hi) in enumerate(ranges)
@@ -86,16 +105,17 @@ def _range_hits(
     ]
     if not live or not len(probes):
         return out
-    h1 = h2 = None
+    probed = []  # (sketch, columns of the live ranges it overlaps)
     for s, e, sk in buckets:
         cols = [j for j, lo, hi in live if s <= hi and lo <= e]
-        if not cols:
-            continue
-        if h1 is None:
-            h1, h2 = mmh3_x64_128(probes)
-        hits = sk.contains_hashes(h1, h2)
-        for j in cols:
-            out[:, j] |= hits
+        if cols:
+            probed.append((sk, cols))
+    if not probed:
+        return out
+    h1, h2 = mmh3_x64_128(probes)
+    member = _bucket_hits([sk for sk, _ in probed], h1, h2)
+    for hits, (_, cols) in zip(member, probed):
+        out[:, cols] |= hits[:, None]
     return out
 
 

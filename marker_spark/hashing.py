@@ -4,8 +4,8 @@ The reference hashes each marker once with MurmurHash3_x64_128 (seed 0)
 and derives k Bloom probe positions from the 128-bit result via
 Kirsch–Mitzenmacher double hashing (/root/reference/shmbloomfilter.cpp:12-24,
 algorithm body /root/reference/mmh3.cpp:70-181).  This module reimplements
-the algorithm from the public MurmurHash3 specification as a numpy batch
-kernel: one call hashes N variable-length byte strings with
+the algorithm from the public MurmurHash3 specification as numpy batch
+kernels: one call hashes N variable-length byte strings with
 O(max_len/16) vectorized rounds instead of a per-row Python loop.
 
 Exactness notes:
@@ -13,9 +13,11 @@ Exactness notes:
    semantics; golden-vector tests (tests/test_mmh3.py) pin every tail
    length 0..257 against the reference binary's output.
  * The C++ tail switch (fallthrough ORs of up to 15 trailing bytes) is
-   equivalent to a little-endian read of 16 zero-padded bytes, so we
-   zero-pad each row and read the tail unconditionally; a zero k1/k2
-   makes the tail mix a no-op, exactly like `case 0`.
+   equivalent to a little-endian read of the two words after the last
+   full block with the bytes past the row's end masked to zero, so the
+   variable-length kernel reads both tail words unconditionally and
+   masks them by the remaining length; a zero k1/k2 makes the tail mix
+   a no-op, exactly like `case 0`.
 """
 
 from __future__ import annotations
@@ -29,12 +31,21 @@ _A1 = np.uint64(0x52DCE729)
 _A2 = np.uint64(0x38495AB5)
 _F1 = np.uint64(0xFF51AFD7ED558CCD)
 _F2 = np.uint64(0xC4CEB9FE1A85EC53)
-_U64_1 = np.uint64(1)
+_R27, _R31, _R33, _R37 = (np.uint64(r) for r in (27, 31, 33, 37))
+# _TAIL_MASK[r] keeps the low r bytes of a little-endian word (r = 0..8)
+_TAIL_MASK = np.array([(1 << (8 * r)) - 1 for r in range(9)], dtype=np.uint64)
 
 
 def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
     r = np.uint64(r)
     return (x << r) | (x >> (np.uint64(64) - r))
+
+
+def _rotl_into(x: np.ndarray, left: np.uint64, right: np.uint64, tmp: np.ndarray) -> None:
+    """x = rotl64(x, left) in place (right = 64 - left), via scratch tmp."""
+    np.right_shift(x, right, out=tmp)
+    x <<= left
+    x |= tmp
 
 
 def _fmix64(k: np.ndarray) -> np.ndarray:
@@ -46,69 +57,77 @@ def _fmix64(k: np.ndarray) -> np.ndarray:
     return k
 
 
-def mmh3_x64_128_padded(
-    padded: np.ndarray, lengths: np.ndarray, seed: int = 0
-) -> tuple[np.ndarray, np.ndarray]:
-    """Hash N byte strings stored as a zero-padded uint8 matrix.
+def _mmh3_ragged(flat: np.ndarray, offsets: np.ndarray, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """MurmurHash3_x64_128 of the N >= 1 rows ``flat[offsets[i]:offsets[i+1]]``
+    with no padded matrix: scratch is O(span bytes), not O(N * max_len)."""
+    n = len(offsets) - 1
+    lo, hi = int(offsets[0]), int(offsets[-1])
+    buf = np.zeros(hi - lo + 16, dtype=np.uint8)  # the span + 16 zero bytes
+    buf[: hi - lo] = flat[lo:hi]
+    # little-endian u64 at EVERY byte offset: one unaligned strided view
+    words = np.ndarray((len(buf) - 7,), dtype="<u8", buffer=buf, strides=(1,))
+    starts = offsets[:-1] - lo
+    lengths = np.diff(offsets)
+    nblocks = lengths // 16
 
-    ``padded`` is [N, L] uint8 with L a multiple of 16 and at least 16
-    bytes of guaranteed zero padding after each row's ``lengths[i]``
-    bytes.  Returns (h1, h2) uint64 arrays of shape [N].
-    """
-    n = padded.shape[0]
-    lengths = lengths.astype(np.int64, copy=False)
+    # Rows sorted by block count, longest first: the rows still hashing
+    # at block j are the prefix [:active[j]].
+    order = np.argsort(-nblocks, kind="stable")
+    s_starts, s_nblocks = starts[order], nblocks[order]
     h1 = np.full(n, seed, dtype=np.uint64)
     h2 = np.full(n, seed, dtype=np.uint64)
-
-    nblocks = lengths // 16
-    max_blocks = int(nblocks.max(initial=0))
-    # Little-endian uint64 view: row-major pairs (k1, k2) per 16-byte block.
-    blocks = padded.view("<u8").reshape(n, -1)
-
-    for j in range(max_blocks):
-        active = nblocks > j
-        k1 = blocks[:, 2 * j].copy()
-        k2 = blocks[:, 2 * j + 1].copy()
-
+    max_blocks = int(s_nblocks[0])
+    if max_blocks:
+        active = n - np.cumsum(np.bincount(s_nblocks, minlength=max_blocks)[:max_blocks])
+        first = np.concatenate(([0], np.cumsum(active[:-1])))
+        # byte offset of block j of each row in [:active[j]], block-major
+        pos = np.arange(int(active.sum()), dtype=np.int64)
+        pos -= np.repeat(first, active)
+        pos = s_starts[pos]
+        pos += np.repeat(np.arange(0, 16 * max_blocks, 16, dtype=np.int64), active)
+        k1 = words[pos]
+        pos += 8
+        k2 = words[pos]
+        del pos
+        tmp = np.empty(len(k1), dtype=np.uint64)
         k1 *= _C1
-        k1 = _rotl64(k1, 31)
+        _rotl_into(k1, _R31, _R33, tmp)
         k1 *= _C2
-        nh1 = h1 ^ k1
-        nh1 = _rotl64(nh1, 27)
-        nh1 += h2
-        nh1 = nh1 * _M5 + _A1
-
         k2 *= _C2
-        k2 = _rotl64(k2, 33)
+        _rotl_into(k2, _R33, _R31, tmp)
         k2 *= _C1
-        nh2 = h2 ^ k2
-        nh2 = _rotl64(nh2, 31)
-        nh2 += nh1
-        nh2 = nh2 * _M5 + _A2
+        for f, c in zip(map(int, first), map(int, active)):
+            a1, a2, t = h1[:c], h2[:c], tmp[:c]  # in-place on the prefix
+            a1 ^= k1[f : f + c]
+            _rotl_into(a1, _R27, _R37, t)
+            a1 += a2
+            a1 *= _M5
+            a1 += _A1
+            a2 ^= k2[f : f + c]
+            _rotl_into(a2, _R31, _R33, t)
+            a2 += a1
+            a2 *= _M5
+            a2 += _A2
 
-        h1 = np.where(active, nh1, h1)
-        h2 = np.where(active, nh2, h2)
-
-    # Tail: read 16 zero-padded bytes at the first byte past the last
-    # full block.  Zero k's make each mix a no-op (case 0 of the switch).
-    tail_off = nblocks * 16
-    idx = tail_off[:, None] + np.arange(16, dtype=np.int64)[None, :]
-    tail_bytes = np.take_along_axis(padded, idx, axis=1)
-    tail_u64 = np.ascontiguousarray(tail_bytes).view("<u8")
-    k1 = tail_u64[:, 0].copy()
-    k2 = tail_u64[:, 1].copy()
-
+    # Tail: the two words after the last full block, masked to the
+    # 0..15 remaining bytes (bytes past a row's end belong to the next
+    # row or the zero pad).  A zero k1/k2 makes its mix a no-op, like
+    # `case 0` of the reference's switch.
+    tail = s_starts + 16 * s_nblocks
+    s_lengths = lengths[order]
+    rem = s_lengths - 16 * s_nblocks
+    k1 = words[tail] & _TAIL_MASK[np.minimum(rem, 8)]
+    k2 = words[tail + 8] & _TAIL_MASK[np.maximum(rem - 8, 0)]
     k2 *= _C2
     k2 = _rotl64(k2, 33)
     k2 *= _C1
-    h2 = h2 ^ k2
-
+    h2 ^= k2
     k1 *= _C1
     k1 = _rotl64(k1, 31)
     k1 *= _C2
-    h1 = h1 ^ k1
+    h1 ^= k1
 
-    ulen = lengths.astype(np.uint64)
+    ulen = s_lengths.astype(np.uint64)
     h1 ^= ulen
     h2 ^= ulen
     h1 += h2
@@ -117,50 +136,20 @@ def mmh3_x64_128_padded(
     h2 = _fmix64(h2)
     h1 += h2
     h2 += h1
-    return h1, h2
-
-
-def _pad_flat(flat: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    """Scatter N back-to-back byte strings (``flat``, row i holding
-    ``lengths[i]`` bytes) into the zero-padded [N, L] matrix of
-    :func:`mmh3_x64_128_padded` with one masked copy: a boolean mask
-    assignment fills the True cells in row-major order, which is
-    exactly the order of ``flat``."""
-    width = ((int(lengths.max(initial=0)) // 16) + 2) * 16  # >=16 zero bytes after every row
-    padded = np.zeros((len(lengths), width), dtype=np.uint8)
-    padded[np.arange(width) < lengths[:, None]] = flat
-    return padded
-
-
-def pad_bytes(items: list[bytes] | np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Pack a list (or object array) of byte strings into the
-    zero-padded matrix shape required by :func:`mmh3_x64_128_padded`:
-    one ``join``, then :func:`_pad_flat` — no per-row Python loop."""
-    lengths = np.fromiter(map(len, items), dtype=np.int64, count=len(items))
-    flat = np.frombuffer(b"".join(items), dtype=np.uint8)
-    return _pad_flat(flat, lengths), lengths
+    o1 = np.empty(n, dtype=np.uint64)
+    o2 = np.empty(n, dtype=np.uint64)
+    o1[order] = h1
+    o2[order] = h2
+    return o1, o2
 
 
 def mmh3_x64_128(items: list[bytes], seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
-    """Hash a Python list of byte strings (convenience wrapper).
-
-    Chunked like the fixed-width path (CLAUDE.md: 64k chunks measured
-    6.8x on multi-M elementwise chains) — per-chunk padding also bounds
-    the [chunk, max_len] scratch matrix, so one long outlier row cannot
-    blow the allocation up to N * max_len."""
-    n = len(items)
-    if n == 0:
-        e = np.empty(0, dtype=np.uint64)
-        return e, e
-    if n > _HASH_CHUNK:
-        h1 = np.empty(n, dtype=np.uint64)
-        h2 = np.empty(n, dtype=np.uint64)
-        for lo in range(0, n, _HASH_CHUNK):
-            hi = min(lo + _HASH_CHUNK, n)
-            h1[lo:hi], h2[lo:hi] = mmh3_x64_128(items[lo:hi], seed)
-        return h1, h2
-    padded, lengths = pad_bytes(items)
-    return mmh3_x64_128_padded(padded, lengths, seed=seed)
+    """Hash a Python list (or object array) of byte strings: one
+    ``join`` into a flat buffer plus offsets, then :func:`mmh3_offsets`."""
+    lengths = np.fromiter(map(len, items), dtype=np.int64, count=len(items))
+    offsets = np.zeros(len(items) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    return mmh3_offsets(np.frombuffer(b"".join(items), dtype=np.uint8), offsets, seed)
 
 
 def mmh3_fixed_width(matrix: np.ndarray, seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
@@ -327,24 +316,18 @@ def mmh3_offsets(flat: np.ndarray, offsets: np.ndarray, seed: int = 0) -> tuple[
     """Hash N variable-length byte strings stored Arrow-style: a flat
     uint8 buffer plus int offsets of length N+1 (row i spans
     flat[offsets[i]:offsets[i+1]]; offsets need not start at 0, as in a
-    sliced Arrow BinaryArray).  The fast path when the input already
-    lives in Arrow buffers: no Python bytes objects, one masked copy
-    into the padded matrix (:func:`_pad_flat`).
-
-    Chunked on rows (see :func:`mmh3_x64_128`): each chunk pads to its
-    OWN max length, keeping scratch in cache and bounding allocation."""
+    sliced Arrow BinaryArray).  No Python bytes objects and no padded
+    matrix: each chunk of ``_HASH_CHUNK`` rows copies its byte span once
+    and gathers its 16-byte blocks straight from it
+    (:func:`_mmh3_ragged`)."""
     offsets = np.asarray(offsets, dtype=np.int64)
     n = len(offsets) - 1
     if n <= 0:
         e = np.empty(0, dtype=np.uint64)
         return e, e
-    if n > _HASH_CHUNK:
-        h1 = np.empty(n, dtype=np.uint64)
-        h2 = np.empty(n, dtype=np.uint64)
-        for lo in range(0, n, _HASH_CHUNK):
-            hi = min(lo + _HASH_CHUNK, n)
-            h1[lo:hi], h2[lo:hi] = mmh3_offsets(flat, offsets[lo : hi + 1], seed)
-        return h1, h2
-    lengths = np.diff(offsets)
-    padded = _pad_flat(flat[offsets[0] : offsets[-1]], lengths)
-    return mmh3_x64_128_padded(padded, lengths, seed=seed)
+    h1 = np.empty(n, dtype=np.uint64)
+    h2 = np.empty(n, dtype=np.uint64)
+    for lo in range(0, n, _HASH_CHUNK):
+        hi = min(lo + _HASH_CHUNK, n)
+        h1[lo:hi], h2[lo:hi] = _mmh3_ragged(flat, offsets[lo : hi + 1], seed)
+    return h1, h2

@@ -126,6 +126,27 @@ class BloomSketch:
                 ah1, ah2 = ah1[ok], ah2[ok]
         return result
 
+    def probe_positions(self, h1: np.ndarray, h2: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """The k double-hash positions of every probe in one pass, as
+        ``(words, masks)``, both ``[k, n]``: probe j's i-th bit is
+        ``masks[i, j]`` of ``blocks[words[i, j]]``.  They depend only on
+        (m, k), so every filter of one shape can share them
+        (:meth:`hits_at`)."""
+        m = np.uint64(self.m)
+        bits = np.empty((self.k, len(h1)), dtype=np.uint64)
+        g = h1.copy()
+        for i in range(self.k):  # g = h1 + i*h2, wrapping like the reference
+            np.mod(g, m, out=bits[i])
+            g += h2
+        masks = np.left_shift(np.uint64(1), bits & np.uint64(63))
+        bits >>= np.uint64(6)
+        return bits.view(np.int64), masks
+
+    def hits_at(self, words: np.ndarray, masks: np.ndarray) -> np.ndarray:
+        """Membership at :meth:`probe_positions` of a filter with this
+        (m, k): one gather of all k words per probe, no early-out."""
+        return (self.blocks[words] & masks).all(axis=0)
+
     def contains(self, items: list[bytes]) -> np.ndarray:
         h1, h2 = mmh3_x64_128(items)
         return self.contains_hashes(h1, h2)

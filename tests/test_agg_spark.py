@@ -162,8 +162,8 @@ def test_unknown_group_col_rejected_up_front(spark, tokseq_df):
 
 def test_encode_series_null_cells():
     """A bytes marker column with a stray NULL must encode, not crash
-    (regression: the vectorized path chose by first cell and len(None)
-    blew up in pad_bytes)."""
+    (regression: the vectorized path chose by first cell and then took
+    len(None) when hashing)."""
     import pandas as pd
 
     from marker_spark.kernels import encode_series
@@ -173,3 +173,43 @@ def test_encode_series_null_cells():
     assert encode_series(pd.Series([None, None], dtype=object)) == [b"None", b"None"]
     assert encode_series(pd.Series(["a", None])) == [b"a", b"None"]
     assert encode_series(pd.Series([], dtype=object)) == []
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_salt_count_matches_case_when_chain(spark, ansi):
+    """The map-literal salt equals the CASE WHEN chain it replaced for
+    awkward group names, the NULL_KEY sentinel, a NULL row and a group
+    missing from the shares, with and without ANSI mode; the
+    repartition places every row as the chain would."""
+    from pyspark.sql import functions as F
+
+    from marker_spark.agg import NULL_KEY, _salt_count, salted_repartition
+
+    shares = {'say "hi"': 0.3, "back\\slash": 0.2, "日本語 café": 0.25, NULL_KEY: 0.15, "plain": 0.1}
+    parallelism = 8
+    counts = {g: max(1, round(s * parallelism)) for g, s in shares.items()}
+    chain = F.lit(1)
+    for g, s in counts.items():
+        chain = F.when(F.col("g") == g, F.lit(s)).otherwise(chain)
+    names = list(shares) + [None, "unknown"]
+    rows = [(i, names[i % len(names)]) for i in range(70)]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        df = spark.createDataFrame(rows, "i long, g string").repartition(3, "i")
+        got = df.select("i", "g", _salt_count("g", counts).alias("new"), chain.alias("old")).collect()
+        assert len(got) == len(rows)
+        assert all(r["new"] == r["old"] for r in got), [r for r in got if r["new"] != r["old"]]
+        assert {r["g"]: r["new"] for r in got}[None] == 1
+        assert {r["g"]: r["new"] for r in got}["unknown"] == 1
+        assert {r["g"]: r["new"] for r in got}[NULL_KEY] == counts[NULL_KEY]
+
+        def placement(salted):
+            return sorted(salted.select("i", F.spark_partition_id().alias("p")).collect())
+
+        reference = df.withColumn(
+            "__salt", (F.monotonically_increasing_id() % chain).cast("int")
+        ).repartition(parallelism * 4, "g", "__salt").drop("__salt")
+        assert placement(salted_repartition(df, "g", shares, parallelism)) == placement(reference)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

@@ -83,6 +83,18 @@ def test_kll_tdigest_agg_grouped(spark, tok, pdf):
         assert lo <= td[(src,)].quantile(0.5) <= hi, src
 
 
+def test_input_projection_keeps_dotted_names(spark, tok):
+    """``api._inputs`` projects by quoted name: a dot or a backtick in a
+    column name is part of the name, not struct-field access."""
+    from marker_spark.api import _inputs
+
+    for name in ("n.tok", "n`tok"):
+        df = tok.withColumnRenamed("n_tok", name)
+        got = _inputs(df, lambda _k: KllSketch(), name, "numeric", ["source", name])
+        assert got.columns == ["source", name]
+        assert got.schema[name] == df.schema[name]
+
+
 def test_minhash_agg_self_similarity(spark, tok):
     sigs = collect_sketches(minhash_agg(tok, group_cols=["source"]), MinHashSketch, ["source"])
     keys = sorted(sigs)

@@ -399,3 +399,95 @@ def test_multi_range_udf_matches_lookup_from_per_range(spark):
     inserted = len(markers) - 300
     assert got["f0"][:inserted].all()  # no false negatives over all time
     assert got["f1"][300:600].all() and not got["f3"].any() and not got["f4"].any()
+
+
+def _two_shape_ring(tmp_path):
+    """A ring after a resume under other ``CacheParams``: three restored
+    buckets keep the checkpoint's (m, k), the open bucket has the new
+    one.  Returns the cache, per-bucket markers (slots 0-1 evicted,
+    slot 5 in the open bucket) and never-inserted markers."""
+    dur = 1000
+    old = CacheParams(duration=dur, lifespan=3 * dur, fp=0.01, total_capacity=4_000)
+    new = CacheParams(duration=dur, lifespan=3 * dur, fp=0.0001, total_capacity=9_000)
+    t0 = 1_000_000
+    markers = [[f"s{i}-m{j}".encode() for j in range(150)] for i in range(6)]
+    writer = SketchCache(old, str(tmp_path))
+    for i in range(5):
+        sk = writer._new_sketch()
+        sk.insert(markers[i])
+        writer._merge_into_bucket(t0 + i * dur, sk, 0.0, "test")
+    writer.save()
+    cache = SketchCache.resume(new, str(tmp_path), now=t0 + 5 * dur + 10)
+    assert [b.start for b in cache.buckets] == [t0 + i * dur for i in (2, 3, 4, 5)]
+    assert cache.buckets[-1].end == OPEN_END
+    cache.buckets[-1].sketch.insert(markers[5])
+    shapes = {(b.sketch.m, b.sketch.k) for b in cache.buckets}
+    assert len(shapes) == 2, shapes
+    absent = [f"absent-{j}".encode() for j in range(300)]
+    return cache, t0, dur, markers, absent
+
+
+def _ring_ranges(t0, dur):
+    return [
+        (t0 + 3 * dur, t0 + 4 * dur - 1),   # single bucket
+        (t0 + 3 * dur + 5, OPEN_END),       # three buckets, both shapes
+        (0, OPEN_END),                      # all time
+        (t0 + 4 * dur, t0 + 3 * dur),       # inverted
+        (t0, t0 + 2 * dur - 1),             # evicted: ends before the oldest
+        (OPEN_END + 1, OPEN_END + 5),       # live, but overlaps no bucket
+    ]
+
+
+def test_range_hits_over_two_bloom_shapes(tmp_path, monkeypatch):
+    """``_range_hits`` over a ring of two (m, k) shapes equals the OR of
+    per-bucket ``contains_hashes`` over the overlapping buckets, for
+    single, multi, inverted, evicted and overlaps-none ranges; calls
+    that the guards answer hash nothing."""
+    from marker_spark.cache import sketch_cache
+    from marker_spark.hashing import mmh3_x64_128
+
+    cache, t0, dur, markers, absent = _two_shape_ring(tmp_path)
+    probes = [m for ms in markers for m in ms] + absent
+    ranges = _ring_ranges(t0, dur)
+    newest_first = [(b.start, b.end, b.sketch) for b in reversed(cache.buckets)]
+    oldest = cache.buckets[0].start
+
+    h1, h2 = mmh3_x64_128(probes)
+    want = np.zeros((len(probes), len(ranges)), dtype=bool)
+    for j, (lo, hi) in enumerate(ranges):
+        if lo <= hi and hi >= oldest:
+            for b in cache.buckets:
+                if b.overlaps(lo, hi):
+                    want[:, j] |= b.sketch.contains_hashes(h1, h2)
+    calls = []
+    monkeypatch.setattr(sketch_cache, "mmh3_x64_128", lambda p: calls.append(len(p)) or mmh3_x64_128(p))
+    got = sketch_cache._range_hits(newest_first, oldest, probes, ranges)
+    assert calls == [len(probes)]  # hashed once for every range
+    np.testing.assert_array_equal(got, want)
+    # no false negatives: slots 2-5 over all time, slot 3 alone, slots 3-5
+    assert got[300:900, 2].all() and got[450:600, 0].all() and got[450:900, 1].all()
+    assert not got[:, 3:].any()
+    for j, (lo, hi) in enumerate(ranges):
+        np.testing.assert_array_equal(cache.lookup_from(lo, hi, probes), want[:, j])
+
+    calls.clear()
+    guard_only = ranges[3:]
+    assert not sketch_cache._range_hits(newest_first, oldest, probes, guard_only).any()
+    for lo, hi in guard_only:
+        assert not cache.lookup_from(lo, hi, probes).any()
+    assert calls == []
+
+
+def test_range_udf_matches_lookup_from_over_two_bloom_shapes(spark, tmp_path):
+    """The per-row-range UDF on the two-shape ring answers each row as
+    ``lookup_from`` over that row's range."""
+    cache, t0, dur, markers, absent = _two_shape_ring(tmp_path)
+    probes = [m for ms in markers for m in ms[:40]] + absent[:40]
+    ranges = _ring_ranges(t0, dur)
+    rows = [(i, p, lo, hi) for i, (p, (lo, hi)) in enumerate(
+        (p, r) for r in ranges for p in probes)]
+    df = spark.createDataFrame(rows, "i long, marker binary, lo long, hi long")
+    got = cache.lookup_range_join(df, "marker", "lo", "hi").orderBy("i").select("found").toPandas()
+    want = np.concatenate([cache.lookup_from(lo, hi, probes) for lo, hi in ranges])
+    np.testing.assert_array_equal(got["found"].to_numpy(), want)
+    assert want.any() and not want.all()

@@ -12,6 +12,8 @@ from pathlib import Path
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from marker_spark.hashing import (
     mmh3_fixed_width,
@@ -120,29 +122,13 @@ def _offsets_of(items):
 
 
 def _assert_both_paths(items, rows):
-    """The list path (pad_bytes) and the Arrow-offsets path both give
-    the golden hashes of ``rows`` for ``items``."""
+    """The list path and the Arrow-offsets path both give the golden
+    hashes of ``rows`` for ``items``."""
     exp_h1 = np.array([r[1] for r in rows], dtype=np.uint64)
     exp_h2 = np.array([r[2] for r in rows], dtype=np.uint64)
     for h1, h2 in (mmh3_x64_128(items), mmh3_offsets(*_offsets_of(list(items)))):
         np.testing.assert_array_equal(h1, exp_h1)
         np.testing.assert_array_equal(h2, exp_h2)
-
-
-def test_pad_bytes_layout():
-    """Every row holds its bytes, then zeros; the width is a multiple of
-    16 with at least 16 zero bytes after the longest row."""
-    from marker_spark.hashing import pad_bytes
-
-    items = [b"", b"a" * 15, b"b" * 16, b"", b"c" * 33]
-    padded, lengths = pad_bytes(items)
-    assert lengths.tolist() == [0, 15, 16, 0, 33]
-    assert padded.shape == (5, 64) and padded.dtype == np.uint8
-    for row, item in zip(padded, items):
-        assert bytes(row[: len(item)]) == item
-        assert not row[len(item):].any()
-    padded, lengths = pad_bytes([])
-    assert padded.shape == (0, 32) and len(lengths) == 0
 
 
 def test_empty_and_all_empty_batches():
@@ -197,3 +183,112 @@ def test_offsets_of_sliced_binary_array():
     e1, e2 = mmh3_x64_128(arr.to_pylist())
     np.testing.assert_array_equal(h1, e1)
     np.testing.assert_array_equal(h2, e2)
+
+
+# --- an independent oracle: scalar MurmurHash3_x64_128 in plain Python ------
+
+_M64 = (1 << 64) - 1
+_C1, _C2 = 0x87C37B91114253D5, 0x4CF5AD432745937F
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _fmix(k: int) -> int:
+    k ^= k >> 33
+    k = (k * 0xFF51AFD7ED558CCD) & _M64
+    k ^= k >> 33
+    k = (k * 0xC4CEB9FE1A85EC53) & _M64
+    return k ^ (k >> 33)
+
+
+def scalar_mmh3(data: bytes, seed: int = 0) -> tuple[int, int]:
+    """MurmurHash3_x64_128 of one byte string, one block at a time, with
+    the reference's byte-by-byte tail switch."""
+    h1 = h2 = seed
+    nblocks = len(data) // 16
+    for i in range(nblocks):
+        k1 = int.from_bytes(data[16 * i : 16 * i + 8], "little")
+        k2 = int.from_bytes(data[16 * i + 8 : 16 * i + 16], "little")
+        k1 = (_rotl((k1 * _C1) & _M64, 31) * _C2) & _M64
+        h1 = ((_rotl(h1 ^ k1, 27) + h2) * 5 + 0x52DCE729) & _M64
+        k2 = (_rotl((k2 * _C2) & _M64, 33) * _C1) & _M64
+        h2 = ((_rotl(h2 ^ k2, 31) + h1) * 5 + 0x38495AB5) & _M64
+    tail = data[16 * nblocks :]
+    k1 = k2 = 0
+    for i in reversed(range(len(tail))):  # case 15 ... case 1, falling through
+        if i >= 8:
+            k2 ^= tail[i] << (8 * (i - 8))
+        else:
+            k1 ^= tail[i] << (8 * i)
+    if len(tail) > 8:
+        h2 ^= (_rotl((k2 * _C2) & _M64, 33) * _C1) & _M64
+    if len(tail) > 0:
+        h1 ^= (_rotl((k1 * _C1) & _M64, 31) * _C2) & _M64
+    h1 ^= len(data)
+    h2 ^= len(data)
+    h1 = (h1 + h2) & _M64
+    h2 = (h2 + h1) & _M64
+    h1, h2 = _fmix(h1), _fmix(h2)
+    h1 = (h1 + h2) & _M64
+    h2 = (h2 + h1) & _M64
+    return h1, h2
+
+
+def test_long_outlier_scratch_is_bounded():
+    """One 200 KB marker among 1,000 short ones: scratch stays a small
+    multiple of the input bytes (a padded [N, max_len] matrix would take
+    ~200 MB), and every hash is exact."""
+    import tracemalloc
+
+    golden = _golden_by_len()
+    rows = [golden[n % 40] for n in range(1000)]
+    big = bytes(np.random.default_rng(3).integers(0, 256, size=200_000, dtype=np.uint8))
+    items = [r[0] for r in rows]
+    items.insert(500, big)
+    n_bytes = sum(map(len, items))
+    tracemalloc.start()
+    try:
+        h1, h2 = mmh3_x64_128(items)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak <= 8 * n_bytes, (peak, n_bytes)
+    want = [(r[1], r[2]) for r in rows]
+    want.insert(500, scalar_mmh3(big))
+    np.testing.assert_array_equal(h1, np.array([w[0] for w in want], dtype=np.uint64))
+    np.testing.assert_array_equal(h2, np.array([w[1] for w in want], dtype=np.uint64))
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    items=st.lists(st.binary(min_size=0, max_size=300), min_size=1, max_size=40),
+    before=st.integers(0, 40),
+    seed=st.integers(1, 2**32 - 1),
+    junk=st.tuples(st.binary(max_size=20), st.binary(max_size=20)),
+    data=st.data(),
+)
+def test_offsets_match_scalar_oracle_across_chunk_boundary(items, before, seed, junk, data):
+    """Random byte strings in random order, the first ``before`` of them
+    ending a full ``_HASH_CHUNK`` of rows and the rest starting the next
+    chunk, read through offsets into a buffer with bytes before and
+    after the span, under a non-zero seed: every hash equals the scalar
+    oracle's."""
+    from marker_spark.hashing import _HASH_CHUNK
+
+    items = data.draw(st.permutations(items))
+    before = min(before, len(items))
+    filler = [b"", b"f" * 17]
+    rows = [filler[i % 2] for i in range(_HASH_CHUNK - before)] + list(items)
+    lengths = np.fromiter(map(len, rows), dtype=np.int64, count=len(rows))
+    offsets = np.zeros(len(rows) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    flat = np.frombuffer(junk[0] + b"".join(rows) + junk[1], dtype=np.uint8)
+    h1, h2 = mmh3_offsets(flat, offsets + len(junk[0]), seed=seed)
+    want = {b: scalar_mmh3(b, seed) for b in set(rows)}
+    np.testing.assert_array_equal(h1, np.array([want[b][0] for b in rows], dtype=np.uint64))
+    np.testing.assert_array_equal(h2, np.array([want[b][1] for b in rows], dtype=np.uint64))
+    l1, l2 = mmh3_x64_128(rows, seed=seed)
+    np.testing.assert_array_equal(l1, h1)
+    np.testing.assert_array_equal(l2, h2)

@@ -336,6 +336,28 @@ def test_sketch_builds_enter_python_via_map_in_arrow(spark, name):
     assert "MapInPandas" not in plan
 
 
+def test_api_agg_ships_only_the_columns_it_reads(spark, tokseq_path):
+    """``kll_agg`` hands the Python partial build only the group and
+    value columns: the MapInArrow node's input is exactly
+    [source, n_tok], not the tokens arrays it would ignore."""
+    from marker_spark.api import kll_agg
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    found = []
+
+    def walk(node):
+        if node.nodeName() == "MapInArrow":
+            found.append([a.name() for a in seq(node.child().output())])
+        for child in seq(node.children()):
+            walk(child)
+
+    df = kll_agg(spark.read.parquet(tokseq_path), "n_tok", group_cols=["source"])
+    walk(df._jdf.queryExecution().sparkPlan())
+    assert found == [["source", "n_tok"]], found
+
+
 @pytest.mark.parametrize("name", ["embedding_near_dup", "semdedup"])
 def test_embedding_pair_cosines_run_in_grouped_pandas(spark, name):
     """Blocked pair cosines come from one grouped numpy pass per block
