@@ -14,25 +14,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marker_spark.obs import spread_thin
+
 SOURCES_TBL = ["region", "nation", "customer", "supplier", "part", "orders",
                "lineitem", "events", "documents", "embeddings"]
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Conditional round-robin spread of a thin scan (the ops.dedup
-    ``_spread_for_explode`` guard, applied at entry level): fixture
-    parquet with one row group serializes every downstream stage that
-    inherits the scan partitioning through a persist.  No-op on
-    production-parallel scans; per-row/per-doc computations are
-    partition-independent, so results are unchanged."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() * 2 <= sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
 
 
 def _utc(spark: SparkSession) -> None:
@@ -697,7 +686,7 @@ def q_corpus_prep_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     # stage 1: Gopher filter (fixture word band, as q_gopher_quality)
     kept = register(
-        with_gopher_signals(_spread(docs))
+        with_gopher_signals(spread_thin(docs))
         .where(gopher_pass_col(min_words=30))
         .select("doc_id", "source", "text")
         .persist()
@@ -766,7 +755,7 @@ def q_boilerplate_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents")
     aug = register(
-        _spread(docs).select(
+        spread_thin(docs).select(
             "doc_id",
             F.when(
                 F.col("doc_id") % 3 == 0,
@@ -2317,7 +2306,7 @@ def _cache_from_events(spark: SparkSession, sf_dir: str):
     # spread the thin fixture scan: the insert pass and the probe UDF
     # would otherwise run on one task; Bloom inserts are OR-commutative,
     # so the bucket states are byte-identical either way
-    ev = _spread(_read(spark, sf_dir, "events")).withColumn(
+    ev = spread_thin(_read(spark, sf_dir, "events")).withColumn(
         "marker", F.concat_ws("|", F.col("event_id"), F.col("props"))
     )
     cache = SketchCache(params)

@@ -28,6 +28,12 @@ operator from marker_spark.ops:
                         (ops/dedup.boilerplate_spans)
   5. write the clean corpus + one JSON report line
 
+The report's row counts are observed on the actions the pass runs
+anyway (marker_spark.obs.RowCounts); after_exact_dedup alone is a count
+action, the one that materializes the persisted exact stage.  Off a
+local master, input_docs, after_quality and near_dup_pairs_verified are
+plain counts again: there a re-run map task would be observed twice.
+
 Usage:
     zip -r dist/marker_spark.zip marker_spark
     spark-submit --master local[8] --py-files dist/marker_spark.zip \\
@@ -40,6 +46,27 @@ from __future__ import annotations
 import argparse
 import json
 import time
+
+
+def _check_args(ap: argparse.ArgumentParser, args: argparse.Namespace) -> None:
+    """Reject out-of-range numeric flags before a session starts."""
+    for flag, lo, hi in (
+        ("min_quality", 0, 1), ("jaccard", 0, 1), ("semdedup_threshold", -1, 1),
+    ):
+        if not lo <= getattr(args, flag) <= hi:
+            ap.error(f"--{flag.replace('_', '-')} must be in [{lo}, {hi}]")
+    for flag, lo in (
+        ("min_words", 0), ("shingle", 1), ("max_bucket", 2), ("span_k", 0),
+        ("span_min_len", 1), ("span_max_df", 1), ("semdedup_cells", 1),
+        # lsh_candidate_pairs cuts 32 bands of 4 rows: a shorter signature
+        # leaves empty bands that every doc shares, one corpus-wide bucket
+        ("num_perm", 128),
+    ):
+        if getattr(args, flag) < lo:
+            ap.error(f"--{flag.replace('_', '-')} must be >= {lo}")
+    if args.boilerplate and args.span_k <= 0:
+        ap.error("--boilerplate requires --span-k > 0 (it shares the "
+                 "span-excision stage's gram size)")
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -78,9 +105,7 @@ def main(argv: list[str] | None = None) -> None:
                          "higher-id rule — keeps exactly one doc per near-dup "
                          "cluster, and it is the best one")
     args = ap.parse_args(argv)
-    if args.boilerplate and args.span_k <= 0:
-        ap.error("--boilerplate requires --span-k > 0 (it shares the "
-                 "span-excision stage's gram size)")
+    _check_args(ap, args)
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -91,6 +116,7 @@ def main(argv: list[str] | None = None) -> None:
         lsh_candidate_pairs,
         minhash_signatures,
     )
+    from marker_spark.obs import RowCounts
     from marker_spark.ops.text import with_text_stats
 
     owns_session = SparkSession.getActiveSession() is None
@@ -98,17 +124,21 @@ def main(argv: list[str] | None = None) -> None:
     t0 = time.time()
     idc, txt = args.id_col, args.text_col
 
-    docs = spark.read.parquet(args.input)
-    n_in = docs.count()
+    # the report's counts come from the actions that run anyway: the
+    # exact stage's persist count runs `docs` and `kept`, the write runs
+    # the `verified` cache build and `clean`, on every flag path
+    counts = RowCounts(spark)
+    docs = counts.observe(spark.read.parquet(args.input), "input_docs")
 
     # 1. quality filter (pure Catalyst — runs inside the scan stage)
     scored = with_text_stats(docs, text_col=txt)
     kept = scored.where(
         (F.col("quality_score") >= args.min_quality) & (F.col("n_words") >= args.min_words)
     ).drop("n_words", "avg_word_len", "punct_ratio", "stopword_ratio", "quality_score")
-    n_quality = kept.count()
+    kept = counts.observe(kept, "after_quality")
 
-    # 2. exact dedup (shuffle carries digests + ids, never text)
+    # 2. exact dedup (shuffle carries digests + ids, never text); the
+    #    count materializes the persist MinHash and the anti-join read
     exact = exact_dedup_scalable(kept, text_col=txt, id_col=idc).persist()
     n_exact = exact.count()
 
@@ -121,13 +151,12 @@ def main(argv: list[str] | None = None) -> None:
     # caps) — running the discovery-shaped shingle self-join over the
     # candidate DOC set would re-create the quadratic hot-shingle
     # blow-up LSH banding exists to avoid
-    verified = (
+    verified = counts.observe(
         ngram_jaccard_for_pairs(
             cands, exact, text_col=txt, id_col=idc, shingle=args.shingle
-        )
-        .where(F.col("jaccard") >= args.jaccard)
-        .persist()  # referenced by both the anti-join and the report count
-    )
+        ).where(F.col("jaccard") >= args.jaccard),
+        "near_dup_pairs_verified",
+    ).persist()  # observed BEFORE the persist: the cache build counts it
     if args.keep_best:
         # cluster-level selection: transitive closure over verified
         # pairs, then keep the highest-quality member of each cluster
@@ -247,15 +276,15 @@ def main(argv: list[str] | None = None) -> None:
                 .join(cleaned_text, idc, "inner")
             )
 
+    clean = counts.observe(clean, "after_near_dedup", result_stage=True)
     clean.write.mode("overwrite").parquet(args.output)
-    n_out = spark.read.parquet(args.output).count()
 
     print(json.dumps({
-        "input_docs": n_in,
-        "after_quality": n_quality,
+        "input_docs": counts["input_docs"],
+        "after_quality": counts["after_quality"],
         "after_exact_dedup": n_exact,
-        "after_near_dedup": n_out,
-        "near_dup_pairs_verified": verified.count(),
+        "after_near_dedup": counts["after_near_dedup"],
+        "near_dup_pairs_verified": counts["near_dup_pairs_verified"],
         "duplicated_spans_excised": n_spans,
         "boilerplate_spans_excised": n_boiler,
         "semantic_dups_dropped": n_semdup,

@@ -176,6 +176,7 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import functions as F
 
     from marker_spark.cacheutil import register, release_all
+    from marker_spark.obs import RowCounts
     from marker_spark.ops.dedup import (
         incremental_lsh_pairs,
         minhash_signatures,
@@ -278,7 +279,10 @@ def main(argv: list[str] | None = None) -> None:
         out = verified.unionByName(
             cross.selectExpr("id_a", "id_b", "CAST(NULL AS DOUBLE) AS jaccard")
         )
+    counts = RowCounts(spark)
+    out = counts.observe(out, "candidate_pairs", result_stage=True)
     out.write.mode("overwrite").parquet(args.pairs_out)
+    n_pairs = counts["candidate_pairs"]
 
     if not args.no_append:
         # append AFTER the pairs are materialized: the pair plan reads
@@ -300,8 +304,6 @@ def main(argv: list[str] | None = None) -> None:
             # a mis-probed existence check said wasn't there
             new_bands.write.mode("append").parquet(args.index)
     release_all()
-
-    n_pairs = spark.read.parquet(args.pairs_out).count()
     print(json.dumps({
         "input": args.input,
         "index": args.index,
@@ -322,6 +324,7 @@ def _run_compact(spark, args, t0) -> None:
     from pyspark.sql import functions as F
 
     from marker_spark.cacheutil import release_all
+    from marker_spark.obs import RowCounts
     from marker_spark.ops.dedup import compact_band_index
     from marker_spark.tables import delete_path, path_exists
 
@@ -355,7 +358,10 @@ def _run_compact(spark, args, t0) -> None:
     # explicit schema: the staged rows read back with the index's own
     # schema instead of an inferred one (an empty retention pass still
     # reads as a typed, empty index)
-    staged = spark.read.schema(index.schema).parquet(tmp)
+    counts = RowCounts(spark)
+    staged = counts.observe(
+        spark.read.schema(index.schema).parquet(tmp), "rows_after", result_stage=True
+    )
     # tombstones FIRST: a crash between the two writes then only
     # double-counts reclaimed buckets (conservative — they stay
     # capped); index-first would leave them permanently UN-capped
@@ -375,7 +381,7 @@ def _run_compact(spark, args, t0) -> None:
         )
     else:
         staged.write.mode("overwrite").parquet(args.index)
-    n_after = staged.count()
+    n_after = counts["rows_after"]
     delete_path(spark, tmp)
     release_all()
     print(json.dumps({
@@ -400,12 +406,17 @@ def _run_rebuild(spark, args, t0) -> None:
     from pyspark.sql import functions as F
 
     from marker_spark.cacheutil import release_all
+    from marker_spark.obs import RowCounts
     from marker_spark.ops.dedup import lsh_band_table, minhash_signatures
     from marker_spark.tables import delete_path
 
     corpus = spark.read.parquet(args.corpus).select("doc_id", "text")
     sigs = minhash_signatures(corpus, num_perm=args.bands * args.rows_per_band)
-    bands = lsh_band_table(sigs, bands=args.bands, rows_per_band=args.rows_per_band)
+    counts = RowCounts(spark)
+    bands = counts.observe(
+        lsh_band_table(sigs, bands=args.bands, rows_per_band=args.rows_per_band),
+        "index_rows", result_stage=True,
+    )
     if args.bucketed:
         table = _register_bucketed_index(spark, args.index, args.n_buckets)
         (
@@ -417,10 +428,9 @@ def _run_rebuild(spark, args, t0) -> None:
             .write.mode("overwrite")
             .insertInto(table, overwrite=True)
         )
-        n_rows = spark.read.table(table).count()
     else:
         bands.write.mode("overwrite").parquet(args.index)
-        n_rows = spark.read.parquet(args.index).count()
+    n_rows = counts["index_rows"]
     cleared = delete_path(spark, _frozen_path(args.index))
     release_all()
     print(json.dumps({

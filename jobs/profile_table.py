@@ -36,6 +36,7 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
 
     from marker_spark.cacheutil import release_all
+    from marker_spark.obs import RowCounts
     from marker_spark.ops.profile import profile_table
 
     spark = (
@@ -49,9 +50,11 @@ def main(argv: list[str] | None = None) -> None:
     prof = profile_table(
         df, columns=cols, top_k=args.top_k, mg_k=args.mg_k, hll_p=args.hll_p
     )
+    counts = RowCounts(spark)
+    prof = counts.observe(prof, "columns_profiled", result_stage=True)
     prof.write.mode("overwrite").parquet(args.output)
+    rows = counts["columns_profiled"]
     release_all()
-    rows = spark.read.parquet(args.output).count()
     print(json.dumps({
         "input": args.input,
         "output": args.output,

@@ -418,7 +418,6 @@ class SketchCache:
                     "start": b.start,
                     "end": b.end,
                     "n_markers": b.n_markers,
-                    "build_secs": round(b.build_secs, 4),
                     "source": b.source,
                     "sealed": b.end != OPEN_END,
                 }

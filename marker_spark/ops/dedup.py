@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .text import words_col
 from ..cacheutil import register
+from ..obs import spread_thin
 
 
 def _perm_keys(num_perm: int, seed: int = 42) -> np.ndarray:
@@ -95,7 +96,7 @@ def _map_shingle_batches(
     # group scan both the JVM word-hash pass and the Python shingle
     # kernel would otherwise run on 1-2 tasks (per-doc outputs are
     # batch-independent, so this is result-neutral)
-    src = _spread_for_explode(df).select(
+    src = spread_thin(df).select(
         F.col(id_col), _word_hash_col(text_col).alias("__wh")
     )
 
@@ -1211,23 +1212,6 @@ def connected_components(
     return labels.select("id", F.col("label").alias("component"))
 
 
-def _spread_for_explode(df: DataFrame) -> DataFrame:
-    """The gram explode multiplies each doc into O(chars) rows; when
-    the input arrives in fewer partitions than the cluster has slots
-    (single-row-group parquet fixtures, a coalesced upstream), the
-    explode serializes on those few tasks AND everything downstream
-    inherits the thin partitioning through the persist.  Spread the
-    cheap pre-explode doc rows first — a no-op whenever the scan is
-    already parallel, which any production-scale input is.  Measured
-    (sf0.1, local[32], 1-row-group fixture): explode+persist 5.0s ->
-    sub-second; the whole span family inherits the win."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() * 2 <= target:
-        return df.repartition(target)
-    return df
-
-
 def char_grams(
     docs: DataFrame,
     text_col: str = "text",
@@ -1247,7 +1231,7 @@ def char_grams(
             f" i -> substring({text_col}, i, {k}))"
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return _spread_for_explode(docs).select(
+    return spread_thin(docs).select(
         F.col(id_col).alias("doc_id"), F.posexplode(gram_expr).alias("idx", "g")
     ).select("doc_id", (F.col("idx") + 1).alias("pos"), "g")
 
@@ -1312,7 +1296,7 @@ def duplicated_token_spans(
     lengths are word indices/counts.  Returns (doc_a, doc_b, start_a,
     start_b, span_len) with 1-based word positions."""
     words = words_col(F.col(text_col))
-    src = _spread_for_explode(docs).select(
+    src = spread_thin(docs).select(
         F.col(id_col).alias("doc_id"), words.alias("__words")
     )
     gram_expr = F.when(

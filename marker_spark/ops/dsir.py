@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..obs import spread_thin
 from .text import words_col, word_shingles_expr
 
 #: 2^32 as a double — md5-prefix uniforms live in [0, 2^32)
@@ -77,14 +78,12 @@ def hashed_gram_buckets(
     which lets the weighting stage cover the whole population without a
     second corpus-sized stitch join (a NULL bucket never matches the
     ratio table's spine, so it scores the empty product)."""
-    from .dedup import _spread_for_explode
-
     lw = words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     ex = F.explode_outer if keep_empty else F.explode
     return (
         # the md5-per-gram pass is the expensive leg of both DSIR
         # stages; a single-row-group scan would run it on 1-2 tasks
-        _spread_for_explode(docs).select(F.col(id_col), lw.alias("__w"))
+        spread_thin(docs).select(F.col(id_col), lw.alias("__w"))
         .select(id_col, ex(word_shingles_expr("__w", n)).alias("g"))
         .select(id_col, md5_bucket_expr(F.col("g"), buckets))
     )

@@ -13,6 +13,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from ..cacheutil import register
+from ..obs import spread_thin
 
 # Tiny per-language stopword lists for the n-gram/keyword heuristic.
 # Deterministic and SQL-replicable; accuracy is secondary to determinism
@@ -41,10 +42,7 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     the package convention (_word_hash_col, bpe_ish_token_count_col)."""
     # the word-split / regex / HOF expressions are the cost of every
     # consumer; spread a thin single-row-group scan so they parallelize
-    # (per-doc expressions — partition-independent)
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() * 2 <= sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
+    df = spread_thin(df)
     text = F.coalesce(F.col(text_col), F.lit(""))
     words = words_col(text)
     n_words = F.size(words)
@@ -126,14 +124,8 @@ def winnowing_fingerprints(
     Bk1 = np.uint64(pow(1000003, k - 1, 1 << 64))
     id_type = df.schema[id_col].dataType.simpleString()
 
-    # Same guard as ops.dedup._spread_for_explode (inlined: text.py is
-    # imported by dedup.py): a single-row-group scan would run the
-    # whole batch kernel — and, through the caller's persist, every
-    # downstream stage — on one or two tasks.  Per-doc outputs are
-    # independent of batch composition, so spreading is result-neutral.
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() * 2 <= sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
+    # per-doc outputs are independent of batch composition
+    df = spread_thin(df)
 
     def batch_fn(batches):
         for batch in batches:

@@ -18,6 +18,7 @@ import pandas as pd
 
 from .datagen import VOCAB_SIZE
 from .hashing import mmh3_offsets
+from .obs import spread_thin
 
 
 def tokenize_batch(texts: pd.Series, vocab: int = VOCAB_SIZE) -> tuple[np.ndarray, np.ndarray]:
@@ -71,14 +72,9 @@ def tokenize_documents(df, text_col: str = "text", vocab: int = VOCAB_SIZE):
                 names=["doc_id", "tokens", "n_tok", "source"],
             )
 
-    # conditional spread (the ops.dedup._spread_for_explode guard,
-    # inlined): a single-row-group corpus scan would tokenize — and,
-    # through the callers' cache(), run every downstream sketch build
-    # on — 1-2 tasks.  Per-doc outputs are partition-independent.
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() * 2 <= sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
-    src = df.select(
+    # a thin corpus scan would otherwise tokenize, and through the
+    # callers' cache() run every downstream sketch build, on 1-2 tasks
+    src = spread_thin(df).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("source").cast("string").alias("source"),
         F.col(text_col).alias("__text"),

@@ -211,11 +211,11 @@ def test_ngram_below_one_rejected_up_front(spark, tok, agg, ngram):
     )
 
 
-def _rejected_before_any_job(spark, tok, group, call, match):
+def _rejected_before_any_job(spark, tok, group, call, match, exc=ValueError):
     sc = spark.sparkContext
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        with pytest.raises(ValueError, match=match):
+        with pytest.raises(exc, match=match):
             call()
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         tok.count()  # the probe sees jobs of this group

@@ -94,6 +94,23 @@ def test_ageing(events, props):
     assert n_data_buckets == 4
 
 
+def test_checkpoint_is_byte_stable(tmp_path, events):
+    """Two caches built from the same inputs write byte-identical
+    checkpoint directories: the manifest holds no wall time."""
+
+    def checkpoint(name):
+        ckpt = tmp_path / name
+        c = SketchCache(PARAMS, ckpt_dir=str(ckpt))
+        c.insert_batch(events, ts_col="ts", marker_col="marker")
+        c.open_bucket(NOW)
+        c.save()
+        return {p.name: p.read_bytes() for p in sorted(ckpt.iterdir())}
+
+    first, second = checkpoint("a"), checkpoint("b")
+    assert "manifest.json" in first
+    assert first == second
+
+
 def test_save_idempotent_and_resume(tmp_path, events, props, spark):
     ckpt = str(tmp_path / "ckpt")
     c = SketchCache(PARAMS, ckpt_dir=ckpt)

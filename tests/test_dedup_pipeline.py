@@ -238,3 +238,212 @@ def test_dedup_pipeline_keep_best_selects_highest_quality(spark, tmp_path, capsy
     assert kept_ids & {900001, 900002, 900003} == {900003}
     # fillers are untouched
     assert set(filler) <= kept_ids
+
+
+# --- report counts from observations ------------------------------------------
+
+# 30 distinct docs, plus docs that each stage drops: 5 too short for the
+# quality filter, 5 exact copies, 5 near-duplicates (one extra word)
+_FILLER = {i: " ".join(f"w{i}x{j} the of and" for j in range(30)) for i in range(30)}
+_STAGE_DOCS = {
+    **_FILLER,
+    **{100 + i: "a b c" for i in range(5)},
+    **{200 + i: _FILLER[i] for i in range(5)},
+    **{300 + i: _FILLER[5 + i] + " extra" for i in range(5)},
+}
+_PATHS = {
+    "default": [],
+    "keep-best": ["--keep-best"],
+    "span-boilerplate": ["--span-k", "16", "--boilerplate"],
+    "embeddings": ["--embeddings", None, "--semdedup-cells", "2"],
+}
+# the default pass ran 34 Spark jobs on this input when each report count
+# was its own action; it runs 23 with the counts observed
+JOB_BUDGET = 25
+_COUNTS = ("input_docs", "after_quality", "after_exact_dedup",
+           "near_dup_pairs_verified", "after_near_dedup")
+
+
+@pytest.fixture(scope="module")
+def stage_input(spark, tmp_path_factory):
+    """The stage-dropping corpus and an embeddings sidecar in which the
+    docs of one filler pair share a vector (one semantic duplicate)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("stages")
+    ids = sorted(_STAGE_DOCS)
+    pq.write_table(pa.table({
+        "doc_id": pa.array(ids, pa.int64()),
+        "text": pa.array([_STAGE_DOCS[i] for i in ids], pa.string()),
+    }), str(d / "docs.parquet"))
+    vecs = [[float(j == (10 if i == 11 else i)) for j in range(40)] for i in range(40)]
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(40), pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32())),
+    }), str(d / "emb.parquet"))
+    return str(d / "docs.parquet"), str(d / "emb.parquet")
+
+
+def _stage_counts(spark, src):
+    """The pipeline's stages at default flags, each counted with a plain
+    ``.count()``."""
+    from marker_spark.cacheutil import release_all
+    from marker_spark.ops.dedup import (
+        exact_dedup_scalable, lsh_candidate_pairs, minhash_signatures, ngram_jaccard_for_pairs,
+    )
+    from marker_spark.ops.text import with_text_stats
+
+    docs = spark.read.parquet(src)
+    kept = with_text_stats(docs).where(
+        (F.col("quality_score") >= 0.3) & (F.col("n_words") >= 5)
+    ).drop("n_words", "avg_word_len", "punct_ratio", "stopword_ratio", "quality_score")
+    exact = exact_dedup_scalable(kept)
+    cands = lsh_candidate_pairs(minhash_signatures(exact))
+    verified = ngram_jaccard_for_pairs(cands, exact).where(F.col("jaccard") >= 0.8)
+    counts = {
+        "input_docs": docs.count(), "after_quality": kept.count(),
+        "after_exact_dedup": exact.count(), "near_dup_pairs_verified": verified.count(),
+    }
+    release_all()
+    return counts
+
+
+def _run(main, argv, capsys):
+    main(argv)
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+@pytest.mark.parametrize("path", list(_PATHS))
+def test_report_counts_equal_plain_counts(spark, stage_input, tmp_path, capsys, path, aqe):
+    """The observed report counts equal plain ``.count()``s of the same
+    stages on every flag path, with AQE on and off."""
+    from jobs.dedup_pipeline import main
+
+    src, emb = stage_input
+    flags = [emb if f is None else f for f in _PATHS[path]]
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        out = str(tmp_path / "out")
+        report = _run(main, ["--input", src, "--output", out, *flags], capsys)
+        want = _stage_counts(spark, src)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    # each stage drops rows on this input
+    assert (want["input_docs"], want["after_quality"], want["after_exact_dedup"],
+            want["near_dup_pairs_verified"]) == (45, 40, 35, 5)
+    want["after_near_dedup"] = spark.read.parquet(out).count()
+    assert {k: report[k] for k in _COUNTS} == want
+    assert want["after_near_dedup"] == (29 if path == "embeddings" else 30)
+
+
+def test_report_counts_off_local_master(spark, stage_input, tmp_path, capsys, monkeypatch):
+    """Off a local master a re-run map task would be observed twice, so
+    only the written frame is observed there and the other figures are
+    plain counts: the same report, with more jobs."""
+    import marker_spark.obs as obs
+    from jobs.dedup_pipeline import main
+
+    src, _ = stage_input
+    monkeypatch.setattr(obs, "_tasks_succeed_once", lambda spark: False)
+    out = str(tmp_path / "out")
+    report = _run(main, ["--input", src, "--output", out], capsys)
+    want = _stage_counts(spark, src)
+    want["after_near_dedup"] = spark.read.parquet(out).count()
+    assert {k: report[k] for k in _COUNTS} == want
+
+
+_FAIL_ONCE = """
+import json, os, sys
+
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+import marker_spark.ops.text as text
+from jobs.dedup_pipeline import main
+
+src, out, marks = sys.argv[1:]
+spark = (SparkSession.builder.master("local[2,2]").config("spark.ui.enabled", "false")
+         .config("spark.ui.showConsoleProgress", "false")
+         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+
+
+@F.udf("boolean")
+def fail_once(doc_id):
+    ctx = TaskContext.get()
+    if ctx.attemptNumber() == 0 and ctx.partitionId() == 0:
+        open(os.path.join(marks, str(ctx.stageId())), "w").close()
+        raise RuntimeError("injected task failure")
+    return True
+
+
+with_text_stats = text.with_text_stats
+text.with_text_stats = lambda df, **kw: with_text_stats(df.where(fail_once("doc_id")), **kw)
+main(["--input", src, "--output", out])
+"""
+
+
+def test_report_counts_survive_a_task_retry(spark, stage_input, tmp_path):
+    """A task that fails once (first attempt of partition 0 in every
+    stage that reads the corpus, ``local[2,2]``) is retried; the failed
+    attempt's partial counts do not reach the report."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    src, _ = stage_input
+    marks = tmp_path / "marks"
+    marks.mkdir()
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        filter(None, [str(root), os.environ.get("PYTHONPATH")]))}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FAIL_ONCE, src, str(tmp_path / "out"), str(marks)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert list(marks.iterdir()), "no task failure was injected"
+    report = json.loads(proc.stdout.strip().splitlines()[-1])
+    want = _stage_counts(spark, src)
+    want["after_near_dedup"] = spark.read.parquet(str(tmp_path / "out")).count()
+    assert {k: report[k] for k in _COUNTS} == want
+
+
+def test_default_pass_job_budget(spark, stage_input, tmp_path, capsys):
+    """The report counts ride on the jobs the pass runs anyway: no
+    separate count job per reported figure, no output re-read."""
+    from jobs.dedup_pipeline import main
+
+    src, _ = stage_input
+    sc = spark.sparkContext
+    group = "dedup-pipeline-job-budget"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        _run(main, ["--input", src, "--output", str(tmp_path / "out")], capsys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= JOB_BUDGET, n_jobs
+
+
+@pytest.mark.parametrize("flag, value", [
+    ("--min-quality", "1.5"), ("--min-quality", "-0.1"), ("--min-words", "-1"),
+    ("--jaccard", "1.01"), ("--jaccard", "-0.5"), ("--shingle", "0"),
+    ("--max-bucket", "1"), ("--span-k", "-1"), ("--span-min-len", "0"),
+    ("--span-max-df", "0"), ("--semdedup-cells", "0"),
+    ("--semdedup-threshold", "1.5"), ("--semdedup-threshold", "-1.5"),
+    ("--num-perm", "64"),
+])
+def test_bad_numeric_flag_rejected_before_any_job(request, spark, tmp_path, capsys, flag, value):
+    from jobs.dedup_pipeline import main
+    from tests.test_api import _rejected_before_any_job
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    argv = ["--input", f"{SF_DIR}/documents.parquet", "--output", str(tmp_path / "o"), flag, value]
+    _rejected_before_any_job(spark, docs, request.node.name, lambda: main(argv), None, SystemExit)
+    assert f"{flag} must be" in capsys.readouterr().err
