@@ -131,24 +131,31 @@ def main(argv: list[str] | None = None) -> None:
     # (group, m, k) executor-side (only scalars reach the driver).
     prev_mk: dict[str, tuple[int, int]] = {}
     if args.merge_into:
-        import pandas as pd
+        import pyarrow as pa
 
-        from marker_spark.agg import unpack_state
+        from marker_spark.agg import state_prefix
+        from marker_spark.sketches.bloom import PREFIX_BYTES
 
         def _params_fn(batches):
-            for pdf in batches:
-                recs = []
-                for g, buf in zip(pdf[gcol], pdf[SKETCH_COL]):
-                    sk = unpack_state(BloomSketch, bytes(buf))
-                    recs.append((g, sk.m, sk.k))
-                yield pd.DataFrame(recs, columns=[gcol, "m", "k"])
+            # (m, k) sit in each state's header: inflate only that
+            for batch in batches:
+                shapes = [
+                    BloomSketch.shape_from_bytes(state_prefix(buf.as_buffer(), PREFIX_BYTES))
+                    for buf in batch.column(1)
+                ]
+                m, k = zip(*shapes) if shapes else ((), ())
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(0), pa.array(m, pa.int64()), pa.array(k, pa.int32())],
+                    names=["g", "m", "k"],
+                )
 
         # read once: one footer job, and a table missing either column
         # fails here, before any build
         prev = spark.read.parquet(args.merge_into).select(gcol, SKETCH_COL)
         prev_mk = {
-            r[gcol]: (int(r["m"]), int(r["k"]))
-            for r in prev.mapInPandas(_params_fn, schema=f"`{gcol}` string, m long, k int")
+            r["g"]: (int(r["m"]), int(r["k"]))
+            for r in prev.toDF("g", "s")
+            .mapInArrow(_params_fn, schema="g string, m long, k int")
             .collect()
         }
 

@@ -129,6 +129,19 @@ def _pairs_with_both_ids_in(pairs, ids_df):
     )
 
 
+def _check_args(ap: argparse.ArgumentParser, args: argparse.Namespace) -> None:
+    """Reject out-of-range numeric flags before a session starts (a
+    bucket of one doc emits no pair, so a cap below 2 emits none)."""
+    for flag, lo in (("bands", 1), ("rows_per_band", 1), ("max_bucket", 2), ("n_buckets", 1)):
+        if getattr(args, flag) < lo:
+            ap.error(f"--{flag.replace('_', '-')} must be >= {lo}")
+    if not 0 <= args.jaccard <= 1:
+        ap.error("--jaccard must be in [0, 1]")
+    fp = args.retention_prefilter_fp
+    if fp is not None and not 0 < fp < 1:
+        ap.error(f"--retention-prefilter-fp must be in (0, 1), got {fp}")
+
+
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="new batch parquet (doc_id, text); "
@@ -168,9 +181,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--no-append", action="store_true",
                     help="report pairs only; do not append the batch to the index")
     args = ap.parse_args(argv)
-    fp = args.retention_prefilter_fp
-    if fp is not None and not 0 < fp < 1:
-        ap.error(f"--retention-prefilter-fp must be in (0, 1), got {fp}")
+    _check_args(ap, args)
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F

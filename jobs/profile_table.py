@@ -32,6 +32,12 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--mg-k", type=int, default=256)
     ap.add_argument("--hll-p", type=int, default=14)
     args = ap.parse_args(argv)
+    if args.top_k < 1:
+        ap.error("--top-k must be >= 1")
+    if args.mg_k < 1:
+        ap.error("--mg-k must be >= 1")
+    if not 4 <= args.hll_p <= 18:  # HllSketch's range
+        ap.error("--hll-p must be in [4, 18]")
 
     from pyspark.sql import SparkSession
 

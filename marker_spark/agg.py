@@ -88,6 +88,16 @@ def unpack_state(sketch_cls: type, buf: bytes) -> Any:
     return sketch_cls.from_bytes(buf)
 
 
+def state_prefix(buf, n: int) -> bytes:
+    """The first ``n`` bytes of a packed state's serialization: a slice
+    of a raw state, and only as much zlib output as that of a
+    compressed one (the rest is never inflated)."""
+    head = bytes(buf[:4])
+    if head == _ZMAGIC:
+        return zlib.decompressobj().decompress(buf[4:], n)
+    return bytes(buf[4 : 4 + n] if head == _RMAGIC else buf[:n])
+
+
 def merge_partials(
     partials: DataFrame,
     sketch_cls: type,
@@ -150,6 +160,7 @@ def merge_partials(
         return arrays, list(group_cols)
 
     def _merge_table(table: "pa.Table") -> "pa.Table":
+        table = table.rename_columns(names_in)
         arrays, names = _group_arrays(table)
         if table.num_rows == 1:
             # single partial: the merged state IS the partial, and
@@ -167,6 +178,7 @@ def merge_partials(
         return pa.table(dict(zip(names, arrays)))
 
     def _finalize_table(table: "pa.Table") -> "pa.Table":
+        table = table.rename_columns(names_in)
         acc = _merge_acc(table)
         arrays, names = _group_arrays(table)
         for name, value in finalize(acc).items():
@@ -183,7 +195,11 @@ def merge_partials(
             raise ValueError("finalize requires finalize_schema")
         schema = ", ".join(out_fields + [finalize_schema])
         merge_fn = _finalize_table
-    return partials.groupBy(*group_cols).applyInArrow(merge_fn, schema=schema)
+    # positional names through applyInArrow, as in build_partials_arrow
+    names_in = group_cols + [SKETCH_COL]
+    pos = [f"_{i}" for i in range(len(names_in))]
+    partials = partials.select(*[qcol(c) for c in names_in]).toDF(*pos)
+    return partials.groupBy(*pos[:-1]).applyInArrow(merge_fn, schema=schema)
 
 
 def build_partials_arrow(
@@ -254,7 +270,7 @@ def build_partials_arrow(
         for batch in batches:
             if batch.num_rows:
                 nrows += batch.num_rows
-                batch_update(states, batch)
+                batch_update(states, batch.rename_columns(names))
         if not states:
             return
         out = _emit(states)
@@ -276,7 +292,10 @@ def build_partials_arrow(
             os.replace(mtmp, mtmp.rsplit(".tmp-", 1)[0])
         yield out
 
-    return df.mapInArrow(partition_fn, schema=schema)
+    # mapInArrow reads a dot in a name as struct-field access (df[name]):
+    # columns go in positionally and get their names back per batch
+    names = df.columns
+    return df.toDF(*[f"_{i}" for i in range(len(names))]).mapInArrow(partition_fn, schema=schema)
 
 
 def _salt_count(group_col: str, salt_counts: dict[str, int]):
@@ -316,6 +335,8 @@ def _split_groups(batch, group_cols: list[str]) -> Iterator[tuple[tuple, Any]]:
     ``take`` reorders the batch; the per-group slices are zero-copy."""
     if not group_cols:
         yield (), batch
+        return
+    if not batch.num_rows:
         return
     import pyarrow as pa
 
@@ -358,6 +379,12 @@ def _check_group_cols(df: DataFrame, group_cols: list[str] | None) -> list[str]:
     if missing:
         raise ValueError(f"group_cols not in DataFrame: {missing}")
     return group_cols
+
+
+def qcol(name: str):
+    """``F.col`` of the column named ``name``: a dot in the name is part
+    of it, not struct-field access."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def check_input_col(df: DataFrame, col: str, kind: str | None = None) -> None:

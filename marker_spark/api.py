@@ -17,9 +17,9 @@ Column semantics:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from .agg import _check_group_cols, check_input_col, sketch_agg
+from .agg import _check_group_cols, check_input_col, qcol, sketch_agg
 from .kernels import bloom_binary_updater, bloom_ngram_updater, ngram_updater
 from .params import BloomParams
 from .sketches.bloom import BloomSketch
@@ -52,7 +52,7 @@ def _inputs(df: DataFrame, factory, col: str, kind: str | None, group_cols) -> D
     factory(())
     check_input_col(df, col, kind)
     names = dict.fromkeys(_check_group_cols(df, group_cols) + [col])
-    return df.select(*[F.col("`" + c.replace("`", "``") + "`") for c in names])
+    return df.select(*[qcol(c) for c in names])
 
 
 def _values_updater(value_col: str):

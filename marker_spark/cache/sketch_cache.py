@@ -51,12 +51,13 @@ import time
 from dataclasses import asdict, dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..agg import collect_agg
-from ..hashing import _HASH_CHUNK, mmh3_x64_128
-from ..kernels import bloom_binary_updater, bloom_ngram_updater, encode_series
+from ..hashing import _HASH_CHUNK, mmh3_offsets, mmh3_x64_128
+from ..kernels import arrow_marker_bytes, bloom_binary_updater, bloom_ngram_updater
 from ..params import CacheParams
 from ..sketches.bloom import BloomSketch
 
@@ -84,11 +85,12 @@ def _bucket_hits(sketches: list[BloomSketch], h1: np.ndarray, h2: np.ndarray) ->
 def _range_hits(
     buckets: list[tuple[int, int, BloomSketch]],
     oldest: int | None,
-    probes: list[bytes],
+    probes: list[bytes] | pa.Array,
     ranges: list[tuple[int, int]],
 ) -> np.ndarray:
     """``bool[len(probes), len(ranges)]``: column j is the membership of
-    each probe in the buckets overlapping ``ranges[j]``.
+    each probe in the buckets overlapping ``ranges[j]``, for a list of
+    bytes (driver) or a marker ``pa.Array`` (UDF) of probes.
 
     ``buckets`` are newest-first ``(start, end, sketch)`` and ``oldest``
     the oldest bucket's start (``None`` for an empty cache).  A range
@@ -112,7 +114,8 @@ def _range_hits(
             probed.append((sk, cols))
     if not probed:
         return out
-    h1, h2 = mmh3_x64_128(probes)
+    h1, h2 = (mmh3_x64_128(probes) if isinstance(probes, list)
+              else mmh3_offsets(*arrow_marker_bytes(probes)))
     member = _bucket_hits([sk for sk, _ in probed], h1, h2)
     for hits, (_, cols) in zip(member, probed):
         out[:, cols] |= hits[:, None]
@@ -250,9 +253,9 @@ class SketchCache:
         return oldest, sketches
 
     def lookup_range_udf(self):
-        """Vectorized pandas UDF ``(marker, start, end) -> found`` with
-        the bucket deque baked into the closure — the distributed form
-        of :meth:`lookup_from`.
+        """Arrow UDF ``(marker, start, end) -> found`` with the bucket
+        deque baked into the closure — the distributed form of
+        :meth:`lookup_from`.
 
         The cache state is bounded (num_filters sketches, independent
         of corpus size), so it ships ONCE per executor inside the task
@@ -261,56 +264,52 @@ class SketchCache:
         bucket (markercache.cpp:168-169), newest-first with found rows
         skipped (:181-192), and the reference's edge guards (start > end
         -> false, :164; end older than the oldest bucket -> false,
-        :166).  This is the 100 TB shape: a join against the bucket
-        table would replicate each multi-hundred-KB sketch blob onto
-        every probe-x-bucket pair row through the Arrow path, moving
-        O(probes * m) bytes; the closure moves O(num_filters * m) per
-        executor, full stop."""
-        from pyspark.sql.functions import pandas_udf
-
+        :166; a NULL start or end -> false).  This is the 100 TB shape:
+        a join against the bucket table would replicate each
+        multi-hundred-KB sketch blob onto every probe-x-bucket pair row
+        through the Arrow path, moving O(probes * m) bytes; the closure
+        moves O(num_filters * m) per executor, full stop."""
         oldest, sketches = self._worker_buckets()
 
-        @pandas_udf("boolean")
-        def found_udf(marker: pd.Series, lo: pd.Series, hi: pd.Series) -> pd.Series:
+        @F.arrow_udf("boolean")
+        def found_udf(marker: pa.Array, lo: pa.Array, hi: pa.Array) -> pa.Array:
             out = np.zeros(len(marker), dtype=bool)
             if oldest is None or len(marker) == 0:
-                return pd.Series(out)
-            lo_np = lo.to_numpy(dtype=np.int64)
-            hi_np = hi.to_numpy(dtype=np.int64)
-            valid = (lo_np <= hi_np) & (hi_np >= oldest)
+                return pa.array(out)
+            lo_np = lo.fill_null(0).to_numpy(zero_copy_only=False)
+            hi_np = hi.fill_null(0).to_numpy(zero_copy_only=False)
+            known = pc.and_(lo.is_valid(), hi.is_valid()).to_numpy(zero_copy_only=False)
+            valid = known & (lo_np <= hi_np) & (hi_np >= oldest)
             if not valid.any():
-                return pd.Series(out)
-            h1, h2 = mmh3_x64_128(encode_series(marker))  # hash once for all buckets
+                return pa.array(out)
+            h1, h2 = mmh3_offsets(*arrow_marker_bytes(marker))  # hash once for all buckets
             for s, e, sk in sketches():
                 idx = np.flatnonzero(valid & ~out & (s <= hi_np) & (lo_np <= e))
                 if len(idx):
                     out[idx] = sk.contains_hashes(h1[idx], h2[idx])
-            return pd.Series(out)
+            return pa.array(out)
 
         return found_udf
 
     def lookup_multi_range_udf(self, ranges: list[tuple[int, int]]):
-        """Vectorized pandas UDF ``marker -> struct<f0..fR boolean>``
-        answering ALL the given (start, end) ranges in one pass with the
-        kernel :meth:`lookup_from` runs on the driver: markers are
-        hashed once per batch, each bucket's membership vector is
-        computed at most once and ORed into every range it overlaps.
-        For R query-level ranges this scans the probe set once instead
-        of R times — the fan-out-free form of repeating
-        :meth:`lookup_range_join` per range.  The result is a STRUCT of
-        boolean columns (one field ``f{j}`` per range), which stays
-        columnar through Arrow — an array<boolean> return would
-        materialize one Python list per probe row."""
-        from pyspark.sql.functions import pandas_udf
-
+        """Arrow UDF ``marker -> struct<f0..fR boolean>`` answering ALL
+        the given (start, end) ranges in one pass with the kernel
+        :meth:`lookup_from` runs on the driver: markers are hashed once
+        per batch, each bucket's membership vector is computed at most
+        once and ORed into every range it overlaps.  For R query-level
+        ranges this scans the probe set once instead of R times — the
+        fan-out-free form of repeating :meth:`lookup_range_join` per
+        range.  The result is a STRUCT of boolean columns (one field
+        ``f{j}`` per range), which stays columnar through Arrow."""
         oldest, sketches = self._worker_buckets()
         rng = [(int(lo), int(hi)) for lo, hi in ranges]
-        out_type = "struct<" + ", ".join(f"f{j}: boolean" for j in range(len(rng))) + ">"
+        names = [f"f{j}" for j in range(len(rng))]
+        out_type = "struct<" + ", ".join(f"{f}: boolean" for f in names) + ">"
 
-        @pandas_udf(out_type)
-        def found_udf(marker: pd.Series) -> pd.DataFrame:
-            out = _range_hits(sketches(), oldest, encode_series(marker), rng)
-            return pd.DataFrame({f"f{j}": out[:, j] for j in range(len(rng))})
+        @F.arrow_udf(out_type)
+        def found_udf(marker: pa.Array) -> pa.Array:
+            out = _range_hits(sketches(), oldest, marker, rng)
+            return pa.StructArray.from_arrays([pa.array(c) for c in out.T], names=names)
 
         return found_udf
 

@@ -14,7 +14,7 @@ from typing import Any, Callable
 import numpy as np
 import pandas as pd
 
-from .hashing import mmh3_ngram_i32
+from .hashing import mmh3_ngram_i32, mmh3_offsets
 from .ngrams import ngram_starts
 from .params import BloomParams
 from .sketches.bloom import BloomSketch
@@ -22,13 +22,12 @@ from .sketches.bloom import BloomSketch
 
 # --- Arrow-native batch access ------------------------------------------------
 
-def arrow_tokens_view(batch, token_col: str = "tokens"):
-    """Zero-copy view of a RecordBatch's token column: (flat int32
-    values, int64 offsets from 0).  No per-row Python objects.  On a
-    sliced batch ``flat`` holds only the slice's own tokens."""
+def arrow_list_view(col) -> tuple[np.ndarray, np.ndarray]:
+    """Zero-copy view of a list array: (flat numpy values, int64
+    offsets from 0).  No per-row Python objects.  On a sliced array
+    ``flat`` holds only the slice's own values."""
     import pyarrow as pa
 
-    col = batch.column(batch.schema.get_field_index(token_col))
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     # A slice's offsets index into the parent's whole values buffer:
@@ -36,7 +35,40 @@ def arrow_tokens_view(batch, token_col: str = "tokens"):
     offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
     lo, hi = (int(offsets[0]), int(offsets[-1])) if len(offsets) else (0, 0)
     flat = col.values.slice(lo, hi - lo).to_numpy(zero_copy_only=False)
-    return flat.astype(np.int32, copy=False), offsets - lo
+    return flat, offsets - lo
+
+
+def arrow_tokens_view(batch, token_col: str = "tokens"):
+    """:func:`arrow_list_view` of a RecordBatch's token column, with the
+    values as int32."""
+    flat, offsets = arrow_list_view(batch.column(batch.schema.get_field_index(token_col)))
+    return flat.astype(np.int32, copy=False), offsets
+
+
+def arrow_marker_bytes(arr) -> tuple[np.ndarray, np.ndarray]:
+    """The one marker encoding: (flat uint8, int64 offsets) of a marker
+    array, as :func:`hashing.mmh3_offsets` takes them.  Binary and
+    string arrays (and their large variants) are read from their own
+    buffers; any other type encodes each value as ``str(v).encode()``
+    of its Python value.  NULL encodes as ``b"None"`` either way, so a
+    marker hashes the same whatever else its batch holds."""
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    large = pa.types.is_large_binary(arr.type) or pa.types.is_large_string(arr.type)
+    if not (large or pa.types.is_binary(arr.type) or pa.types.is_string(arr.type)):
+        arr = pa.array(
+            [b"None" if v is None else str(v).encode() for v in arr.to_pylist()],
+            type=pa.binary(),
+        )
+    elif arr.null_count:
+        arr = arr.fill_null(b"None")
+    _, offs, data = arr.buffers()
+    offsets = np.frombuffer(offs, dtype=np.int64 if large else np.int32)
+    offsets = offsets[arr.offset : arr.offset + len(arr) + 1]
+    flat = np.frombuffer(data, dtype=np.uint8) if data is not None else np.empty(0, np.uint8)
+    return flat, offsets.astype(np.int64)
 
 
 def arrow_str_codes(batch, col_name: str):
@@ -59,45 +91,6 @@ def arrow_str_codes(batch, col_name: str):
 
 
 # --- updaters (sketch, batch) -> None ---------------------------------------
-
-def encode_series(s: pd.Series) -> list[bytes]:
-    """Coerce a marker column to a list of bytes without a per-row
-    Python comprehension: bytes cells pass through; everything else
-    goes through the C-level ``Series.astype(str).str.encode`` path.
-    The path is chosen from the first NON-NULL cell, and null cells
-    encode as b"None" (matching the historical str(v).encode behavior)
-    — a batch of bytes markers with a stray NULL must not crash the
-    task.  Spark columns are type-homogeneous so the fast path always
-    wins there, but the helper also sees raw pandas Series (foreachBatch
-    / probe paths), where a MIXED bytes+str batch falls back to a
-    per-row isinstance dispatch instead of crashing (bytes(str)) or
-    silently encoding a bytes repr (str(bytes))."""
-    if len(s) == 0:
-        return []
-    # Homogeneity check via pandas' C-level type sniffer: ~10ms/M rows
-    # vs ~100-300ms/M for an interpreted isinstance scan (measured) —
-    # this runs on every Bloom insert/lookup batch, so the check must
-    # not cost more than the encode it guards.
-    kind = pd.api.types.infer_dtype(s, skipna=True)
-    if kind == "empty":  # all null
-        return [b"None"] * len(s)
-    if kind == "bytes":
-        na = s.isna()
-        if na.any():
-            return [b"None" if n else bytes(v) for v, n in zip(s, na)]
-        return list(s)
-    if not kind.startswith("mixed"):
-        # string / integer / floating / boolean / ... — one C-level
-        # encode pass; nulls become b'None' via astype(str)
-        return list(s.astype(str).str.encode("utf-8"))
-    # mixed batch (bytes alongside str/other): per-row dispatch
-    na = s.isna()
-    return [
-        b"None" if n
-        else (bytes(v) if isinstance(v, (bytes, bytearray)) else str(v).encode("utf-8"))
-        for v, n in zip(s, na)
-    ]
-
 
 def ngram_updater(
     n: int, token_col: str, insert: Callable[[Any, np.ndarray, np.ndarray], None]
@@ -129,7 +122,7 @@ def bloom_binary_updater(col: str) -> Callable[[Any, Any], None]:
     """Insert a binary/string column's byte values (reference marker path)."""
 
     def update(sk: BloomSketch, batch) -> None:
-        sk.insert(encode_series(batch.column(col).to_pandas()))
+        sk.insert_hashes(*mmh3_offsets(*arrow_marker_bytes(batch.column(col))))
 
     return update
 

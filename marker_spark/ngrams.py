@@ -15,18 +15,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def list_column_to_flat(series) -> tuple[np.ndarray, np.ndarray]:
-    """pandas Series of list<int32> (from Arrow) -> (flat int32, offsets int64)."""
-    values = list(series)
-    lengths = np.fromiter(map(len, values), dtype=np.int64, count=len(values))
-    offsets = np.zeros(len(values) + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    if offsets[-1] == 0:
-        return np.empty(0, dtype=np.int32), offsets
-    flat = np.concatenate(values).astype(np.int32, copy=False)
-    return flat, offsets
-
-
 def ngram_starts(offsets: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
     """Window-start indices into the flat token array for every n-gram.
 

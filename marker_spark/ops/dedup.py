@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -605,14 +606,14 @@ def _retention_via_drop_prefilter(
     bcast = register(index.sparkSession.sparkContext.broadcast(packed))
     memo: dict = {}
 
-    @F.pandas_udf("boolean")
-    def maybe_dropped(ids: pd.Series) -> pd.Series:
+    @F.arrow_udf("boolean")
+    def maybe_dropped(ids: pa.Array) -> pa.Array:
         bf = memo.get("bf")
         if bf is None:
             bf = memo["bf"] = unpack_state(BloomSketch, bcast.value)
-        # NULL ids were filtered above (NaN would corrupt the hashes)
-        arr = ids.to_numpy(dtype=np.int64)
-        return pd.Series(bf.contains_fixed_width(arr.view(np.uint8).reshape(-1, 8)))
+        # NULL ids were filtered above; ids hash as 8 LE bytes
+        arr = np.ascontiguousarray(ids.cast(pa.int64()).to_numpy(), dtype="<i8")
+        return pa.array(bf.contains_fixed_width(arr.view(np.uint8).reshape(-1, 8)))
 
     pos = index.where(maybe_dropped(F.col(id_col)))
     neg = index.where(~maybe_dropped(F.col(id_col)))

@@ -18,25 +18,23 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels import arrow_list_view
 
-def _stack_embeddings(vecs, dim: int) -> "np.ndarray":
-    """[N, dim] float64 matrix from a Series of array<float> cells;
-    null/ragged rows become zero vectors (deterministic bucket/cell,
-    never a task-killing np.stack crash on one bad row)."""
-    try:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        if mat.ndim == 2 and mat.shape[1] == dim:
-            return mat
-    except (ValueError, TypeError):
-        pass
+
+def _stack_embeddings(vecs: pa.Array, dim: int) -> np.ndarray:
+    """[N, dim] float64 matrix from an array<float> column: one reshape
+    of the rows whose length is ``dim``; null and ragged rows become
+    zero vectors (a deterministic bucket/cell, never a task-killing
+    error on one bad row)."""
+    flat, offsets = arrow_list_view(vecs)
+    lens = np.diff(offsets)
+    ok = (lens == dim) & vecs.is_valid().to_numpy(zero_copy_only=False)
     out = np.zeros((len(vecs), dim), dtype=np.float64)
-    for i, v in enumerate(vecs.to_numpy()):
-        if v is not None and len(v) == dim:
-            out[i] = v
+    out[ok] = flat[np.repeat(ok, lens)].reshape(-1, dim)
     return out
 
 
@@ -82,12 +80,12 @@ def hyperplane_signatures(
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((dim, n_planes))
 
-    @F.pandas_udf("long")
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
+    @F.arrow_udf("long")
+    def bucket_udf(vecs: pa.Array) -> pa.Array:
         mat = _stack_embeddings(vecs, dim)  # [N, dim], null rows -> zeros
         signs = (mat @ planes) > 0  # [N, n_planes]
         weights = (1 << np.arange(n_planes, dtype=np.int64))[None, :]
-        return pd.Series((signs * weights).sum(axis=1))
+        return pa.array((signs * weights).sum(axis=1))
 
     return df.withColumn("bucket", bucket_udf(F.col(vec_col)))
 
@@ -154,11 +152,11 @@ def ivf_assign(
     numpy matmul; the centroid matrix ships in the UDF closure."""
     cents = np.asarray(centroids, dtype=np.float64)
 
-    @F.pandas_udf("int")
-    def cell_udf(vecs: pd.Series) -> pd.Series:
+    @F.arrow_udf("int")
+    def cell_udf(vecs: pa.Array) -> pa.Array:
         mat = _stack_embeddings(vecs, cents.shape[1])  # null rows -> zeros
         mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(mat @ cents.T, axis=1).astype(np.int32))
+        return pa.array(np.argmax(mat @ cents.T, axis=1).astype(np.int32))
 
     return df.withColumn("cell", cell_udf(F.col(vec_col)))
 

@@ -25,57 +25,16 @@ table instead of a shared-memory segment.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .agg import SKETCH_COL, check_input_col, unpack_state
-from .hashing import mmh3_ngram_i32
-from .kernels import encode_series
-from .ngrams import list_column_to_flat, ngram_starts
+from .agg import SKETCH_COL, _split_groups, check_input_col, qcol, unpack_state
+from .hashing import mmh3_ngram_i32, mmh3_offsets
+from .kernels import arrow_list_view, arrow_marker_bytes
+from .ngrams import ngram_starts
 from .sketches.bloom import BloomSketch
-
-
-def _norm_key(v):
-    """Normalize a group-key cell for dict lookup: pandas surfaces SQL
-    NULL as None or NaN depending on dtype; the collected state dict
-    uses None."""
-    if v is None:
-        return None
-    if isinstance(v, float) and math.isnan(v):
-        return None
-    if isinstance(v, np.generic):
-        return v.item()
-    return v
-
-
-def _group_rows(key_cols: tuple[pd.Series, ...]):
-    """Yield (key_tuple, row_positions) for each distinct group-key
-    combination in the batch; with no key columns, ``((), slice(None))``
-    — every row under the single ``()`` state.  Cost is O(rows) over
-    SMALL key cells (strings/ints), never over sketch payloads."""
-    if not key_cols:
-        yield (), slice(None)
-        return
-    n = len(key_cols[0])
-    if n == 0:
-        return
-    if len(key_cols) == 1:
-        codes, uniques = pd.factorize(key_cols[0], sort=False)
-        for gi, u in enumerate(uniques):
-            yield (_norm_key(u),), np.flatnonzero(codes == gi)
-        na = codes < 0
-        if na.any():
-            yield (None,), np.flatnonzero(na)
-        return
-    df = pd.DataFrame({i: c.reset_index(drop=True) for i, c in enumerate(key_cols)})
-    for key, idxs in df.groupby(list(df.columns), dropna=False, sort=False).indices.items():
-        if not isinstance(key, tuple):
-            key = (key,)
-        yield tuple(_norm_key(k) for k in key), np.asarray(idxs)
 
 
 #: Collecting more serialized state than this is almost certainly a
@@ -96,10 +55,9 @@ def collect_sketch_states(
     raises if the total exceeds ``max_bytes`` — an unexpectedly wide
     sketch table surfaces as a clear error instead of a driver OOM.
 
-    Keys are CAST TO STRING on the Spark side: a nullable int64 group
-    column reaches the pandas UDF as float64, where keys above 2^53
-    would silently collide or miss the dict — string keys are exact at
-    any magnitude and NULL stays None through both paths."""
+    Keys are CAST TO STRING on the Spark side, as the probe UDF casts
+    its key columns: string keys are exact at any magnitude, and a
+    NULL key stays ``None``."""
     # persist around the guard + collect pair: the caller often hands
     # in the UNPERSISTED build plan, and without this the guard's
     # length aggregation would execute the whole two-phase sketch
@@ -121,22 +79,18 @@ def collect_sketch_states(
                 "max_bytes explicitly."
             )
         rows = sketch_table.select(
-            *[F.col(c).cast("string") for c in group_cols], SKETCH_COL
+            *[qcol(c).cast("string") for c in group_cols], SKETCH_COL
         ).collect()
     finally:
         if not was_cached:
             sketch_table.unpersist()
     k = len(group_cols)
-    return {
-        tuple(_norm_key(r[i]) for i in range(k)): bytes(r[k])
-        for r in rows
-        if r[k] is not None
-    }
+    return {tuple(r[:k]): bytes(r[k]) for r in rows if r[k] is not None}
 
 
-def _marker_hits(bf: BloomSketch, markers: pd.Series) -> np.ndarray:
-    """Is each byte-string marker in the filter (reference lookup)."""
-    return bf.contains(encode_series(markers))
+def _marker_hits(bf: BloomSketch, markers: pa.Array) -> np.ndarray:
+    """Is each marker in the filter (reference lookup)."""
+    return bf.contains_hashes(*mmh3_offsets(*arrow_marker_bytes(markers)))
 
 
 def _ngram_hits(n: int):
@@ -146,11 +100,12 @@ def _ngram_hits(n: int):
     if n < 1:
         raise ValueError(f"ngram must be >= 1, got {n}")
 
-    def hits(bf: BloomSketch, tokens: pd.Series) -> np.ndarray:
+    def hits(bf: BloomSketch, tokens: pa.Array) -> np.ndarray:
         out = np.zeros(len(tokens), dtype=bool)
-        flat, offsets = list_column_to_flat(tokens)
+        flat, offsets = arrow_list_view(tokens)
         starts, per_doc = ngram_starts(offsets, n)
         if len(starts):
+            flat = flat.astype(np.int32, copy=False)
             found = bf.contains_hashes(*mmh3_ngram_i32(flat, starts, n))
             # any() per doc: OR-reduce each doc's run of n-gram hits
             seg = np.zeros(len(per_doc), dtype=np.int64)
@@ -163,28 +118,38 @@ def _ngram_hits(n: int):
 
 
 def make_keyed_membership_udf(bcast, n_keys: int, hits):
-    """pandas UDF (group cols..., probe col) -> boolean.  States come
-    from the broadcast dict; each group's sketch is deserialized once
-    per worker (memo dict, bounded by #groups) and
+    """Arrow UDF (string group cols..., probe col) -> boolean.  States
+    come from the broadcast dict; each group's sketch is deserialized
+    once per worker (memo dict, bounded by #groups) and
     ``hits(sketch, rows)`` answers the group's rows vectorized.  Rows
-    whose group has no state get False."""
+    are grouped as sketch builds group them (``agg._split_groups``).
+    Rows whose group has no state, or with a NULL key, get False."""
     memo: dict[tuple, BloomSketch | None] = {}
+    keys = [f"k{i}" for i in range(n_keys)]
 
-    @F.pandas_udf("boolean")
-    def member(*cols: pd.Series) -> pd.Series:
-        data = cols[-1]
-        out = np.zeros(len(data), dtype=bool)
-        states = bcast.value
-        for key, rows in _group_rows(cols[:n_keys]):
-            bf = memo.get(key)
-            if bf is None and key not in memo:
-                payload = states.get(key)
-                bf = memo[key] = (
-                    unpack_state(BloomSketch, payload) if payload is not None else None
-                )
+    def sketch(key: tuple) -> BloomSketch | None:
+        if key not in memo:
+            payload = bcast.value.get(key)
+            memo[key] = unpack_state(BloomSketch, payload) if payload is not None else None
+        return memo[key]
+
+    @F.arrow_udf("boolean")
+    def member(*cols: pa.Array) -> pa.Array:
+        n = len(cols[-1])
+        out = np.zeros(n, dtype=bool)
+        batch = pa.RecordBatch.from_arrays(
+            [*cols, pa.array(np.arange(n))], names=[*keys, "probe", "row"]
+        )
+        valid = np.ones(n, dtype=bool)
+        for c in cols[:n_keys]:
+            valid &= c.is_valid().to_numpy(zero_copy_only=False)
+        if not valid.all():  # a NULL key names no group: its row stays False
+            batch = batch.filter(pa.array(valid))
+        for key, part in _split_groups(batch, keys):
+            bf = sketch(key)
             if bf is not None:
-                out[rows] = hits(bf, data.iloc[rows])
-        return pd.Series(out)
+                out[part.column("row").to_numpy()] = hits(bf, part.column("probe"))
+        return pa.array(out)
 
     return member
 
@@ -222,6 +187,6 @@ def probe_sketch_table(
     # registered so the session owner's release_all() drops executor
     # copies between queries (re-execution re-fetches from the driver)
     bcast = register(probe_df.sparkSession.sparkContext.broadcast(states))
-    keys = [F.col(c).cast("string") for c in group_cols]  # match state keys
+    keys = [qcol(c).cast("string") for c in group_cols]  # match state keys
     udf = make_keyed_membership_udf(bcast, len(group_cols), hits)
-    return probe_df.withColumn(result_col, udf(*keys, F.col(col)))
+    return probe_df.withColumn(result_col, udf(*keys, qcol(col)))

@@ -30,6 +30,7 @@ KIND_THETA = 7
 KIND_MG = 8
 
 _HEADER = struct.Struct("<4sBB")  # magic, kind, version
+HEADER_BYTES = _HEADER.size
 
 
 def pack_header(kind: int, version: int = 1) -> bytes:

@@ -23,10 +23,12 @@ import struct
 
 import numpy as np
 
-from ..hashing import mmh3_fixed_width, mmh3_x64_128
-from .base import KIND_BLOOM, pack_header, unpack_header
+from ..hashing import mmh3_fixed_width
+from .base import HEADER_BYTES, KIND_BLOOM, pack_header, unpack_header
 
 _PARAMS = struct.Struct("<QIQ")
+#: serialized bytes before the bit array: common header + (m, k, n_inserted)
+PREFIX_BYTES = HEADER_BYTES + _PARAMS.size
 
 
 class BloomSketch:
@@ -93,10 +95,6 @@ class BloomSketch:
                 )
         self.n_inserted += n
 
-    def insert(self, items: list[bytes]) -> None:
-        h1, h2 = mmh3_x64_128(items)
-        self.insert_hashes(h1, h2)
-
     def insert_fixed_width(self, matrix: np.ndarray) -> None:
         """Insert N fixed-width byte rows ([N, W] uint8) — n-gram path."""
         h1, h2 = mmh3_fixed_width(matrix)
@@ -147,10 +145,6 @@ class BloomSketch:
         (m, k): one gather of all k words per probe, no early-out."""
         return (self.blocks[words] & masks).all(axis=0)
 
-    def contains(self, items: list[bytes]) -> np.ndarray:
-        h1, h2 = mmh3_x64_128(items)
-        return self.contains_hashes(h1, h2)
-
     def contains_fixed_width(self, matrix: np.ndarray) -> np.ndarray:
         h1, h2 = mmh3_fixed_width(matrix)
         return self.contains_hashes(h1, h2)
@@ -180,6 +174,13 @@ class BloomSketch:
         else:
             payload = self.blocks.astype("<u8").tobytes()
         return pack_header(KIND_BLOOM) + _PARAMS.pack(self.m, self.k, self.n_inserted) + payload
+
+    @staticmethod
+    def shape_from_bytes(buf: bytes) -> tuple[int, int]:
+        """(m, k) of a serialization, read from its first
+        :data:`PREFIX_BYTES` bytes alone."""
+        m, k, _ = _PARAMS.unpack_from(buf, unpack_header(buf, KIND_BLOOM))
+        return m, k
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "BloomSketch":

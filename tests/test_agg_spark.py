@@ -5,14 +5,17 @@ tokenized-sequence table, membership probes, merge-order invariance.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from marker_spark.agg import collect_sketch, collect_sketches, sketch_agg
 from marker_spark.datagen import gen_tokenized_sequences
+from marker_spark.hashing import mmh3_x64_128
 from marker_spark.kernels import bloom_factory, bloom_ngram_updater
-from marker_spark.ngrams import list_column_to_flat, ngram_bytes
+from marker_spark.ngrams import ngram_bytes
 from marker_spark.probe import probe_sketch_table
 from marker_spark.sketches.bloom import BloomSketch
+from tests.helpers import list_column_to_flat
 
 N_DOCS = 2000
 NGRAM = 3
@@ -138,7 +141,7 @@ def test_null_group_keys_reach_a_sketch(spark):
     assert (NULL_KEY,) in sketches
     null_sk = sketches[(NULL_KEY,)]
     assert null_sk.n_inserted == 3
-    assert null_sk.contains([b"x", b"y", b"z"]).all()
+    assert null_sk.contains_hashes(*mmh3_x64_128([b"x", b"y", b"z"])).all()
     assert sketches[("a",)].n_inserted == 2
 
     out2 = sketch_agg(df, bloom_factory(1000, 0.01), bloom_binary_updater("v"),
@@ -149,7 +152,7 @@ def test_null_group_keys_reach_a_sketch(spark):
     assert set(sketches2) == set(expected)
     for key, markers in expected.items():
         assert sketches2[key].n_inserted == len(markers), key
-        assert sketches2[key].contains(markers).all(), key
+        assert sketches2[key].contains_hashes(*mmh3_x64_128(markers)).all(), key
 
 
 def test_unknown_group_col_rejected_up_front(spark, tokseq_df):
@@ -161,18 +164,20 @@ def test_unknown_group_col_rejected_up_front(spark, tokseq_df):
 
 
 def test_encode_series_null_cells():
-    """A bytes marker column with a stray NULL must encode, not crash
+    """A marker column with a stray NULL must encode, not crash
     (regression: the vectorized path chose by first cell and then took
-    len(None) when hashing)."""
-    import pandas as pd
+    len(None) when hashing); the NULL encodes as b"None"."""
+    from marker_spark.kernels import arrow_marker_bytes
 
-    from marker_spark.kernels import encode_series
+    def rows(arr):
+        flat, offsets = arrow_marker_bytes(arr)
+        return [bytes(flat[lo:hi]) for lo, hi in zip(offsets[:-1], offsets[1:])]
 
-    assert encode_series(pd.Series([b"abc", None, b"x"])) == [b"abc", b"None", b"x"]
-    assert encode_series(pd.Series([None, b"abc"])) == [b"None", b"abc"]
-    assert encode_series(pd.Series([None, None], dtype=object)) == [b"None", b"None"]
-    assert encode_series(pd.Series(["a", None])) == [b"a", b"None"]
-    assert encode_series(pd.Series([], dtype=object)) == []
+    assert rows(pa.array([b"abc", None, b"x"])) == [b"abc", b"None", b"x"]
+    assert rows(pa.array([None, b"abc"])) == [b"None", b"abc"]
+    assert rows(pa.array([None, None], type=pa.binary())) == [b"None", b"None"]
+    assert rows(pa.array(["a", None])) == [b"a", b"None"]
+    assert rows(pa.array([], type=pa.binary())) == []
 
 
 @pytest.mark.parametrize("ansi", ["true", "false"])
@@ -213,3 +218,18 @@ def test_salt_count_matches_case_when_chain(spark, ansi):
         assert placement(salted_repartition(df, "g", shares, parallelism)) == placement(reference)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_state_prefix_reads_the_bloom_shape_without_inflating():
+    """``state_prefix`` returns a packed state's first serialized bytes
+    for a zlib (MSKZ) and a raw (MSKR) state, enough for
+    ``BloomSketch.shape_from_bytes``."""
+    from marker_spark.agg import _RMAGIC, pack_state, state_prefix
+    from marker_spark.sketches.bloom import PREFIX_BYTES
+
+    sk = BloomSketch(1 << 16, 7)
+    sk.insert_hashes(*mmh3_x64_128([b"a", b"b"]))
+    raw = sk.to_bytes()
+    for packed in (pack_state(sk), _RMAGIC + raw):
+        assert state_prefix(packed, PREFIX_BYTES) == raw[:PREFIX_BYTES]
+        assert BloomSketch.shape_from_bytes(state_prefix(packed, PREFIX_BYTES)) == (1 << 16, 7)

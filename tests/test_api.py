@@ -28,7 +28,8 @@ from marker_spark.api import (
     theta_agg,
 )
 from marker_spark.datagen import gen_tokenized_sequences
-from marker_spark.ngrams import list_column_to_flat, ngram_bytes
+from marker_spark.ngrams import ngram_bytes
+from tests.helpers import list_column_to_flat
 
 
 @pytest.fixture(scope="module")
@@ -93,6 +94,19 @@ def test_input_projection_keeps_dotted_names(spark, tok):
         got = _inputs(df, lambda _k: KllSketch(), name, "numeric", ["source", name])
         assert got.columns == ["source", name]
         assert got.schema[name] == df.schema[name]
+
+
+def test_dotted_value_and_group_cols_reach_the_build(spark, tok, pdf):
+    """A dot in a value or group column name reaches the partial build
+    and the merge (``mapInArrow``/``applyInArrow`` would read it as
+    struct-field access): the sketches equal the undotted build's."""
+    dotted = tok.withColumnRenamed("n_tok", "n.tok").withColumnRenamed("source", "s.rc")
+    whole = collect_sketch(kll_agg(dotted, "n.tok"), KllSketch)
+    assert whole.n == len(pdf)
+    assert whole.to_bytes() == collect_sketch(kll_agg(tok, "n_tok"), KllSketch).to_bytes()
+    got = collect_sketches(kll_agg(dotted, "n.tok", group_cols=["s.rc"]), KllSketch, ["s.rc"])
+    want = collect_sketches(kll_agg(tok, "n_tok", group_cols=["source"]), KllSketch, ["source"])
+    assert {k: v.to_bytes() for k, v in got.items()} == {k: v.to_bytes() for k, v in want.items()}
 
 
 def test_minhash_agg_self_similarity(spark, tok):
@@ -292,3 +306,32 @@ def test_build_sketches_rejects_bad_fp(tokseq_path, tmp_path, fp):
     with pytest.raises(SystemExit):
         main(["--input", tokseq_path, "--output", str(out), "--fp", str(fp)])
     assert not out.exists()
+
+
+_INCREMENTAL = ["--index", "idx", "--input", "in", "--pairs-out", "out"]
+_PROFILE = ["--input", "in", "--output", "out"]
+
+
+@pytest.mark.parametrize("job, argv", [
+    pytest.param("incremental_dedup", _INCREMENTAL + [flag, value], id=f"incremental{flag}={value}")
+    for flag, value in [("--bands", "0"), ("--rows-per-band", "0"), ("--max-bucket", "1"),
+                        ("--jaccard", "1.5"), ("--jaccard", "-0.1"), ("--n-buckets", "0")]
+] + [
+    pytest.param("profile_table", _PROFILE + [flag, value], id=f"profile{flag}={value}")
+    for flag, value in [("--top-k", "0"), ("--mg-k", "0"), ("--hll-p", "3"), ("--hll-p", "19")]
+])
+def test_job_numeric_flags_rejected_before_session(monkeypatch, capsys, job, argv):
+    """An out-of-range numeric flag exits with a usage error before any
+    SparkSession is created."""
+    import importlib
+
+    from pyspark.sql import SparkSession
+
+    def no_session(self):
+        raise AssertionError("a SparkSession was created")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_session)
+    main = importlib.import_module(f"jobs.{job}").main
+    with pytest.raises(SystemExit):
+        main(argv)
+    assert argv[-2] in capsys.readouterr().err

@@ -12,6 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from marker_spark.sketches.bloom import BloomSketch
+from marker_spark.hashing import mmh3_x64_128
 from marker_spark.sketches.cms import CmsSketch
 from marker_spark.sketches.hll import HllSketch
 from marker_spark.sketches.kll import KllSketch
@@ -46,7 +47,7 @@ def test_bloom_state_order_invariant(cuts, order):
 
     def build(p):
         s = BloomSketch(1 << 16, 7)
-        s.insert(p)
+        s.insert_hashes(*mmh3_x64_128(p))
         return s
 
     a = _merge_in_order([build(p) for p in parts], order)

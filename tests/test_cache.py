@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from marker_spark.cache import CacheConfig  # noqa: F401  (alias check below)
 from marker_spark.cache.sketch_cache import OPEN_END, SketchCache
+from marker_spark.hashing import mmh3_x64_128
 from marker_spark.params import CacheParams
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -330,7 +331,8 @@ def test_insert_batch_matches_driver_insert_across_partitions(spark):
     bp = p.bloom_params()
     for b in c.buckets:
         want = BloomSketch(bp.m, bp.k)
-        want.insert([m.encode() for s, m in rows if s // 100 * 100 == b.start])
+        ms = [m.encode() for s, m in rows if s // 100 * 100 == b.start]
+        want.insert_hashes(*mmh3_x64_128(ms))
         assert b.sketch.to_bytes() == want.to_bytes(), b.start
         assert b.n_markers == 600
 
@@ -387,7 +389,7 @@ def _four_bucket_cache():
     for i in range(4):
         ms = [f"b{i}-m{j}".encode() for j in range(300)]
         sk = cache._new_sketch()
-        sk.insert(ms)
+        sk.insert_hashes(*mmh3_x64_128(ms))
         cache._merge_into_bucket(T0 + i * DUR, sk, 0.0, "test")
         markers += ms
     return cache, markers + [f"absent-{j}".encode() for j in range(300)]
@@ -431,13 +433,13 @@ def _two_shape_ring(tmp_path):
     writer = SketchCache(old, str(tmp_path))
     for i in range(5):
         sk = writer._new_sketch()
-        sk.insert(markers[i])
+        sk.insert_hashes(*mmh3_x64_128(markers[i]))
         writer._merge_into_bucket(t0 + i * dur, sk, 0.0, "test")
     writer.save()
     cache = SketchCache.resume(new, str(tmp_path), now=t0 + 5 * dur + 10)
     assert [b.start for b in cache.buckets] == [t0 + i * dur for i in (2, 3, 4, 5)]
     assert cache.buckets[-1].end == OPEN_END
-    cache.buckets[-1].sketch.insert(markers[5])
+    cache.buckets[-1].sketch.insert_hashes(*mmh3_x64_128(markers[5]))
     shapes = {(b.sketch.m, b.sketch.k) for b in cache.buckets}
     assert len(shapes) == 2, shapes
     absent = [f"absent-{j}".encode() for j in range(300)]
@@ -508,3 +510,26 @@ def test_range_udf_matches_lookup_from_over_two_bloom_shapes(spark, tmp_path):
     want = np.concatenate([cache.lookup_from(lo, hi, probes) for lo, hi in ranges])
     np.testing.assert_array_equal(got["found"].to_numpy(), want)
     assert want.any() and not want.all()
+
+
+def test_nullable_bigint_markers_found_through_the_cache(spark):
+    """A bigint marker column where one partition holds a NULL and the
+    other does not: every inserted value is found by ``lookup_from``
+    (driver) and ``lookup_multi_range_udf`` (Arrow UDF), and NULL hashes
+    exactly as b"None".  Such a column once reached the hash as float64
+    in the NULL's batch only, so 3 was inserted as b"3.0"."""
+    p = CacheParams(duration=100, lifespan=300, fp=1e-6, total_capacity=1_000)
+    rows = [(T0, 3), (T0, None), (T0 + 1, 7), (T0 + 1, 8)]
+    rdd = spark.sparkContext.parallelize(rows, 2)
+    df = spark.createDataFrame(rdd, "secs long, m bigint").withColumn(
+        "ts", F.col("secs").cast("timestamp")
+    )
+    assert [len(part) for part in df.rdd.glom().collect()] == [2, 2]
+    cache = SketchCache(p)
+    cache.insert_batch(df, ts_col="ts", marker_col="m")
+    lo, hi = T0 - 100, T0 + 100
+    assert cache.lookup_from(lo, hi, [b"3", b"7", b"8", b"None"]).all()
+    assert not cache.lookup_from(lo, hi, [b"3.0", b"nan"]).any()
+    udf = cache.lookup_multi_range_udf([(lo, hi)])
+    got = df.select(udf(F.col("m")).alias("f")).select("f.f0").collect()
+    assert [r["f0"] for r in got] == [True] * 4

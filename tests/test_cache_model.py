@@ -25,6 +25,7 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from marker_spark.cache.sketch_cache import OPEN_END, SketchCache
+from marker_spark.hashing import mmh3_x64_128
 from marker_spark.params import CacheParams
 
 DUR = 100
@@ -39,7 +40,7 @@ def _local_insert(cache: SketchCache, ts: int, markers: list[bytes]):
 
     bp = PARAMS.bloom_params()
     sk = BloomSketch(bp.m, bp.k)
-    sk.insert(markers)
+    sk.insert_hashes(*mmh3_x64_128(markers))
     bstart = cache.bucket_start_for(ts)
     cache._merge_into_bucket(bstart, sk, 0.0, "model")
     for b in cache.buckets:

@@ -339,7 +339,9 @@ def test_sketch_builds_enter_python_via_map_in_arrow(spark, name):
 def test_api_agg_ships_only_the_columns_it_reads(spark, tokseq_path):
     """``kll_agg`` hands the Python partial build only the group and
     value columns: the MapInArrow node's input is exactly
-    [source, n_tok], not the tokens arrays it would ignore."""
+    [source, n_tok], not the tokens arrays it would ignore.  The
+    columns go in under positional names, so each is read through its
+    alias in the projection below the node."""
     from marker_spark.api import kll_agg
 
     def seq(s):
@@ -349,7 +351,7 @@ def test_api_agg_ships_only_the_columns_it_reads(spark, tokseq_path):
 
     def walk(node):
         if node.nodeName() == "MapInArrow":
-            found.append([a.name() for a in seq(node.child().output())])
+            found.append([e.child().name() for e in seq(node.child().projectList())])
         for child in seq(node.children()):
             walk(child)
 

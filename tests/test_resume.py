@@ -93,7 +93,8 @@ def test_incremental_merge_into(spark, tmp_path):
     from jobs.build_sketches import main as build_main
     from marker_spark.agg import SKETCH_COL, collect_sketches
     from marker_spark.datagen import write_tokenized_sequences
-    from marker_spark.ngrams import list_column_to_flat, ngram_bytes
+    from marker_spark.ngrams import ngram_bytes
+    from tests.helpers import list_column_to_flat
     from marker_spark.sketches.bloom import BloomSketch
 
     day1 = str(tmp_path / "day1.parquet")

@@ -176,3 +176,18 @@ def test_assign_cells_expr_matches_ivf_assign(spark, seed, dim, k, n, dup_centro
             f"vec {r['vec_id']}: expr={r['cell_expr']} ivf={r['cell']} "
             f"(seed={seed} dim={dim} k={k})"
         )
+
+
+def test_stack_embeddings_zeroes_null_and_ragged_rows():
+    """One reshape of the rows of length ``dim``: the null, short and
+    long rows of a sliced array keep their place as zero vectors."""
+    import pyarrow as pa
+
+    from marker_spark.ops.similarity import _stack_embeddings
+
+    arr = pa.array([[9.0, 9.0], [1.0, 2.0], None, [3.0], [4.0, 5.0, 6.0], [7.0, 8.0]],
+                   type=pa.list_(pa.float32())).slice(1)
+    np.testing.assert_array_equal(
+        _stack_embeddings(arr, 2), [[1, 2], [0, 0], [0, 0], [0, 0], [7, 8]]
+    )
+    assert _stack_embeddings(pa.array([], type=pa.list_(pa.float64())), 3).shape == (0, 3)

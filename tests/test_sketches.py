@@ -10,6 +10,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from marker_spark.hashing import mmh3_x64_128
 from marker_spark.sketches.cms import CmsSketch
 from marker_spark.sketches.hll import HllSketch
 from marker_spark.sketches.kll import KllSketch
@@ -508,7 +509,7 @@ def _all_sketches():
     vals = np.random.default_rng(1).normal(size=500)
     p = BloomParams.solve(4096, 0.001)
     bloom = BloomSketch(p.m, p.k)
-    bloom.insert(items)
+    bloom.insert_hashes(*mmh3_x64_128(items))
     hll = HllSketch(p=10)
     hll.update(items)
     cms = CmsSketch(d=4, w=256)
