@@ -1,9 +1,9 @@
-"""Connected-components scale probe (verdict r7 #4): the iterative
-large-star/small-star join is the last major operator whose 100x
-behavior was asserted (lineage truncation, O(log d) rounds) but not
-measured the way span_scale_probe.py measures the span family.  This
-probe synthesizes the SAME graph shape at 1x/10x/100x and records wall
-time + rounds-to-fixpoint — pass criteria: wall time grows ~linearly in
+"""Connected-components scale probe: ``ops.dedup.connected_components``
+(large-star/small-star rounds to a star forest) claims lineage
+truncation and O(log d) rounds; this probe measures that claim the way
+span_scale_probe.py measures the span family.  It synthesizes the SAME
+graph shape at 1x/10x/100x and records wall time + rounds-to-fixpoint
+(``stats["rounds"]``) — pass criteria: wall time grows ~linearly in
 edge count, and rounds stay BOUNDED (O(log diameter), not O(diameter)).
 
 Graph shape (deterministic, index arithmetic only — the
@@ -12,9 +12,9 @@ formula-synthesis pattern from the media_metadata oracle):
    near-dup candidate pairs actually produce (dense clusters of
    mutually-similar docs);
  * chains: 4 chains consuming the other half of the edge budget, each
-   n_edges//8 edges LONG — the high-diameter adversary that forces
-   plain min-label propagation into diameter-many rounds and exists to
-   prove the two-phase alternation's log-round claim at scale;
+   n_edges//8 edges LONG — the high-diameter adversary that would force
+   min-label propagation into diameter-many rounds and exists to prove
+   the log-round claim at scale;
  * node-id space is shuffled by a fixed affine permutation so component
    minima are scattered, not pre-sorted.
 
@@ -99,7 +99,7 @@ def main() -> None:
     ]
     cpus = sys.argv[2] if len(sys.argv) > 2 else "8"
     from marker_spark.cacheutil import release_all
-    from marker_spark.ops.dedup import connected_components_twophase
+    from marker_spark.ops.dedup import connected_components
 
     spark = build_session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -111,7 +111,7 @@ def main() -> None:
         load_before = _load1()
         stats: dict = {}
         t0 = time.monotonic()
-        labels = connected_components_twophase(pairs, stats=stats)
+        labels = connected_components(pairs, stats=stats)
         n_comp = labels.select("component").distinct().count()
         secs = time.monotonic() - t0
         st = _steal_pct(s0, _steal_ticks())

@@ -477,7 +477,7 @@ def q_bm25_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS, not just pairs: exact n-gram Jaccard pairs ->
-    connected components via iterative min-label propagation (the
+    connected components via large-star/small-star rounds (the
     transitive-closure step a real dedup pipeline applies before
     choosing representatives).  Oracle: DuckDB recursive CTE computes
     the same components over the same pair predicate — an iterative
@@ -495,21 +495,17 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_clusters_logstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same duplicate clusters as `dedup_clusters`, computed with the
-    O(log d)-round alternating large-star/small-star algorithm
-    (Kiveris et al., SoCC 2014) instead of diameter-round min-label
-    propagation — the scale path for high-diameter duplicate graphs.
-    Shares the recursive-CTE oracle: both must produce the identical
-    (doc, component-min) labeling."""
-    from marker_spark.ops.dedup import (
-        connected_components_twophase,
-        ngram_jaccard_pairs,
-    )
+    """Same duplicate clusters as `dedup_clusters`, from the same
+    O(log d)-round connected components (Kiveris et al., SoCC 2014);
+    kept as its own query name.  It has no oracle of its own:
+    tests/test_oracles.py checks its rows equal those of the
+    oracle-checked `dedup_clusters`."""
+    from marker_spark.ops.dedup import connected_components, ngram_jaccard_pairs
     from marker_spark.ops.text import words_col
 
     docs = _read(spark, sf_dir, "documents").where(F.size(words_col(F.col("text"))) >= 3)
     pairs = ngram_jaccard_pairs(docs, shingle=3, threshold=0.5, id_col="doc_id")
-    comp = connected_components_twophase(pairs)
+    comp = connected_components(pairs)
     return comp.select(
         F.col("id").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("component"),
@@ -2483,10 +2479,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- tail: rows-only with an exact-oracle sibling above, or
         #    multimodal plumbing gated by local parity tests --
         # oracle RETIRED round 6 to free driver-window slots for
-        # boilerplate_excision/media_metadata_exact: logstar shares
-        # dedup_clusters' oracle (identical output contract, unit-test
-        # parity pinned), forward as-of is the backward kernel with the
-        # sort reversed (property-tested vs a per-key Python scan)
+        # boilerplate_excision/media_metadata_exact: logstar runs the
+        # same connected_components as dedup_clusters (row parity
+        # pinned in tests/test_oracles.py), forward as-of is the
+        # backward kernel with the sort reversed (property-tested vs a
+        # per-key Python scan)
         "dedup_clusters_logstar": q_dedup_clusters_logstar,
         "asof_join_forward": q_asof_join_forward,
         # oracle RETIRED round 7 to free driver-window slots for

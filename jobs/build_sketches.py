@@ -97,17 +97,14 @@ def main(argv: list[str] | None = None) -> None:
     owns_session = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName("marker-spark-build-sketches").getOrCreate()
 
-    import numpy as np
-
     from marker_spark.agg import (
         SKETCH_COL,
+        _grouped_update,
         build_partials_arrow,
         merge_partials,
         salted_repartition,
     )
-    from marker_spark.hashing import mmh3_ngram_i32
-    from marker_spark.kernels import arrow_str_codes, arrow_tokens_view, bloom_factory
-    from marker_spark.ngrams import ngram_starts
+    from marker_spark.kernels import bloom_factory, bloom_ngram_updater
     from marker_spark.sketches.bloom import BloomSketch
 
     t_start = time.time()
@@ -167,24 +164,15 @@ def main(argv: list[str] | None = None) -> None:
         cap = max(int(stats.get(g, total) * 1.2), 10_000)
         return bloom_factory(capacity=cap, fp=fp)()
 
-    def batch_update(states: dict, batch) -> None:
-        flat, offsets = arrow_tokens_view(batch)
-        starts, per_doc = ngram_starts(offsets, n)
-        h1, h2 = mmh3_ngram_i32(flat, starts, n)
-        codes, uniques = arrow_str_codes(batch, gcol)
-        ngram_codes = np.repeat(codes, per_doc)
-        for gi, gname in enumerate(uniques):
-            key = (gname,)
-            sk = states.get(key)
-            if sk is None:
-                sk = states[key] = factory(key)
-            sel = ngram_codes == gi
-            sk.insert_hashes(h1[sel], h2[sel])
-
     parallelism = spark.sparkContext.defaultParallelism
     shares = {g: c / total for g, c in stats.items()}
     salted = salted_repartition(df, gcol, shares, parallelism=parallelism)
-    partials = build_partials_arrow(salted, batch_update, [gcol], ckpt_dir=args.ckpt)
+    partials = build_partials_arrow(
+        salted,
+        _grouped_update(factory, bloom_ngram_updater(n), [gcol]),
+        [gcol],
+        ckpt_dir=args.ckpt,
+    )
     if args.merge_into:
         # merge associativity makes yesterday's merged states just more
         # partials; groups new to either side pass through the merge

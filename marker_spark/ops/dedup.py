@@ -1098,119 +1098,112 @@ def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 50,
+    max_rounds: int = 30,
+    stats: dict | None = None,
 ) -> DataFrame:
-    """Duplicate CLUSTERS from near-dup pairs: connected components via
-    iterative min-label propagation — each round every node adopts the
-    minimum label among itself and its neighbors; fixpoint = every node
-    carries its component's minimum id.
+    """Duplicate CLUSTERS from near-dup pairs: the transitive closure
+    ("A~B, B~C => keep one of {A,B,C}") a dedup pipeline applies
+    before choosing representatives, in O(log d) rounds of the
+    alternating large-star / small-star algorithm (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014).
 
-    This is the step a real dedup pipeline needs beyond candidate
-    pairs: transitive closure ("A~B, B~C => keep one of {A,B,C}").
-    Each round is one keyed join + groupBy-min (shuffles only (node,
-    label) pairs); rounds needed = graph diameter, and near-dup graphs
-    are overwhelmingly tiny cliques (diameter 1-2).  At 10^12-edge
-    scale the round count can be cut to O(log d) with the small-star /
-    large-star transforms (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC 2014) — same per-round plan shape.
-    Convergence is detected with a scalar changed-count per round (a
-    driver decision, not driver data).
+    * large-star: every node connects its LARGER neighbors to the
+      minimum of its closed neighborhood.
+    * small-star: every node connects its (smaller) neighbors and
+      itself to their minimum.
 
-    Returns (id, component) — component = min id in the node's
-    component; only nodes that appear in `pairs` are returned
-    (singletons are their own trivial component).
+    Each step is one window min keyed by node, so a round is three
+    shuffles (two windows, one distinct) and no join.  Both steps
+    preserve connectivity and never raise the minimum reachable label,
+    and both leave every edge pointing from a child to a smaller
+    parent.  Such an edge set is the fixpoint once it is a star forest
+    — every child has exactly one parent and no parent is a child — so
+    each round ends with one job that looks for a node breaking that
+    rule (a driver decision, not driver data).  Near-dup cliques are
+    stars after the first round.
+
+    Every round's edges are local-checkpointed: a round's plan embeds
+    the previous round's several times, so without truncation the
+    driver analyzer OOMs around round 7 (measured).  Only the newest
+    checkpoint stays alive; the returned labels derive from it, so it
+    is registered for :func:`~marker_spark.cacheutil.release_all`.
+
+    Returns (id, component) for every node appearing in ``pairs``,
+    component = the minimum id of the node's component.  Raises
+    ``ValueError`` for ``max_rounds < 1`` before any job, and
+    ``RuntimeError`` if no star forest is reached in ``max_rounds``
+    rounds.  ``stats`` (optional dict) receives ``rounds`` and
+    ``converged``, so scale probes (BENCH/cc_scale_probe.py) can
+    record the bounded-rounds claim next to wall time.
     """
-    from ..cacheutil import register
+    from pyspark.sql import Window
 
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    edges = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .persist()
+    from ..cacheutil import local_checkpoint
+
+    if max_rounds < 1:
+        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
+    uv = register(
+        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct().persist()
     )
-    register(edges)
-    labels = edges.select(F.col("a").alias("id")).distinct().withColumn(
-        "label", F.col("id")
-    ).persist()
-    labels.count()  # materialize so each round starts from a stable snapshot
-    changed = None
-    prev_persisted = labels  # the materialized handle of the previous round
-    last_ck = None  # newest lineage-truncation checkpoint's storage handle
+    cur = uv.where(F.col("u") != F.col("v"))
+    by_u = Window.partitionBy("u")
+    ck = None  # storage handle of the newest checkpoint
+    converged = False
     try:
-        for round_no in range(max_iter):
-            nbr_min = (
-                edges.join(labels, edges.a == labels.id)
-                .groupBy(F.col("b").alias("id2"))
-                .agg(F.min("label").alias("nbr_min"))
+        for rounds in range(1, max_rounds + 1):
+            # -- large-star: (larger neighbor, min of closed neighborhood) --
+            sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            large = (
+                sym.withColumn("m", F.least(F.min("v").over(by_u), F.col("u")))
+                .where(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
             )
-            # persist BEFORE the convergence count so each round runs the
-            # join+aggregation once, not twice (count + next-round input)
-            new_labels = (
-                labels.join(nbr_min, labels.id == nbr_min.id2, "left")
-                .select(
-                    "id",
-                    F.least(F.col("label"), F.coalesce("nbr_min", "label")).alias("new_label"),
-                    "label",
-                )
-                .persist()
+            # -- small-star: a child and each of its parents -> min parent --
+            small = large.withColumn("m", F.min("v").over(by_u))
+            step, step_ck = local_checkpoint(
+                small.select(F.explode(F.array(
+                    F.struct(F.col("u"), F.col("m").alias("v")),
+                    F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+                )).alias("e"))
+                .select("e.u", "e.v")
+                .where(F.col("u") != F.col("v"))
+                .distinct()
             )
-            try:
-                changed = new_labels.where(F.col("new_label") < F.col("label")).count()
-            except Exception:
-                new_labels.unpersist()
-                raise
-            prev_persisted.unpersist()  # labels itself may be a projection
-            prev_persisted = new_labels
-            if changed and (round_no + 1) % 4 == 0:
-                # each round's plan references the previous round's ~2x,
-                # so past ~10 rounds the analyzer's tree copies grow
-                # exponentially and OOM the driver BEFORE the max_iter
-                # guard can fire (measured on a 48-node path).  Periodic
-                # localCheckpoint truncates the lineage; normal near-dup
-                # graphs (diameter 1-3) never reach it.  Only the NEWEST
-                # checkpoint's storage stays alive: once this round's
-                # checkpoint has (eagerly) materialized, every live plan
-                # derives from it, so the previous one frees immediately
-                # instead of piling ~max_iter/4 label-table copies up
-                # until release_all.
-                from ..cacheutil import local_checkpoint
-
-                truncated, ck = local_checkpoint(new_labels)
-                new_labels.unpersist()
-                if last_ck is not None:
-                    last_ck.unpersist()
-                last_ck = ck
-                prev_persisted = new_labels = truncated
-            labels = new_labels.select("id", F.col("new_label").alias("label"))
-            if changed == 0:
+            if ck is not None:
+                ck.unpersist()
+            cur, ck = step, step_ck
+            # a node with two child edges, or with child and parent
+            # edges, keeps the edge set off the star-forest fixpoint
+            roles = cur.select(F.col("u").alias("x"), F.lit(1).alias("child")).union(
+                cur.select(F.col("v").alias("x"), F.lit(0).alias("child"))
+            )
+            converged = not (
+                roles.groupBy("x")
+                .agg((F.sum("child") + F.max(1 - F.col("child"))).alias("n"))
+                .where(F.col("n") > 1)
+                .limit(1)
+                .count()
+            )
+            if converged:
                 break
     except Exception:
-        # mid-loop failure: the current round's handle is not in the
-        # registry yet — unpersist here or release_all() can never
-        # reclaim it in a long-lived session
-        prev_persisted.unpersist()
-        if last_ck is not None:
-            last_ck.unpersist()
+        if ck is not None:
+            ck.unpersist()
         raise
-    # only the FINAL round's labels outlive the loop (intermediate
-    # rounds were unpersisted as soon as the next round materialized) —
-    # registering every round would pile ~max_iter handles into the
-    # session registry on high-diameter graphs
-    if changed:
-        prev_persisted.unpersist()
-        if last_ck is not None:
-            last_ck.unpersist()
+    if stats is not None:
+        stats.update(rounds=rounds, converged=converged)
+    if not converged:
+        ck.unpersist()
         raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            f"rounds ({changed} labels still changing) — the graph has a "
-            f"component with eccentricity > max_iter; raise max_iter"
+            f"connected_components did not converge within max_rounds={max_rounds}"
         )
-    register(prev_persisted)
-    if last_ck is not None:
-        register(last_ck)  # the returned labels derive from it
-    return labels.select("id", F.col("label").alias("component"))
+    register(ck)
+    # the star forest's edges label children with their root; roots and
+    # nodes seen only in u==v self-pairs label themselves
+    labels = cur.select(F.col("u").alias("id"), F.col("v").alias("component"))
+    nodes = uv.select(F.col("u").alias("id")).union(uv.select(F.col("v").alias("id")))
+    roots = nodes.distinct().join(labels, "id", "left_anti")
+    return labels.union(roots.select("id", F.col("id").alias("component")))
 
 
 def char_grams(
@@ -1638,133 +1631,3 @@ def canonical_selection(
     out = members.withColumn("canonical_id", F.first(id_col).over(w))
     return out.withColumn("keep", F.col(id_col) == F.col("canonical_id"))
 
-
-def _cc_round_edges(edges: DataFrame) -> DataFrame:
-    """Symmetrized (u, v) view of an edge DataFrame."""
-    return edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-
-def connected_components_twophase(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_rounds: int = 30,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components in O(log d) rounds via the alternating
-    large-star / small-star algorithm (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC 2014) — the scale path
-    the plain min-label propagation (:func:`connected_components`)
-    documents for high-diameter graphs: label propagation needs
-    diameter-many rounds (a 10^6-node chain needs 10^6), the
-    alternation provably converges in O(log n) with the same
-    keyed-shuffle plan shape per round.
-
-    * large-star: every node connects its LARGER neighbors to the
-      minimum of its closed neighborhood.
-    * small-star: every edge oriented high->low; every node connects
-      its (smaller) neighbors and itself to their minimum.
-
-    Both steps preserve connectivity and never raise the minimum
-    reachable label; the fixpoint is a star per component rooted at
-    the component minimum.  Convergence is checked with a scalar
-    changed-edge count per round (driver decision, not driver data).
-
-    Returns (id, component) for every node appearing in ``pairs`` —
-    identical contract and output to :func:`connected_components`.
-
-    ``stats`` (optional dict) receives ``{"rounds": n}`` — the number
-    of large-star/small-star rounds to the fixpoint — so scale probes
-    (BENCH/cc_scale_probe.py) can record the bounded-rounds claim next
-    to wall time without touching the return contract.
-    """
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    register(edges)
-    # every input node, including ones isolated by u==v self-pairs
-    all_nodes = register(
-        pairs.select(F.col(src).alias("id"))
-        .union(pairs.select(F.col(dst).alias("id")))
-        .distinct()
-        .persist()
-    )
-    cur = edges
-    prev_ck = None
-    for _round in range(max_rounds):
-        # -- large-star --
-        sym = _cc_round_edges(cur)
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # -- small-star --
-        oriented = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        mins2 = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        # localCheckpoint (eager) TRUNCATES THE LINEAGE: each round's
-        # L∘S derives from `cur` ~4x per step, so without truncation
-        # the logical plan grows exponentially in the round count and
-        # OOMs the driver analyzer around round 7 (measured).  The
-        # materialized rounds are tiny (edge set shrinks toward one
-        # star per component); superseded rounds' storage is released
-        # immediately via the tracked handle (DataFrame.unpersist can't
-        # free checkpoint storage — see cacheutil.local_checkpoint).
-        from ..cacheutil import local_checkpoint
-
-        small, ck = local_checkpoint(
-            oriented.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select(F.col("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # changed = any edge appearing in exactly one of (cur, small)
-        changed = (
-            small.exceptAll(cur).limit(1).count()
-            + cur.exceptAll(small).limit(1).count()
-        )
-        if prev_ck is not None:
-            prev_ck.unpersist()
-        prev_ck = ck
-        cur = small
-        if changed == 0:
-            if stats is not None:
-                stats["rounds"] = _round + 1
-                stats["converged"] = True
-            break
-    else:
-        # record the exhaustion in stats too, so a caller that catches
-        # (or a probe reading a shared stats dict) can distinguish
-        # convergence from running out of rounds rather than seeing an
-        # absent key (ADVICE r8)
-        if stats is not None:
-            stats["rounds"] = max_rounds
-            stats["converged"] = False
-        if prev_ck is not None:
-            prev_ck.unpersist()
-        raise RuntimeError(
-            f"two-phase CC did not converge within max_rounds={max_rounds}"
-        )
-    # the final round's checkpoint backs the returned labels: session
-    # owner releases it (recompute-on-reuse is safe for plain persists,
-    # but a checkpointed plan re-materializes from its own storage, so
-    # release only after consumption — release_all's contract)
-    register(prev_ck)
-    # fixpoint edges form stars (child -> component min); roots and
-    # u==v-only nodes label themselves
-    labels = cur.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    roots = all_nodes.join(
-        labels.select(F.col("id").alias("id2")),
-        F.col("id") == F.col("id2"),
-        "left_anti",
-    ).select("id", F.col("id").alias("component"))
-    return labels.union(roots)

@@ -29,6 +29,11 @@ def test_no_persistent_rdd_leak_across_query_sweep(spark):
         "flagship_bloom_by_source",  # caches the tokenized corpus
         "cms_heavy_tokens",      # caches the tokenized corpus
         "mg_heavy_words",        # caches the exploded word table
+        # connected components: persists the edge table and
+        # local-checkpoints every round
+        "dedup_clusters",
+        "dedup_clusters_logstar",
+        "canonical_selection",
     ]
     Q = E.queries()
     for name in names:

@@ -312,7 +312,7 @@ def test_embedding_pair_kernel_matches_python_reference(spark):
 
 
 def test_connected_components_chain_and_clique(spark):
-    """Min-label propagation must close transitive chains (A-B, B-C,
+    """Connected components must close transitive chains (A-B, B-C,
     C-D => one component) — the multi-round convergence case — and
     keep disjoint cliques apart."""
     import pandas as pd
@@ -578,58 +578,95 @@ def _cc_sets(rows):
     return frozenset(frozenset(g) for g in groups.values())
 
 
-def test_twophase_cc_matches_label_propagation(spark):
-    from hypothesis import given, settings
+def _cc_labels(spark, edges, **kw):
+    """(id, component) rows of connected_components over int edges,
+    with its registered handles released."""
+    from marker_spark.cacheutil import release_all
+    from marker_spark.ops.dedup import connected_components
+
+    df = spark.createDataFrame(edges, "id_a int, id_b int")
+    try:
+        return {(r["id"], r["component"]) for r in connected_components(df, **kw).collect()}
+    finally:
+        release_all()
+
+
+def _cliques_and_pairs(sizes):
+    """Edges of disjoint cliques of the given sizes (size 2 is an
+    isolated pair), node ids scattered by a fixed permutation so a
+    clique's minimum is not its first node."""
+    edges, base = [], 0
+    for size in sizes:
+        nodes = [(base + i) * 7 % 101 for i in range(size)]
+        edges += [(a, b) for i, a in enumerate(nodes) for b in nodes[i + 1:]]
+        base += size
+    return edges
+
+
+def test_connected_components_matches_union_find(spark):
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
-    from marker_spark.ops.dedup import (
-        connected_components,
-        connected_components_twophase,
+    edge_lists = st.one_of(
+        st.lists(
+            st.tuples(st.integers(0, 25), st.integers(0, 25)),
+            min_size=1, max_size=30,
+        ),
+        # self-pairs only: every node is its own component, no edge survives
+        st.lists(st.integers(0, 25).map(lambda n: (n, n)), min_size=1, max_size=10),
+        # cliques mixed with isolated pairs (size-2 cliques)
+        st.lists(st.integers(2, 5), min_size=1, max_size=6).map(_cliques_and_pairs),
     )
 
     @settings(max_examples=8, deadline=None)
-    @given(st.lists(
-        st.tuples(st.integers(0, 25), st.integers(0, 25)),
-        min_size=1, max_size=30,
-    ))
+    @given(edge_lists)
+    # after round 1 this path is (3,1), (4,1), (3,2), (5,2): no parent
+    # is a child, yet node 3 has two parents — not a star forest
+    @example([(1, 4), (4, 3), (3, 5), (5, 2)])
     def inner(edges):
-        df = spark.createDataFrame(edges, "id_a int, id_b int")
-        tp = connected_components_twophase(df)
-        rows = {(r["id"], r["component"]) for r in tp.collect()}
-        # component label must be the component MINIMUM, same as the
-        # min-label operator's contract
-        want_sets = _cc_sets(edges)
-        want = {(n, min(g)) for g in want_sets for n in g}
+        rows = _cc_labels(spark, edges)
+        # component label must be the component MINIMUM
+        want = {(n, min(g)) for g in _cc_sets(edges) for n in g}
         assert rows == want, (sorted(rows), sorted(want))
-        lp = {
-            (r["id"], r["component"])
-            for r in connected_components(df).collect()
-        }
-        assert rows == lp
 
     inner()
 
 
-def test_twophase_cc_converges_in_log_rounds_on_a_path(spark):
-    """The reason the two-phase algorithm exists: a 48-node path has
-    diameter 47, so min-label propagation cannot finish in 12 rounds,
-    while large-star/small-star does (O(log n))."""
+def test_connected_components_converges_in_log_rounds_on_a_path(spark):
+    """A 48-node path has diameter 47, so min-label propagation could
+    not finish in 12 rounds, while large-star/small-star does
+    (O(log n)).  Too few rounds raise; a round budget below 1 is
+    rejected before any Spark job."""
     import pytest as _pytest
 
-    from marker_spark.ops.dedup import (
-        connected_components,
-        connected_components_twophase,
-    )
+    from marker_spark.cacheutil import live_count
+    from marker_spark.ops.dedup import connected_components
+    from tests.test_api import _rejected_before_any_job
 
     path = [(i, i + 1) for i in range(47)]
-    df = spark.createDataFrame(path, "id_a int, id_b int")
-    got = {
-        (r["id"], r["component"])
-        for r in connected_components_twophase(df, max_rounds=12).collect()
-    }
-    assert got == {(i, 0) for i in range(48)}
+    stats: dict = {}
+    assert _cc_labels(spark, path, max_rounds=12, stats=stats) == {(i, 0) for i in range(48)}
+    assert stats["converged"], stats
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=12)
+        _cc_labels(spark, path, max_rounds=2, stats=stats)
+    assert stats == {"rounds": 2, "converged": False}
+    df = spark.createDataFrame(path, "id_a int, id_b int")
+    n_live = live_count()
+    _rejected_before_any_job(
+        spark, df, "cc-max-rounds-0",
+        lambda: connected_components(df, max_rounds=0), "max_rounds must be >= 1",
+    )
+    assert live_count() == n_live
+
+
+def test_connected_components_stops_after_one_round_on_disjoint_cliques(spark):
+    """Near-dup pairs form small cliques: one round turns each into a
+    star rooted at its minimum, and the star-forest check ends there."""
+    edges = _cliques_and_pairs([5, 4, 3, 2, 2])
+    stats: dict = {}
+    rows = _cc_labels(spark, edges, stats=stats)
+    assert rows == {(n, min(g)) for g in _cc_sets(edges) for n in g}
+    assert stats == {"rounds": 1, "converged": True}
 
 
 def test_semdedup_flags_matches_numpy_replica(spark):

@@ -83,3 +83,15 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(df.columns) == {"source", "n_inserted", "m", "k", "fill_ratio"}
+
+
+def test_dedup_clusters_logstar_matches_dedup_clusters(spark):
+    """`dedup_clusters_logstar` has no oracle of its own: its rows must
+    equal those of the oracle-checked `dedup_clusters`."""
+    Q = entrymod.queries()
+    try:
+        got = [tuple(r) for r in Q["dedup_clusters_logstar"](spark, SF_DIR).collect()]
+        want = [tuple(r) for r in Q["dedup_clusters"](spark, SF_DIR).collect()]
+    finally:
+        release_all()
+    assert got and got == want
