@@ -36,6 +36,7 @@ raw rows.  Where a hot group's state must be split across tasks,
 
 from __future__ import annotations
 
+import heapq
 import json
 import zlib
 from collections.abc import Callable, Iterator
@@ -298,32 +299,61 @@ def build_partials_arrow(
     return df.toDF(*[f"_{i}" for i in range(len(names))]).mapInArrow(partition_fn, schema=schema)
 
 
-def _salt_count(group_col: str, salt_counts: dict[str, int]):
-    """Column: the salt count of each row's group, 1 for a NULL or
-    unknown group (also under ANSI mode).  One map literal costs a
+def _salt_placement(shares: dict[str, float], parallelism: int) -> dict[str, list[int]]:
+    """Partition ids of each group's salts: ``max(1, round(share *
+    parallelism))`` salts (at most ``parallelism``), each a unit of
+    ``share / salts`` rows.  Groups go largest unit first, and each
+    group's units go to the least-loaded partitions that group does
+    not use yet (a heap, O(units * log parallelism)), so one group's
+    salts never share a partition and, with shares summing to at most
+    1, no partition carries more than ``1/parallelism`` plus its
+    largest unit.  Ties break by group name and partition id, so the
+    placement is the same on every call."""
+    salts = {g: min(parallelism, max(1, round(s * parallelism))) for g, s in shares.items()}
+    heap = [(0.0, p) for p in range(parallelism)]
+    placement: dict[str, list[int]] = {}
+    for g in sorted(shares, key=lambda g: (-shares[g] / salts[g], g)):
+        unit = shares[g] / salts[g]
+        taken = [heapq.heappop(heap) for _ in range(salts[g])]
+        placement[g] = [p for _, p in taken]
+        for load, p in taken:
+            heapq.heappush(heap, (load + unit, p))
+    return placement
+
+
+def _placed_salts(group_col: str, placement: dict[str, list[int]]):
+    """Column: the partition ids of each row's group's salts, NULL for
+    a group missing from ``placement``.  A NULL row is the group
+    ``NULL_KEY``, as sketch builds group it.  One map literal costs a
     constant number of py4j calls, where a CASE WHEN chain costs ~40
     per group; Catalyst folds the ``from_json`` to a map constant."""
-    salt_map = F.from_json(F.lit(json.dumps(salt_counts)), "map<string,int>")
-    return F.coalesce(F.element_at(salt_map, F.col(group_col).cast("string")), F.lit(1))
+    placed = F.from_json(F.lit(json.dumps(placement)), "map<string,array<int>>")
+    key = F.coalesce(F.col(group_col).cast("string"), F.lit(NULL_KEY))
+    return F.element_at(placed, key)
 
 
 def salted_repartition(
     df: DataFrame, group_col: str, shares: dict[str, float], parallelism: int
 ) -> DataFrame:
-    """Repartition rows by (group, per-group salt) with salt counts
-    proportional to each group's row share — a zipf-hot group gets
-    ~share*parallelism salts, tail groups 1.  Bounds both skew (no
-    task sees more than ~1/parallelism of the rows) and state blowup
-    (total partial states ~ parallelism + #groups)."""
-    salt_counts = {
-        g: max(1, round(share * parallelism)) for g, share in shares.items()
-    }
-    expr = _salt_count(group_col, salt_counts)
-    salted = df.withColumn("__salt", (F.monotonically_increasing_id() % expr).cast("int"))
-    # 4x more partitions than parallelism: total state count is fixed
-    # at ~Sigma salt_g (one per distinct key), while smaller tasks let
-    # the scheduler smooth hash collisions between hot keys.
-    return salted.repartition(parallelism * 4, group_col, "__salt").drop("__salt")
+    """Repartition rows into ``parallelism`` partitions by (group,
+    per-group salt), with salt counts proportional to each group's row
+    share — a zipf-hot group gets ~share*parallelism salts, tail groups
+    1 — and every salt placed on a partition by
+    :func:`_salt_placement` rather than hashed, so no task sees more
+    than ~1/parallelism of the rows plus one salt's worth.  Total
+    partial states stay ~ parallelism + #groups.  A row's salt is its
+    ``monotonically_increasing_id`` modulo its group's salt count; a
+    group missing from ``shares`` goes to ``pmod(xxhash64(group),
+    parallelism)``."""
+    salts = _placed_salts(group_col, _salt_placement(shares, parallelism))
+    unknown = F.pmod(
+        F.xxhash64(F.coalesce(F.col(group_col).cast("string"), F.lit(NULL_KEY))),
+        F.lit(parallelism),
+    )
+    pid = F.when(salts.isNull(), unknown).otherwise(
+        salts[(F.monotonically_increasing_id() % F.size(salts)).cast("int")]
+    )
+    return df.repartitionById(parallelism, pid.cast("int"))
 
 
 def _split_groups(batch, group_cols: list[str]) -> Iterator[tuple[tuple, Any]]:

@@ -3,7 +3,9 @@ schema (doc_id string, tokens array<int32>, n_tok int32, source string).
 
 Every update kernel consumes a whole Arrow RecordBatch and runs
 numpy-only math — no per-row Python in the hot path
-(BASELINE.json:input_hint).  The probe side lives in
+(BASELINE.json:input_hint) — over consecutive row slices of at most
+``_HASH_CHUNK`` n-grams (or markers), so its scratch is bounded by the
+slice, not by the batch.  The probe side lives in
 :mod:`marker_spark.probe` and :mod:`marker_spark.cache.sketch_cache`.
 """
 
@@ -14,8 +16,8 @@ from typing import Any, Callable
 import numpy as np
 import pandas as pd
 
-from .hashing import mmh3_ngram_i32, mmh3_offsets
-from .ngrams import ngram_starts
+from .hashing import _HASH_CHUNK, mmh3_ngram_i32, mmh3_offsets
+from .ngrams import ngram_slices
 from .params import BloomParams
 from .sketches.bloom import BloomSketch
 
@@ -98,17 +100,19 @@ def ngram_updater(
     """``update(sk, batch)`` that hashes every token n-gram of the
     batch's rows — MurmurHash3_x64_128 of the little-endian int32
     n-gram bytes, fused straight off the Arrow buffer — and hands the
-    (h1, h2) vectors to ``insert(sk, h1, h2)``.  A batch without a
-    single n-gram never reaches ``insert``.  Raises ``ValueError`` for
+    (h1, h2) vectors to ``insert(sk, h1, h2)``, one row slice of at
+    most ``_HASH_CHUNK`` n-grams (or one longer row) at a time
+    (:func:`ngrams.ngram_slices`).  A slice without a single n-gram
+    never reaches ``insert``.  Raises ``ValueError`` for
     ``n < 1`` (every "n-gram" would hash the same empty byte string)."""
     if n < 1:
         raise ValueError(f"ngram must be >= 1, got {n}")
 
     def update(sk, batch) -> None:
         flat, offsets = arrow_tokens_view(batch, token_col)
-        starts, _ = ngram_starts(offsets, n)
-        if len(starts):
-            insert(sk, *mmh3_ngram_i32(flat, starts, n))
+        for _, _, starts in ngram_slices(offsets, n, _HASH_CHUNK):
+            if len(starts):
+                insert(sk, *mmh3_ngram_i32(flat, starts, n))
 
     return update
 
@@ -119,10 +123,13 @@ def bloom_ngram_updater(n: int, token_col: str = "tokens") -> Callable[[Any, Any
 
 
 def bloom_binary_updater(col: str) -> Callable[[Any, Any], None]:
-    """Insert a binary/string column's byte values (reference marker path)."""
+    """Insert a binary/string column's byte values (reference marker
+    path), ``_HASH_CHUNK`` markers at a time."""
 
     def update(sk: BloomSketch, batch) -> None:
-        sk.insert_hashes(*mmh3_offsets(*arrow_marker_bytes(batch.column(col))))
+        flat, offsets = arrow_marker_bytes(batch.column(col))
+        for lo in range(0, len(offsets) - 1, _HASH_CHUNK):
+            sk.insert_hashes(*mmh3_offsets(flat, offsets[lo : lo + _HASH_CHUNK + 1]))
 
     return update
 

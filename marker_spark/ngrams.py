@@ -12,7 +12,16 @@ offsets) so a whole Arrow batch is processed with zero per-row Python.
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
+
+
+def _window_starts(doc_start: np.ndarray, per_doc: np.ndarray, total: int) -> np.ndarray:
+    """``doc_start[d] + (0..per_doc[d]-1)`` for each doc, concatenated:
+    the window starts of ``total = per_doc.sum()`` n-grams."""
+    within = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(per_doc) - per_doc, per_doc)
+    return np.repeat(doc_start, per_doc) + within
 
 
 def ngram_starts(offsets: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
@@ -22,17 +31,30 @@ def ngram_starts(offsets: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
     max(len_d - n + 1, 0) is the n-gram count of doc d.  Fully
     vectorized: no per-doc loop.
     """
-    lens = np.diff(offsets)
-    per_doc = np.maximum(lens - n + 1, 0)
-    total = int(per_doc.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64), per_doc
-    # starts = doc_start + (0..per_doc-1) for each doc
-    doc_start_rep = np.repeat(offsets[:-1], per_doc)
-    within = np.arange(total, dtype=np.int64) - np.repeat(
-        np.concatenate(([0], np.cumsum(per_doc)[:-1])), per_doc
-    )
-    return doc_start_rep + within, per_doc
+    per_doc = np.maximum(np.diff(offsets) - n + 1, 0)
+    return _window_starts(offsets[:-1], per_doc, int(per_doc.sum())), per_doc
+
+
+def ngram_slices(
+    offsets: np.ndarray, n: int, max_grams: int
+) -> Iterator[tuple[int, int, np.ndarray]]:
+    """``(row_lo, row_hi, starts)`` for consecutive row ranges that tile
+    the rows of ``offsets`` in order, each holding at most
+    ``max_grams`` n-grams; a row with more is a range of its own.  Rows
+    are never split, so per-row results stay within one slice, and a
+    caller's scratch is O(``max_grams`` + longest row) whatever the
+    batch size.  ``starts`` are the slice's window starts into the flat
+    token array, as :func:`ngram_starts` gives them."""
+    per_doc = np.maximum(np.diff(offsets) - n + 1, 0)
+    cum = np.zeros(len(per_doc) + 1, dtype=np.int64)
+    np.cumsum(per_doc, out=cum[1:])
+    rows, lo = len(per_doc), 0
+    while lo < rows:
+        # last row boundary within max_grams of lo, at least one row on
+        hi = int(np.searchsorted(cum, cum[lo] + max_grams, side="right")) - 1
+        hi = min(max(hi, lo + 1), rows)
+        yield lo, hi, _window_starts(offsets[lo:hi], per_doc[lo:hi], int(cum[hi] - cum[lo]))
+        lo = hi
 
 
 def ngram_bytes(flat: np.ndarray, offsets: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:

@@ -31,9 +31,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .agg import SKETCH_COL, _split_groups, check_input_col, qcol, unpack_state
-from .hashing import mmh3_ngram_i32, mmh3_offsets
+from .hashing import _HASH_CHUNK, mmh3_ngram_i32, mmh3_offsets
 from .kernels import arrow_list_view, arrow_marker_bytes
-from .ngrams import ngram_starts
+from .ngrams import ngram_slices
 from .sketches.bloom import BloomSketch
 
 
@@ -103,15 +103,16 @@ def _ngram_hits(n: int):
     def hits(bf: BloomSketch, tokens: pa.Array) -> np.ndarray:
         out = np.zeros(len(tokens), dtype=bool)
         flat, offsets = arrow_list_view(tokens)
-        starts, per_doc = ngram_starts(offsets, n)
-        if len(starts):
-            flat = flat.astype(np.int32, copy=False)
-            found = bf.contains_hashes(*mmh3_ngram_i32(flat, starts, n))
-            # any() per doc: OR-reduce each doc's run of n-gram hits
-            seg = np.zeros(len(per_doc), dtype=np.int64)
-            np.cumsum(per_doc[:-1], out=seg[1:])
-            nz = per_doc > 0
-            out[nz] = np.logical_or.reduceat(found, seg[nz])
+        flat = flat.astype(np.int32, copy=False)
+        per_doc = np.maximum(np.diff(offsets) - n + 1, 0)
+        # one row slice of at most _HASH_CHUNK n-grams at a time
+        for lo, hi, starts in ngram_slices(offsets, n, _HASH_CHUNK):
+            if len(starts):
+                found = bf.contains_hashes(*mmh3_ngram_i32(flat, starts, n))
+                # any() per doc: OR-reduce each doc's run of n-gram hits
+                counts = per_doc[lo:hi]
+                nz = counts > 0
+                out[lo:hi][nz] = np.logical_or.reduceat(found, (np.cumsum(counts) - counts)[nz])
         return out
 
     return hits

@@ -23,7 +23,7 @@ import struct
 
 import numpy as np
 
-from ..hashing import mmh3_fixed_width
+from ..hashing import _HASH_CHUNK, mmh3_fixed_width
 from .base import HEADER_BYTES, KIND_BLOOM, pack_header, unpack_header
 
 _PARAMS = struct.Struct("<QIQ")
@@ -50,50 +50,45 @@ class BloomSketch:
 
     # --- updates -----------------------------------------------------------
     def insert_hashes(self, h1: np.ndarray, h2: np.ndarray) -> None:
+        """Set the k bits of every hash, ``_HASH_CHUNK`` hashes at a
+        time, so scratch is O(``_HASH_CHUNK`` * k) whatever ``len(h1)``."""
+        for lo in range(0, len(h1), _HASH_CHUNK):
+            self._insert_chunk(h1[lo : lo + _HASH_CHUNK], h2[lo : lo + _HASH_CHUNK])
+        self.n_inserted += len(h1)
+
+    def _insert_chunk(self, h1: np.ndarray, h2: np.ndarray) -> None:
+        # Sort + grouped-OR: O(Nk log Nk) buffered C ops with no
+        # m-sized scratch (memory-bandwidth friendly when many tasks
+        # run concurrently), ~10x faster than an unbuffered
+        # np.bitwise_or.at scatter at large N and still ~2x faster at
+        # N = 1.  The sort is the cost, and it is bandwidth-bound: when
+        # every bit position fits in 32 bits (m <= 2^32, i.e. bitmaps up
+        # to 512 MB) sorting uint32 positions moves half the bytes —
+        # measured 2.1x on the hot-group build bloom.  Boundaries come
+        # from a bool compare on the sorted array (no int64 diff
+        # temporary) and the block shift is done in place.
         n = len(h1)
-        if n == 0:
-            return
         m = np.uint64(self.m)
-        if n * self.k >= 4096:
-            # Sort + grouped-OR path: O(Nk log Nk) buffered C ops with
-            # no m-sized scratch (memory-bandwidth friendly when many
-            # tasks run concurrently), ~10x faster than the unbuffered
-            # np.bitwise_or.at scatter.  The sort is the cost, and it is
-            # bandwidth-bound: when every bit position fits in 32 bits
-            # (m <= 2^32, i.e. bitmaps up to 512 MB) sorting uint32
-            # positions moves half the bytes — measured 2.1x on the
-            # hot-group build bloom.  Boundaries come from a bool
-            # compare on the sorted array (no int64 diff temporary) and
-            # the block shift is done in place.
-            if self.m <= 0xFFFFFFFF:
-                bits = np.empty(n * self.k, dtype=np.uint32)
-                tmp = np.empty(n, dtype=np.uint64)
-                for i in range(self.k):
-                    np.mod(h1 + np.uint64(i) * h2, m, out=tmp)
-                    bits[i * n : (i + 1) * n] = tmp
-            else:
-                bits = np.empty(n * self.k, dtype=np.uint64)
-                for i in range(self.k):
-                    np.mod(h1 + np.uint64(i) * h2, m, out=bits[i * n : (i + 1) * n])
-            bits.sort()
-            six3 = bits.dtype.type(63)
-            mask = np.uint64(1) << (bits & six3).astype(np.uint64)
-            bits >>= bits.dtype.type(6)  # in place: bits becomes the block index
-            change = np.empty(len(bits), dtype=bool)
-            change[0] = True
-            np.not_equal(bits[1:], bits[:-1], out=change[1:])
-            starts = np.flatnonzero(change)
-            ored = np.bitwise_or.reduceat(mask, starts)
-            self.blocks[bits[starts]] |= ored
-        else:
+        if self.m <= 0xFFFFFFFF:
+            bits = np.empty(n * self.k, dtype=np.uint32)
+            tmp = np.empty(n, dtype=np.uint64)
             for i in range(self.k):
-                bits = (h1 + np.uint64(i) * h2) % m
-                np.bitwise_or.at(
-                    self.blocks,
-                    (bits >> np.uint64(6)).astype(np.int64),
-                    np.uint64(1) << (bits & np.uint64(63)),
-                )
-        self.n_inserted += n
+                np.mod(h1 + np.uint64(i) * h2, m, out=tmp)
+                bits[i * n : (i + 1) * n] = tmp
+        else:
+            bits = np.empty(n * self.k, dtype=np.uint64)
+            for i in range(self.k):
+                np.mod(h1 + np.uint64(i) * h2, m, out=bits[i * n : (i + 1) * n])
+        bits.sort()
+        six3 = bits.dtype.type(63)
+        mask = np.uint64(1) << (bits & six3).astype(np.uint64)
+        bits >>= bits.dtype.type(6)  # in place: bits becomes the block index
+        change = np.empty(len(bits), dtype=bool)
+        change[0] = True
+        np.not_equal(bits[1:], bits[:-1], out=change[1:])
+        starts = np.flatnonzero(change)
+        ored = np.bitwise_or.reduceat(mask, starts)
+        self.blocks[bits[starts]] |= ored
 
     def insert_fixed_width(self, matrix: np.ndarray) -> None:
         """Insert N fixed-width byte rows ([N, W] uint8) — n-gram path."""

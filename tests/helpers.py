@@ -17,3 +17,18 @@ def list_column_to_flat(series) -> tuple[np.ndarray, np.ndarray]:
         return np.empty(0, dtype=np.int32), offsets
     flat = np.concatenate(values).astype(np.int32, copy=False)
     return flat, offsets
+
+
+def peak_scratch(fn) -> tuple[object, int]:
+    """``(fn(), peak bytes)``: the most memory Python and numpy held at
+    once during the call above what they held before it (tracemalloc)."""
+    import tracemalloc
+
+    tracemalloc.start()
+    try:
+        tracemalloc.reset_peak()
+        base = tracemalloc.get_traced_memory()[0]
+        out = fn()
+        return out, tracemalloc.get_traced_memory()[1] - base
+    finally:
+        tracemalloc.stop()

@@ -182,40 +182,61 @@ def test_encode_series_null_cells():
 
 @pytest.mark.parametrize("ansi", ["true", "false"])
 def test_salt_count_matches_case_when_chain(spark, ansi):
-    """The map-literal salt equals the CASE WHEN chain it replaced for
-    awkward group names, the NULL_KEY sentinel, a NULL row and a group
-    missing from the shares, with and without ANSI mode; the
-    repartition places every row as the chain would."""
+    """The map-literal salt placement equals a CASE WHEN chain over the
+    same placement for awkward group names, the NULL_KEY sentinel, a
+    NULL row and a group missing from the shares, with and without ANSI
+    mode.  The repartition puts one group's salts in distinct
+    partitions, no partition's row share above 1/P plus its largest
+    (group, salt) unit, a NULL row with NULL_KEY's salts and an unknown
+    group on ``pmod(xxhash64(group), P)``, the same way on every call."""
+    from collections import Counter
+
     from pyspark.sql import functions as F
 
-    from marker_spark.agg import NULL_KEY, _salt_count, salted_repartition
+    from marker_spark.agg import NULL_KEY, _placed_salts, _salt_placement, salted_repartition
 
-    shares = {'say "hi"': 0.3, "back\\slash": 0.2, "日本語 café": 0.25, NULL_KEY: 0.15, "plain": 0.1}
-    parallelism = 8
-    counts = {g: max(1, round(s * parallelism)) for g, s in shares.items()}
-    chain = F.lit(1)
-    for g, s in counts.items():
-        chain = F.when(F.col("g") == g, F.lit(s)).otherwise(chain)
-    names = list(shares) + [None, "unknown"]
-    rows = [(i, names[i % len(names)]) for i in range(70)]
+    sizes = {'say "hi"': 400, "back\\slash": 200, "日本語 café": 150, NULL_KEY: 100, "plain": 80, "a.b": 70}
+    total = sum(sizes.values())
+    shares = {g: c / total for g, c in sizes.items()}
+    parallelism = 4
+    placement = _salt_placement(shares, parallelism)
+    assert placement == _salt_placement(dict(reversed(shares.items())), parallelism)
+    chain = F.lit(None)
+    for g, ids in placement.items():
+        chain = F.when(
+            F.coalesce(F.col("g"), F.lit(NULL_KEY)) == g, F.array(*map(F.lit, ids))
+        ).otherwise(chain)
+    # each group's rows contiguous, so a salt takes every c-th id of it;
+    # 40 of NULL_KEY's rows are NULL
+    names = [g for g, c in sizes.items() for _ in range(c)]
+    names[names.index(NULL_KEY) : names.index(NULL_KEY) + 40] = [None] * 40
+    rows = [(i, g) for i, g in enumerate(names + ["unknown"] * 20)]
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
-        df = spark.createDataFrame(rows, "i long, g string").repartition(3, "i")
-        got = df.select("i", "g", _salt_count("g", counts).alias("new"), chain.alias("old")).collect()
+        df = spark.createDataFrame(rows, "i long, g string").coalesce(1)
+        got = df.select("g", _placed_salts("g", placement).alias("new"), chain.alias("old")).collect()
         assert len(got) == len(rows)
         assert all(r["new"] == r["old"] for r in got), [r for r in got if r["new"] != r["old"]]
-        assert {r["g"]: r["new"] for r in got}[None] == 1
-        assert {r["g"]: r["new"] for r in got}["unknown"] == 1
-        assert {r["g"]: r["new"] for r in got}[NULL_KEY] == counts[NULL_KEY]
+        assert {r["g"]: r["new"] for r in got}[None] == placement[NULL_KEY]
+        assert {r["g"]: r["new"] for r in got}["unknown"] is None
 
-        def placement(salted):
+        def placed(salted):
             return sorted(salted.select("i", F.spark_partition_id().alias("p")).collect())
 
-        reference = df.withColumn(
-            "__salt", (F.monotonically_increasing_id() % chain).cast("int")
-        ).repartition(parallelism * 4, "g", "__salt").drop("__salt")
-        assert placement(salted_repartition(df, "g", shares, parallelism)) == placement(reference)
+        first = placed(salted_repartition(df, "g", shares, parallelism))
+        assert first == placed(salted_repartition(df, "g", shares, parallelism))
+        part = {i: p for i, p in first}
+        group = {i: NULL_KEY if g is None else g for i, g in rows}
+        units = Counter((group[i], part[i]) for i, _ in rows)
+        for g, ids in placement.items():
+            assert len(set(ids)) == len(ids)
+            assert {p for (h, p) in units if h == g} == set(ids), g
+        (hashed,) = spark.range(1).select(F.pmod(F.xxhash64(F.lit("unknown")), F.lit(parallelism))).first()
+        assert {p for (h, p) in units if h == "unknown"} == {hashed}
+        for p in range(parallelism):
+            known = {h: c for (h, q), c in units.items() if q == p and h != "unknown"}
+            assert sum(known.values()) / total <= 1 / parallelism + max(known.values(), default=0) / total, p
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
 

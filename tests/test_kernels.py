@@ -125,3 +125,67 @@ def test_arrow_tokens_view_on_sliced_batch():
         np.testing.assert_array_equal(flat, exp_flat)
         np.testing.assert_array_equal(offsets, exp_offsets)
         assert flat.dtype == np.int32 and offsets.dtype == np.int64
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    lengths=st.lists(st.integers(0, 12), max_size=30),
+    n=st.integers(1, 4),
+    max_grams=st.integers(1, 20),
+)
+def test_ngram_slices_tile_the_rows_and_bound_each_slice(lengths, n, max_grams):
+    """The slices' starts concatenate to ``ngram_starts``; their row
+    ranges tile the rows in order (empty and shorter-than-n rows
+    included); a slice holds at most ``max_grams`` n-grams unless it is
+    a single row."""
+    from marker_spark.ngrams import ngram_slices, ngram_starts
+
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    want, per_doc = ngram_starts(offsets, n)
+    slices = list(ngram_slices(offsets, n, max_grams))
+    got = np.concatenate([s for _, _, s in slices]) if slices else np.empty(0, np.int64)
+    np.testing.assert_array_equal(got, want)
+    edges = [0] + [hi for _, hi, _ in slices]
+    assert [lo for lo, _, _ in slices] == edges[:-1] and edges[-1] == len(lengths)
+    for lo, hi, starts in slices:
+        assert lo < hi and len(starts) == per_doc[lo:hi].sum()
+        assert len(starts) <= max_grams or hi - lo == 1
+
+
+def test_update_scratch_is_bounded_by_one_slice():
+    """One update call on a 2,000 x 1,024-token batch holds under 32 MB
+    of scratch for the Bloom, HLL and CMS updaters (whole-batch hashing
+    held 474, 166 and 230 MB), and leaves the state byte-identical to
+    one unsliced ``insert_hashes``/``update_hashes`` call on the same
+    hashes.  The marker updater matches too, past one hash chunk."""
+    from marker_spark.api import _h1, _h1_h2
+    from marker_spark.hashing import mmh3_ngram_i32
+    from marker_spark.kernels import bloom_binary_updater, bloom_factory, bloom_ngram_updater, ngram_updater
+    from marker_spark.ngrams import ngram_starts
+    from marker_spark.sketches.cms import CmsSketch
+    from marker_spark.sketches.hll import HllSketch
+    from tests.helpers import peak_scratch
+
+    rows, width = 2000, 1024
+    flat = np.random.default_rng(5).integers(0, 50_000, rows * width, dtype=np.int32)
+    offsets = np.arange(0, rows * width + 1, width, dtype=np.int32)
+    batch = pa.record_batch({"tokens": pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat))})
+    cases = [
+        (bloom_factory(500_000, 0.001), bloom_ngram_updater(3), 3, lambda sk, h: sk.insert_hashes(*h)),
+        (lambda: HllSketch(p=14), ngram_updater(3, "tokens", _h1), 3, lambda sk, h: sk.update_hashes(h[0])),
+        (lambda: CmsSketch(d=5, w=1 << 16), ngram_updater(1, "tokens", _h1_h2), 1, lambda sk, h: sk.update_hashes(*h)),
+    ]
+    for factory, update, n, whole in cases:
+        sk = factory()
+        _, peak = peak_scratch(lambda: update(sk, batch))
+        assert peak < 32 << 20, (type(sk).__name__, peak >> 20)
+        ref = factory()
+        whole(ref, mmh3_ngram_i32(flat, ngram_starts(offsets.astype(np.int64), n)[0], n))
+        assert sk.to_bytes() == ref.to_bytes(), type(sk).__name__
+
+    markers = pa.array([str(i).encode() for i in range(_HASH_CHUNK + 500)])
+    sk, ref = bloom_factory(100_000, 0.01)(), bloom_factory(100_000, 0.01)()
+    bloom_binary_updater("m")(sk, pa.record_batch({"m": markers}))
+    ref.insert_hashes(*mmh3_offsets(*arrow_marker_bytes(markers)))
+    assert sk.to_bytes() == ref.to_bytes()

@@ -122,3 +122,43 @@ def test_probe_with_dotted_marker_and_group_cols(spark):
     nulls = ev.withColumn("e.t", F.lit(None).cast("string"))
     res2 = probe_sketch_table(nulls, table, ["e.t"], marker_col="m.k")
     assert res2.where(F.col("found")).count() == 0
+
+
+def test_token_probe_over_many_slices_matches_the_unsliced_answer(spark):
+    """``probe_sketch_table(token_col=...)`` on one Arrow batch holding
+    more than ``_HASH_CHUNK`` n-grams, one row alone longer than
+    ``_HASH_CHUNK``, an empty row and a row shorter than n answers every
+    row as the unsliced kernel does: all n-grams hashed and probed at
+    once, then OR-reduced per row."""
+    import pyarrow as pa
+
+    from marker_spark.agg import SKETCH_COL, pack_state
+    from marker_spark.hashing import _HASH_CHUNK, mmh3_ngram_i32
+    from marker_spark.ngrams import ngram_starts
+    from marker_spark.params import BloomParams
+
+    n = 3
+    rng = np.random.default_rng(11)
+    rows = [rng.integers(0, 1_000_000, 300).tolist() for _ in range(300)]
+    long_row = rng.integers(0, 1_000_000, _HASH_CHUNK + 5_000).tolist()
+    rows[150:150] = [long_row, [], [1, 2]]
+    params = BloomParams.solve(200_000, 1e-4)
+    bf = BloomSketch(params.m, params.k)
+    for r in rows[:150:2] + rows[153::2] + [long_row[-n:]]:
+        bf.insert_hashes(*mmh3_ngram_i32(np.array(r, np.int32), np.arange(len(r) - n + 1), n))
+
+    arr = pa.array(rows, type=pa.list_(pa.int32()))
+    flat = arr.values.to_numpy().astype(np.int32)
+    offsets = arr.offsets.to_numpy().astype(np.int64)
+    starts, per_doc = ngram_starts(offsets, n)
+    assert len(starts) > 2 * _HASH_CHUNK
+    found = bf.contains_hashes(*mmh3_ngram_i32(flat, starts, n))
+    seg = np.cumsum(per_doc) - per_doc
+    want = np.zeros(len(rows), dtype=bool)
+    want[per_doc > 0] = np.logical_or.reduceat(found, seg[per_doc > 0])
+    assert want[150] and not want[151] and not want[152] and not want.all()
+
+    probes = spark.createDataFrame(list(enumerate(rows)), "i int, tokens array<int>").coalesce(1)
+    table = spark.createDataFrame([(pack_state(bf),)], f"{SKETCH_COL} binary")
+    got = probe_sketch_table(probes, table, [], token_col="tokens", ngram=n).select("i", "found")
+    assert [r["found"] for r in sorted(got.collect())] == want.tolist()
