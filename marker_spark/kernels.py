@@ -14,7 +14,6 @@ from __future__ import annotations
 from typing import Any, Callable
 
 import numpy as np
-import pandas as pd
 
 from .hashing import _HASH_CHUNK, mmh3_ngram_i32, mmh3_offsets
 from .ngrams import ngram_slices
@@ -74,21 +73,32 @@ def arrow_marker_bytes(arr) -> tuple[np.ndarray, np.ndarray]:
 
 
 def arrow_str_codes(batch, col_name: str):
-    """Group codes for a string column: (codes int64 per row, uniques list).
+    """Group codes for a column: (codes int64 per row, uniques list).
 
-    Null keys map to a trailing ``agg.NULL_KEY`` group instead of
-    factorize's -1 sentinel, so callers can index partial-state arrays
-    directly and null-keyed rows still reach a sketch.  The sentinel is
-    imported (not re-hardcoded) so the two code paths can never drift."""
+    Uniques are ``str(v)`` of each distinct value's Python value, in
+    sorted order (UTF-8 byte order is code-point order, so strings sort
+    as Python sorts them); the codes index them.  A NULL key maps to a
+    trailing ``agg.NULL_KEY`` group, so callers can index partial-state
+    arrays directly and null-keyed rows still reach a sketch.  The
+    sentinel is imported (not re-hardcoded) so the two code paths can
+    never drift.  A nullable integer column keys as ``"3"`` whether or
+    not its batch holds a NULL."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     from .agg import NULL_KEY
 
     arr = batch.column(batch.schema.get_field_index(col_name))
-    codes, uniques = pd.factorize(arr.to_pandas(), sort=True)
-    codes = codes.astype(np.int64)
-    uniques = [str(u) for u in uniques]
-    if (codes < 0).any():
-        codes = np.where(codes < 0, len(uniques), codes)
-        uniques = uniques + [NULL_KEY]
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    # NULL becomes a dictionary entry of its own, which sorts last
+    enc = arr.dictionary_encode(null_encoding="encode")
+    order = pc.array_sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order))
+    codes = rank[enc.indices.to_numpy()]
+    uniques = [NULL_KEY if v is None else str(v)
+               for v in enc.dictionary.take(pa.array(order)).to_pylist()]
     return codes, uniques
 
 

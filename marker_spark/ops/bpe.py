@@ -181,7 +181,7 @@ def bpe_tokens_col(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            texts = batch.column(1).to_pandas()
+            texts = batch.column(1).to_pylist()
             offsets = [0]
             flat: list[str] = []
             for t in texts:

@@ -17,13 +17,13 @@ Scale shapes (the part that must survive 100 TB):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .text import words_col
 from ..cacheutil import register
+from ..kernels import arrow_list_view
 from ..obs import spread_thin
 
 
@@ -60,20 +60,6 @@ def _word_hash_col(text_col: str):
     return F.transform(words, lambda w: F.xxhash64(w))
 
 
-def _arrow_list_i64(col) -> tuple[np.ndarray, np.ndarray]:
-    """(flat uint64 values, 0-based int64 offsets) view of an Arrow
-    list<int64> column — no per-row Python objects (the CLAUDE.md
-    gotcha: a pandas Series of lists materializes one object per row)."""
-    import pyarrow as pa
-
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    flat = col.values.to_numpy(zero_copy_only=False)
-    flat = np.ascontiguousarray(flat[offsets[0] : offsets[-1]])
-    return flat.astype(np.int64, copy=False).view(np.uint64), offsets - offsets[0]
-
-
 def _map_shingle_batches(
     df: DataFrame,
     text_col: str,
@@ -106,29 +92,13 @@ def _map_shingle_batches(
             n_docs = batch.num_rows
             if n_docs == 0:
                 continue
-            flat, offsets = _arrow_list_i64(batch.column(1))
-            sh, seg = _shingle_hashes_flat(flat, offsets, shingle)
+            flat, offsets = arrow_list_view(batch.column(1))
+            sh, seg = _shingle_hashes_flat(flat.view(np.uint64), offsets, shingle)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), kernel(sh, seg, n_docs)], names=[id_col, out_field]
             )
 
     return src.mapInArrow(batch_fn, schema=f"`{id_col}` {id_type}, {out_field} {out_type}")
-
-
-def _shingle_hashes(wh: pd.Series, shingle: int) -> tuple[np.ndarray, np.ndarray]:
-    """pandas-Series entry point for :func:`_shingle_hashes_flat` (used
-    by tests and any pandas-side callers; the Spark operators go through
-    mapInArrow + :func:`_arrow_list_i64` instead)."""
-    values = list(wh)
-    n_docs = len(values)
-    lengths = np.fromiter(map(len, values), dtype=np.int64, count=n_docs)
-    offsets = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    if offsets[-1]:
-        flat = np.concatenate(values).astype(np.int64, copy=False).view(np.uint64)
-    else:
-        flat = np.empty(0, dtype=np.uint64)
-    return _shingle_hashes_flat(flat, offsets, shingle)
 
 
 def _shingle_hashes_flat(
@@ -224,7 +194,7 @@ def minhash_signatures(
 
     The JVM contributes one xxhash64 per word (:func:`_word_hash_col`);
     ``mapInArrow`` consumes the list column as flat Arrow buffers
-    (:func:`_arrow_list_i64` — no per-row Python list materialization),
+    (:func:`kernels.arrow_list_view` — no per-row Python list materialization),
     forms shingle hashes with the fused mmh3 window kernel
     (:func:`_shingle_hashes_flat`), applies each keyed :func:`_mix64`
     permutation over the flat buffer, min-reduces per-doc segments with
@@ -303,10 +273,10 @@ def ngram_jaccard_for_pairs(
             n = batch.num_rows
             if n == 0:
                 continue
-            fa_flat, offa = _arrow_list_i64(batch.column(2))
-            fb_flat, offb = _arrow_list_i64(batch.column(3))
-            fa, sa = _shingle_hashes_flat(fa_flat, offa, shingle)
-            fb, sb = _shingle_hashes_flat(fb_flat, offb, shingle)
+            fa_flat, offa = arrow_list_view(batch.column(2))
+            fb_flat, offb = arrow_list_view(batch.column(3))
+            fa, sa = _shingle_hashes_flat(fa_flat.view(np.uint64), offa, shingle)
+            fb, sb = _shingle_hashes_flat(fb_flat.view(np.uint64), offb, shingle)
             pa = np.repeat(np.arange(n), np.diff(np.append(sa, len(fa))))
             pb = np.repeat(np.arange(n), np.diff(np.append(sb, len(fb))))
 
@@ -800,7 +770,7 @@ def simhash_fingerprints(
 
     The JVM contributes one xxhash64 per word (:func:`_word_hash_col`);
     ``mapInArrow`` consumes the list column as flat Arrow buffers
-    (:func:`_arrow_list_i64`), forms shingle hashes numerically
+    (:func:`kernels.arrow_list_view`), forms shingle hashes numerically
     (:func:`_shingle_hashes_flat`), unpacks them to a [G, 64] bit
     matrix, ±1-sums per doc with np.add.reduceat, sign -> bits — zero
     per-row Python end to end.
@@ -873,9 +843,7 @@ def simhash_near_dup_pairs(
 _PAIR_TILE = 512  # each kernel temp holds <= 512**2 = 2**18 doubles
 
 
-def _block_pair_cosines(
-    pdf: pd.DataFrame, id_col: str, vec_col: str, margin: float
-) -> pd.DataFrame:
+def _block_pair_cosines(table: pa.Table, id_col: str, vec_col: str, margin: float) -> pa.Table:
     """Pairs ``id_a < id_b`` of one block with raw cosine >= margin.
 
     Vectors shorter than the block's longest never pair; a NULL element
@@ -884,13 +852,15 @@ def _block_pair_cosines(
     Catalyst's ``aggregate(zip_with(a, b, x*y), 0.0, acc + x)``.  Pairs
     come tile by tile: memory is bounded by ``_PAIR_TILE``, not by the
     block size or the vector length."""
-    vecs = pdf[vec_col].to_numpy()
-    lens = np.array([len(v) for v in vecs])
-    ok = lens == lens.max()
-    ids = pdf[id_col].to_numpy()[ok]
-    order = np.argsort(ids, kind="stable")
-    ids, n = ids[order], len(ids)
-    cols = np.stack(vecs[ok][order]).T.copy()  # [dim, n], contiguous columns
+    flat, offsets = arrow_list_view(table.column(vec_col))
+    lens = np.diff(offsets)
+    dim = int(lens.max())
+    ids = table.column(id_col).combine_chunks()
+    ok = np.flatnonzero(lens == dim)
+    rows = ok[np.argsort(ids.to_numpy(zero_copy_only=False)[ok], kind="stable")]
+    ids = ids.take(pa.array(rows))
+    n, key = len(rows), ids.to_numpy(zero_copy_only=False)
+    cols = flat[np.arange(dim)[:, None] + offsets[rows]]  # [dim, n], one gather
     nrm = np.zeros(n)
     for c in cols:
         nrm += c * c
@@ -907,12 +877,13 @@ def _block_pair_cosines(
                 acc /= nrm[i0:i1, None] * nrm[None, j0:j1]
             # ids are sorted: id_a < id_b keeps the upper triangle and
             # never pairs a duplicated id with itself
-            ii, jj = np.nonzero((acc >= margin) & (ids[i0:i1, None] < ids[None, j0:j1]))
-            out_a.append(ids[i0 + ii])
-            out_b.append(ids[j0 + jj])
+            ii, jj = np.nonzero((acc >= margin) & (key[i0:i1, None] < key[None, j0:j1]))
+            out_a.append(i0 + ii)
+            out_b.append(j0 + jj)
             out_c.append(acc[ii, jj])
-    return pd.DataFrame({"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b),
-                         "cosine": np.concatenate(out_c)})
+    return pa.table({"id_a": ids.take(pa.array(np.concatenate(out_a))),
+                     "id_b": ids.take(pa.array(np.concatenate(out_b))),
+                     "cosine": pa.array(np.concatenate(out_c), type=pa.float64())})
 
 
 def embedding_near_dup_pairs(
@@ -927,7 +898,7 @@ def embedding_near_dup_pairs(
 
     The block key bounds the quadratic term (a label, an LSH bucket, a
     quantizer cell).  Each block is ONE numpy pass of
-    :func:`_block_pair_cosines` (groupBy(block).applyInPandas), ~100x
+    :func:`_block_pair_cosines` (groupBy(block).applyInArrow), ~100x
     cheaper than per-pair Catalyst higher-order functions; rounding and
     the threshold compare stay in Spark.  Rows with a NULL id, block or
     vector never pair, as under an equi-join on the block."""
@@ -939,8 +910,8 @@ def embedding_near_dup_pairs(
         df.dropna(subset=[id_col, block_col, vec_col])
         .select(id_col, block_col, F.col(vec_col).cast("array<double>").alias(vec_col))
         .groupBy(block_col)
-        .applyInPandas(
-            lambda pdf: _block_pair_cosines(pdf, id_col, vec_col, margin),
+        .applyInArrow(
+            lambda table: _block_pair_cosines(table, id_col, vec_col, margin),
             schema=f"id_a {id_type}, id_b {id_type}, cosine double",
         )
     )

@@ -1,8 +1,9 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Images/audio/video are `binary` columns with a metadata struct; decode
-and feature extraction run as Arrow-batched `mapInPandas` so payload
-bytes never round-trip through per-row Python.
+and feature extraction run as Arrow-batched `mapInArrow`: each batch's
+payloads are read once into Python bytes for the decoders, and the
+results go back as one Arrow batch.
 
 Codec coverage (all pure numpy, no codec libraries): uncompressed
 24-bit BMP (header-parse + stride/BGR handling), 8-bit PNG with all
@@ -25,7 +26,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 ASSET_SCHEMA = (
@@ -343,24 +344,23 @@ def synth_real_assets(spark, n: int = 32, seed: int = 42) -> DataFrame:
 def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
     """asset table -> (asset_id, kind, feature array<double>, n_bytes).
 
-    mapInPandas: one Arrow batch in, vectorized feature math, one batch
+    mapInArrow: one Arrow batch in, vectorized feature math, one batch
     out — the shape a real decoder plugs into unchanged.
     """
     out_schema = "asset_id string, kind string, feature array<double>, n_bytes long"
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_decode_stub(p, k, fake) for p, k in zip(pdf["payload"], pdf["kind"])]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["kind"],
-                    "feature": feats,
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                }
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            payloads = batch.column("payload").to_pylist()
+            kinds = batch.column("kind")
+            feats = [_decode_stub(p, k, fake) for p, k in zip(payloads, kinds.to_pylist())]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("asset_id"), kinds, pa.array(feats, type=pa.list_(pa.float64())),
+                 pa.array([len(p) for p in payloads], type=pa.int64())],
+                names=["asset_id", "kind", "feature", "n_bytes"],
             )
 
-    return df.mapInPandas(fn, schema=out_schema)
+    return df.mapInArrow(fn, schema=out_schema)
 
 
 # --------------------------------------------------------------------------
@@ -577,15 +577,17 @@ def probe_media_meta(df: DataFrame) -> DataFrame:
     payload is dispatched on magic to the MP3/MP4 walkers; unknown
     containers yield NULL fields rather than failing the scan (crawl
     reality: truncated/alien payloads are routine)."""
-    out_schema = (
-        "asset_id string, container string, duration_s double, "
-        "n_frames int, bitrate_kbps int, n_video_tracks int, n_audio_tracks int"
-    )
+    out_schema = pa.schema([
+        ("asset_id", pa.string()), ("container", pa.string()), ("duration_s", pa.float64()),
+        ("n_frames", pa.int32()), ("bitrate_kbps", pa.int32()),
+        ("n_video_tracks", pa.int32()), ("n_audio_tracks", pa.int32()),
+    ])
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             recs = []
-            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
+            for aid, p in zip(batch.column("asset_id").to_pylist(),
+                              batch.column("payload").to_pylist()):
                 rec = {"asset_id": aid, "container": None, "duration_s": None,
                        "n_frames": None, "bitrate_kbps": None,
                        "n_video_tracks": None, "n_audio_tracks": None}
@@ -605,6 +607,9 @@ def probe_media_meta(df: DataFrame) -> DataFrame:
                 except (ValueError, TypeError):
                     pass  # malformed/NULL payload -> NULL fields
                 recs.append(rec)
-            yield pd.DataFrame(recs)
+            yield pa.RecordBatch.from_pylist(recs, schema=out_schema)
 
-    return df.mapInPandas(fn, schema=out_schema)
+    return df.mapInArrow(fn, schema=(
+        "asset_id string, container string, duration_s double, "
+        "n_frames int, bitrate_kbps int, n_video_tracks int, n_audio_tracks int"
+    ))

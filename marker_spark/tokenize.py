@@ -3,40 +3,52 @@
 Produces the second, text-derived tokenized_sequences instance
 (FIXTURES.md §4): whitespace split, vocab id = h1 of
 MurmurHash3_x64_128(word_utf8) mod VOCAB_SIZE.  Fully vectorized — a
-whole Arrow batch of documents is split/encoded/hashed with flat-buffer
-numpy kernels; the only Python-level per-item work is the C-level
-``str.encode`` map.
+whole Arrow batch of documents is split by one Arrow regex and its
+words hashed straight off the Arrow string buffers; no per-word Python
+object is made.
 
-Exposed both as a pandas-batch function (for tests) and a
-``mapInPandas``/select-level transform for DataFrames.
+Exposed both as an Arrow-array function (:func:`tokenize_batch`) and a
+``mapInArrow`` DataFrame transform (:func:`tokenize_documents`).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from .datagen import VOCAB_SIZE
 from .hashing import mmh3_offsets
+from .kernels import arrow_marker_bytes
 from .obs import spread_thin
 
+# The 29 code points ``str.isspace()`` accepts, as one RE2 class:
+# splitting on runs of them gives ``str.split()``'s words once empty
+# strings are dropped.  Arrow's ``ascii_split_whitespace`` misses 23 of
+# them, and pyarrow 16's ``utf8_split_whitespace`` sometimes keeps a
+# string's last whitespace code point in its last word.
+_WHITESPACE_RUN = (
+    r"[\x{9}-\x{d}\x{1c}-\x{20}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+"
+)
 
-def tokenize_batch(texts: pd.Series, vocab: int = VOCAB_SIZE) -> tuple[np.ndarray, np.ndarray]:
-    """Tokenize a batch of strings -> (flat token ids int32, offsets int64)."""
-    words_per_doc = texts.fillna("").str.split()
-    lengths = words_per_doc.str.len().to_numpy(dtype=np.int64)
+
+def tokenize_batch(texts, vocab: int = VOCAB_SIZE) -> tuple[np.ndarray, np.ndarray]:
+    """Tokenize a ``pa.Array`` of strings -> (flat token ids int32,
+    offsets int64).  Words are ``str.split()``'s: the split drops the
+    empty strings a regex split yields for an empty text and at leading
+    or trailing whitespace.  A NULL text has no tokens."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(texts, pa.ChunkedArray):
+        texts = texts.combine_chunks()
+    split = pc.split_pattern_regex(texts.fill_null(""), _WHITESPACE_RUN)
+    words = pc.list_flatten(split)
+    nonempty = pc.greater(pc.binary_length(words), 0)
+    words = words.filter(nonempty)
+    parents = pc.list_parent_indices(split).filter(nonempty).to_numpy()
     offsets = np.zeros(len(texts) + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    total = int(offsets[-1])
-    if total == 0:
-        return np.empty(0, dtype=np.int32), offsets
-
-    all_words = [w for doc in words_per_doc for w in doc]
-    encoded = [w.encode("utf-8") for w in all_words]
-    flat_bytes = np.frombuffer(b"".join(encoded), dtype=np.uint8)
-    w_offsets = np.zeros(total + 1, dtype=np.int64)
-    np.cumsum(np.fromiter(map(len, encoded), dtype=np.int64, count=total), out=w_offsets[1:])
-    h1, _ = mmh3_offsets(flat_bytes, w_offsets)
+    np.cumsum(np.bincount(parents, minlength=len(texts)), out=offsets[1:])
+    h1, _ = mmh3_offsets(*arrow_marker_bytes(words))
     token_ids = (h1 % np.uint64(vocab)).astype(np.int32)
     return token_ids, offsets
 
@@ -46,11 +58,9 @@ def tokenize_documents(df, text_col: str = "text", vocab: int = VOCAB_SIZE):
     (doc_id string, tokens array<int32>, n_tok int32, source string).
 
     ``mapInArrow``: the token matrix leaves Python as ONE Arrow
-    ListArray built from (flat ids, offsets) — the prior pandas UDF
-    returned a Python slice object per document on the corpus-wide
-    tokenization path, the exact pattern the repo's mapInArrow rule
-    forbids.  (The per-row cost that remains is the str split itself,
-    which pandas does at C level.)
+    ListArray built from (flat ids, offsets), and the texts come in as
+    one Arrow string array: no Python object per document or word
+    crosses either way.
     """
     import pyarrow as pa
 
@@ -60,8 +70,7 @@ def tokenize_documents(df, text_col: str = "text", vocab: int = VOCAB_SIZE):
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            texts = batch.column(2).to_pandas()
-            flat, offsets = tokenize_batch(texts, vocab)
+            flat, offsets = tokenize_batch(batch.column(2), vocab)
             toks = pa.ListArray.from_arrays(
                 pa.array(offsets, type=pa.int32()),
                 pa.array(flat, type=pa.int32()),

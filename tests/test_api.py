@@ -335,3 +335,21 @@ def test_job_numeric_flags_rejected_before_session(monkeypatch, capsys, job, arg
     with pytest.raises(SystemExit):
         main(argv)
     assert argv[-2] in capsys.readouterr().err
+
+
+def test_nullable_integer_group_keys_match_probe_keys(spark):
+    """A grouped build over a ``long`` key names its groups as Spark's
+    ``cast(string)`` does (``"3"``), also when a NULL key shares the
+    Arrow batch, so ``probe_sketch_table`` finds the group's state."""
+    from marker_spark.agg import NULL_KEY
+    from marker_spark.probe import probe_sketch_table
+
+    schema = "g long, tokens array<int>"
+    df = spark.createDataFrame(
+        [(3, [1, 2, 3, 4]), (4, [5, 6, 7]), (None, [8, 9, 10])], schema
+    ).coalesce(1)
+    assert sorted(r["g"] for r in hll_agg(df, group_cols=["g"]).collect()) == ["3", "4", NULL_KEY]
+    table = bloom_agg(df, group_cols=["g"], capacity=1000)
+    probe = spark.createDataFrame([(3, [2, 3, 4]), (4, [2, 3, 4])], schema)
+    found = probe_sketch_table(probe, table, ["g"], token_col="tokens").collect()
+    assert {r["g"]: r["found"] for r in found} == {3: True, 4: False}

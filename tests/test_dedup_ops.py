@@ -56,18 +56,17 @@ def test_lsh_candidates_cover_high_jaccard_pairs(spark, docs):
 
 
 def test_shingle_hashes_match_reference_implementation():
-    """The fused _shingle_hashes kernel (flat buffers, window gathers,
-    scatter assembly) must agree doc-by-doc with a naive per-doc
-    implementation built on the generic golden-tested byte hasher —
-    including short docs (< shingle words) and empty docs."""
+    """The fused _shingle_hashes_flat kernel (flat buffers, window
+    gathers, scatter assembly) must agree doc-by-doc with a naive
+    per-doc implementation built on the generic golden-tested byte
+    hasher — including short docs (< shingle words) and empty docs."""
     import numpy as np
-    import pandas as pd
 
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from marker_spark.hashing import mmh3_x64_128
-    from marker_spark.ops.dedup import _shingle_hashes
+    from marker_spark.ops.dedup import _shingle_hashes_flat
 
     def fold32(h64: np.ndarray) -> np.ndarray:
         u = h64.view(np.uint64)
@@ -93,9 +92,10 @@ def test_shingle_hashes_match_reference_implementation():
     @settings(max_examples=60, deadline=None)
     @given(docs=docs_strategy, shingle=st.integers(min_value=2, max_value=5))
     def run(docs, shingle):
-        got_flat, got_seg = _shingle_hashes(
-            pd.Series([np.array(d, dtype=np.int64) for d in docs]), shingle
-        )
+        offsets = np.zeros(len(docs) + 1, dtype=np.int64)
+        np.cumsum([len(d) for d in docs], out=offsets[1:])
+        flat = np.array([h for d in docs for h in d], dtype=np.int64).view(np.uint64)
+        got_flat, got_seg = _shingle_hashes_flat(flat, offsets, shingle)
         want_flat, want_seg = reference(docs, shingle)
         assert np.array_equal(got_seg, want_seg)
         assert np.array_equal(got_flat, want_flat)

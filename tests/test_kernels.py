@@ -107,6 +107,47 @@ def test_null_key_single_definition():
     assert list(codes) == [0, 1, 0]
 
 
+def test_str_codes_nullable_integer_keys():
+    """A NULL in an integer key column leaves the other keys' names and
+    codes as they are without it (``"3"``, never ``"3.0"``), and int64
+    keys above 2**53 stay distinct."""
+    from marker_spark.kernels import arrow_str_codes
+
+    def codes(values):
+        c, u = arrow_str_codes(pa.record_batch({"g": pa.array(values, pa.int64())}), "g")
+        return c.tolist(), u
+
+    assert codes([3, 4, None]) == ([0, 1, 2], ["3", "4", NULL_KEY])
+    assert codes([3, 4]) == ([0, 1], ["3", "4"])
+    assert codes([4, None, 3]) == ([1, 2, 0], ["3", "4", NULL_KEY])
+    big = [2**60 + 1, 2**60 + 2, None]
+    assert codes(big) == ([0, 1, 2], [str(2**60 + 1), str(2**60 + 2), NULL_KEY])
+
+
+@settings(max_examples=200, deadline=None)
+@given(values=st.lists(st.one_of(st.none(), st.text(alphabet="ab\u00e9\u4e2d\U0001f600 ", max_size=4)),
+                       max_size=30),
+       lo=st.integers(0, 3))
+def test_str_codes_match_pandas_factorize(values, lo):
+    """On string keys (NULLs, non-ASCII, sliced batches) the codes and
+    names equal pandas' sorted factorize, with NULL as the trailing
+    ``NULL_KEY`` group."""
+    import pandas as pd
+
+    from marker_spark.kernels import arrow_str_codes
+
+    batch = pa.record_batch({"g": pa.array(values, pa.string())}).slice(lo)
+    codes, uniques = arrow_str_codes(batch, "g")
+    want_codes, want_uniques = pd.factorize(pd.Series(values[lo:], dtype=object), sort=True)
+    want_uniques = [str(u) for u in want_uniques]
+    if (want_codes < 0).any():
+        want_codes = np.where(want_codes < 0, len(want_uniques), want_codes)
+        want_uniques.append(NULL_KEY)
+    assert codes.dtype == np.int64
+    assert codes.tolist() == want_codes.tolist()
+    assert uniques == want_uniques
+
+
 def test_arrow_tokens_view_on_sliced_batch():
     """A slice's view holds only the slice's own tokens, with offsets
     from 0 — an updater reading ``flat`` alone must not see the parent

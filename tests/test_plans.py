@@ -361,16 +361,16 @@ def test_api_agg_ships_only_the_columns_it_reads(spark, tokseq_path):
 
 
 @pytest.mark.parametrize("name", ["embedding_near_dup", "semdedup"])
-def test_embedding_pair_cosines_run_in_grouped_pandas(spark, name):
+def test_embedding_pair_cosines_run_in_grouped_arrow(spark, name):
     """Blocked pair cosines come from one grouped numpy pass per block
-    (FlatMapGroupsInPandas), never from a self-join evaluating per-pair
+    (FlatMapGroupsInArrow), never from a self-join evaluating per-pair
     Catalyst higher-order functions."""
     import __spark_entry__ as entrymod
     from marker_spark.cacheutil import release_all
 
     plan = _plan(entrymod.queries()[name](spark, SF_DIR))
     release_all()
-    assert "FlatMapGroupsInPandas" in plan, plan[:1500]
+    assert "FlatMapGroupsInArrow" in plan, plan[:1500]
     if name == "embedding_near_dup":
         assert "Join" not in plan, plan[:1500]
         assert "zip_with" not in plan
