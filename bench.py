@@ -554,7 +554,8 @@ def sketch_build_bucketed_throughput(
         starts, per_doc = ngram_starts(offsets, 3)
         h1, h2 = mmh3_ngram_i32(flat, starts, 3)
         codes, uniques = arrow_str_codes(batch, "source")
-        bkt = batch.column(batch.schema.get_field_index("bucket")).to_numpy(zero_copy_only=False)
+        # group columns reach the build as strings (Spark's cast(string))
+        bkt = batch.column(batch.schema.get_field_index("bucket")).cast("int64").to_numpy()
         row_keys = codes * (n_buckets + 1) + bkt
         ngram_keys = np.repeat(row_keys, per_doc)
         for rk in np.unique(row_keys):
@@ -636,7 +637,8 @@ def sketch_build_partitioned_throughput(
         # partition layout makes source near-constant per batch, but an
         # Arrow batch may span a file boundary — group defensively.
         codes, uniques = arrow_str_codes(batch, "source")
-        bkt = batch.column(batch.schema.get_field_index("bucket")).to_numpy(zero_copy_only=False)
+        # group columns reach the build as strings (Spark's cast(string))
+        bkt = batch.column(batch.schema.get_field_index("bucket")).cast("int64").to_numpy()
         row_keys = codes * (n_buckets + 1) + bkt
         ngram_keys = np.repeat(row_keys, per_doc)
         for rk in np.unique(row_keys):

@@ -114,9 +114,11 @@ def main(argv: list[str] | None = None) -> None:
 
     from marker_spark.agg import NULL_KEY
 
+    # keyed as the build keys its groups (Spark's cast(string)), so the
+    # factory's sizing lookups and the salt shares name the same groups
     stats = {
-        (NULL_KEY if r[gcol] is None else r[gcol]): int(r["ngrams"])
-        for r in df.groupBy(gcol)
+        (NULL_KEY if r["g"] is None else r["g"]): int(r["ngrams"])
+        for r in df.groupBy(F.col(gcol).cast("string").alias("g"))
         .agg(F.sum(F.greatest(F.col("n_tok") - (n - 1), F.lit(0))).alias("ngrams"))
         .collect()
     }

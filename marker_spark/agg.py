@@ -56,47 +56,75 @@ SKETCH_COL = "sketch"
 NULL_KEY = "__null__"
 _ZMAGIC = b"MSKZ"
 _RMAGIC = b"MSKR"  # uncompressed payload (dense state; zlib would not pay)
+_PROBE = 1 << 20  # a state this large ships raw unless its first MiB deflates
 
 
 def pack_state(sk: Any) -> bytes:
-    """Serialize (+ compress when it pays) a sketch state for the wire.
+    """Serialize + deflate a sketch state for the wire: ``MSKZ`` and a
+    plain zlib stream, or ``MSKR`` and the raw bytes where deflate
+    would not pay.
 
-    Sparse partial Bloom bitmaps compress 3-100x at zlib level 1 and
-    the wire bytes dominate, so compression is the default.  A MERGED
-    hot-group bitmap, however, sits at 30-50% bit density — near
-    max entropy — where zlib level 1 still burns ~3-4 s per 140 MB to
-    save nothing (measured: the final pack was the single largest
-    piece of the hot-group merge task).  A 1 MB probe decides: if even
-    the probe barely shrinks, the state ships raw under its own magic.
+    Every state is deflated once, at level 1 with zlib's run-length
+    strategy (``Z_RLE``): sketch states are bitmaps, counter grids and
+    sorted hashes with runs of zero bytes but few long repeats, so the
+    default LZ77 match search costs time and finds little.  Measured on
+    the 20 per-source states of each perfbench ``sketch`` table (seed
+    1001, one thread of a 4-vCPU Xeon guest, best of 5), plain level 1
+    -> ``Z_RLE`` level 1:
+
+    * CMS (d=5, w=2^16, 52.4 MB raw): 1.602 -> 0.920 MB, 189 -> 127 ms;
+    * merged Bloom (2.44 MB raw): 2.381 -> 2.377 MB, 97 -> 39 ms;
+    * HLL (p=14, 0.33 MB raw): 0.131 -> 0.100 MB, 9.0 -> 7.5 ms;
+    * sparse 971 KB Bloom partials at 2% / 12.5% of capacity: 164 ->
+      113 KB / 442 -> 354 KB, 1.6-1.8x faster; theta keeps its size at
+      2x the speed; KLL (float items, where LZ77 back-references help)
+      grows 6.0 -> 7.5 KB over the 20 states.
+
+    The default strategy at level 6 packs the CMS grids to 1.014 MB in
+    314 ms, at level 9 to 0.814 MB in 2,886 ms.  A MERGED hot-group Bloom sits at 30-50%
+    bit density, near max entropy, where deflate costs time and saves
+    nothing, so a state of 1 MiB or more feeds its first MiB and
+    sync-flushes: if that did not shrink to 0.6 MiB the state ships
+    raw, else the same compressor continues over the rest, so no byte
+    is deflated twice.  Inflating is ``zlib.decompress`` whatever the
+    strategy, so states packed at plain level 1 (older tables) read
+    unchanged, and ``pack_state(unpack_state(cls, p)) == p`` holds for
+    every state this function packs.
     """
     raw = sk.to_bytes()
-    if len(raw) >= (1 << 20):
-        probe = zlib.compress(raw[: 1 << 20], 1)
-        # compression must pay ~1.7x to beat its own cost: zlib level 1
-        # on a ~40%-density merged bitmap reached only 1.27x and cost
-        # 4.8 s per 140 MB (measured), slower than shipping raw
-        if len(probe) > 0.6 * (1 << 20):
-            return _RMAGIC + raw
-    return _ZMAGIC + zlib.compress(raw, 1)
+    z = zlib.compressobj(1, zlib.DEFLATED, 15, 8, zlib.Z_RLE)
+    if len(raw) < _PROBE:
+        return _ZMAGIC + z.compress(raw) + z.flush()
+    view = memoryview(raw)
+    head = z.compress(view[:_PROBE]) + z.flush(zlib.Z_SYNC_FLUSH)
+    # compression must pay ~1.7x to beat its own cost: plain level 1 on
+    # a ~40%-density merged bitmap reached only 1.27x and cost 4.8 s per
+    # 140 MB (measured), slower than shipping raw
+    if len(head) > 0.6 * _PROBE:
+        return _RMAGIC + raw
+    return b"".join((_ZMAGIC, head, z.compress(view[_PROBE:]), z.flush()))
 
 
-def unpack_state(sketch_cls: type, buf: bytes) -> Any:
-    head = bytes(buf[:4])
+def unpack_state(sketch_cls: type, buf) -> Any:
+    """The sketch behind a packed state.  ``buf`` is any bytes-like
+    object (``bytes``, a ``pa.Buffer``); its payload is sliced through a
+    memoryview, so a raw state is copied once, into the sketch."""
+    view = memoryview(buf)
+    head = bytes(view[:4])
     if head == _ZMAGIC:
-        buf = zlib.decompress(bytes(buf[4:]))
-    elif head == _RMAGIC:
-        buf = bytes(buf[4:])
-    return sketch_cls.from_bytes(buf)
+        return sketch_cls.from_bytes(zlib.decompress(view[4:]))
+    return sketch_cls.from_bytes(view[4:] if head == _RMAGIC else view)
 
 
 def state_prefix(buf, n: int) -> bytes:
     """The first ``n`` bytes of a packed state's serialization: a slice
     of a raw state, and only as much zlib output as that of a
     compressed one (the rest is never inflated)."""
-    head = bytes(buf[:4])
+    view = memoryview(buf)
+    head = bytes(view[:4])
     if head == _ZMAGIC:
-        return zlib.decompressobj().decompress(buf[4:], n)
-    return bytes(buf[4 : 4 + n] if head == _RMAGIC else buf[:n])
+        return zlib.decompressobj().decompress(view[4:], n)
+    return bytes(view[4 : 4 + n] if head == _RMAGIC else view[:n])
 
 
 def merge_partials(
@@ -136,7 +164,7 @@ def merge_partials(
         acc = None
         if len(bufs) <= 2:
             for buf in bufs:
-                state = unpack_state(sketch_cls, buf.as_py())
+                state = unpack_state(sketch_cls, buf.as_buffer())
                 acc = state if acc is None else acc.merge_in_place(state)
             return acc
         from collections import deque
@@ -149,7 +177,7 @@ def merge_partials(
         with ThreadPoolExecutor(max_workers=6) as ex:
             pending: deque = deque()
             for buf in bufs:
-                pending.append(ex.submit(unpack_state, sketch_cls, buf.as_py()))
+                pending.append(ex.submit(unpack_state, sketch_cls, buf.as_buffer()))
                 if len(pending) > 6:
                     acc = _fold(acc, pending.popleft())
             while pending:
@@ -216,7 +244,10 @@ def build_partials_arrow(
     that materializes one Python object per list-typed row).
 
     ``states`` maps group tuple -> sketch; emission serializes each
-    state with :func:`pack_state`.
+    state with :func:`pack_state`.  ``batch_update`` sees the group
+    columns as Spark's ``cast(string)`` of them, the key
+    :mod:`marker_spark.probe` looks states up by, so a boolean group is
+    ``"true"`` and a double ``"1.0E20"`` on both sides.
 
     ``ckpt_dir`` enables per-partition checkpoints (north_rule
     resumability): each task writes its result batch as Arrow IPC to
@@ -294,9 +325,15 @@ def build_partials_arrow(
         yield out
 
     # mapInArrow reads a dot in a name as struct-field access (df[name]):
-    # columns go in positionally and get their names back per batch
+    # columns go in positionally and get their names back per batch.
+    # Group columns arrive as Spark's cast(string), the key probes look
+    # states up by ("true", "1.0E20", "NaN"); Catalyst drops the cast
+    # of a string column.
     names = df.columns
-    return df.toDF(*[f"_{i}" for i in range(len(names))]).mapInArrow(partition_fn, schema=schema)
+    pos = [f"_{i}" for i in range(len(names))]
+    cols = [F.col(p).cast("string").alias(p) if c in group_cols else F.col(p)
+            for p, c in zip(pos, names)]
+    return df.toDF(*pos).select(*cols).mapInArrow(partition_fn, schema=schema)
 
 
 def _salt_placement(shares: dict[str, float], parallelism: int) -> dict[str, list[int]]:

@@ -353,3 +353,26 @@ def test_nullable_integer_group_keys_match_probe_keys(spark):
     probe = spark.createDataFrame([(3, [2, 3, 4]), (4, [2, 3, 4])], schema)
     found = probe_sketch_table(probe, table, ["g"], token_col="tokens").collect()
     assert {r["g"]: r["found"] for r in found} == {3: True, 4: False}
+
+
+@pytest.mark.parametrize(
+    "schema, keys",
+    [("g boolean, tokens array<int>", [True, False]),
+     ("g double, tokens array<int>", [3.0, 1e20, float("nan")])],
+    ids=["boolean", "double"],
+)
+def test_group_keys_are_spark_string_casts(spark, schema, keys):
+    """A grouped build keys its groups by Spark's ``cast(string)``
+    (``"true"``, ``"1.0E20"``, ``"NaN"``), the key probes look states
+    up by, so every row finds its own n-grams."""
+    from marker_spark.probe import collect_sketch_states, probe_sketch_table
+
+    df = spark.createDataFrame(
+        [(k, [10 * i + 1, 10 * i + 2, 10 * i + 3, 10 * i + 4]) for i, k in enumerate(keys)], schema
+    ).coalesce(1)
+    table = bloom_agg(df, group_cols=["g"], capacity=1000)
+    cast = {r[0] for r in df.select(F.col("g").cast("string")).collect()}
+    assert {r["g"] for r in table.collect()} == cast
+    assert {k for (k,) in collect_sketch_states(table, ["g"])} == cast
+    found = probe_sketch_table(df, table, ["g"], token_col="tokens").collect()
+    assert len(found) == len(keys) and all(r["found"] for r in found)
